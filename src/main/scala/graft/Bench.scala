@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-round benchmark main. Prints one JSON line with per-query seconds.
@@ -319,14 +319,26 @@ object Bench {
       case c => c.toString
     } + "\""
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** Local core count for the harness mains: `SPARK_GRAFT_CPUS`,
+    * default 4 (the driver's local[4]). A non-integer fails here with
+    * the variable named, not later inside Spark's master-URL parser.
+    */
+  private[graft] def envCpus(): Int = {
     val cpusRaw = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val cpus = try cpusRaw.trim.toInt catch {
+    try cpusRaw.trim.toInt catch {
       case _: NumberFormatException =>
         sys.error(s"SPARK_GRAFT_CPUS must be an integer, got '$cpusRaw'")
     }
-    val spark = org.apache.spark.sql.SparkSession.builder()
+  }
+
+  /** The ONE harness session: Bench times under it, and Verify, ProfQ
+    * and Explain build it too, so correctness dumps, per-query A/Bs and
+    * plan audits all see the scan-split and reduce layout the bench
+    * times. `localTag` names the tmpfs shuffle/spill dir (see Scratch).
+    * GraftEngine.session is the library's own, separate config.
+    */
+  private[graft] def session(cpus: Int, localTag: String): SparkSession =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)
@@ -338,13 +350,12 @@ object Bench {
       // (measured ~20% on the signature aggregates). The default guards
       // multi-MB collect_list states, which no plan here builds.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      // A/B hook (default on): AQE's per-shuffle query-stage
-      // materialization is measurable constant overhead on sub-second
-      // sf0.1 queries; at 100 TB AQE is load-bearing (skew splits,
-      // runtime coalesce) and GraftEngine's production config keeps it
-      // on. See SCALE.md for the recorded A/B.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      // AQE on: its per-shuffle query-stage materialization is
+      // measurable constant overhead on sub-second sf0.1 queries, but at
+      // 100 TB AQE is load-bearing (skew splits, runtime coalesce) and
+      // GraftEngine's production config keeps it on. See SCALE.md for
+      // the recorded A/B.
+      .config("spark.sql.adaptive.enabled", "true")
       // parallelismFirst=true (the default) tells AQE to IGNORE the
       // 64 MB advisory size and keep one reducer task per core, which
       // at sf0.1 x 32 cores means every exchange fans into 32 tiny
@@ -353,19 +364,18 @@ object Bench {
       // production setting ("set to false on a busy cluster"): tiny
       // shuffles coalesce toward the advisory size, and at 100 TB the
       // advisory size dominates anyway so the flag is a no-op there.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       // The Janino class cache holds 100 generated-source entries by
       // default; this suite's 120+ queries produce several codegen
       // fragments EACH, so the warmup pass's compiled classes are all
       // evicted before the timed pass replays them — every pass then
       // re-bills compiler latency the warmup exists to absorb (measured:
-      // q_group_agg 4.35 s in-suite vs 1.1 s warm floor in a 3-query
-      // Prof run, same plan). A static conf, so it must be set before
-      // the first session; entries are compiled classes (kilobytes), so
-      // 10k entries is megabytes — negligible against the 128 GiB heap.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
+      // q_group_agg 4.35 s in-suite vs 1.1 s warm floor, same plan;
+      // headline 45.8 -> 33.7 s, commit d10da50). A static conf, so it
+      // must be set before the first session; entries are compiled
+      // classes (kilobytes), so 10k entries is megabytes — negligible
+      // against the 128 GiB heap.
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       // Scan-split packing: openCostInBytes (default 4 MB) floors the
       // computed split size at 4 MB, so this harness's single-file
       // sub-4MB parquet tables scanned as ONE task each — every
@@ -401,6 +411,10 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session(envCpus(), "bench-local")
     spark.sparkContext.setLogLevel("WARN")
     val pressureBefore = pressureSnapshot()
     // Warmup, two passes — the stated contract of this harness is that
@@ -432,18 +446,12 @@ object Bench {
     //    min per query, same forcing hash) is unchanged, and every
     //    oracle still re-derives artifacts from source. Replaces the
     //    sf0.001 loop — warming at the measured scale compiles the same
-    //    codegen classes AND builds the right artifacts; the env hook
-    //    keeps the old tiny-SF behavior available for A/B.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", sfDir)
-    if (java.nio.file.Files.isDirectory(java.nio.file.Path.of(warmDir)))
+    //    codegen classes AND builds the right artifacts
+    //    (OPTIMIZATION_r18.md §1 records the change).
+    if (java.nio.file.Files.isDirectory(java.nio.file.Path.of(sfDir)))
       SparkEntry.queries.foreach { case (_, fn) =>
-        try force(fn(spark, warmDir)) catch { case _: Throwable => () }
+        try force(fn(spark, sfDir)) catch { case _: Throwable => () }
       }
-    if (warmDir != sfDir)
-      try {
-        SparkEntry.queries.get("q_group_agg").foreach(fn => force(fn(spark, sfDir)))
-        SparkEntry.queries.get("q_text_stats").foreach(fn => force(fn(spark, sfDir)))
-      } catch { case _: Throwable => () }
     // The warm pass leaves ~hundreds of unreferenced localCheckpoint
     // RDD blocks; ContextCleaner frees them only after their wrappers
     // are GC'd, so nudge a collection NOW rather than letting block-
@@ -471,8 +479,8 @@ object Bench {
         }
       })
     var jobs = Map.empty[String, Int]
-    // Two timed passes, min per query — graft.Prof's min-of-N
-    // philosophy applied to the recorded suite. Single-shot sub-second
+    // Two timed passes, min per query — the same-window min-of-N
+    // method applied to the recorded suite. Single-shot sub-second
     // queries at sf0.1 showed one-off 2-3x spikes from host scheduling
     // (a DIFFERENT random query each run), which serially tripped the
     // per-query regression gate; the min of two consecutive runs is the

@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The ONE definition of the two idioms every profiling/bench main
-  * repeats: full-result forcing and the repeated-run timer. Previously
-  * re-implemented with slight drift across nine scratch mains (reps,
-  * print prefixes, and two mains silently losing shared session
-  * configs) — a fix to the forcing idiom now lands everywhere at once.
+/** The ONE definition of the idioms the harness mains share: full-result
+  * forcing (Bench bills it, ProfQ times it), the single-run timer, and
+  * up-front query-name validation — a fix to any of them lands
+  * everywhere at once.
   */
 private[graft] object ProfHarness {
 
@@ -22,24 +21,25 @@ private[graft] object ProfHarness {
     ()
   }
 
-  /** Run `f` `reps` times printing `<label> runN: S s` — run1 carries
-    * cold planning+codegen cost, later runs the warm plan cost; the gap
-    * is compile overhead.
+  /** Run `f` once and print `<label> run<run>: S s` — run1 carries cold
+    * planning+codegen cost, later runs the warm plan cost; the gap is
+    * compile overhead.
     */
-  def time(label: String, reps: Int = 3)(f: => Any): Unit =
-    (1 to reps).foreach { i =>
-      val t0 = System.nanoTime()
-      f
-      println(f"$label run$i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    }
+  def time(label: String, run: Int)(f: => Any): Unit = {
+    val t0 = System.nanoTime()
+    f
+    println(f"$label run$run: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+  }
 
-  /** [[time]] for tools whose measured expression RETURNS the readout
-    * (a count, a knob value): prints `<label> runN: S s (<result>)`.
+  /** `names` unchanged if every one is a SparkEntry query; otherwise
+    * fails naming the unknown ones. Called before any session starts,
+    * so a typo costs no Spark startup.
     */
-  def timeShown(label: String, reps: Int = 1)(f: => Any): Unit =
-    (1 to reps).foreach { i =>
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label run$i: ${(System.nanoTime() - t0) / 1e9}%.3f s ($r)")
-    }
+  def queryNames(names: Seq[String]): Seq[String] = {
+    val bad = names.filterNot(SparkEntry.queries.contains)
+    if (bad.nonEmpty)
+      throw new IllegalArgumentException(
+        s"unknown query name(s): ${bad.mkString(", ")}")
+    names
+  }
 }

@@ -1,41 +1,35 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 
-/** Scratch per-query warm profiler (not part of the driver contract):
-  * times named SparkEntry queries under the EXACT Bench session config
-  * (same forcing hash, 3 reps — run 1 cold, runs 2-3 warm), so a code
-  * change's warm delta can be A/B'd without a full suite run.
+/** Per-query warm profiler and the ONE interleaved A/B tool (not part of
+  * the driver contract): times named SparkEntry queries under Bench's
+  * session and forcing hash, rep-major (a, b, a, b, ...), so host drift
+  * lands on every query alike rather than on whichever ran last. Run 1
+  * of each query is cold, later runs warm.
   * `sbt "runMain graft.ProfQ q_textrank q_dedup_substring"`.
+  * Commit-against-commit A/Bs go through perfbench/run.py + diff.py.
   */
 object ProfQ {
+  private val reps = 3
+
   def main(args: Array[String]): Unit = {
+    val names = ProfHarness.queryNames(
+      if (args.nonEmpty) args.toSeq else Seq("q_group_agg"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "8388608"))
-      .config("spark.local.dir", Scratch.localDir("profq-local"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Bench.session(Bench.envCpus(), "profq-local")
     spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq else Seq("q_group_agg")
-    names.foreach { n =>
-      ProfHarness.time(n) {
+    // Warm up with a plain scan+count, NOT a query that might be
+    // profiled: warming q_group_agg pre-filled the codegen cache for
+    // q_group_agg itself, so its run1 read warm and the cold-vs-warm
+    // attribution this tool exists for was wrong for that query.
+    try spark.read.parquet(s"$sfDir/orders.parquet")
+      .agg(count(lit(1))).head()
+    catch { case _: Throwable => () }
+    for (rep <- 1 to reps; n <- names)
+      ProfHarness.time(n, rep) {
         ProfHarness.force(SparkEntry.queries(n)(spark, sfDir))
       }
-    }
     spark.stop()
   }
 }

@@ -13,7 +13,7 @@ import java.util.Comparator
   * real cluster provisions dedicated local SSDs for shuffle. The
   * library itself (GraftEngine) does NOT set `spark.local.dir` — that
   * is a deployment decision; only the harness mains (Bench / Verify /
-  * Prof) opt in.
+  * ProfQ / Explain, via Bench.session, and GenData) opt in.
   *
   * Cleanup discipline (tmpfs is RAM; Spark only removes its own
   * `spark-<uuid>` subdirs): [[localDir]] dirs (shuffle/spill) are

@@ -1352,8 +1352,8 @@ private[graft] trait SparkEntryAnn { this: SparkEntry.type =>
     // pinned: both unionAll branches below read the pair table, and the
     // union defeats ReuseExchange, so an unpinned pairs re-ran the whole
     // basket self-join + pair aggregate for the swapped branch (measured
-    // ~1.0 s of the gate's 2.9 s warm floor — the ProfPairs stage
-    // decomposition). The pair table itself is support-filtered and
+    // ~1.0 s of the gate's 2.9 s warm floor — the pair-pipeline stage
+    // decomposition in SCALE.md). The pair table itself is support-filtered and
     // item-pair-sized, far smaller than the basket stream it came from,
     // so the checkpoint is cheap at any scale.
     val pairs = MarketBasket.pairCounts(

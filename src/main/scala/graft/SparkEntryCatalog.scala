@@ -75,8 +75,8 @@ private[graft] trait SparkEntryCatalog { this: SparkEntry.type =>
     * buffer exceeds Spark's 18-digit compact-long Decimal and falls
     * back to BigDecimal arithmetic per row; summing exact cents in a
     * primitive long buffer instead halved the q_group_agg family's
-    * aggregate time (ProfDec A/B: 1.06 s -> 0.58 s warm at sf0.1,
-    * value parity checked). Long capacity bounds the sum at 9.2e16
+    * aggregate time (same-JVM A/B: 1.06 s -> 0.58 s warm at sf0.1,
+    * value parity checked; VERDICT.md, OPTIMIZATION_r17.md). Long capacity bounds the sum at 9.2e16
     * currency units per group — far beyond any gated aggregate — and
     * ANSI mode (Spark 4 default) fails loudly on overflow rather than
     * wrapping. The /100 runs at decimal scale >= 6, exact for cents,

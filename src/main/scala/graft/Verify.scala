@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,38 +6,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet // optional query filter for local iteration
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // TypedImperativeAggregate states here are small fixed-size buffers
-      // (int[64] SimHash, long[k] MinHash, bounded top-k heaps), so let
-      // ObjectHashAggregate keep thousands of groups in memory per task
-      // instead of falling back to sort-based aggregation at the default
-      // 128 keys — the fallback re-sorts the whole exploded input
-      // (measured ~20% on the signature aggregates). The default guards
-      // multi-MB collect_list states, which no plan here builds.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      // 120+ queries x several codegen fragments each overflow the
-      // 100-entry Janino class cache (see Bench) — static conf.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // Same scan-split packing as Bench (see there): verification runs
-      // under the bench's split layout, so order-insensitivity of every
-      // gate is exercised against the same partitioning the bench times.
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "131072"))
-      // AQE reduce-partition target, matching Bench (see there) — the
-      // gates verify under the same reduce layout the bench times
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "8388608"))
-      // Shuffle/spill scratch on tmpfs — the sandbox's /tmp is on a
-      // throttled shared disk whose stall windows dominate measured
-      // times (see Scratch).
-      .config("spark.local.dir", Scratch.localDir("verify-local"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Bench's session: the gates verify under the same scan-split and
+    // AQE reduce layout the bench times, so order-insensitivity of every
+    // gate is exercised against the partitioning the bench sees.
+    val spark = Bench.session(Bench.envCpus(), "verify-local")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     var failed = 0

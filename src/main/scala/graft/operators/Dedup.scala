@@ -475,9 +475,9 @@ object Dedup {
     val cnt = words.groupBy("_id", "_w").agg(count(lit(1)).as("_c"))
     // pinPairs=false: `pairs` is already a checkpoint scan, so the
     // size-filtered table's two consumers re-derive it from cheap
-    // in-plan joins — pinning it again was measured SLOWER (r18
-    // ProfVerifyPin, 4/4 interleaved reps: 0.84-0.99 s pinned vs
-    // 0.66-0.74 s unpinned on the q_simhash_recall probe stream).
+    // in-plan joins — pinning it again was measured SLOWER (4/4
+    // interleaved reps: 0.84-0.99 s pinned vs 0.66-0.74 s unpinned on
+    // the q_simhash_recall probe stream; OPTIMIZATION_r18.md).
     verifyBagJaccard(pairs, cnt, minJaccard, pinPairs = false)
   }
 
@@ -510,7 +510,7 @@ object Dedup {
     * caller feeds the banding self-join in directly), FALSE when the
     * caller already checkpointed the pair list — there the filtered
     * table re-derives from cheap in-plan joins over the checkpoint scan
-    * and the extra pin was measured slower (r18 ProfVerifyPin).
+    * and the extra pin was measured slower (OPTIMIZATION_r18.md).
     */
   private def verifyBagJaccard(
       pairs0: DataFrame,

@@ -50,7 +50,7 @@ object FuzzyMatch {
     * NOT pinned (r18 measurement): the r17 round checkpointed the
     * distinct dictionary on the theory that both self-join sides replay
     * the caller's upstream build, but the interleaved same-JVM A/B on
-    * the full q_fuzzy_match dictionary (ProfFuzzyPin) measured the
+    * the full q_fuzzy_match dictionary (OPTIMIZATION_r18.md) measured the
     * UNPINNED form consistently faster warm (1.21-1.45 s vs 1.32-1.51 s
     * pinned, 3/3 warm reps) — the duplicated subtrees' exchanges
     * canonicalize identically and AQE stage reuse serves both join

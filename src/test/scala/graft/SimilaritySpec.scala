@@ -66,7 +66,7 @@ class SimilaritySpec extends SparkSpec {
   test("production multi-probe config (8x8, H<=2) reaches recall >= 0.9 on sf0.1") {
     // The config gated by q_ann_recall_hi: widening the probe radius to
     // Hamming<=2 and compounding over 8 tables lifts recall to ~0.98
-    // panel-mean even on this iid-noise worst case (ProfAnn
+    // panel-mean even on this iid-noise worst case (multi-probe recall
     // measurements, SCALE.md). Single query here; the gate averages 10.
     val full = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
     val qv = full.filter("vec_id = 0")

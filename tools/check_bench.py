@@ -121,9 +121,9 @@ def check_config_contract(failures):
 def check_slice_contract(failures):
     # The registry was split by query family in r17 (SparkEntry.scala ->
     # SparkEntryDedup/Ann/Events/Ingest/Catalog/...): the contract scans
-    # the whole SparkEntry*.scala family. Prof*.scala scratch profilers
-    # are deliberately OUT of scope — they reuse slice predicates for
-    # A/B runs without gating anything.
+    # the whole SparkEntry*.scala family. The ProfQ profiler is
+    # deliberately OUT of scope — it times registry queries by name and
+    # gates nothing.
     import glob
     import os
     here = os.path.dirname(os.path.abspath(__file__))
