@@ -54,7 +54,10 @@ class GraftEngine(val spark: SparkSession, val store: operators.ProductBackend) 
       offset: Int = 0,
       limit: Int = CatalogQueries.DefaultLimit,
       decimalAsFloat: Boolean = false): DataFrame = {
-    val out = CatalogQueries.list(store.readClient(clientId), clientId, query, offset, limit)
+    // list applies the tenant predicate itself (a partition filter, so
+    // the scan still prunes to the tenant); readClient would add a second
+    // copy of it to analyze on every call
+    val out = CatalogQueries.list(store.read(), clientId, query, offset, limit)
     if (!decimalAsFloat) out
     else out.select(out.schema.fields.map { f =>
       (f.dataType match {

@@ -24,7 +24,17 @@ object CatalogQueries {
       limit: Int = DefaultLimit): DataFrame = {
     require(limit >= 1 && limit <= MaxLimit, s"limit must be in [1,$MaxLimit]")
     require(offset >= 0, "offset must be >= 0")
-    val scoped = products.filter(col("client_id") === clientId)
+    val search = query.filter(_.nonEmpty)
+    // tenant and search predicates in ONE filter: each Dataset op is a
+    // separate analysis on the driver, and Catalyst would combine the
+    // two filters into this conjunction anyway
+    val tenant = col("client_id") === clientId
+    val scoped = products.filter(search.fold(tenant) { q =>
+      val contains = s"%$q%"
+      tenant && (col("title").ilike(contains) ||
+        col("remote_id").ilike(contains) ||
+        col("sku").ilike(contains))
+    })
     // Sku ordering parity with the reference's Postgres ORDER BY:
     // anonymous no-sku inserts persist as EMPTY STRINGS (DictReader
     // yields '' and the DDL forbids NULL), and '' sorts FIRST under
@@ -34,20 +44,33 @@ object CatalogQueries {
     // gate aborts such batches): Postgres's ascending default puts NULLs
     // last, Spark's puts them first, and without the modifier a legacy
     // NULL row would lead every page instead of trailing them.
-    val ordered = query.filter(_.nonEmpty) match {
+    val ordered = search match {
       case Some(q) =>
-        val contains = s"%$q%"
-        scoped
-          .filter(col("title").ilike(contains) ||
-            col("remote_id").ilike(contains) ||
-            col("sku").ilike(contains))
-          .orderBy(
-            when(lower(col("sku")) === lower(lit(q)), 0).otherwise(1),
-            when(col("sku").ilike(s"$q%"), 0).otherwise(1),
-            col("sku").asc_nulls_last)
+        scoped.orderBy(
+          when(lower(col("sku")) === lower(lit(q)), 0).otherwise(1),
+          when(col("sku").ilike(s"$q%"), 0).otherwise(1),
+          col("sku").asc_nulls_last)
       case None => scoped.orderBy(col("sku").asc_nulls_last)
     }
     ordered.offset(offset).limit(limit)
+  }
+
+  /** The reference's REST boundary re-types the DECIMAL(12,2) price
+    * columns as Python floats (`ClientProductOut.max_price:
+    * Optional[float]`, web/api/products.py:27-29): pydantic's orm_mode
+    * coerces each Decimal with float(d) — the nearest IEEE-754 double.
+    * The engine keeps exact decimals end-to-end (a deliberate semantic
+    * upgrade over the reference's storage-to-wire path); this projection
+    * reproduces the documented LOSSY edge for API-parity consumers.
+    * Apply it LAST — after every filter/merge/aggregate — never before
+    * arithmetic, or the float rounding leaks into stored state.
+    */
+  def restView(products: DataFrame): DataFrame = {
+    val priceCols = Seq("max_price", "min_price", "reference_price")
+    priceCols.foldLeft(products)((df, c) =>
+      if (df.columns.contains(c))
+        df.withColumn(c, col(c).cast(org.apache.spark.sql.types.DoubleType))
+      else df)
   }
 
   /** Keyset ("seek method") pagination — the scale-correct sibling of
@@ -58,7 +81,6 @@ object CatalogQueries {
     * BY key LIMIT n` — a predicate that pushes into the scan, so every
     * page costs the same O(pageSize) regardless of depth. The cursor
     * key must be a TOTAL order, or pages skip/repeat rows that tie on
-    *
     * the sort key. Here the cursor is `sku` alone: (client_id, sku) is
     * the reference table's uniqueness contract (the upsert key), so
     * within a tenant the NON-EMPTY skus form a total order. Anonymous
@@ -78,24 +100,6 @@ object CatalogQueries {
     * cursor) and the sort+limit plans as TakeOrderedAndProject — a
     * distributed top-k, never a global sort or an offset scan.
     */
-  /** The reference's REST boundary re-types the DECIMAL(12,2) price
-    * columns as Python floats (`ClientProductOut.max_price:
-    * Optional[float]`, web/api/products.py:27-29): pydantic's orm_mode
-    * coerces each Decimal with float(d) — the nearest IEEE-754 double.
-    * The engine keeps exact decimals end-to-end (a deliberate semantic
-    * upgrade over the reference's storage-to-wire path); this projection
-    * reproduces the documented LOSSY edge for API-parity consumers.
-    * Apply it LAST — after every filter/merge/aggregate — never before
-    * arithmetic, or the float rounding leaks into stored state.
-    */
-  def restView(products: DataFrame): DataFrame = {
-    val priceCols = Seq("max_price", "min_price", "reference_price")
-    priceCols.foldLeft(products)((df, c) =>
-      if (df.columns.contains(c))
-        df.withColumn(c, col(c).cast(org.apache.spark.sql.types.DoubleType))
-      else df)
-  }
-
   def listKeyset(
       products: DataFrame,
       clientId: Int,

@@ -17,9 +17,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (100 TB): the join shuffles both sides by the key — with the
   * target table written `partitionBy(client_id)` (see [[ProductStore]]) a
-  * single client's batch touches only its partition, and AQE picks
-  * broadcast-hash when the staged batch is small (the common case: a batch
-  * is MBs against a TB-scale target). No driver-side loops anywhere.
+  * single client's batch touches only its partition (only its touched sku
+  * buckets on a bucketed store). Spark cannot broadcast either side of a
+  * FULL OUTER join, so even a small staged batch plans as a sort-merge
+  * join that shuffles and sorts the whole target partition on every
+  * upload — the dominant per-upload merge cost for a large tenant. No
+  * driver-side loops anywhere.
   */
 object MergeOps {
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.util.concurrent.atomic.AtomicReference
 import scala.util.Try
 
 /** Parquet-backed product table with atomic overwrite.
@@ -53,6 +54,21 @@ import scala.util.Try
   * stays OUTSIDE the lock; only the link-and-publish section (driver-side
   * metadata work, milliseconds) is serialized, so tenant ingests still
   * overlap on the cluster.
+  *
+  * Read side: every read ([[read]], [[readClient]], [[readClientBuckets]])
+  * goes through ONE resolved relation per published version, keyed by
+  * the version directory CURRENT names. Each call still reads CURRENT;
+  * only when it names a different directory than the cached entry is the
+  * version resolved again (its files listed once) and the entry
+  * replaced. The key can never be stale: a version directory is
+  * immutable from publish until GC, GC never deletes the live one, and
+  * any publish (this instance, another instance on the root, another
+  * process) changes what CURRENT names, so the very next call misses.
+  * Two threads racing on a miss at worst install an older entry, which
+  * costs one extra resolution, never a wrong answer. Tenant and bucket
+  * predicates are partition filters pruned over the cached listing. The
+  * hit rate follows the read/publish ratio: the benchmark's serving mix
+  * makes ~19 list calls per upload publish, so ~95% of list calls hit.
   */
 class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
     override val skuBuckets: Option[Int] = None)
@@ -117,13 +133,6 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
       ProductSchema.CLIENT_PRODUCTS_SCHEMA
         .add(ProductStore.BucketCol, org.apache.spark.sql.types.IntegerType))
 
-  /** Serialize read-CURRENT -> build-version -> publish. The JVM monitor
-    * (per canonical root) orders threads in this process; the OS file
-    * lock ([[FileChannel#lock]] blocks until acquired) orders separate
-    * writer processes. The monitor must wrap the file lock: the JVM
-    * throws OverlappingFileLockException instead of queueing when two
-    * threads of one process lock the same file.
-    */
   /** The ONE definition of the monitor-wrapped OS file lock both store
     * locks use: the JVM monitor orders threads in this process, the file
     * lock orders separate processes, and the monitor MUST wrap the file
@@ -143,6 +152,13 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
       } finally ch.close()
     }
 
+  /** Serialize read-CURRENT -> build-version -> publish. The JVM monitor
+    * (per canonical root) orders threads in this process; the OS file
+    * lock ([[FileChannel#lock]] blocks until acquired) orders separate
+    * writer processes. The monitor must wrap the file lock: the JVM
+    * throws OverlappingFileLockException instead of queueing when two
+    * threads of one process lock the same file.
+    */
   private def withWriteLock[T](body: => T): T =
     withFileLock(ProductStore.jvmLocks.computeIfAbsent(
       Paths.get(root).toAbsolutePath.normalize.toString, _ => new Object),
@@ -169,34 +185,52 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
       Some(versionsDir.resolve(Files.readString(currentPtr).trim))
     else None
 
-  def read(): DataFrame = readRaw().drop(ProductStore.BucketCol)
-
-  /** Raw read INCLUDING the layout bucket column (bucketed stores) —
-    * internal, so bucket filters can prune before the column is
-    * dropped from the caller-facing schema.
+  /** The resolved relation of the last version read (see the class doc).
+    * `raw` keeps the layout bucket column (bucketed stores), so bucket
+    * filters can prune before it is dropped; `view` is the caller-facing
+    * schema without it.
     */
-  private def readRaw(): DataFrame =
-    currentVersion match {
-      case Some(dir) =>
-        spark.read.schema(storedSchema).parquet(dir.toString)
-      case None =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], storedSchema)
-    }
+  private case class Resolved(dir: Option[Path], raw: DataFrame, view: DataFrame)
 
-  /** Read only one client's partition — partition pruning makes this a
-    * scan of the `client_id=X` directory alone, not the whole table.
+  private val resolved = new AtomicReference[Resolved]()
+
+  /** The live version's resolved relation: reuse the cached one when
+    * CURRENT still names its directory, otherwise resolve (list the
+    * version's files once) and replace the entry.
+    */
+  private def resolveCurrent(): Resolved = {
+    val dir = currentVersion
+    val cached = resolved.get()
+    if (cached != null && cached.dir == dir) cached
+    else {
+      val raw = dir match {
+        case Some(d) => spark.read.schema(storedSchema).parquet(d.toString)
+        case None => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], storedSchema)
+      }
+      val fresh = Resolved(dir, raw, raw.drop(ProductStore.BucketCol))
+      resolved.set(fresh)
+      fresh
+    }
+  }
+
+  def read(): DataFrame = resolveCurrent().view
+
+  /** Read only one client's partition: the `client_id` predicate is a
+    * partition filter, so the scan prunes to that tenant's files over
+    * the cached listing of the live version.
     */
   def readClient(clientId: Int): DataFrame =
     read().filter(col("client_id") === clientId)
 
   /** Pruned tenant read: `client_id=X/_bucket=B` directories only (both
-    * filters are partition predicates — the scan lists just those
-    * dirs). Whole-tenant fallback on an unbucketed store.
+    * filters are partition predicates — the scan prunes to those dirs
+    * over the cached listing). Whole-tenant fallback on an unbucketed
+    * store.
     */
   override def readClientBuckets(clientId: Int, buckets: Seq[Int]): DataFrame =
     skuBuckets match {
       case Some(_) =>
-        readRaw()
+        resolveCurrent().raw
           .filter(col("client_id") === clientId &&
             col(ProductStore.BucketCol).isin(buckets: _*))
           .drop(ProductStore.BucketCol)
@@ -228,16 +262,6 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
     Try(deleteRecursively(tmp))
   }
 
-  /** Replace ONLY `client_id=clientId`'s partition with the given rows
-    * (all rows must belong to that client). Every other client's files
-    * are hard-linked into the new version — byte-identical (same inodes)
-    * across another tenant's ingest.
-    *
-    * An empty staged partition is an ABORT, not a truncate: a df with no
-    * rows for this client (empty input, or rows carrying another
-    * client_id) would otherwise silently wipe the tenant's data. Explicit
-    * truncation is a separate, deliberate operation ([[truncateClient]]).
-    */
   /** Stage one client's rows to a fresh `_staging_*` prefix (never
     * gc-listed — see [[overwriteAtomic]]) and return (stagingRoot,
     * stagedClientDir). The empty-staging ABORT is shared policy: a df
@@ -260,6 +284,16 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
     (tmp, src)
   }
 
+  /** Replace ONLY `client_id=clientId`'s partition with the given rows
+    * (all rows must belong to that client). Every other client's files
+    * are hard-linked into the new version — byte-identical (same inodes)
+    * across another tenant's ingest.
+    *
+    * An empty staged partition is an ABORT, not a truncate: a df with no
+    * rows for this client (empty input, or rows carrying another
+    * client_id) would otherwise silently wipe the tenant's data. Explicit
+    * truncation is a separate, deliberate operation ([[truncateClient]]).
+    */
   def overwriteClientAtomic(
       clientId: Int, df: DataFrame, marker: Option[String] = None): Unit = {
     val (tmp, src) = stageClientPartition(clientId, df)
@@ -619,7 +653,7 @@ object ProductStore {
 
   /** Per-(root, client) ingest monitors — shared across ProductStore
     * instances on the same root, so same-client ingests serialize even
-    * through separate store objects (see [[ProductBackend.ingestLock]]).
+    * through separate store objects (see [[ProductBackend.withIngestLock]]).
     */
   private val ingestLocks =
     new java.util.concurrent.ConcurrentHashMap[(String, Int), Object]()
