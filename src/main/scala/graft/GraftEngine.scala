@@ -1,9 +1,7 @@
 package graft
 
 import graft.operators.{CatalogQueries, IngestionReport, IngestionService, ParserConfig, ProductStore}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.sql.Timestamp
 
@@ -39,33 +37,19 @@ class GraftEngine(val spark: SparkSession, val store: operators.ProductBackend) 
     new IngestionService(spark, store, clientId)
       .ingest(ParserConfig.fromJson(parserConfigJson), dataPath, fullUpdate, batchTs)
 
-  /** `decimalAsFloat = true` reproduces the reference's API boundary:
-    * its response model declares the money columns as `float`
-    * (web/api/products.py:27-29), so Postgres NUMERIC(12,2) is coerced
-    * to double on the way out. The engine keeps DecimalType(12,2)
-    * end-to-end internally (exact money math on executors) and re-types
-    * only here, at the same seam the reference does — off by default
-    * because exact decimals are the better contract when the caller
-    * isn't a float-typed wire format.
+  /** Money columns stay DecimalType(12,2); a caller that needs the
+    * reference's float-typed response model (web/api/products.py:27-29)
+    * wraps the page in [[CatalogQueries.restView]].
     */
   def listProducts(
       clientId: Int,
       query: Option[String] = None,
       offset: Int = 0,
-      limit: Int = CatalogQueries.DefaultLimit,
-      decimalAsFloat: Boolean = false): DataFrame = {
+      limit: Int = CatalogQueries.DefaultLimit): DataFrame =
     // list applies the tenant predicate itself (a partition filter, so
     // the scan still prunes to the tenant); readClient would add a second
     // copy of it to analyze on every call
-    val out = CatalogQueries.list(store.read(), clientId, query, offset, limit)
-    if (!decimalAsFloat) out
-    else out.select(out.schema.fields.map { f =>
-      (f.dataType match {
-        case _: DecimalType => col(f.name).cast(DoubleType)
-        case _              => col(f.name)
-      }).as(f.name): Column
-    }.toSeq: _*)
-  }
+    CatalogQueries.list(store.read(), clientId, query, offset, limit)
 }
 
 object GraftEngine {

@@ -47,7 +47,7 @@ object ProductSchema {
   /** Declared VARCHAR(n) widths from the reference DDL
     * (db/migrations/000/001_up_init.sql:22-36). Spark strings are
     * unbounded, so the mapping layer enforces these lengths explicitly
-    * (see ColumnMapping / VarcharPolicy) — otherwise a >n-char value that
+    * (see ColumnMapping's `_err_len_` flags) — otherwise a >n-char value that
     * the reference's database would reject silently round-trips here.
     */
   val varcharLen: Map[String, Int] = Map(

@@ -79,25 +79,6 @@ object ParserConfig {
   }
 }
 
-/** What to do with a string value longer than its target column's
-  * declared VARCHAR(n) width (ProductSchema.varcharLen, from the
-  * reference DDL 001_up_init.sql:22-36).
-  *
-  *  - [[VarcharPolicy.Strict]] (default): over-length is a batch-aborting
-  *    error — the reference's database rejects the INSERT, failing the
-  *    whole ingest (service.py:56-64 catches and reports), so this is the
-  *    faithful behavior.
-  *  - [[VarcharPolicy.Clamp]]: truncate to the declared width, for
-  *    migrations that prefer lossy acceptance over aborts.
-  *  - [[VarcharPolicy.Off]]: unbounded strings (pre-round-4 behavior).
-  */
-sealed trait VarcharPolicy
-object VarcharPolicy {
-  case object Off extends VarcharPolicy
-  case object Clamp extends VarcharPolicy
-  case object Strict extends VarcharPolicy
-}
-
 /** The projection/rename/coercion stage — one `select` over the raw
   * all-string DataFrame (reference does this row-at-a-time in Python,
   * ingestion/base.py:38-68; here it is a single codegen'd projection that
@@ -108,15 +89,14 @@ object ColumnMapping {
   /** Apply a validated mapping. Source columns absent from the input (a
     * row-varying source in the reference) surface as typed NULL targets.
     * Adds one `_err_<target>` flag column per strict transformer so the
-    * service can count unparseable inputs before writing anything, and —
-    * under [[VarcharPolicy.Strict]] — one `_err_len_<target>` flag per
-    * over-length VARCHAR(n) target (the reference's database enforces
-    * these widths on INSERT, aborting the batch).
+    * service can count unparseable inputs before writing anything, and
+    * one `_err_len_<target>` flag per over-length VARCHAR(n) target
+    * (ProductSchema.varcharLen, from the reference DDL
+    * 001_up_init.sql:22-36): the reference's database rejects such an
+    * INSERT and the whole ingest fails (service.py:56-64), so an
+    * over-width value aborts the batch here too.
     */
-  def apply(
-      raw: DataFrame,
-      cfg: ParserConfig,
-      varchar: VarcharPolicy = VarcharPolicy.Strict): DataFrame = {
+  def apply(raw: DataFrame, cfg: ParserConfig): DataFrame = {
     cfg.validated()
     val present = raw.columns.toSet
     def widthOf(dst: String): Option[Int] =
@@ -124,41 +104,31 @@ object ColumnMapping {
         .filter(_ => targetType(dst) == org.apache.spark.sql.types.StringType)
     val mapped: Seq[Column] = cfg.columnMapping.map {
       case (src, (dst, tid)) =>
-        if (present.contains(src)) {
-          val transformed = Transformers(tid)(col(s"`$src`"))
-          (varchar match {
-            case VarcharPolicy.Clamp =>
-              widthOf(dst).fold(transformed)(n => substring(transformed, 1, n))
-            case _ => transformed
-          }).as(dst)
-        } else lit(null).cast(targetType(dst)).as(dst)
+        if (present.contains(src)) Transformers(tid)(col(s"`$src`")).as(dst)
+        else lit(null).cast(targetType(dst)).as(dst)
     }
     val errFlags: Seq[Column] = cfg.columnMapping.collect {
       case (src, (dst, tid)) if Transformers.strictIds.contains(tid) && present.contains(src) =>
         Transformers.errorFlag(col(s"`$src`"), Transformers(tid)(col(s"`$src`")))
           .as(s"_err_$dst")
     }
-    val lenFlags: Seq[Column] =
-      if (varchar != VarcharPolicy.Strict) Nil
-      else cfg.columnMapping.collect {
-        case (src, (dst, tid)) if present.contains(src) && widthOf(dst).isDefined =>
-          val transformed = Transformers(tid)(col(s"`$src`"))
-          (transformed.isNotNull && length(transformed) > widthOf(dst).get)
-            .as(s"_err_len_$dst")
-      }
+    val lenFlags: Seq[Column] = cfg.columnMapping.collect {
+      case (src, (dst, tid)) if present.contains(src) && widthOf(dst).isDefined =>
+        val transformed = Transformers(tid)(col(s"`$src`"))
+        (transformed.isNotNull && length(transformed) > widthOf(dst).get)
+          .as(s"_err_len_$dst")
+    }
     // Raw source value alongside each strict flag, so an aborting batch
     // can report WHICH value failed (reference IngestionReport.report).
     val rawVals: Seq[Column] = cfg.columnMapping.collect {
       case (src, (dst, tid)) if Transformers.strictIds.contains(tid) && present.contains(src) =>
         col(s"`$src`").cast(org.apache.spark.sql.types.StringType).as(s"_raw_$dst")
     }
-    val lenRawVals: Seq[Column] =
-      if (varchar != VarcharPolicy.Strict) Nil
-      else cfg.columnMapping.collect {
-        case (src, (dst, tid)) if present.contains(src) && widthOf(dst).isDefined =>
-          col(s"`$src`").cast(org.apache.spark.sql.types.StringType)
-            .as(s"_raw_len_$dst")
-      }
+    val lenRawVals: Seq[Column] = cfg.columnMapping.collect {
+      case (src, (dst, _)) if present.contains(src) && widthOf(dst).isDefined =>
+        col(s"`$src`").cast(org.apache.spark.sql.types.StringType)
+          .as(s"_raw_len_$dst")
+    }
     // Integer range validation (the reference's DB would reject the
     // INSERT — see Transformers.integerRangeErrorFlag): flag parseable
     // values outside INTEGER's range so the service aborts the batch

@@ -47,33 +47,20 @@ object IngestionService {
   *  - full-update deactivates absent skus BEFORE upserting, so re-ingested
   *    skus end active (:321-339); default mode never deactivates (:341-359);
   *  - one unparseable strict value fails the whole batch, nothing committed.
-  */
-/** @param allowTenantMove opt-in reproduction of the reference's
-  *        cross-tenant move (service.py:95-100): its UPDATE path
-  *        setattrs EVERY supplied non-None column including a mapped
-  *        `client_id`, so an existing row can MOVE to another tenant
-  *        mid-upsert, while its INSERT path pins the authenticated
-  *        tenant (the dict union in service.py:109 puts the service's
-  *        client last). Default OFF — the move is a tenancy escape, and
-  *        the engine's default pins client_id on both paths. When ON,
-  *        moved rows land in the target tenants' partitions in a
-  *        SEPARATE publish after the source tenant's swap: the
-  *        partition-sharded store cannot span tenants atomically, so a
-  *        crash between the two publishes drops the moved rows (the
-  *        reference's single transaction doesn't have this window —
-  *        though its concurrent cross-moves can deadlock on row locks,
-  *        the analogous hazard). Within-batch duplicate skus resolve by
-  *        last-wins BEFORE the move (one merged row moves once), where
-  *        the reference's strictly sequential loop would move the first
-  *        occurrence out and re-INSERT the second — keep duplicate skus
-  *        out of tenant-move batches if that distinction matters.
+  *
+  * Deliberate deviation: a mapped `client_id` is always ignored and the
+  * row is pinned to the authenticated tenant, on the insert path AND the
+  * update path. The reference pins only its INSERT path (service.py:109's
+  * dict union puts the service's client last); its UPDATE path setattrs
+  * every supplied non-None column, so a mapped client_id MOVES an existing
+  * row to another tenant mid-upsert (service.py:95-100) — a tenancy
+  * escape, and one the partition-sharded store could not publish
+  * atomically anyway (it would take a second, per-target-tenant publish).
   */
 class IngestionService(
     spark: SparkSession,
     store: ProductBackend,
-    clientId: Int,
-    varchar: VarcharPolicy = VarcharPolicy.Strict,
-    allowTenantMove: Boolean = false) {
+    clientId: Int) {
 
   /** `marker`: an ingest token committed ATOMICALLY with the batch's
     * publish (see [[ProductBackend.overwriteClientAtomic]]) — after a
@@ -90,7 +77,7 @@ class IngestionService(
       marker: Option[String] = None): IngestionReport =
     try {
       val raw = IngestSource(cfg.parserId).read(spark, path)
-      val mapped = ColumnMapping(raw, cfg.validated(), varchar)
+      val mapped = ColumnMapping(raw, cfg.validated())
         .persist(StorageLevel.MEMORY_AND_DISK)
       try doIngest(mapped, fullUpdate, batchTs, marker)
       finally mapped.unpersist()
@@ -225,27 +212,13 @@ class IngestionService(
     val skuPresent =
       if (hasSku) col("sku").isNotNull && length(col("sku")) > 0 else lit(false)
 
-    // client_id is pinned to the authenticated tenant UNCONDITIONALLY.
-    // Deliberate deviation on a pathological-but-accepted config: the
-    // reference allows mapping a source column to client_id (base.py's
-    // reflective target list excludes only `id`), and while its INSERT
-    // path overrides the value just like this line (service.py:109's
-    // dict union puts the service's client last), its UPDATE path
-    // setattr's every supplied non-None column — so a mapped client_id
-    // can MOVE an existing row to another tenant mid-upsert
-    // (service.py:96-99). That is a tenancy escape, not a feature;
-    // here the mapped value is ignored on both paths unless the caller
-    // opted into [[allowTenantMove]], which carries it through the merge
-    // as the update path's new tenant (`_moved_cid`) while STILL pinning
-    // the insert path (the reference's dict-union override).
-    val moveCid = allowTenantMove && clean.columns.contains("client_id")
-    val staged0 =
-      if (moveCid) clean.withColumnRenamed("client_id", "_moved_cid")
-      else clean
-    val staged = staged0.withColumn("client_id", lit(clientId))
+    // client_id is pinned to the authenticated tenant unconditionally,
+    // overriding any mapped value (the reference allows mapping a source
+    // column to client_id — base.py's reflective target list excludes
+    // only `id`); see the class doc for the deviation on the update path.
+    val staged = clean.withColumn("client_id", lit(clientId))
     val keyed = staged.filter(skuPresent)
-    val inserts = staged.filter(!skuPresent)
-      .drop(IngestSource.ROW_IDX).drop("_moved_cid")
+    val inserts = staged.filter(!skuPresent).drop(IngestSource.ROW_IDX)
 
     // Tenant scope from the start: the merge reads ONLY this client's
     // partition (pruned scan) and the final write rewrites only that
@@ -323,34 +296,11 @@ class IngestionService(
       val merged =
         if (hasSku)
           MergeOps.coalesceMerge(
-            base, deduped.drop("_moved_cid"), ProductSchema.mergeKeys,
+            base, deduped, ProductSchema.mergeKeys,
             touchedCol = Some("last_changed_on"), stamp = stamp)
         else base
 
-      // Tenant-move (opt-in, see the constructor doc): only UPDATE-path
-      // rows move — batch rows whose sku already exists in THIS tenant
-      // and whose mapped client_id was supplied with a different value.
-      // The move set is per-batch-bounded (one (sku, cid) pair per
-      // merged key), so the relabel join broadcasts.
-      val moves =
-        if (moveCid && hasSku)
-          deduped
-            .filter(col("_moved_cid").isNotNull && col("_moved_cid") =!= clientId)
-            .join(target.select(col("sku")).distinct(), Seq("sku"), "left_semi")
-            .select(col("sku"), col("_moved_cid"))
-        else spark.emptyDataFrame
-      val (stay, movedOut) =
-        if (moveCid && hasSku) {
-          val relabeled = merged
-            .join(broadcast(moves), Seq("sku"), "left")
-            .withColumn("client_id",
-              coalesce(col("_moved_cid"), col("client_id")))
-            .drop("_moved_cid")
-          (relabeled.filter(col("client_id") === clientId),
-            Some(relabeled.filter(col("client_id") =!= clientId)))
-        } else (merged, None)
-
-      val result = stay
+      val result = merged
         .unionByName(inserts, allowMissingColumns = true)
         .withColumn("active", coalesce(col("active"), lit(true)))
         .withColumn("last_changed_on", coalesce(col("last_changed_on"), stamp))
@@ -360,31 +310,6 @@ class IngestionService(
       else
         store.overwriteClientAtomic(clientId, result, marker)
 
-      // Land moved rows in their target tenants' partitions, one
-      // publish per target under that tenant's own ingest lock. The
-      // target-tenant read happens under the SAME publish's lock, so a
-      // concurrent ingest there can't be lost; a collision with an
-      // existing (tenant, sku) keeps BOTH rows — exactly the reference,
-      // whose table has no unique constraint on (client_id, sku) and
-      // whose moved row simply coexists with the target tenant's own.
-      movedOut.foreach { mv =>
-        val landed = mv
-          .withColumn("active", coalesce(col("active"), lit(true)))
-          .withColumn("last_changed_on",
-            coalesce(col("last_changed_on"), stamp))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val cids = landed.select(col("client_id")).distinct()
-            .collect().map(_.getInt(0)).sorted
-          cids.foreach { cid =>
-            store.withIngestLock(cid) {
-              store.overwriteClientAtomic(cid,
-                store.readClient(cid).unionByName(
-                  landed.filter(col("client_id") === cid)))
-            }
-          }
-        } finally landed.unpersist()
-      }
       IngestionReport(success = true,
         s"Successfully processed $processed items", processed, stats)
     } finally toUnpersist.foreach(_.unpersist())

@@ -17,11 +17,7 @@ import scala.util.Try
   *
   * Reads go through `spark.read.jdbc`; `readClient`'s tenant filter is
   * pushed into the database as a WHERE clause (visible as PushedFilters
-  * in the scan). Large-table reads can parallelize with
-  * [[readPartitioned]], which splits the scan into `numPartitions` range
-  * queries on a numeric column — the JDBC equivalent of parquet's
-  * splittable files (a single-partition JDBC read funnels the whole
-  * table through one task).
+  * in the scan).
   *
   * Writes stage through Spark, then commit with ONE database transaction
   * (the same place the reference gets its all-or-nothing guarantee,
@@ -82,9 +78,9 @@ class JdbcProductStore(
   if (url.startsWith("jdbc:derby")) JdbcProductStore.ensureDerbyDialect()
 
   /** The dialect seam (see [[SqlDialect]]): identifier-folding probes,
-    * CREATE TABLE texts, staged-write column types, and the optional
-    * row-level upsert text all resolve per URL — Derby in the sandbox,
-    * Postgres (the reference's engine) in a real deployment.
+    * CREATE TABLE texts and staged-write column types resolve per URL —
+    * Derby in the sandbox, Postgres (the reference's engine) in a real
+    * deployment.
     */
   private val dialect: SqlDialect = SqlDialect.forUrl(url)
 
@@ -96,13 +92,27 @@ class JdbcProductStore(
     */
   private def q(name: String): String = "\"" + name + "\""
 
-  private val createDdl = dialect.productsDdl(table, q)
-
-  ensureTable() // after the DDL vals above — class body runs in order
+  ensureTable(table, dialect.productsDdl(table, q)) // after `dialect` — class body runs in order
 
   private def withConnection[T](body: Connection => T): T = {
     val conn = DriverManager.getConnection(url, props)
     try body(conn) finally conn.close()
+  }
+
+  /** Runs `body` in one transaction on a fresh connection: commit on
+    * return, roll back on any throw. The rollback runs BEFORE the
+    * connection closes: an open transaction makes close() raise (Derby
+    * 25001), which would mask the real failure.
+    */
+  private def inTransaction[T](body: Connection => T): T = withConnection { conn =>
+    conn.setAutoCommit(false)
+    try {
+      val out = body(conn)
+      conn.commit()
+      out
+    } catch {
+      case t: Throwable => Try(conn.rollback()); throw t
+    }
   }
 
   /** Unquoted identifiers fold per-database: Derby/Oracle store them
@@ -133,18 +143,21 @@ class JdbcProductStore(
     }
   }
 
-  private def ensureTable(): Unit = withConnection { conn =>
-    if (!tableExists(conn, table)) {
+  /** Create-if-absent for the products table and its `_ingest_locks` /
+    * `_ingest_markers` siblings.
+    */
+  private def ensureTable(name: String, ddl: String): Unit = withConnection { conn =>
+    if (!tableExists(conn, name)) {
       val st = conn.createStatement()
       // check-then-create can lose a create/create race with another
       // connection; the loser's "already exists" error is success iff a
       // re-probe now sees the table (don't trust vendor SQLStates). The
       // probe itself runs inside Try so a dead connection can't replace
       // the original DDL failure with a metadata-read exception.
-      try st.executeUpdate(createDdl)
+      try st.executeUpdate(ddl)
       catch {
         case _: java.sql.SQLException
-            if Try(tableExists(conn, table)).getOrElse(false) => ()
+            if Try(tableExists(conn, name)).getOrElse(false) => ()
       } finally st.close()
     }
   }
@@ -152,17 +165,6 @@ class JdbcProductStore(
   def exists: Boolean = withConnection(tableExists(_, table))
 
   private val lockTable = s"${table}_ingest_locks"
-
-  private def ensureLockTable(): Unit = withConnection { conn =>
-    if (!tableExists(conn, lockTable)) {
-      val st = conn.createStatement()
-      try st.executeUpdate(dialect.lockTableDdl(lockTable, q))
-      catch {
-        case _: java.sql.SQLException
-            if Try(tableExists(conn, lockTable)).getOrElse(false) => ()
-      } finally st.close()
-    }
-  }
 
   /** Same-client ingest serialization from the DATABASE's own row locks —
     * the reference's semantics (ingestion/service.py:92-106, Postgres):
@@ -180,7 +182,7 @@ class JdbcProductStore(
     * ingest waits; Postgres waits indefinitely.
     */
   override def withIngestLock[T](clientId: Int)(body: => T): T = {
-    ensureLockTable()
+    ensureTable(lockTable, dialect.lockTableDdl(lockTable, q))
     // Seed the client's lock row in its own autocommit transaction. A
     // duplicate-key loss to a concurrent seeder is success, but the Try
     // swallows EVERY SQLException — so mutual exclusion must not rest on
@@ -197,8 +199,7 @@ class JdbcProductStore(
       ()
     }
     seed()
-    withConnection { conn =>
-      conn.setAutoCommit(false)
+    inTransaction { conn =>
       val st = conn.createStatement()
       val lockSql = s"UPDATE $lockTable SET ${q("client_id")} = " +
         s"${q("client_id")} WHERE ${q("client_id")} = $clientId"
@@ -212,11 +213,7 @@ class JdbcProductStore(
           throw new IllegalStateException(
             s"ingest lock row for client $clientId absent after re-seed " +
               s"($locked rows matched) — refusing to run unserialized")
-        val out = body
-        conn.commit()
-        out
-      } catch {
-        case t: Throwable => Try(conn.rollback()); throw t
+        body
       } finally st.close()
     }
   }
@@ -234,30 +231,7 @@ class JdbcProductStore(
   def readClient(clientId: Int): DataFrame =
     read().filter(col("client_id") === clientId)
 
-  /** Parallel range-partitioned read for large tables: `numPartitions`
-    * concurrent range queries on `partitionCol` (the standard
-    * `spark.read.jdbc` partitioning), each executor pulling one slice.
-    */
-  def readPartitioned(
-      partitionCol: String,
-      lowerBound: Long,
-      upperBound: Long,
-      numPartitions: Int): DataFrame =
-    canonical(spark.read.jdbc(url, table, partitionCol, lowerBound, upperBound,
-      numPartitions, props))
-
   private val markerTable = s"${table}_ingest_markers"
-
-  private def ensureMarkerTable(): Unit = withConnection { conn =>
-    if (!tableExists(conn, markerTable)) {
-      val st = conn.createStatement()
-      try st.executeUpdate(dialect.markerTableDdl(markerTable, q))
-      catch {
-        case _: java.sql.SQLException
-            if Try(tableExists(conn, markerTable)).getOrElse(false) => ()
-      } finally st.close()
-    }
-  }
 
   /** Marker visibility comes from the database transaction itself: the
     * token row is inserted inside [[stageAndSwap]]'s single commit, so
@@ -285,9 +259,8 @@ class JdbcProductStore(
     * the table is retention-bounded by construction once callers retire.
     */
   override def retireMarkers(keep: String => Boolean): Unit =
-    withConnection { conn =>
+    inTransaction { conn =>
       if (tableExists(conn, markerTable)) {
-        conn.setAutoCommit(false)
         val st = conn.createStatement()
         try {
           val rs = st.executeQuery(s"SELECT ${q("token")} FROM $markerTable")
@@ -303,9 +276,6 @@ class JdbcProductStore(
           try dropped.result().foreach { t =>
             del.setString(1, t); del.executeUpdate(); ()
           } finally del.close()
-          conn.commit()
-        } catch {
-          case t: Throwable => Try(conn.rollback()); throw t
         } finally st.close()
       }
     }
@@ -323,7 +293,8 @@ class JdbcProductStore(
   def overwriteClientAtomic(
       clientId: Int, df: DataFrame, marker: Option[String] = None): Unit = {
     marker.foreach(ProductBackend.validateMarkerToken)
-    marker.foreach(_ => ensureMarkerTable()) // DDL outside the swap transaction
+    // DDL outside the swap transaction
+    marker.foreach(_ => ensureTable(markerTable, dialect.markerTableDdl(markerTable, q)))
     stageAndSwap(align(df).filter(col("client_id") === clientId),
       deleteWhere = Some(s"${q("client_id")} = $clientId"), requireRows = true,
       abortMsg = s"staged batch contains no rows for client_id=$clientId — " +
@@ -332,54 +303,11 @@ class JdbcProductStore(
       marker = marker)
   }
 
-  def truncateClient(clientId: Int): Unit = withConnection { conn =>
-    conn.setAutoCommit(false)
+  def truncateClient(clientId: Int): Unit = inTransaction { conn =>
     val st = conn.createStatement()
-    try {
-      st.executeUpdate(s"DELETE FROM $table WHERE ${q("client_id")} = $clientId")
-      conn.commit()
-    } catch {
-      // roll back before close: an open transaction makes close() raise
-      // (Derby 25001), masking the real DELETE failure.
-      case t: Throwable => Try(conn.rollback()); throw t
-    } finally st.close()
-  }
-
-  /** Row-level incremental upsert via the dialect's single-statement
-    * merge — Derby `MERGE INTO` (executed live by JdbcProductStoreSpec),
-    * Postgres `INSERT .. ON CONFLICT DO UPDATE` (text-spec'd; needs the
-    * deployment to add the (client_id, sku) unique index the reference
-    * schema omits). The alternative to [[overwriteClientAtomic]]'s swap
-    * when a delta is tiny against a huge tenant: no DELETE of untouched
-    * rows, one statement, same single-transaction atomicity.
-    *
-    * Keys STRICTLY on (client_id, sku) equality — the reference's
-    * ''-always-insert anonymous path and the column-wise
-    * null-keeps-old-value coalesce live in the ingestion service's
-    * routing/merge, not here: feed this only keyed, fully-resolved rows.
-    */
-  def upsertClientBatch(clientId: Int, df: DataFrame): Unit = {
-    val staging =
-      s"${table}_ups_${ProcessHandle.current().pid()}_${Thread.currentThread().getId}"
-    try {
-      align(df).filter(col("client_id") === clientId)
-        .write.mode(SaveMode.Overwrite)
-        .option("createTableColumnTypes", columnTypes)
-        .jdbc(url, staging, props)
-      withConnection { conn =>
-        conn.setAutoCommit(false)
-        val st = conn.createStatement()
-        try {
-          st.executeUpdate(dialect.upsertSql(table, staging, q))
-          conn.commit()
-        } catch {
-          case t: Throwable => Try(conn.rollback()); throw t
-        } finally st.close()
-      }
-    } finally withConnection { conn =>
-      val st = conn.createStatement()
-      try Try(st.executeUpdate(s"DROP TABLE $staging")) finally st.close()
-    }
+    try st.executeUpdate(s"DELETE FROM $table WHERE ${q("client_id")} = $clientId")
+    finally st.close()
+    ()
   }
 
   def append(df: DataFrame): Unit =
@@ -405,8 +333,7 @@ class JdbcProductStore(
       align(df).write.mode(SaveMode.Overwrite)
         .option("createTableColumnTypes", columnTypes)
         .jdbc(url, staging, props)
-      withConnection { conn =>
-        conn.setAutoCommit(false)
+      inTransaction { conn =>
         val st = conn.createStatement()
         try {
           if (requireRows) {
@@ -431,9 +358,6 @@ class JdbcProductStore(
               s"INSERT INTO $markerTable (${q("token")}) VALUES (?)")
             try { ins.setString(1, t); ins.executeUpdate() } finally ins.close()
           }
-          conn.commit()
-        } catch {
-          case t: Throwable => Try(conn.rollback()); throw t
         } finally st.close()
       }
     } finally withConnection { conn =>

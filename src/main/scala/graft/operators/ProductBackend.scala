@@ -115,19 +115,14 @@ trait ProductBackend {
     * same-client ingests serialize (exactly the contention a
     * transactional backend serializes too).
     *
-    * Default: a JVM monitor per (backend instance, client) — note this
-    * covers only threads of ONE instance; the transaction inside a
-    * backend's publish does NOT cover the read-merge span, so real
-    * backends must override. [[ProductStore]] overrides with a
-    * monitor-wrapped OS FILE lock (two processes on one filesystem);
-    * [[JdbcProductStore]] overrides with a database row lock held for
-    * the whole sequence (any number of processes sharing the database —
-    * the reference's own mechanism).
+    * Abstract: the transaction inside a backend's publish does NOT cover
+    * the read-merge span, so every backend supplies its own lock.
+    * [[ProductStore]] uses a monitor-wrapped OS FILE lock (two processes
+    * on one filesystem); [[JdbcProductStore]] uses a database row lock
+    * held for the whole sequence (any number of processes sharing the
+    * database — the reference's own mechanism).
     */
-  private val ingestLocks =
-    new java.util.concurrent.ConcurrentHashMap[Int, Object]()
-  def withIngestLock[T](clientId: Int)(body: => T): T =
-    ingestLocks.computeIfAbsent(clientId, _ => new Object).synchronized(body)
+  def withIngestLock[T](clientId: Int)(body: => T): T
 }
 
 object ProductBackend {

@@ -243,17 +243,7 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
     * rewrite every other tenant's files.
     */
   def overwriteAtomic(df: DataFrame): Unit = {
-    // stage OUTSIDE versions/ (the append/replacePartition discipline):
-    // a build written directly into versions/ is visible to a
-    // concurrent publisher's gc(), which can delete the in-progress
-    // unpublished directory once enough newer versions exist — the
-    // staging prefix is never gc-listed, and the move happens under
-    // the lock
-    val tmp = Paths.get(root, s"_staging_${uniqueTag()}")
-    align(df).write
-      .mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(tmp.toString)
+    val tmp = stage(df)
     withWriteLock {
       val name = newVersionName()
       mergeMove(tmp, versionsDir.resolve(name))
@@ -262,19 +252,29 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
     Try(deleteRecursively(tmp))
   }
 
-  /** Stage one client's rows to a fresh `_staging_*` prefix (never
-    * gc-listed — see [[overwriteAtomic]]) and return (stagingRoot,
-    * stagedClientDir). The empty-staging ABORT is shared policy: a df
-    * with no rows for the client must never silently wipe live data.
+  /** Write `df` (aligned, partitioned like the live table) to a fresh
+    * `_staging_*` prefix and return it. Staging sits OUTSIDE versions/:
+    * a build written directly into versions/ is visible to a concurrent
+    * publisher's gc(), which can delete the in-progress unpublished
+    * directory once enough newer versions exist — the staging prefix is
+    * never gc-listed, and the move into versions/ happens under the lock.
     */
-  private def stageClientPartition(clientId: Int, df: DataFrame): (Path, Path) = {
-    val part = s"client_id=$clientId"
+  private def stage(df: DataFrame): Path = {
     val tmp = Paths.get(root, s"_staging_${uniqueTag()}")
     align(df).write
       .mode(SaveMode.Overwrite)
       .partitionBy(partitionCols: _*)
       .parquet(tmp.toString)
-    val src = tmp.resolve(part)
+    tmp
+  }
+
+  /** [[stage]] one client's rows and return (stagingRoot,
+    * stagedClientDir). The empty-staging ABORT is shared policy: a df
+    * with no rows for the client must never silently wipe live data.
+    */
+  private def stageClientPartition(clientId: Int, df: DataFrame): (Path, Path) = {
+    val tmp = stage(df)
+    val src = tmp.resolve(s"client_id=$clientId")
     if (!Files.exists(src)) {
       Try(deleteRecursively(tmp))
       throw new IllegalStateException(
@@ -358,11 +358,7 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
     * hard links to every current file + the newly written files.
     */
   def append(df: DataFrame): Unit = {
-    val tmp = Paths.get(root, s"_staging_${uniqueTag()}")
-    align(df).write
-      .mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(tmp.toString)
+    val tmp = stage(df)
     withWriteLock {
       val name = newVersionName()
       val target = versionsDir.resolve(name)

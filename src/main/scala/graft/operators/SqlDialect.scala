@@ -3,7 +3,7 @@ package graft.operators
 import java.sql.DatabaseMetaData
 import scala.util.Try
 
-/** The dialect seam of [[JdbcProductStore]] — the three places where SQL
+/** The dialect seam of [[JdbcProductStore]] — the two places where SQL
   * behavior diverges between the sandbox's embedded Derby and the
   * reference's actual Postgres 17 (docker/docker-compose.yml:3,
   * db/migrations/000/001_up_init.sql):
@@ -18,28 +18,20 @@ import scala.util.Try
   *     Postgres (SERIAL surrogate id, NOT NULL + DEFAULT clauses) but
   *     Derby spells the auto-increment column differently (GENERATED
   *     ALWAYS AS IDENTITY) and the engine's Derby table omits it (the
-  *     natural key is (client_id, sku) — see ProductSchema);
-  *  3. UPSERT STATEMENT — the single-statement row-level merge is
-  *     `INSERT .. ON CONFLICT DO UPDATE` on Postgres (requires the
-  *     deployment to add a UNIQUE index on (client_id, sku): the
-  *     reference schema does NOT declare one, its per-row
-  *     SELECT-then-write loop is what enforces the key) and
-  *     `MERGE INTO .. USING` on Derby (>= 10.11).
+  *     natural key is (client_id, sku) — see ProductSchema).
   *
   * [[JdbcProductStore]]'s transactional swap (DELETE + INSERT..SELECT)
   * is deliberately dialect-FREE portable SQL — it is the all-or-nothing
   * batch shape the reference gets from its one commit — so the dialect
-  * carries only the probes, the DDL, and the optional row-level upsert
-  * text a live deployment could adopt for small incremental batches.
+  * carries only the probes and the DDL.
   *
   * What a live Postgres run would still need to verify (can't execute in
   * this sandbox — zero egress, no server): the BOOLEAN bind path
   * (Derby and PG both accept setBoolean, but PG's text-mode casts
   * differ), TIMESTAMP WITHOUT TIME ZONE round-trips across JVM default
   * zones, the SERIAL default firing on INSERT..SELECT with an omitted id
-  * column, lock-wait behavior (Postgres waits indefinitely where Derby's
-  * derby.locks.waitTimeout aborts at 60 s), and ON CONFLICT's interaction
-  * with the added unique index under concurrent writers.
+  * column, and lock-wait behavior (Postgres waits indefinitely where Derby's
+  * derby.locks.waitTimeout aborts at 60 s).
   */
 trait SqlDialect {
   def name: String
@@ -68,12 +60,6 @@ trait SqlDialect {
   def markerTableDdl(table: String, q: String => String): String =
     s"CREATE TABLE $table (${q("token")} VARCHAR(128) PRIMARY KEY)"
 
-  /** Single-statement row-level merge of a staged batch into the
-    * products table on the natural key (client_id, sku) — the
-    * incremental alternative to the portable DELETE+INSERT swap.
-    */
-  def upsertSql(table: String, staging: String, q: String => String): String
-
   /** Spark `createTableColumnTypes` for staged writes: pin the
     * reference DDL's VARCHAR(n) widths (both dialects would otherwise
     * map StringType to CLOB/TEXT, which Derby refuses to compare with
@@ -82,10 +68,6 @@ trait SqlDialect {
   def columnTypes: String =
     "sku VARCHAR(100), remote_id VARCHAR(100), brand VARCHAR(100), " +
       "title VARCHAR(255)"
-
-  protected def dataColumns: Seq[String] = graft.ProductSchema
-    .CLIENT_PRODUCTS_SCHEMA.fieldNames.toSeq
-    .filterNot(Seq("client_id", "sku").contains)
 }
 
 object SqlDialect {
@@ -120,22 +102,6 @@ object DerbyDialect extends SqlDialect {
        |  ${q("min_price")} DECIMAL(12,2),
        |  ${q("reference_price")} DECIMAL(12,2)
        |)""".stripMargin
-
-  /** Derby >= 10.11 MERGE. Matched rows take the staged value per
-    * column; unmatched insert. Executable in the sandbox —
-    * JdbcProductStoreSpec runs this text against a live embedded Derby.
-    */
-  def upsertSql(table: String, staging: String, q: String => String): String = {
-    val sets = dataColumns
-      .map(c => s"${q(c)} = s.${q(c)}").mkString(", ")
-    val cols = (Seq("client_id", "sku") ++ dataColumns).map(q)
-    s"""MERGE INTO $table t
-       |USING $staging s
-       |ON t.${q("client_id")} = s.${q("client_id")} AND t.${q("sku")} = s.${q("sku")}
-       |WHEN MATCHED THEN UPDATE SET $sets
-       |WHEN NOT MATCHED THEN INSERT (${cols.mkString(", ")})
-       |VALUES (${cols.map(c => s"s.$c").mkString(", ")})""".stripMargin
-  }
 }
 
 /** Postgres — the reference's actual engine (default_settings.py:1-8).
@@ -166,20 +132,4 @@ object PostgresDialect extends SqlDialect {
        |  ${q("min_price")} DECIMAL(12,2),
        |  ${q("reference_price")} DECIMAL(12,2)
        |)""".stripMargin
-
-  /** `INSERT .. ON CONFLICT (client_id, sku) DO UPDATE` — requires the
-    * deployment to add `CREATE UNIQUE INDEX ON client_products
-    * (client_id, sku)`: the reference schema does NOT declare that
-    * uniqueness (its per-row lookup loop enforces the key in
-    * application code, service.py:92-106), so the single-statement form
-    * is an opt-in schema upgrade, not a drop-in.
-    */
-  def upsertSql(table: String, staging: String, q: String => String): String = {
-    val sets = dataColumns
-      .map(c => s"${q(c)} = EXCLUDED.${q(c)}").mkString(", ")
-    val cols = (Seq("client_id", "sku") ++ dataColumns).map(q)
-    s"""INSERT INTO $table (${cols.mkString(", ")})
-       |SELECT ${cols.mkString(", ")} FROM $staging
-       |ON CONFLICT (${q("client_id")}, ${q("sku")}) DO UPDATE SET $sets""".stripMargin
-  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{ColumnMapping, ParserConfig, VarcharPolicy}
+import graft.operators.{ColumnMapping, ParserConfig}
 import graft.sources.IngestSource
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -60,7 +60,7 @@ class ColumnMappingSpec extends SparkSpec {
     }
   }
 
-  test("VARCHAR(n) truth table: strict flags, clamp truncates, off ignores") {
+  test("VARCHAR(n) truth table: over-width values are flagged with their raw value") {
     import spark.implicits._
     // title width is 255, sku width is 100 (reference DDL
     // 001_up_init.sql:22-36); boundary value NOT flagged, boundary+1 is.
@@ -72,7 +72,7 @@ class ColumnMappingSpec extends SparkSpec {
       ("  " + "s" * 100 + "  ", "short", "3.00", "yes") // trims to width: ok
     ).toDF("SKU Code", "Name", "Price", "Active")
 
-    val strict = ColumnMapping(raw, cfg, VarcharPolicy.Strict)
+    val strict = ColumnMapping(raw, cfg)
       .orderBy("max_price").collect()
     assert(strict.map(_.getAs[Boolean]("_err_len_title")).toSeq ===
       Seq(false, true, false))
@@ -80,17 +80,6 @@ class ColumnMappingSpec extends SparkSpec {
       Seq(false, false, false), "length checked AFTER trim")
     assert(strict(1).getAs[String]("_raw_len_title") === over,
       "report carries the raw offending value")
-
-    val clamp = ColumnMapping(raw, cfg, VarcharPolicy.Clamp)
-      .orderBy("max_price").collect()
-    assert(!clamp.head.schema.fieldNames.exists(_.startsWith("_err_len_")))
-    assert(clamp.map(_.getAs[String]("title").length).toSeq ===
-      Seq(255, 255, 5), "over-length truncated to the declared width")
-
-    val off = ColumnMapping(raw, cfg, VarcharPolicy.Off)
-      .orderBy("max_price").collect()
-    assert(off(1).getAs[String]("title") === over, "off = unbounded")
-    assert(!off.head.schema.fieldNames.exists(_.startsWith("_err_len_")))
   }
 
   test("JSON codec parses the reference wire format") {

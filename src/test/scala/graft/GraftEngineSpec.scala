@@ -49,7 +49,7 @@ class GraftEngineSpec extends SparkSpec {
     assert(a1.getAs[Boolean]("active")) // untouched by the partial update
   }
 
-  test("decimalAsFloat re-types money columns at the API boundary only") {
+  test("restView re-types money columns at the API boundary only") {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val engine = new GraftEngine(spark, tmpDir("engine"))
     val dir = tmpDir("upload")
@@ -59,7 +59,7 @@ class GraftEngineSpec extends SparkSpec {
         |""".stripMargin)
     assert(engine.ingest(clientId = 7, cfgJson, p).success)
     val exact = engine.listProducts(7, limit = 10)
-    val floaty = engine.listProducts(7, limit = 10, decimalAsFloat = true)
+    val floaty = operators.CatalogQueries.restView(engine.listProducts(7, limit = 10))
     assert(exact.schema("max_price").dataType === DecimalType(12, 2))
     assert(floaty.schema("max_price").dataType === DoubleType)
     // same value, same column names, only the type differs (the

@@ -148,16 +148,13 @@ class IngestReferenceDifferentialSpec extends SparkSpec {
     }
   }
 
-  test("tenant-move differential: mapped client_id moves update-path rows (opt-in)") {
-    // Reference service.py:95-100: the update path setattrs EVERY
-    // supplied non-None column including client_id — an existing row
-    // MOVES to the mapped tenant — while the insert path pins the
-    // authenticated tenant (dict union, service.py:109). Differential
-    // over both modes: allowTenantMove=true must land moved rows in the
-    // target tenant's partition; the default must ignore the mapped
-    // value on both paths. Generator keeps skus unique per batch (the
-    // documented within-batch-dup deviation) and always supplies all 3
-    // cells.
+  test("mapped client_id is ignored on insert and update paths") {
+    // Reference service.py:95-100 lets the update path setattr a mapped
+    // client_id (the row MOVES tenant) while the insert path pins the
+    // authenticated tenant (dict union, service.py:109). The engine pins
+    // the tenant on BOTH paths — a documented deviation: the first batch
+    // takes the insert path, the second the update path, both mapping
+    // client_id = 3 for a service authenticated as tenant 1.
     val cfgMove = ParserConfig("csv", Seq(
       "sku" -> ("sku", "text"),
       "title" -> ("title", "text"),
@@ -167,41 +164,6 @@ class IngestReferenceDifferentialSpec extends SparkSpec {
       val body = rows.map { case (s, t, c) => s"$s,$t,$c" }
       writeText(dir, "b.csv", ("sku,title,cid" +: body).mkString("\n"))
     }
-    case class MvRow(var cid: Int, sku: String, var title: Option[String],
-        var ts: Timestamp)
-    val rnd = new Random(55)
-    val skuPool = Seq("A1", "B2", "C3", "D4", "E5", "F6", "G7", "H8")
-    (1 to 2).foreach { trial =>
-      val store = new ProductStore(spark, tmpDir(s"mvstore$trial"))
-      val svc = new IngestionService(spark, store, clientId = 1,
-        allowTenantMove = true)
-      val state = mutable.ArrayBuffer.empty[MvRow]
-      (1 to 4).foreach { b =>
-        val skus = rnd.shuffle(skuPool).take(1 + rnd.nextInt(5))
-        val rows = skus.map { s =>
-          (s, s"T${rnd.nextInt(40)}", 1 + rnd.nextInt(3)) // cid in {1,2,3}
-        }
-        val ts = Timestamp.valueOf(f"2024-04-0$b%d 00:00:00")
-        val rep = svc.ingest(cfgMove, csvMove(rows), batchTs = ts)
-        assert(rep.success, s"trial $trial batch $b: ${rep.message}")
-        rows.foreach { case (sku, title, cid) =>
-          state.find(r => r.cid == 1 && r.sku == sku) match {
-            case Some(r) => // update path: move + set supplied columns
-              r.title = Some(title); r.cid = cid; r.ts = ts
-            case None => // insert path: tenant PINNED to 1, cid ignored
-              state += MvRow(1, sku, Some(title), ts)
-          }
-        }
-        val actual = store.read().collect()
-          .map(r => (r.getAs[Int]("client_id"), r.getAs[String]("sku"),
-            Option(r.getAs[String]("title")), r.getAs[Timestamp]("last_changed_on")))
-          .sortBy(_.toString)
-        val expected = state.map(r => (r.cid, r.sku, r.title, r.ts))
-          .sortBy(_.toString)
-        assert(actual.toSeq === expected.toSeq, s"trial $trial after batch $b")
-      }
-    }
-    // default mode: same config, mapped client_id ignored on BOTH paths
     val store = new ProductStore(spark, tmpDir("mvoff"))
     val svc = new IngestionService(spark, store, clientId = 1)
     val ts = Timestamp.valueOf("2024-04-09 00:00:00")
@@ -209,7 +171,7 @@ class IngestReferenceDifferentialSpec extends SparkSpec {
     assert(svc.ingest(cfgMove, csvMove(Seq(("X1", "T2", 3))), batchTs = ts).success)
     val rows = store.read().collect()
     assert(rows.length === 1 && rows.head.getAs[Int]("client_id") === 1,
-      "default mode must pin the tenant on update and insert")
+      "the tenant must stay pinned on update and insert")
     assert(rows.head.getAs[String]("title") === "T2")
   }
 

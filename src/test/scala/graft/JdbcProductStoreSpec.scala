@@ -339,18 +339,15 @@ class JdbcProductStoreSpec extends SparkSpec {
     assert(!derby.contains("\"id\""))
     assert(derby.contains("\"client_id\" INTEGER NOT NULL"))
 
-    // the row-level upsert texts: PG ON CONFLICT on the natural key
-    // updating every data column from EXCLUDED; Derby MERGE with the
-    // same key and column set
-    val ups = PostgresDialect.upsertSql("client_products", "stg", q)
-    assert(ups.contains("ON CONFLICT (\"client_id\", \"sku\") DO UPDATE SET"))
-    assert(ups.contains("\"title\" = EXCLUDED.\"title\""))
-    assert(!ups.contains("EXCLUDED.\"sku\" =") && !ups.contains("\"sku\" = EXCLUDED"))
-    val mrg = DerbyDialect.upsertSql("client_products", "stg", q)
-    assert(mrg.contains("MERGE INTO client_products t"))
-    assert(mrg.contains("ON t.\"client_id\" = s.\"client_id\" AND t.\"sku\" = s.\"sku\""))
-    assert(mrg.contains("WHEN MATCHED THEN UPDATE SET"))
-    assert(mrg.contains("WHEN NOT MATCHED THEN INSERT"))
+    // the ingest-lock / marker sibling DDLs and the staged-write column
+    // types are shared by both dialects: keyed tables, and the reference
+    // DDL's VARCHAR(n) widths (not CLOB/TEXT)
+    SqlDialect.all.foreach { d =>
+      assert(d.lockTableDdl("l", q) === "CREATE TABLE l (\"client_id\" INTEGER PRIMARY KEY)")
+      assert(d.markerTableDdl("m", q) === "CREATE TABLE m (\"token\" VARCHAR(128) PRIMARY KEY)")
+      assert(d.columnTypes.contains("sku VARCHAR(100)") &&
+        d.columnTypes.contains("title VARCHAR(255)"))
+    }
 
     // folding probes: a driver reporting upper-case folding gets ONE
     // candidate; one reporting neither gets exact + both foldings
@@ -358,33 +355,40 @@ class JdbcProductStoreSpec extends SparkSpec {
     assert(store.exists) // Derby (upper-folding) still probes correctly
   }
 
-  test("dialect upsert executes live on Derby: update existing, insert new") {
-    import spark.implicits._
-    val store = freshStore()
-    store.overwriteClientAtomic(1, Seq(
-      (1, "A1", "Old", true), (1, "B2", "Keep", true))
-      .toDF("client_id", "sku", "title", "active"))
-    store.upsertClientBatch(1, Seq(
-      (1, "A1", "New", false), // matched: update
-      (1, "C3", "Ins", true))  // unmatched: insert
-      .toDF("client_id", "sku", "title", "active"))
-    val rows = store.readClient(1).orderBy("sku").collect()
-      .map(r => (r.getAs[String]("sku"), r.getAs[String]("title"),
-        r.getAs[Boolean]("active")))
-    assert(rows.toSeq === Seq(("A1", "New", false), ("B2", "Keep", true),
-      ("C3", "Ins", true)))
-  }
-
   test("tableExists escapes LIKE wildcards: similar names don't mask a missing table") {
     // client_products's probe pattern contains '_', a single-char LIKE
     // wildcard: with table `clientXproducts` already present, an
     // UNESCAPED probe for `client_products` false-positives, skips
-    // CREATE TABLE, and the first read fails with table-not-found.
+    // CREATE TABLE, and the first read fails with table-not-found. The
+    // `_ingest_locks` / `_ingest_markers` siblings go through the same
+    // create-if-absent probe, so they get look-alikes too.
+    import spark.implicits._
     val url = freshUrl()
     val decoy = new JdbcProductStore(spark, url, table = "clientXproducts")
     assert(decoy.exists)
-    val store = new JdbcProductStore(spark, url, table = "client_products")
-    assert(store.exists)
-    assert(store.read().count() === 0) // the real table was created and reads
+    val conn = java.sql.DriverManager.getConnection(url)
+    def tableNames(): Set[String] = {
+      val rs = conn.getMetaData.getTables(null, null, "%", Array("TABLE"))
+      try Iterator.continually(rs).takeWhile(_.next())
+        .map(_.getString("TABLE_NAME")).toSet
+      finally rs.close()
+    }
+    try {
+      val st = conn.createStatement()
+      try {
+        st.executeUpdate("CREATE TABLE clientXproductsXingestXlocks (x INTEGER)")
+        st.executeUpdate("CREATE TABLE clientXproductsXingestXmarkers (x INTEGER)")
+      } finally st.close()
+      val store = new JdbcProductStore(spark, url, table = "client_products")
+      assert(store.exists)
+      assert(store.read().count() === 0) // the real table was created and reads
+      assert(store.withIngestLock(1) { 42 } === 42)
+      assert(tableNames().contains("CLIENT_PRODUCTS_INGEST_LOCKS"))
+      store.overwriteClientAtomic(1,
+        Seq((1, "a1", "T")).toDF("client_id", "sku", "title"), marker = Some("tok1"))
+      assert(tableNames().contains("CLIENT_PRODUCTS_INGEST_MARKERS"))
+      assert(store.hasMarker("tok1") && !store.hasMarker("tok2"))
+      assert(store.readClient(1).count() === 1)
+    } finally conn.close()
   }
 }
