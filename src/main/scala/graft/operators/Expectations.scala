@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * own aggregation plane (Spark plans a two-phase distinct); declare
   * [[UniqueApprox]] instead on unbounded-cardinality keys to keep the
   * whole suite strictly one-scan with an HLL++ sketch accumulator
-  * (same trade as `Profiling.profile(exact = false)`).
+  * (same trade as `Profiling.profile(exactDistinct = false)`).
   *
   * The reference validates per-row at ingest and aborts the batch on
   * the first bad row (`ingestion/service.py` error report); this is the

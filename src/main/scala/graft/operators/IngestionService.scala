@@ -338,12 +338,16 @@ class IngestionService(
 
   /** Per-row failure details for the abort report: up to
     * [[IngestionService.MaxReportedErrors]] (row, column, raw value)
-    * triples, smallest row indexes first. The collect is bounded by the
-    * limit — never a full-table driver fetch.
+    * triples, smallest row indexes first, then by column. One job: the
+    * flagged cells of every error column are unioned and cut by one
+    * ordered limit — never a full-table driver fetch.
     */
   private def errorDetails(mapped: DataFrame, errCols: Array[String]): Seq[String] = {
-    val hasIdx = mapped.columns.contains(graft.sources.IngestSource.ROW_IDX)
-    errCols.toSeq.flatMap { ec =>
+    val idxCol =
+      if (mapped.columns.contains(graft.sources.IngestSource.ROW_IDX))
+        col(graft.sources.IngestSource.ROW_IDX)
+      else lit(-1L)
+    errCols.zipWithIndex.map { case (ec, ord) =>
       val dst = ec.stripPrefix("_err_")
       // VARCHAR(n) violations ride the same flag channel under a `len_`
       // sub-prefix (width message); INTEGER range violations under
@@ -357,25 +361,27 @@ class IngestionService(
       val rawCol =
         if (mapped.columns.contains(s"_raw_$dst")) col(s"_raw_$dst")
         else lit(null).cast("string")
-      val idxCol =
-        if (hasIdx) col(graft.sources.IngestSource.ROW_IDX) else lit(-1L)
-      mapped.filter(col(ec))
-        .select(idxCol.as("_i"), rawCol.as("_v"))
-        .orderBy(col("_i"))
-        .limit(IngestionService.MaxReportedErrors)
-        .collect()
-        .map(r => (r.getLong(0), target, kind,
-          Option(r.getString(1)).getOrElse("<null>")))
+      // `_o` keeps the flag columns' order among a row's same-target
+      // flags, so the report order is deterministic
+      mapped.filter(col(ec)).select(idxCol.as("_i"), lit(target).as("_t"),
+        lit(ord).as("_o"), lit(kind).as("_k"), rawCol.as("_v"))
     }
-      .sortBy(t => (t._1, t._2))
-      .take(IngestionService.MaxReportedErrors)
-      .map {
-        case (i, dst, "len", v) =>
-          s"row $i: column '$dst' value exceeds VARCHAR(${graft.ProductSchema.varcharLen(dst)}): '$v'"
-        case (i, dst, "range", v) =>
-          s"row $i: column '$dst' value out of INTEGER range: '$v'"
-        case (i, dst, _, v) =>
-          s"row $i: column '$dst' could not interpret value '$v'"
+      .reduce(_ union _)
+      .orderBy(col("_i"), col("_t"), col("_o"))
+      .limit(IngestionService.MaxReportedErrors)
+      .collect()
+      .toSeq
+      .map { r =>
+        val (i, dst, v) =
+          (r.getLong(0), r.getString(1), Option(r.getString(4)).getOrElse("<null>"))
+        r.getString(3) match {
+          case "len" =>
+            s"row $i: column '$dst' value exceeds VARCHAR(${graft.ProductSchema.varcharLen(dst)}): '$v'"
+          case "range" =>
+            s"row $i: column '$dst' value out of INTEGER range: '$v'"
+          case _ =>
+            s"row $i: column '$dst' could not interpret value '$v'"
+        }
       }
   }
 }

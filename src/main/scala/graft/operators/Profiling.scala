@@ -11,18 +11,18 @@ import org.apache.spark.sql.functions._
   * Two modes, because exact multi-column distinct counting has a real
   * plan cost that should be a caller's explicit choice:
   *
-  *  - `exactDistinct = false` (the 100 TB default): ONE aggregate over
+  *  - `exactDistinct = false` (for 100 TB inputs): ONE aggregate over
   *    ONE scan — approx_count_distinct's HLL++ buffers are ordinary
   *    mergeable aggregate state, so null/min/max and all k distinct
   *    sketches ride the same map-side-combinable pass.
-  *  - `exactDistinct = true` (oracle-exact, for bounded inputs): the k
-  *    exact distincts run in their own lean aggregate (Spark plans the
-  *    multi-distinct as an Expand of factor k over a wide first-phase
-  *    grouping key — measured 3x slower when the 4k plain-agg buffers
-  *    ride the same expanded rows, so those run as a second, plain
-  *    aggregate and the two 1-row results cross-join). Two scans, each
-  *    cheap and column-pruned; the single-scan exactness trade is
-  *    documented rather than hidden.
+  *  - `exactDistinct = true` (the default; oracle-exact, for bounded
+  *    inputs): the k exact distincts run in their own lean aggregate
+  *    (Spark plans the multi-distinct as an Expand of factor k over a
+  *    wide first-phase grouping key — measured 3x slower when the 4k
+  *    plain-agg buffers ride the same expanded rows, so those run as a
+  *    second, plain aggregate and the two 1-row results cross-join).
+  *    Two scans, each cheap and column-pruned; the single-scan
+  *    exactness trade is documented rather than hidden.
   *
   * min/max are emitted as strings so heterogeneous column types share
   * one output schema (the profile is a report, not an input to further

@@ -1,12 +1,9 @@
 package graft.streaming
 
 import graft.operators.Coreset
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
-
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming k-center maintenance — the DOUBLING ALGORITHM for
   * incremental k-center (Charikar, Chekuri, Feder & Motwani 1997,
@@ -44,12 +41,12 @@ import scala.jdk.CollectionConverters._
   * sequence — CoresetStreamSpec proves the equivalence against a pure
   * sequential reference.
   *
-  * Store layout (the [[DedupStream]] snapshot-replay contract): each
-  * micro-batch writes the FULL post-batch state to
-  * storeDir/state/batch=<id>/ (rows: ord, id, vec, r_sq — at most k+1
-  * rows, trivially rewritable); a batch reads the latest snapshot
-  * STRICTLY BEFORE its own batchId, so an at-least-once redelivery
-  * recomputes the identical snapshot from the identical prior state.
+  * Store layout (a snapshot twist on the [[SliceStore]] contract): each
+  * micro-batch writes the FULL post-batch state as its slice of
+  * storeDir/state/ (rows: ord, id, vec, r_sq, k — at most k rows,
+  * trivially rewritable); a batch reads the latest snapshot STRICTLY
+  * BEFORE its own batchId, so an at-least-once redelivery recomputes
+  * the identical snapshot from the identical prior state.
   */
 object CoresetStream {
 
@@ -66,15 +63,10 @@ object CoresetStream {
       storeDir: String,
       checkpointDir: String): StreamingQuery = {
     require(k >= 1, "k-center stream needs k >= 1")
-    Files.createDirectories(Paths.get(storeDir))
-    vecs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.sparkSession, batch.toDF(), vecCol, idCol, k,
-          storeDir, batchId)
-      }
-      .start()
+    SliceStore.start(vecs, checkpointDir) { (batch, batchId) =>
+      processBatch(batch.sparkSession, batch, vecCol, idCol, k, storeDir,
+        batchId)
+    }
   }
 
   def processBatch(spark: SparkSession, batch: DataFrame, vecCol: String,
@@ -125,34 +117,16 @@ object CoresetStream {
 
   private val DriverChunk = 8192
 
-  /** Latest snapshot batch id strictly before `beforeBatch` — the ONE
-    * listing both the knob guard and the state read share (was two
-    * listings + two parquet reads of the same snapshot per micro-batch).
+  /** The latest snapshot's rows (ord-ordered), read ONCE per batch —
+    * the knob guard and the state read share it.
     */
-  private def latestBatch(storeDir: String,
-      beforeBatch: Option[Long]): Option[Long] = {
-    val stateRoot = Paths.get(storeDir, "state")
-    if (!Files.exists(stateRoot)) return None
-    val bound = beforeBatch.getOrElse(Long.MaxValue)
-    // Files.list holds a directory handle until closed — this runs once
-    // per micro-batch for the stream's whole life, so drain it eagerly.
-    val listing = Files.list(stateRoot)
-    val names =
-      try listing.iterator().asScala.map(_.getFileName.toString).toVector
-      finally listing.close()
-    names
-      .collect { case s if s.startsWith("batch=") => s.drop(6).toLong }
-      .filter(_ < bound)
-      .maxOption
-  }
-
-  /** The latest snapshot's rows (ord-ordered), read ONCE. */
   private def snapshotRows(spark: SparkSession, storeDir: String,
       beforeBatch: Option[Long]): Option[Array[Row]] =
-    latestBatch(storeDir, beforeBatch).map { b =>
-      spark.read.parquet(s"$storeDir/state/batch=$b")
-        .orderBy(col("ord")).collect()
-    }
+    SliceStore.latest(storeDir, "state", beforeBatch.getOrElse(Long.MaxValue))
+      .map { b =>
+        spark.read.parquet(SliceStore.path(storeDir, "state", b))
+          .orderBy(col("ord")).collect()
+      }
 
   private def stateOf(rows: Array[Row]): CoverState =
     if (rows.isEmpty) Empty
@@ -243,11 +217,10 @@ object CoresetStream {
   private def writeState(spark: SparkSession, st: CoverState,
       storeDir: String, batchId: Long, k: Int): Unit = {
     import spark.implicits._
-    st.centers.zipWithIndex
+    SliceStore.write(st.centers.zipWithIndex
       .map { case ((id, v), ord) => (ord, id, v.toSeq, st.rSq, k) }
-      .toDF("ord", "id", "vec", "r_sq", "k")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$storeDir/state/batch=$batchId")
+      .toDF("ord", "id", "vec", "r_sq", "k").coalesce(1),
+      storeDir, "state", batchId)
   }
 
   /** Latest state snapshot, optionally restricted to batches strictly

@@ -1,12 +1,9 @@
 package graft.streaming
 
 import graft.operators.MaxCover
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
-
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming coverage-based selection — THRESHOLD submodular
   * maximization, the core subroutine of sieve-streaming (Badanidiyuru,
@@ -34,11 +31,12 @@ import scala.jdk.CollectionConverters._
   * accept/reject — a full-at-entry selection short-circuits the whole
   * batch.
   *
-  * Store layout: the [[CoresetStream]] snapshot-replay contract — each
-  * batch writes the full post-batch state (ONE row: selected ids,
-  * covered buckets, τ, k) to storeDir/state/batch=<id>/, reads the
-  * latest snapshot STRICTLY BEFORE its own batchId, so at-least-once
-  * redelivery recomputes the identical snapshot.
+  * Store layout: the [[CoresetStream]] snapshot twist on the
+  * [[SliceStore]] contract — each batch writes the full post-batch
+  * state (ONE row: selected ids, covered buckets, τ, k) as its slice of
+  * storeDir/state/ and reads the latest snapshot STRICTLY BEFORE its own
+  * batchId, so at-least-once redelivery recomputes the identical
+  * snapshot.
   */
 object CoverStream {
 
@@ -56,15 +54,10 @@ object CoverStream {
       storeDir: String,
       checkpointDir: String): StreamingQuery = {
     require(k >= 1 && tau >= 1 && buckets >= 1, "degenerate selection knobs")
-    Files.createDirectories(Paths.get(storeDir))
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.sparkSession, batch.toDF(), textCol, idCol,
-          k, tau, buckets, storeDir, batchId)
-      }
-      .start()
+    SliceStore.start(docs, checkpointDir) { (batch, batchId) =>
+      processBatch(batch.sparkSession, batch, textCol, idCol, k, tau,
+        buckets, storeDir, batchId)
+    }
   }
 
   def processBatch(spark: SparkSession, batch: DataFrame, textCol: String,
@@ -130,10 +123,9 @@ object CoverStream {
       storeDir: String, batchId: Long, k: Int, tau: Long,
       buckets: Int): Unit = {
     import spark.implicits._
-    Seq((st.selected, st.covered.toSeq.sorted, k, tau, buckets))
-      .toDF("selected", "covered", "k", "tau", "buckets")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$storeDir/state/batch=$batchId")
+    SliceStore.write(Seq((st.selected, st.covered.toSeq.sorted, k, tau, buckets))
+      .toDF("selected", "covered", "k", "tau", "buckets").coalesce(1),
+      storeDir, "state", batchId)
   }
 
   /** The (k, tau, buckets) a store's latest snapshot was written under;
@@ -149,22 +141,12 @@ object CoverStream {
     * guard); None when no snapshot qualifies.
     */
   private def latestSnapshot(spark: SparkSession, storeDir: String,
-      beforeBatch: Option[Long]): Option[Row] = {
-    val stateRoot = Paths.get(storeDir, "state")
-    if (!Files.exists(stateRoot)) return None
-    val bound = beforeBatch.getOrElse(Long.MaxValue)
-    val listing = Files.list(stateRoot)
-    val names =
-      try listing.iterator().asScala.map(_.getFileName.toString).toVector
-      finally listing.close()
-    names
-      .collect { case s if s.startsWith("batch=") => s.drop(6).toLong }
-      .filter(_ < bound)
-      .maxOption
+      beforeBatch: Option[Long]): Option[Row] =
+    SliceStore.latest(storeDir, "state", beforeBatch.getOrElse(Long.MaxValue))
       .flatMap { b =>
-        spark.read.parquet(s"$storeDir/state/batch=$b").collect().headOption
+        spark.read.parquet(SliceStore.path(storeDir, "state", b))
+          .collect().headOption
       }
-  }
 
   /** No snapshot yet is the VALID empty state. */
   def readState(spark: SparkSession, storeDir: String,

@@ -1,11 +1,9 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
-
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming near-duplicate classification — the unbounded twin of the
   * q_dedup_index_incr batch merge (reference behavior: the ingest
@@ -24,23 +22,21 @@ import java.nio.file.{Files, Paths}
   * — the 100 TB shape (the alternative, re-running corpus-wide LSH per
   * arrival, grows quadratically in stream length).
   *
-  * Store layout (parquet; one DETERMINISTIC subdirectory per
-  * micro-batch, keyed by the streaming batchId — the [[IndexStream]]
-  * idempotent-sink contract):
+  * Store layout ([[SliceStore]] tables, one slice per micro-batch):
   *   storeDir/status/batch=<id>/ — that batch's (doc, status, match_id)
   *   storeDir/index/batch=<id>/  — that batch's (id, signature, fp)
   *   storeDir/docs/batch=<id>/   — that batch's (id, text), for the
   *                                 exact-Jaccard verify of LATER batches
   *
-  * Exactly-once by idempotence with one twist the index stream does not
-  * need: foreachBatch is at-least-once, and a crash AFTER this batch's
-  * index slice lands but BEFORE the checkpoint commit re-delivers the
-  * batch — at which point the standing store already contains the
-  * batch's own documents, and classifying against them would report
-  * every replayed doc as an exact duplicate of itself. [[readStore]]
-  * therefore filters the batchId partition column to batches STRICTLY
-  * BEFORE the one being classified, so a replay recomputes the
-  * identical status slice from the identical standing view.
+  * Replay follows the [[SliceStore]] contract, with one twist the
+  * index stream does not need: a crash AFTER this batch's index slice
+  * lands but BEFORE the checkpoint commit re-delivers the batch — at
+  * which point the standing store already contains the batch's own
+  * documents, and classifying against them would report every replayed
+  * doc as an exact duplicate of itself. [[readStore]] therefore reads
+  * only slices STRICTLY BEFORE the batch being classified, so a replay
+  * recomputes the identical status slice from the identical standing
+  * view.
   */
 object DedupStream {
 
@@ -49,17 +45,11 @@ object DedupStream {
       textCol: String,
       idCol: String,
       storeDir: String,
-      checkpointDir: String): StreamingQuery = {
-    Files.createDirectories(Paths.get(storeDir))
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        classifyBatch(batch.sparkSession, batch.toDF(), textCol, idCol,
-          storeDir, batchId)
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    SliceStore.start(docs, checkpointDir) { (batch, batchId) =>
+      classifyBatch(batch.sparkSession, batch, textCol, idCol, storeDir,
+        batchId)
+    }
 
   /** One micro-batch: classify against the standing (strictly earlier)
     * store, then append this batch's index + docs slices — all three
@@ -92,16 +82,11 @@ object DedupStream {
           .select(col("id"), col("signature"), col("fp"))
         val (index, corpus) =
           readStore(spark, storeDir, textCol, idCol, beforeBatch = batchId)
-        Dedup.incrementalStatusGivenSigs(index, corpus, pinned, sigs,
-            textCol, idCol)
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$storeDir/status/batch=$batchId")
-        batchIndex
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$storeDir/index/batch=$batchId")
-        pinned.select(col(idCol), col(textCol))
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$storeDir/docs/batch=$batchId")
+        SliceStore.write(Dedup.incrementalStatusGivenSigs(index, corpus,
+          pinned, sigs, textCol, idCol), storeDir, "status", batchId)
+        SliceStore.write(batchIndex, storeDir, "index", batchId)
+        SliceStore.write(pinned.select(col(idCol), col(textCol)), storeDir,
+          "docs", batchId)
       } finally pinned.unpersist()
     }
   }
@@ -110,29 +95,20 @@ object DedupStream {
     * [[graft.operators.Dedup.incrementalStatusWithIndex]] needs.
     * `beforeBatch` bounds the view to batches strictly earlier (the
     * replay guard); external readers use the default unbounded view.
-    * A store with no slices yet is a VALID empty corpus (the
-    * [[IndexStream.readStore]] contract), not an AnalysisException.
+    * A store with no committed slices yet is a VALID empty corpus.
     */
   def readStore(spark: SparkSession, storeDir: String, textCol: String,
       idCol: String, beforeBatch: Long = Long.MaxValue): (DataFrame, DataFrame) = {
     import spark.implicits._
-    // Each side is existence-guarded INDEPENDENTLY: a crash between the
-    // index and docs writes of a batch may leave one dir present and
-    // the other missing, and the restart replays that batch — whose
-    // slices the strictly-before filter excludes anyway. Guarding only
-    // one dir would wedge the stream on an AnalysisException forever.
-    val index =
-      if (!Files.exists(Paths.get(storeDir, "index")))
-        Seq.empty[(Long, Array[Long], String)].toDF("id", "signature", "fp")
-      else spark.read.parquet(s"$storeDir/index")
-        .filter(col("batch") < beforeBatch)
-        .select(col("id"), col("signature"), col("fp"))
-    val corpus =
-      if (!Files.exists(Paths.get(storeDir, "docs")))
-        Seq.empty[(Long, String)].toDF(idCol, textCol)
-      else spark.read.parquet(s"$storeDir/docs")
-        .filter(col("batch") < beforeBatch)
-        .select(col(idCol), col(textCol))
+    // each side reads on its own: a crash between the index and docs
+    // writes of a batch may leave one slice present and the other
+    // missing until the batch replays
+    val index = SliceStore.read(spark, storeDir, "index", beforeBatch)(
+      Seq.empty[(Long, Array[Long], String)].toDF("id", "signature", "fp"))
+      .select(col("id"), col("signature"), col("fp"))
+    val corpus = SliceStore.read(spark, storeDir, "docs", beforeBatch)(
+      Seq.empty[(Long, String)].toDF(idCol, textCol))
+      .select(col(idCol), col(textCol))
     (index, corpus)
   }
 
@@ -143,12 +119,10 @@ object DedupStream {
     */
   def statuses(spark: SparkSession, storeDir: String, idCol: String = "doc_id"): DataFrame = {
     import spark.implicits._
-    if (!Files.exists(Paths.get(storeDir, "status")))
+    SliceStore.read(spark, storeDir, "status")(
       Seq.empty[(Long, String, Long, Long)]
-        .toDF(idCol, "status", "match_id", "batch")
-    else
-      spark.read.parquet(s"$storeDir/status")
-        .select(col(idCol), col("status"), col("match_id"),
-          col("batch").cast("long").as("batch"))
+        .toDF(idCol, "status", "match_id", "batch"))
+      .select(col(idCol), col("status"), col("match_id"),
+        col("batch").cast("long").as("batch"))
   }
 }

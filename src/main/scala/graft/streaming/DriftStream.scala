@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.operators.Profiling
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import java.nio.file.{Files, Paths}
 
@@ -27,19 +27,18 @@ import java.nio.file.{Files, Paths}
   * .psiOverBuckets]]), so stream and batch monitors can never drift
   * from each other.
   *
-  * Store layout (parquet, one deterministic subdirectory per
-  * micro-batch — the [[IndexStream]] idempotent-sink contract):
+  * Store layout (the three batch tables are [[SliceStore]] tables):
   *   storeDir/baseline/ — the frozen (bucket, n_base) histogram
   *   storeDir/meta/     — (bucket_width, epsilon) knob stamp
   *   storeDir/hist/batch=<id>/ — that batch's (bucket, n_cur)
   *   storeDir/psi/batch=<id>/  — per-bucket PSI terms vs the baseline
   *   storeDir/summary/batch=<id>/ — 1 row: n_rows, psi_batch, psi_cum
   *
-  * Replay safety: foreachBatch is at-least-once; every write overwrites
-  * its own batchId-keyed directory, and the cumulative histogram reads
-  * persisted slices STRICTLY BEFORE the batch being processed plus the
-  * batch's own in-memory histogram — so a redelivered batch recomputes
-  * byte-identical slices (the [[DedupStream.readStore]] rule).
+  * Replay safety beyond the [[SliceStore]] overwrite: the cumulative
+  * histogram reads persisted slices STRICTLY BEFORE the batch being
+  * processed plus the batch's own in-memory histogram — so a
+  * redelivered batch recomputes byte-identical slices (the
+  * [[DedupStream.readStore]] rule).
   *
   * Knob guard (the [[CoverStream]] rule): a restart against an existing
   * store with a different bucket width or epsilon would score
@@ -61,14 +60,10 @@ object DriftStream {
       epsilon: Double = 1e-6): StreamingQuery = {
     ensureBaseline(values.sparkSession, baseline, valueCol, bucketWidth,
       storeDir, epsilon)
-    values.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch.sparkSession, batch.toDF(), valueCol,
-          bucketWidth, storeDir, batchId, epsilon)
-      }
-      .start()
+    SliceStore.start(values, checkpointDir) { (batch, batchId) =>
+      processBatch(batch.sparkSession, batch, valueCol, bucketWidth,
+        storeDir, batchId, epsilon)
+    }
   }
 
   /** Persist the frozen baseline histogram + knob stamp once; verify
@@ -113,11 +108,9 @@ object DriftStream {
       val bh = Profiling
         .bucketCounts(batch, valueCol, bucketWidth, "n_cur")
         .localCheckpoint() // pins: feeds the slice write AND two PSIs
-      bh.write.mode(SaveMode.Overwrite)
-        .parquet(s"$storeDir/hist/batch=$batchId")
+      SliceStore.write(bh, storeDir, "hist", batchId)
       val psi = Profiling.psiOverBuckets(base, bh, epsilon)
-      psi.write.mode(SaveMode.Overwrite)
-        .parquet(s"$storeDir/psi/batch=$batchId")
+      SliceStore.write(psi, storeDir, "psi", batchId)
       // cumulative = persisted strictly-before histograms + this
       // batch's own in-memory one (never its possibly-stale persisted
       // slice — a replay must see the identical cumulative view)
@@ -129,34 +122,30 @@ object DriftStream {
       val nRows = batch.count()
       val pb = psi.agg(sum(col("psi_term"))).head().getDouble(0)
       val pc = psiCum.agg(sum(col("psi_term"))).head().getDouble(0)
-      Seq((nRows, pb, pc)).toDF("n_rows", "psi_batch", "psi_cum")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$storeDir/summary/batch=$batchId")
-      ()
+      SliceStore.write(Seq((nRows, pb, pc))
+        .toDF("n_rows", "psi_batch", "psi_cum").coalesce(1),
+        storeDir, "summary", batchId)
     }
   }
 
   /** Persisted batch histograms as (bucket, n_cur), bounded to batches
     * strictly before `beforeBatch` (the replay guard); a store with no
-    * slices yet is a valid empty view.
+    * committed slices yet is a valid empty view.
     */
   def histograms(spark: SparkSession, storeDir: String,
       beforeBatch: Long = Long.MaxValue): DataFrame = {
     import spark.implicits._
-    if (!Files.exists(Paths.get(storeDir, "hist")))
-      Seq.empty[(Option[Long], Long)].toDF("bucket", "n_cur")
-    else spark.read.parquet(s"$storeDir/hist")
-      .filter(col("batch") < beforeBatch)
+    SliceStore.read(spark, storeDir, "hist", beforeBatch)(
+      Seq.empty[(Option[Long], Long)].toDF("bucket", "n_cur"))
       .select(col("bucket"), col("n_cur"))
   }
 
   /** Every batch's verdict so far: (batch, n_rows, psi_batch, psi_cum). */
   def summaries(spark: SparkSession, storeDir: String): DataFrame = {
     import spark.implicits._
-    if (!Files.exists(Paths.get(storeDir, "summary")))
+    SliceStore.read(spark, storeDir, "summary")(
       Seq.empty[(Long, Long, Double, Double)]
-        .toDF("batch", "n_rows", "psi_batch", "psi_cum")
-    else spark.read.parquet(s"$storeDir/summary")
+        .toDF("batch", "n_rows", "psi_batch", "psi_cum"))
       .select(col("batch").cast("long").as("batch"), col("n_rows"),
         col("psi_batch"), col("psi_cum"))
   }

@@ -1,11 +1,9 @@
 package graft.streaming
 
 import graft.operators.Dsir
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
-
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming DSIR scoring — the unbounded twin of the q_dsir_sample
   * batch scorer: the two hashed-n-gram bucket multinomials are fit ONCE
@@ -23,13 +21,10 @@ import java.nio.file.{Files, Paths}
   * ([[Dsir.unseenTerm]]) — new vocabulary cannot silently vanish from
   * a score.
   *
-  * Store layout (parquet, one DETERMINISTIC subdirectory per
-  * micro-batch keyed by the streaming batchId — the [[IndexStream]]
-  * idempotent-sink contract): storeDir/scores/batch=<id>/ holds that
-  * batch's (id, n_feats, score). foreachBatch is at-least-once; a
-  * replayed batch overwrites its own directory with identical rows
-  * (scoring is a pure function of the frozen model and the batch), so
-  * the store converges regardless of redelivery.
+  * Store layout: one [[SliceStore]] table, storeDir/scores/batch=<id>/,
+  * holding that batch's (id, n_feats, score). Scoring is a pure function
+  * of the frozen model and the batch, so a replay's overwrite is
+  * byte-identical.
   */
 object DsirStream {
 
@@ -42,49 +37,43 @@ object DsirStream {
       buckets: Int,
       storeDir: String,
       checkpointDir: String): StreamingQuery = {
-    Files.createDirectories(Paths.get(storeDir))
     // Enforce the frozen-model contract HERE, not by caller discipline:
     // a lazy `terms` plan over a changing source would silently refit
     // per micro-batch. The freeze must also be DURABLE for a stream
     // designed to run forever: localCheckpoint blocks live only on the
     // executors that wrote them, so losing one (spot churn, OOM kill)
     // would fail every later micro-batch with a missing-block error.
-    // The model is <= B rows by construction — collect it and rebuild a
+    // The model is <= B rows by construction (Dsir.modelTerms emits at
+    // most one per bucket) — collect it, bounded, and rebuild a
     // driver-owned local relation instead.
-    val spark = terms.sparkSession
-    val frozen = spark.createDataFrame(
-      java.util.Arrays.asList(terms.collect(): _*), terms.schema)
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        scoreBatch(batch.toDF(), textCol, idCol, frozen, defaultTerm,
-          buckets, storeDir, batchId)
-      }
-      .start()
+    val rows = terms.limit(buckets + 1).collect()
+    require(rows.length <= buckets,
+      s"DsirStream: frozen model has more than buckets=$buckets term " +
+        "rows — expected at most one per bucket (Dsir.modelTerms)")
+    val frozen = terms.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), terms.schema)
+    SliceStore.start(docs, checkpointDir) { (batch, batchId) =>
+      scoreBatch(batch, textCol, idCol, frozen, defaultTerm, buckets,
+        storeDir, batchId)
+    }
   }
 
   def scoreBatch(batch: DataFrame, textCol: String,
       idCol: String, terms: DataFrame, defaultTerm: java.math.BigDecimal,
       buckets: Int, storeDir: String, batchId: Long): Unit = {
     if (!batch.isEmpty) {
-      Dsir.scoreAgainst(batch, textCol, idCol, terms, buckets,
-          defaultTerm = Some(defaultTerm))
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$storeDir/scores/batch=$batchId")
+      SliceStore.write(Dsir.scoreAgainst(batch, textCol, idCol, terms,
+        buckets, defaultTerm = Some(defaultTerm)), storeDir, "scores", batchId)
     }
   }
 
-  /** All scores accumulated so far. An empty store (every micro-batch
-    * empty, so no batch directory was ever written) is a VALID state —
-    * an empty score table, not an AnalysisException (the [[IndexStream]]
-    * readStore lesson).
+  /** All scores accumulated so far; an empty score table when no batch
+    * has committed a slice.
     */
-  def scores(spark: SparkSession, storeDir: String, idCol: String): DataFrame =
-    if (!Files.exists(Paths.get(storeDir, "scores"))) {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Double)].toDF(idCol, "n_feats", "score")
-    } else
-      spark.read.parquet(s"$storeDir/scores")
-        .select(col(idCol), col("n_feats"), col("score"))
+  def scores(spark: SparkSession, storeDir: String, idCol: String): DataFrame = {
+    import spark.implicits._
+    SliceStore.read(spark, storeDir, "scores")(
+      Seq.empty[(Long, Long, Double)].toDF(idCol, "n_feats", "score"))
+      .select(col(idCol), col("n_feats"), col("score"))
+  }
 }

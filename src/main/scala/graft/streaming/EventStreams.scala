@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Accumulated per-user state carried across micro-batches by
@@ -258,12 +258,4 @@ object EventStreams {
           out.result().iterator
       }
   }
-
-  /** The micro-batch ingest bridge: every arriving file batch runs an
-    * arbitrary batch sink function — the reference's one-POST-one-batch
-    * ingest lifted onto a stream (SURVEY.md §2.9).
-    */
-  def foreachBatchIngest(stream: DataFrame)(f: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) => f(batch.toDF(), id))
 }

@@ -1,11 +1,9 @@
 package graft.streaming
 
 import graft.operators.TermIndex
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
-
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming maintenance of the RAW inverted index — the unbounded twin
   * of the q_sparse_knn_incr batch merge: documents arrive on a stream,
@@ -18,8 +16,8 @@ import java.nio.file.{Files, Paths}
   * provably identical to a from-scratch rebuild over everything seen
   * (IndexStreamSpec's stream==batch differential).
   *
-  * Store layout (parquet; one DETERMINISTIC subdirectory per
-  * micro-batch, keyed by the streaming batchId):
+  * Store layout ([[SliceStore]] tables, one slice per micro-batch —
+  * replay overwrites the batch's own slices, so df and N never double):
   *   storeDir/postings/batch=<id>/  — that batch's (id, word, tf)
   *   storeDir/meta/batch=<id>/      — that batch's (_n); N = sum
   *
@@ -29,13 +27,6 @@ import java.nio.file.{Files, Paths}
   * the postings dir is term-bucketed so the retrieval join stays
   * co-located; compaction of small per-batch slices is the
   * [[graft.operators.Compaction]] job run on the index like any table.
-  * Exactly-once by IDEMPOTENCE, not by append: foreachBatch is
-  * at-least-once (a crash between the sink write and the checkpoint
-  * commit re-delivers the batch), so each batch OVERWRITES its own
-  * batchId-keyed subdirectory — a replay rewrites the identical slice
-  * instead of duplicating postings and inflating df/N. This is the
-  * standard idempotent-sink contract foreachBatch's batchId exists
-  * for.
   */
 object IndexStream {
 
@@ -49,16 +40,10 @@ object IndexStream {
       textCol: String,
       idCol: String,
       storeDir: String,
-      checkpointDir: String): StreamingQuery = {
-    Files.createDirectories(Paths.get(storeDir))
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        appendBatch(batch, textCol, idCol, storeDir, batchId)
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    SliceStore.start(docs, checkpointDir) { (batch, batchId) =>
+      appendBatch(batch, textCol, idCol, storeDir, batchId)
+    }
 
   /** One micro-batch's contribution: batch-sized postings + its doc
     * count, OVERWRITING the batch's own batchId-keyed slice so a
@@ -70,12 +55,9 @@ object IndexStream {
   def appendBatch(batch: DataFrame, textCol: String, idCol: String,
       storeDir: String, batchId: Long): Unit = {
     if (!batch.isEmpty) {
-      TermIndex.rawIndex(batch, textCol, idCol)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$storeDir/postings/batch=$batchId")
-      TermIndex.docCount(batch)
-        .write.mode(SaveMode.Overwrite)
-        .parquet(s"$storeDir/meta/batch=$batchId")
+      SliceStore.write(TermIndex.rawIndex(batch, textCol, idCol),
+        storeDir, "postings", batchId)
+      SliceStore.write(TermIndex.docCount(batch), storeDir, "meta", batchId)
     }
   }
 
@@ -88,24 +70,16 @@ object IndexStream {
     */
   def readStore(spark: SparkSession, storeDir: String): (DataFrame, DataFrame) = {
     import spark.implicits._
-    // r12 ADVICE: if every micro-batch was empty, appendBatch never
-    // created postings/ or meta/ — an empty index is a VALID store
-    // state (zero postings, N = 0), not an AnalysisException. The two
-    // sides are guarded INDEPENDENTLY (the DedupStream.readStore
-    // discipline): appendBatch writes postings THEN meta, so a crash
-    // between the two leaves an orphaned postings slice — meta absent
-    // or behind — until the batch replays; reading must not throw in
-    // that window.
-    val postings =
-      if (!Files.exists(Paths.get(storeDir, "postings")))
-        Seq.empty[(Long, String, Long)].toDF("id", "word", "tf")
-      else spark.read.parquet(s"$storeDir/postings")
-        .select(col("id"), col("word"), col("tf"))
-    val n =
-      if (!Files.exists(Paths.get(storeDir, "meta")))
-        Seq(0L).toDF("_n")
-      else spark.read.parquet(s"$storeDir/meta")
-        .agg(coalesce(sum(col("_n")), lit(0L)).cast("long").as("_n"))
+    // if every micro-batch was empty, appendBatch never created
+    // postings/ or meta/ — an empty index is a VALID store state (zero
+    // postings, N = 0). appendBatch writes postings THEN meta, so a
+    // crash between the two leaves a postings slice with meta absent
+    // or behind until the batch replays; each side reads on its own.
+    val postings = SliceStore.read(spark, storeDir, "postings")(
+      Seq.empty[(Long, String, Long)].toDF("id", "word", "tf"))
+      .select(col("id"), col("word"), col("tf"))
+    val n = SliceStore.read(spark, storeDir, "meta")(Seq.empty[Long].toDF("_n"))
+      .agg(coalesce(sum(col("_n")), lit(0L)).cast("long").as("_n"))
     (postings, n)
   }
 

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.operators.{IngestionReport, IngestionService, ParserConfig}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import java.sql.Timestamp
 
@@ -64,12 +64,13 @@ object IngestStream {
     * skipped; one whose token is absent wrote NOTHING (all-or-nothing
     * publish) and re-runs safely — there is no crash point that
     * duplicates a sku-less insert. The batchId marker under the
-    * checkpoint dir is purely a fast path that skips store probes for
-    * fully-processed batches. A file whose ingest FAILED (validation
-    * abort) commits no token; it is retried on a replay of its batch
-    * and deterministically fails again — same semantics as the batch
-    * POST model. `onReport` may re-fire for a replayed failed file —
-    * report consumers that require exactly-once should key on
+    * checkpoint dir (a [[SliceStore]] slice of `graft-processed`
+    * listing the batch's files) is purely a fast path that skips store
+    * probes for fully-processed batches. A file whose ingest FAILED
+    * (validation abort) commits no token; it is retried on a replay of
+    * its batch and deterministically fails again — same semantics as
+    * the batch POST model. `onReport` may re-fire for a replayed failed
+    * file — report consumers that require exactly-once should key on
     * (path, ts).
     *
     * Retention: every `markerRetentionBatches` batches, tokens minted a
@@ -84,6 +85,8 @@ object IngestStream {
     */
   private val TokenShape = "^ingest_([0-9]+)_[0-9a-f]{32}$".r
 
+  private val Processed = "graft-processed"
+
   def start(
       spark: SparkSession,
       service: IngestionService,
@@ -95,17 +98,12 @@ object IngestStream {
           p.stripPrefix("file:"))).toMillis),
       onReport: (String, IngestionReport) => Unit = (_, _) => (),
       markerRetentionBatches: Int = 64): StreamingQuery =
-    fromDropDirectory(spark, dir).writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        import java.nio.file.{Files, Paths}
-        val root = Paths.get(checkpointDir, "graft-processed")
-        val batchMarker = root.resolve(s"batch=$batchId")
-        if (!Files.exists(batchMarker)) {
+    SliceStore.start(fromDropDirectory(spark, dir), checkpointDir) {
+      (batch, batchId) =>
+        if (!SliceStore.latest(checkpointDir, Processed, batchId + 1)
+            .contains(batchId)) {
           val files = batch.select(col("file_path")).distinct()
             .collect().map(_.getString(0)).sorted
-          Files.createDirectories(root)
           files.foreach { path =>
             // per-file token (batch-qualified, path-hashed) committed
             // atomically WITH the ingest's store publish — marker
@@ -120,7 +118,9 @@ object IngestStream {
                 marker = Some(token)))
             }
           }
-          Files.createDirectories(batchMarker)
+          import spark.implicits._
+          SliceStore.write(files.toSeq.toDF("file_path").coalesce(1),
+            checkpointDir, Processed, batchId)
           // Amortized MARKER RETENTION (every `markerRetentionBatches`
           // batches): a replay redelivers at most batches at-or-after
           // the last uncommitted checkpoint entry — never a full window
@@ -138,18 +138,8 @@ object IngestStream {
                 scala.util.Try(b.toLong).toOption.forall(_ >= cutoff)
               case _ => true
             }
-            val s = Files.list(root)
-            try s.iterator().forEachRemaining { p =>
-              val n = p.getFileName.toString
-              if (n.startsWith("batch=") &&
-                  scala.util.Try(n.stripPrefix("batch=").toLong)
-                    .toOption.exists(_ < cutoff))
-                scala.util.Try(Files.delete(p))
-              ()
-            } finally s.close()
+            SliceStore.prune(checkpointDir, Processed, cutoff)
           }
-          ()
         }
-      }
-      .start()
+    }
 }

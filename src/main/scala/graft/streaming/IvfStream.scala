@@ -1,25 +1,22 @@
 package graft.streaming
 
 import graft.operators.IvfIndex
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
-
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming IVF store maintenance — the unbounded twin of the
   * q_ivf_incr batch append: vectors arrive on a stream, each
   * micro-batch is assigned to cells under FROZEN centroids
   * ([[graft.operators.IvfIndex.assign]] — one row-local scan) and
-  * written as its own batchId-keyed slice, itself laid out
+  * written as its own [[SliceStore]] slice, itself laid out
   * `partitionBy(cell)` so query-time probes prune to nprobe/nlist of
   * the store across every slice. Because assignment is a pure per-row
   * function of (vector, centroids), the maintained store is EXACTLY
   * the from-scratch assignment of everything that arrived — the
   * merged==fresh property, proven stream-side by IvfStreamSpec.
   *
-  * Replay needs only the [[IndexStream]] idempotent-overwrite
-  * contract: unlike [[DedupStream]] (whose classification reads the
+  * Replay needs only the [[SliceStore]] overwrite contract: unlike [[DedupStream]] (whose classification reads the
   * standing store and must exclude the batch's own slice), assignment
   * reads nothing standing, so a re-delivered batch rewrites an
   * identical slice and nothing else can observe the difference.
@@ -38,23 +35,16 @@ object IvfStream {
       idCol: String,
       centroids: Array[Array[Double]],
       storeDir: String,
-      checkpointDir: String): StreamingQuery = {
-    Files.createDirectories(Paths.get(storeDir))
-    vecs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        appendBatch(batch.toDF(), vecCol, idCol, centroids, storeDir, batchId)
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    SliceStore.start(vecs, checkpointDir) { (batch, batchId) =>
+      appendBatch(batch, vecCol, idCol, centroids, storeDir, batchId)
+    }
 
   def appendBatch(batch: DataFrame, vecCol: String, idCol: String,
       centroids: Array[Array[Double]], storeDir: String, batchId: Long): Unit = {
     if (!batch.isEmpty) {
-      IvfIndex.assign(batch, vecCol, idCol, centroids)
-        .write.mode(SaveMode.Overwrite).partitionBy("cell")
-        .parquet(s"$storeDir/store/batch=$batchId")
+      SliceStore.write(IvfIndex.assign(batch, vecCol, idCol, centroids),
+        storeDir, "store", batchId, partitionBy = Seq("cell"))
     }
   }
 
@@ -65,11 +55,9 @@ object IvfStream {
     */
   def readStore(spark: SparkSession, storeDir: String): DataFrame = {
     import spark.implicits._
-    if (!Files.exists(Paths.get(storeDir, "store")))
-      Seq.empty[(Long, Int, Array[Double])].toDF("id", "cell", "vec")
-    else
-      spark.read.parquet(s"$storeDir/store")
-        .select(col("id"), col("cell").cast("int").as("cell"), col("vec"))
+    SliceStore.read(spark, storeDir, "store")(
+      Seq.empty[(Long, Int, Array[Double])].toDF("id", "cell", "vec"))
+      .select(col("id"), col("cell").cast("int").as("cell"), col("vec"))
   }
 
   /** Query the maintained store — the standard probe-pruned top-k. */

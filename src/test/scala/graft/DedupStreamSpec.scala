@@ -105,6 +105,24 @@ class DedupStreamSpec extends SparkSpec {
     assert(index.count() === 1L && corpus.count() === 1L)
   }
 
+  // A crash inside batch 0's first write of a table leaves only the
+  // committer's scratch tree under batch=0/; Spark cannot infer a schema
+  // from it, so a reader that trusts the directory fails every replay.
+  Seq("index", "docs").foreach { table =>
+    test(s"replay of batch 0 over an uncommitted $table slice completes") {
+      import spark.implicits._
+      val b0 = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
+      def classify(store: String) = {
+        DedupStream.classifyBatch(spark, b0, "text", "doc_id", store, batchId = 0L)
+        DedupStream.statuses(spark, store).collect().toSet
+      }
+      val store = tmpDir("ddorphan")
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(
+        store, table, "batch=0", "_temporary", "0"))
+      assert(classify(store) === classify(tmpDir("ddclean")))
+    }
+  }
+
   test("empty store and empty batches are valid states") {
     import spark.implicits._
     val store = tmpDir("ddstore3")

@@ -93,6 +93,20 @@ class DsirStreamSpec extends SparkSpec {
     assert(first.size === 2)
   }
 
+  test("a frozen model with more rows than buckets fails loud at start") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val terms = Dsir.modelTerms(fitCorpus, "text", "id", col("tgt"), 256)
+    val buckets = terms.count().toInt - 1 // terms is buckets + 1 rows
+    val (t, r) = Dsir.featureTotals(fitCorpus, "text", "id", col("tgt"), 256)
+    val e = intercept[IllegalArgumentException](DsirStream.start(
+      MemoryStream[(Long, String)].toDF().toDF("doc_id", "text"), "text",
+      "doc_id", terms, Dsir.unseenTerm(t, r, 256), buckets,
+      tmpDir("dsirbound"), tmpDir("dsirboundckpt")))
+    assert(e.getMessage.contains("DsirStream") &&
+      e.getMessage.contains(s"buckets=$buckets"))
+  }
+
   test("empty store reads as an empty score table") {
     val got = DsirStream.scores(spark, tmpDir("dsirempty"), "doc_id")
     assert(got.count() === 0L)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, SliceStore}
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -294,12 +294,11 @@ class EventStreamsSpec extends SparkSpec {
     val dir = tmpDir("stream2")
     events.write.mode("overwrite").parquet(dir)
     val seen = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = EventStreams.foreachBatchIngest(
-        EventStreams.fromDirectory(spark, dir)) { (batch, _) =>
-        seen.addAndGet(batch.count())
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
+    val q = SliceStore.start(EventStreams.fromDirectory(spark, dir),
+        tmpDir("stream2ckpt")) { (batch, _) =>
+      seen.addAndGet(batch.count())
+    }
+    try q.processAllAvailable() finally q.stop()
     assert(seen.get() === 4)
   }
 

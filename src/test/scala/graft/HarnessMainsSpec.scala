@@ -4,10 +4,11 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Guards the harness surface: one-off profiling mains and private
-  * session builders may not accumulate in the library again. Every
-  * harness main that should match the bench builds Bench.session; an
-  * A/B of one query is `runMain graft.ProfQ`, of two commits perfbench.
+/** Guards the harness surface: one-off profiling mains, private
+  * session builders and hand-rolled streaming sinks may not accumulate
+  * in the library again. Every harness main that should match the bench
+  * builds Bench.session; an A/B of one query is `runMain graft.ProfQ`,
+  * of two commits perfbench.
   */
 class HarnessMainsSpec extends AnyFunSuite {
 
@@ -39,6 +40,12 @@ class HarnessMainsSpec extends AnyFunSuite {
   test("SparkSession.builder appears only in Bench, GraftEngine, Smoke and GenData") {
     assert(filesWith("SparkSession.builder") ===
       Set("Bench", "GraftEngine", "Smoke", "GenData"))
+  }
+
+  test("foreachBatch appears only in the slice store") {
+    // every streaming sink starts through SliceStore.start, so the
+    // replay contract lives in one file
+    assert(filesWith(".foreachBatch") === Set("SliceStore"))
   }
 
   test("query-name validation names every unknown query and passes known ones") {

@@ -86,6 +86,17 @@ class IndexStreamSpec extends SparkSpec {
     assert(postings.count() === 4L) // alpha,beta + beta,gamma
   }
 
+  test("a store whose only postings slice is uncommitted reads as the empty index") {
+    // a crash inside batch 0's postings write leaves only the
+    // committer's scratch tree, from which Spark cannot infer a schema
+    val store = tmpDir("idxstore5")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(
+      store, "postings", "batch=0", "_temporary", "0"))
+    val (postings, n) = IndexStream.readStore(spark, store)
+    assert(postings.isEmpty)
+    assert(n.head().getLong(0) === 0L)
+  }
+
   test("all-empty stream: readStore returns a valid empty index, not an error") {
     // r12 ADVICE: appendBatch skips empty batches, so a stream whose
     // every micro-batch was empty leaves storeDir with no postings/ or

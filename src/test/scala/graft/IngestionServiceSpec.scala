@@ -146,6 +146,53 @@ class IngestionServiceSpec extends SparkSpec {
     assert(rep.report.size === IngestionService.MaxReportedErrors)
   }
 
+  test("abort report orders errors of three columns by (row, column) under the cap") {
+    val cfg4 = ParserConfig("csv", Seq(
+      "sku" -> ("sku", "text"),
+      "title" -> ("title", "text"),
+      "active" -> ("active", "boolean"),
+      "stock" -> ("stock_quantity", "integer")))
+    def long(i: Int) = s"t$i" + "x" * 254 // VARCHAR(255) + 1
+    // data row i -> its bad cells; parse, width and range errors
+    // interleave across rows, row 4 carries two, and the 11th and 12th
+    // errors fall past the cap
+    val rows = Seq(
+      "a0,ok,1,0",
+      "a1,ok,maybe,1",
+      s"a2,${long(2)},1,2",
+      "a3,ok,1,3000000000",
+      "a4,ok,nope,4000000000",
+      s"a5,${long(5)},1,5",
+      "a6,ok,bad6,6",
+      "a7,ok,1,5000000000",
+      s"a8,${long(8)},1,8",
+      "a9,ok,bad9,9",
+      "a10,ok,1,6000000000",
+      s"a11,${long(11)},1,11")
+    val p = writeText(tmpDir("ingest"), "data.csv",
+      ("sku,title,active,stock" +: rows).mkString("\n"))
+    val rep = new IngestionService(spark, freshStore(), clientId = 1)
+      .ingest(cfg4, p)
+    assert(!rep.success)
+    def parse(i: Int, c: String, v: String) =
+      s"row $i: column '$c' could not interpret value '$v'"
+    def width(i: Int) =
+      s"row $i: column 'title' value exceeds VARCHAR(255): '${long(i)}'"
+    def range(i: Int, v: String) =
+      s"row $i: column 'stock_quantity' value out of INTEGER range: '$v'"
+    assert(rep.report === Seq(
+      parse(1, "active", "maybe"),
+      width(2),
+      range(3, "3000000000"),
+      parse(4, "active", "nope"),
+      range(4, "4000000000"),
+      width(5),
+      parse(6, "active", "bad6"),
+      range(7, "5000000000"),
+      width(8),
+      parse(9, "active", "bad9")))
+  }
+
   test("a client's ingest leaves other tenants' files byte-identical") {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
