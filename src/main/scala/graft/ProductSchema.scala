@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
 /** Canonical target schema for the product catalog.
@@ -43,6 +45,16 @@ object ProductSchema {
 
   def fieldType(name: String): DataType =
     CLIENT_PRODUCTS_SCHEMA(name).dataType
+
+  /** `df` in canonical column order and types: each schema column is
+    * `df`'s same-named column cast to the schema type, or a typed NULL
+    * when `df` lacks it; other columns drop. Both product stores write
+    * through this one alignment.
+    */
+  def align(df: DataFrame): DataFrame =
+    df.select(CLIENT_PRODUCTS_SCHEMA.fields.toSeq.map(f =>
+      (if (df.columns.contains(f.name)) col(f.name)
+       else lit(null)).cast(f.dataType).as(f.name)): _*)
 
   /** Declared VARCHAR(n) widths from the reference DDL
     * (db/migrations/000/001_up_init.sql:22-36). Spark strings are

@@ -295,7 +295,7 @@ class JdbcProductStore(
     marker.foreach(ProductBackend.validateMarkerToken)
     // DDL outside the swap transaction
     marker.foreach(_ => ensureTable(markerTable, dialect.markerTableDdl(markerTable, q)))
-    stageAndSwap(align(df).filter(col("client_id") === clientId),
+    stageAndSwap(ProductSchema.align(df).filter(col("client_id") === clientId),
       deleteWhere = Some(s"${q("client_id")} = $clientId"), requireRows = true,
       abortMsg = s"staged batch contains no rows for client_id=$clientId — " +
         "refusing to replace the live rows (use truncateClient for " +
@@ -311,7 +311,7 @@ class JdbcProductStore(
   }
 
   def append(df: DataFrame): Unit =
-    align(df).write.mode(SaveMode.Append)
+    ProductSchema.align(df).write.mode(SaveMode.Append)
       .option("createTableColumnTypes", columnTypes)
       .jdbc(url, table, props)
 
@@ -330,7 +330,7 @@ class JdbcProductStore(
     // mid-write, the finally still drops the half-written staging table
     // (the Try around DROP absorbs the nothing-was-created case).
     try {
-      align(df).write.mode(SaveMode.Overwrite)
+      ProductSchema.align(df).write.mode(SaveMode.Overwrite)
         .option("createTableColumnTypes", columnTypes)
         .jdbc(url, staging, props)
       inTransaction { conn =>
@@ -365,9 +365,4 @@ class JdbcProductStore(
       try Try(st.executeUpdate(s"DROP TABLE $staging")) finally st.close()
     }
   }
-
-  private def align(df: DataFrame): DataFrame =
-    df.select(ProductSchema.CLIENT_PRODUCTS_SCHEMA.fields.toSeq.map(f =>
-      (if (df.columns.contains(f.name)) col(f.name)
-       else lit(null)).cast(f.dataType).as(f.name)): _*)
 }

@@ -43,8 +43,19 @@ import scala.util.Try
   * transaction log (Delta/Iceberg) — the operator semantics above it do
   * not change.
   *
-  * Concurrency: every version BUILD that derives from CURRENT (partition
-  * replace, append) plus the publish itself runs under a per-root write
+  * Write side: each write method is its staging and validation plus
+  * ONE call of [[publishVersion]], the only place a version is built
+  * and the only caller of [[publish]]. Under the write lock it
+  * hard-links the live version minus the paths the write replaces,
+  * moves the staged rows in, writes the ingest marker and publishes. A
+  * build that throws deletes its unpublished version directory before
+  * the error propagates (an orphan would sort newest and hold a
+  * `keepVersions` slot), and [[withStaging]] deletes the staging
+  * directory in a `finally`, so a failed write leaves the root as it
+  * found it.
+  *
+  * Concurrency: every version BUILD (it derives from CURRENT) plus the
+  * publish itself runs under a per-root write
   * lock — a JVM monitor nested inside an OS file lock, so both threads in
   * one process and separate processes serialize. Without it, two
   * concurrent tenant ingests would each link the SAME starting version
@@ -240,54 +251,52 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
   /** Write a full new table version and atomically publish it. Used for
     * whole-table operations; per-client batches should use
     * [[overwriteClientAtomic]] so one tenant's MB-scale upload does not
-    * rewrite every other tenant's files.
+    * rewrite every other tenant's files. Replaces the whole version, so
+    * it discards every marker (see [[ProductBackend.hasMarker]]).
     */
-  def overwriteAtomic(df: DataFrame): Unit = {
-    val tmp = stage(df)
-    withWriteLock {
-      val name = newVersionName()
-      mergeMove(tmp, versionsDir.resolve(name))
-      publish(name)
-    }
-    Try(deleteRecursively(tmp))
-  }
+  def overwriteAtomic(df: DataFrame): Unit =
+    withStaging(df)(tmp => publishVersion(Set(""), Some(tmp -> "")))
 
   /** Write `df` (aligned, partitioned like the live table) to a fresh
-    * `_staging_*` prefix and return it. Staging sits OUTSIDE versions/:
-    * a build written directly into versions/ is visible to a concurrent
-    * publisher's gc(), which can delete the in-progress unpublished
-    * directory once enough newer versions exist — the staging prefix is
-    * never gc-listed, and the move into versions/ happens under the lock.
+    * `_staging_*` prefix, run `build` on it, and delete it in a
+    * `finally`, so a failed staging write, an abort and a failed build
+    * leave no staging behind. The Spark write runs here, OUTSIDE the
+    * write lock. Staging sits OUTSIDE versions/: a build written
+    * directly into versions/ is visible to a concurrent publisher's
+    * gc(), which can delete the in-progress unpublished directory once
+    * enough newer versions exist — the staging prefix is never
+    * gc-listed, and the move into versions/ happens under the lock.
     */
-  private def stage(df: DataFrame): Path = {
+  private def withStaging(df: DataFrame)(build: Path => Unit): Unit = {
     val tmp = Paths.get(root, s"_staging_${uniqueTag()}")
-    align(df).write
-      .mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(tmp.toString)
-    tmp
+    try {
+      align(df).write
+        .mode(SaveMode.Overwrite)
+        .partitionBy(partitionCols: _*)
+        .parquet(tmp.toString)
+      build(tmp)
+    } finally Try(deleteRecursively(tmp))
   }
 
-  /** [[stage]] one client's rows and return (stagingRoot,
-    * stagedClientDir). The empty-staging ABORT is shared policy: a df
-    * with no rows for the client must never silently wipe live data.
+  /** `clientId`'s partition in staging `tmp`, as a path relative to the
+    * staging (and version) root. The empty-staging ABORT is shared
+    * policy: a df with no rows for the client must never silently wipe
+    * live data.
     */
-  private def stageClientPartition(clientId: Int, df: DataFrame): (Path, Path) = {
-    val tmp = stage(df)
-    val src = tmp.resolve(s"client_id=$clientId")
-    if (!Files.exists(src)) {
-      Try(deleteRecursively(tmp))
+  private def stagedPartition(tmp: Path, clientId: Int): String = {
+    val part = s"client_id=$clientId"
+    if (!Files.exists(tmp.resolve(part)))
       throw new IllegalStateException(
         s"staged batch contains no rows for client_id=$clientId — refusing to " +
           "replace the live partition (use truncateClient for deliberate truncation)")
-    }
-    (tmp, src)
+    part
   }
 
   /** Replace ONLY `client_id=clientId`'s partition with the given rows
     * (all rows must belong to that client). Every other client's files
     * are hard-linked into the new version — byte-identical (same inodes)
-    * across another tenant's ingest.
+    * across another tenant's ingest. `marker` commits an ingest token
+    * ATOMICALLY with the data (see [[writeMarker]]).
     *
     * An empty staged partition is an ABORT, not a truncate: a df with no
     * rows for this client (empty input, or rows carrying another
@@ -296,10 +305,11 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
     */
   def overwriteClientAtomic(
       clientId: Int, df: DataFrame, marker: Option[String] = None): Unit = {
-    val (tmp, src) = stageClientPartition(clientId, df)
-    try replacePartition(s"client_id=$clientId", Some(src), marker)
-    finally Try(deleteRecursively(tmp))
-    ()
+    validateMarker(marker)
+    withStaging(df) { tmp =>
+      val part = stagedPartition(tmp, clientId)
+      publishVersion(Set(part), Some(tmp -> part), marker)
+    }
   }
 
   /** Replace ONLY the named sku-hash buckets of `clientId`'s partition
@@ -321,120 +331,73 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
         require(buckets.nonEmpty, "no buckets declared")
         require(buckets.forall(b => b >= 0 && b < n),
           s"bucket ids must be in [0, $n): ${buckets.mkString(",")}")
-        val part = s"client_id=$clientId"
-        val (tmp, src) = stageClientPartition(clientId, df)
-        val declared = buckets.map(b => s"${ProductStore.BucketCol}=$b").toSet
-        val staged = children(src).map(_.getFileName.toString)
-        // declared and staged must agree EXACTLY: a staged row outside
-        // the declared set would be silently dropped by the replace, and
-        // a declared bucket with no staged rows would be silently
-        // TRUNCATED (excluded from carry-forward, nothing moved in) —
-        // the bucket-granular form of the empty-staging wipe the
-        // whole-partition path aborts on.
-        val stray = staged.filterNot(declared.contains)
-        val truncating = declared -- staged.toSet
-        if (stray.nonEmpty || truncating.nonEmpty) {
-          Try(deleteRecursively(tmp))
-          throw new IllegalStateException(
-            if (stray.nonEmpty)
-              s"staged rows hash outside the declared buckets ($stray vs " +
-                s"$declared) — replacing only the declared set would drop them"
-            else
-              s"declared buckets received no staged rows ($truncating) — " +
-                "replacing them would truncate live data (shrink the declared set)")
+        validateMarker(marker)
+        withStaging(df) { tmp =>
+          val part = stagedPartition(tmp, clientId)
+          val declared = buckets.map(b => s"${ProductStore.BucketCol}=$b").toSet
+          val staged = children(tmp.resolve(part)).map(_.getFileName.toString)
+          // declared and staged must agree EXACTLY: a staged row outside
+          // the declared set would be silently dropped by the replace, and
+          // a declared bucket with no staged rows would be silently
+          // TRUNCATED (excluded from carry-forward, nothing moved in) —
+          // the bucket-granular form of the empty-staging wipe the
+          // whole-partition path aborts on.
+          val stray = staged.filterNot(declared.contains)
+          val truncating = declared -- staged.toSet
+          if (stray.nonEmpty || truncating.nonEmpty)
+            throw new IllegalStateException(
+              if (stray.nonEmpty)
+                s"staged rows hash outside the declared buckets ($stray vs " +
+                  s"$declared) — replacing only the declared set would drop them"
+              else
+                s"declared buckets received no staged rows ($truncating) — " +
+                  "replacing them would truncate live data (shrink the declared set)")
+          publishVersion(declared.map(b => s"$part/$b"), Some(tmp -> part), marker)
         }
-        try replaceClientBuckets(part, declared, src, marker)
-        finally Try(deleteRecursively(tmp))
-        ()
     }
 
   /** Deliberately remove one client's partition (the explicit form of
     * what a silently-empty staged batch must never do).
     */
   def truncateClient(clientId: Int): Unit =
-    replacePartition(s"client_id=$clientId", None)
+    publishVersion(Set(s"client_id=$clientId"))
 
   /** Plain append (insert-only ingest without merge): new version =
     * hard links to every current file + the newly written files.
     */
-  def append(df: DataFrame): Unit = {
-    val tmp = stage(df)
-    withWriteLock {
-      val name = newVersionName()
-      val target = versionsDir.resolve(name)
-      currentVersion.foreach(cur => linkTree(cur, target))
-      mergeMove(tmp, target)
-      publish(name)
-    }
-    Try(deleteRecursively(tmp))
-  }
+  def append(df: DataFrame): Unit =
+    withStaging(df)(tmp => publishVersion(Set.empty, Some(tmp -> "")))
 
-  /** Build a new version that equals the current one except for `part`,
-    * which is replaced by `src` (or dropped when None), then publish.
-    * `marker` commits an ingest token ATOMICALLY with the data: it is
-    * written INTO the new version directory (under `_markers/`, a
-    * `_`-prefixed name Spark's file listing ignores) BEFORE the CURRENT
-    * swap — so the token is visible iff this publish is live, and
-    * hard-link carry-forward of the version's children propagates all
-    * earlier tokens through every later version (see
-    * [[ProductBackend.overwriteClientAtomic]]).
+  /** THE version build every write goes through. Under the write lock:
+    * hard-link the live version into a new version directory, minus the
+    * `replaced` paths (relative to the version root; "" is the root
+    * itself, so `Set("")` carries nothing forward); move `staged` in —
+    * a staging root and the relative path of the subtree to take, which
+    * lands at the same relative path (staging is partitioned like the
+    * table); write `marker`; publish. Carry-forward by hard link makes
+    * every earlier marker ride the new version too.
+    *
+    * A build that throws — before or inside [[publish]], e.g. the
+    * layout re-check of a concurrent writer with another layout —
+    * deletes its unpublished directory before the error propagates: a
+    * half-built version would sort newest and hold a retention slot.
     */
-  private def replacePartition(
-      part: String, src: Option[Path], marker: Option[String] = None): Unit =
+  private def publishVersion(replaced: Set[String],
+      staged: Option[(Path, String)] = None, marker: Option[String] = None): Unit =
     withWriteLock {
-      validateMarker(marker)
       val name = newVersionName()
       val target = versionsDir.resolve(name)
-      Files.createDirectories(target)
-      currentVersion.foreach { cur =>
-        if (Files.exists(cur)) {
-          // children(), not a raw Files.list: the unclosed stream leaks
-          // one directory fd per publish (see children's scaladoc)
-          children(cur).foreach { child =>
-            if (child.getFileName.toString != part)
-              linkTree(child, target.resolve(child.getFileName))
-          }
-        }
+      try {
+        Files.createDirectories(target)
+        currentVersion.filter(Files.exists(_)).foreach(linkTree(_, target, replaced))
+        staged.foreach { case (tmp, rel) => mergeMove(tmp.resolve(rel), target.resolve(rel)) }
+        writeMarker(target, marker)
+        publish(name)
+      } catch {
+        case e: Throwable =>
+          Try(if (!currentVersion.contains(target)) deleteRecursively(target))
+          throw e
       }
-      src.foreach(s => Files.move(s, target.resolve(part), StandardCopyOption.ATOMIC_MOVE))
-      writeMarker(target, marker)
-      publish(name)
-    }
-
-  /** Replace only the named bucket subdirectories of one tenant's
-    * partition: everything else — other tenants AND this tenant's
-    * untouched buckets — hard-links into the new version (same inodes,
-    * zero copy). The sub-tenant sibling of [[replacePartition]], with
-    * the identical marker-rides-publish contract.
-    */
-  private def replaceClientBuckets(part: String, replaced: Set[String],
-      src: Path, marker: Option[String]): Unit =
-    withWriteLock {
-      validateMarker(marker)
-      val name = newVersionName()
-      val target = versionsDir.resolve(name)
-      Files.createDirectories(target)
-      val targetClient = target.resolve(part)
-      currentVersion.foreach { cur =>
-        if (Files.exists(cur)) {
-          children(cur).foreach { child =>
-            if (child.getFileName.toString != part)
-              linkTree(child, target.resolve(child.getFileName))
-            else {
-              Files.createDirectories(targetClient)
-              children(child).foreach { bucketDir =>
-                if (!replaced.contains(bucketDir.getFileName.toString))
-                  linkTree(bucketDir, targetClient.resolve(bucketDir.getFileName))
-              }
-            }
-          }
-        }
-      }
-      Files.createDirectories(targetClient)
-      children(src).foreach(b => Files.move(b,
-        targetClient.resolve(b.getFileName), StandardCopyOption.ATOMIC_MOVE))
-      writeMarker(target, marker)
-      publish(name)
     }
 
   private def validateMarker(marker: Option[String]): Unit =
@@ -464,35 +427,19 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
   override def hasMarker(token: String): Boolean =
     currentVersion.exists(v => Files.exists(v.resolve(MarkersDir).resolve(token)))
 
-  /** Retire committed markers failing `keep` in ONE atomic publish: the
-    * new version hard-links every child of the current one except
-    * `_markers/`, which carries only the kept tokens — bounding the
-    * O(live tokens) link cost every later publish pays (see
-    * [[ProductBackend.retireMarkers]] for the caller-owned safety
-    * argument). No-op without a publish when nothing would drop, so an
-    * amortized caller (retire every K batches) never churns versions.
+  /** Retire committed markers failing `keep` in ONE atomic publish that
+    * carries everything else forward — bounding the O(live tokens) link
+    * cost every later publish pays (see [[ProductBackend.retireMarkers]]
+    * for the caller-owned safety argument). No-op without a publish
+    * when nothing would drop, so an amortized caller (retire every K
+    * batches) never churns versions. The drop set is read from the live
+    * version like any read (retention covers a concurrent publish); a
+    * token committed after that read is not in it and carries forward.
     */
-  override def retireMarkers(keep: String => Boolean): Unit = withWriteLock {
-    currentVersion.foreach { cur =>
-      val mdir = cur.resolve(MarkersDir)
-      if (Files.isDirectory(mdir)) {
-        val tokens = children(mdir).map(_.getFileName.toString)
-        if (tokens.exists(t => !keep(t))) {
-          val name = newVersionName()
-          val target = versionsDir.resolve(name)
-          Files.createDirectories(target)
-          children(cur).foreach { child =>
-            if (child.getFileName.toString != MarkersDir)
-              linkTree(child, target.resolve(child.getFileName))
-          }
-          val tm = target.resolve(MarkersDir)
-          Files.createDirectories(tm)
-          tokens.filter(keep).foreach(t =>
-            Files.createLink(tm.resolve(t), mdir.resolve(t)))
-          publish(name)
-        }
-      }
-    }
+  override def retireMarkers(keep: String => Boolean): Unit = {
+    val dropped = currentVersion.map(_.resolve(MarkersDir)).filter(Files.isDirectory(_))
+      .toSeq.flatMap(children).map(_.getFileName.toString).filterNot(keep)
+    if (dropped.nonEmpty) publishVersion(dropped.map(t => s"$MarkersDir/$t").toSet)
   }
 
   /** Collision-proof unique tag for staging/version/pointer names.
@@ -518,16 +465,9 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
   private def newVersionName(): String = {
     val floor =
       if (!Files.exists(versionsDir)) 0L
-      else {
-        val listing = Files.list(versionsDir)
-        val names =
-          try {
-            import scala.jdk.CollectionConverters._
-            listing.iterator().asScala.map(_.getFileName.toString).toVector
-          } finally listing.close()
-        names.flatMap(n => Try(n.stripPrefix("v-").take(19).toLong).toOption)
-          .maxOption.map(_ + 1L).getOrElse(0L)
-      }
+      else children(versionsDir)
+        .flatMap(p => Try(p.getFileName.toString.stripPrefix("v-").take(19).toLong).toOption)
+        .maxOption.map(_ + 1L).getOrElse(0L)
     val nano = math.max(System.nanoTime(), floor)
     f"v-$nano%019d-${java.util.UUID.randomUUID().toString.substring(0, 8)}"
   }
@@ -535,15 +475,17 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
   /** Publish: write the pointer to a temp file, atomically replace
     * CURRENT. Readers see the old complete version or the new complete
     * version, never a missing or partial table. Then GC versions beyond
-    * the retention count (the published one is always kept).
+    * the retention count (the published one is always kept). Called
+    * only from [[publishVersion]], under the write lock.
     */
   private def publish(name: String): Unit = {
     stampLayout()
-    Files.createDirectories(Paths.get(root))
     val tmp = Paths.get(root, s"_ptr_${uniqueTag()}")
-    Files.writeString(tmp, name)
-    Files.move(tmp, currentPtr, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    try {
+      Files.writeString(tmp, name)
+      Files.move(tmp, currentPtr, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
     gc(name)
   }
 
@@ -570,30 +512,28 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
     }
   }
 
-  /** Recursively hard-link a tree (zero-copy, same inodes); directories
-    * are created, files are linked.
+  /** Recursively hard-link the tree at `src` into `dst` (zero-copy, same
+    * inodes; directories are created, files are linked), except the
+    * paths in `skip` — relative to the tree's root, "" being the root.
     */
-  private def linkTree(src: Path, dst: Path): Unit = {
-    if (Files.isDirectory(src)) {
-      Files.createDirectories(dst)
-      children(src).foreach(child => linkTree(child, dst.resolve(child.getFileName)))
-    } else {
-      Files.createDirectories(dst.getParent)
-      Files.createLink(dst, src)
+  private def linkTree(src: Path, dst: Path, skip: Set[String], rel: String = ""): Unit =
+    if (!skip(rel)) {
+      if (Files.isDirectory(src)) {
+        Files.createDirectories(dst)
+        children(src).foreach { child =>
+          val n = child.getFileName.toString
+          linkTree(child, dst.resolve(n), skip, if (rel.isEmpty) n else s"$rel/$n")
+        }
+      } else Files.createLink(dst, src)
     }
-  }
 
-  /** Move the contents of `src` into `dst`, merging directories (Spark
-    * part-file names are UUID-unique, so files never collide).
+  /** Move `src` to `dst`, merging into `dst` where both are directories
+    * (Spark part-file names are UUID-unique, so files never collide).
     */
-  private def mergeMove(src: Path, dst: Path): Unit = {
-    Files.createDirectories(dst)
-    children(src).foreach { child =>
-      val t = dst.resolve(child.getFileName)
-      if (Files.isDirectory(child) && Files.exists(t)) mergeMove(child, t)
-      else Files.move(child, t, StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
+  private def mergeMove(src: Path, dst: Path): Unit =
+    if (Files.isDirectory(src) && Files.isDirectory(dst))
+      children(src).foreach(child => mergeMove(child, dst.resolve(child.getFileName)))
+    else Files.move(src, dst, StandardCopyOption.REPLACE_EXISTING)
 
   /** Schema-align and cluster by the partition column: without the
     * repartition, `partitionBy(client_id)` writes one file per shuffle
@@ -603,9 +543,7 @@ class ProductStore(spark: SparkSession, root: String, keepVersions: Int = 3,
     * to need parallel writers would add a bucketing column here.
     */
   private def align(df: DataFrame): DataFrame = {
-    val base = df.select(ProductSchema.CLIENT_PRODUCTS_SCHEMA.fields.toSeq.map(f =>
-      (if (df.columns.contains(f.name)) col(f.name)
-       else lit(null)).cast(f.dataType).as(f.name)): _*)
+    val base = ProductSchema.align(df)
     skuBuckets match {
       case Some(n) =>
         base.withColumn(ProductStore.BucketCol,

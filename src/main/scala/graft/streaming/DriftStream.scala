@@ -67,13 +67,17 @@ object DriftStream {
   }
 
   /** Persist the frozen baseline histogram + knob stamp once; verify
-    * the stamp on every later start (see the class doc).
+    * the stamp on every later start (see the class doc). `meta` is
+    * written last and counts as present only once COMMITTED
+    * ([[SliceStore.hasVisibleFile]]): a crash inside the first start's
+    * writes leaves at most a `_temporary/` tree, and the next start
+    * writes both tables again instead of failing to read it.
     */
   def ensureBaseline(spark: SparkSession, baseline: DataFrame,
       valueCol: String, bucketWidth: Long, storeDir: String,
       epsilon: Double): Unit = {
     Files.createDirectories(Paths.get(storeDir))
-    if (!Files.exists(Paths.get(storeDir, "meta"))) {
+    if (!SliceStore.hasVisibleFile(Paths.get(storeDir, "meta"))) {
       import spark.implicits._
       // an EMPTY baseline has no distribution to drift from — shares
       // divide by a null total and every later batch would die on a

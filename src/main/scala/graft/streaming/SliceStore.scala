@@ -107,12 +107,17 @@ object SliceStore {
   private def committed(storeDir: String, table: String, batchId: Long): Boolean =
     hasVisibleFile(Paths.get(path(storeDir, table, batchId)))
 
-  private def hasVisibleFile(dir: Path): Boolean = {
-    val s = Files.list(dir)
-    try s.iterator().asScala.exists { p =>
-      val n = p.getFileName.toString
-      !n.startsWith("_") && !n.startsWith(".") &&
-        (!Files.isDirectory(p) || hasVisibleFile(p))
-    } finally s.close()
-  }
+  /** True iff `dir` holds a COMMITTED Spark write: a visible (not `_`-
+    * or `.`-prefixed) file at any depth. False for a missing directory
+    * and for one holding only a crashed write's `_temporary/` tree.
+    */
+  private[streaming] def hasVisibleFile(dir: Path): Boolean =
+    Files.isDirectory(dir) && {
+      val s = Files.list(dir)
+      try s.iterator().asScala.exists { p =>
+        val n = p.getFileName.toString
+        !n.startsWith("_") && !n.startsWith(".") &&
+          (!Files.isDirectory(p) || hasVisibleFile(p))
+      } finally s.close()
+    }
 }

@@ -92,4 +92,14 @@ class DriftStreamSpec extends SparkSpec {
         tmpDir("driftstore-empty"), 1e-6)
     }
   }
+
+  test("a first start that crashed inside its meta write does not wedge the next") {
+    // a crash mid-write leaves only the committer's _temporary tree
+    val store = tmpDir("driftstore-crashed")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(store, "meta", "_temporary", "0"))
+    DriftStream.ensureBaseline(spark, df(baselineVals), "v", 10L, store, 1e-6)
+    DriftStream.processBatch(spark, df(batches(0)), "v", 10L, store, 0L)
+    val sums = DriftStream.summaries(spark, store).collect()
+    assert(sums.map(_.getAs[Long]("n_rows")).toSeq === Seq(batches(0).length.toLong))
+  }
 }

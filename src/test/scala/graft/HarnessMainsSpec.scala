@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Guards the harness surface: one-off profiling mains, private
-  * session builders and hand-rolled streaming sinks may not accumulate
-  * in the library again. Every harness main that should match the bench
+  * session builders, hand-rolled streaming sinks and hand-rolled store
+  * version builds may not accumulate in the library again. Every harness main that should match the bench
   * builds Bench.session; an A/B of one query is `runMain graft.ProfQ`,
   * of two commits perfbench.
   */
@@ -32,6 +32,24 @@ class HarnessMainsSpec extends AnyFunSuite {
     finally s.close()
   }
 
+  /** Member methods (two-space-indented `def`s) of `file` under the
+    * main source root with a code line calling `name(`; the definition
+    * line itself does not count.
+    */
+  private def callersIn(file: String, name: String): Set[String] = {
+    val member = raw"^  (?:override\s+)?(?:private(?:\[\w+\])?\s+)?def\s+(\w+).*".r
+    val call = raw"\b$name\(".r
+    var method = ""
+    Files.readAllLines(mainRoot.resolve(file)).asScala.flatMap { line =>
+      line match { case member(m) => method = m; case _ => }
+      val t = line.trim
+      val code = !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
+      if (code && call.findFirstIn(t).isDefined && !t.contains(s"def $name("))
+        Some(method)
+      else None
+    }.toSet
+  }
+
   test("def main appears only in the six harness mains") {
     assert(filesWith("def main(") ===
       Set("Bench", "Verify", "Smoke", "Explain", "GenData", "ProfQ"))
@@ -46,6 +64,14 @@ class HarnessMainsSpec extends AnyFunSuite {
     // every streaming sink starts through SliceStore.start, so the
     // replay contract lives in one file
     assert(filesWith(".foreachBatch") === Set("SliceStore"))
+  }
+
+  test("a product store version is named and published in one method") {
+    // every parquet write builds its version through publishVersion, so
+    // the write lock, the publish and the failure cleanup live in one place
+    val store = "graft/operators/ProductStore.scala"
+    assert(callersIn(store, "newVersionName") === Set("publishVersion"))
+    assert(callersIn(store, "publish") === Set("publishVersion"))
   }
 
   test("query-name validation names every unknown query and passes known ones") {
