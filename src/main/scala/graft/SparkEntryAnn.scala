@@ -120,7 +120,7 @@ private[graft] trait SparkEntryAnn { this: SparkEntry.type =>
     }
 
   private[graft] def readPqCodebooks(s: SparkSession, base: String): Array[Array[Array[Double]]] = {
-    val rows = s.read.parquet(s"$base/codebooks.parquet")
+    val rows = TableReads.read(s, s"$base/codebooks.parquet")
       .orderBy(col("m"), col("code")).collect()
     val m = rows.map(_.getInt(0)).max + 1
     Array.tabulate(m) { i =>
@@ -138,7 +138,7 @@ private[graft] trait SparkEntryAnn { this: SparkEntry.type =>
     // re-copy was two extra write jobs per gate per pass for a file
     // that only changes when the dataset does
     ensureDump(s"$pqDir/codebooks_recall.parquet", d) {
-      s.read.parquet(s"$base/codebooks.parquet")
+      TableReads.read(s, s"$base/codebooks.parquet")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$pqDir/codebooks_recall.parquet")
     }
@@ -1206,10 +1206,8 @@ private[graft] trait SparkEntryAnn { this: SparkEntry.type =>
     val all = shards.agg(expr("hll_union_agg(sk, true)").as("sk"))
       .select(lit("ALL").as("scope"),
         expr("hll_sketch_estimate(sk)").as("estimate"))
-    per.unionAll(all)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$hllShardsDir/result.parquet")
-    s.read.parquet(s"$hllShardsDir/result.parquet").orderBy(col("scope"))
+    TableReads.overwrite(per.unionAll(all).coalesce(1), s"$hllShardsDir/result.parquet")
+      .orderBy(col("scope"))
   }
 
   /** Count-Min frequency estimates ([[operators.CountMin]]): the
@@ -1532,7 +1530,7 @@ private[graft] trait SparkEntryAnn { this: SparkEntry.type =>
     }
 
   private[graft] def corpusShards(s: SparkSession, d: String): DataFrame = {
-    s.read.parquet(corpusShardsPath(s, d))
+    TableReads.read(s, corpusShardsPath(s, d))
       .groupBy(col("split"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("ws_tokens")).as("total_ws_tokens"),

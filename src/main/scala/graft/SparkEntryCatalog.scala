@@ -21,7 +21,7 @@ private[graft] trait SparkEntryCatalog { this: SparkEntry.type =>
 
 
   private[graft] def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    TableReads.read(spark, s"$dir/$name.parquet")
 
   /** The events table's `ts` has shipped in two parquet layouts across
     * testdata drops: TIMESTAMP(NANOS) (which Spark's reader rejects by
@@ -37,11 +37,12 @@ private[graft] trait SparkEntryCatalog { this: SparkEntry.type =>
     // (per-file footer conversion at task time re-consults it), so it is
     // only restored when the file turns out NOT to need it — the session
     // leak is scoped to exactly the sessions where the conf is required
-    // for the plan to run at all.
+    // for the plan to run at all. TableReads keys its cached schema on
+    // this conf, so the flip never serves a schema inferred without it.
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     val prior = spark.conf.getOption(key)
     spark.conf.set(key, "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = TableReads.read(spark, s"$dir/events.parquet")
     val restore = () => prior match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
@@ -587,7 +588,7 @@ private[graft] trait SparkEntryCatalog { this: SparkEntry.type =>
   private[graft] lazy val approxPctDir = s"$artifactRoot/approxpct"
 
   private[graft] def groupPercentileApprox(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "lineitem")
+    val pct = t(s, d, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(
         expr("approx_percentile(l_quantity, 0.5, 1000)").cast(DoubleType)
@@ -595,8 +596,8 @@ private[graft] trait SparkEntryCatalog { this: SparkEntry.type =>
         expr("approx_percentile(l_extendedprice, 0.9, 1000)").cast(DoubleType)
           .as("approx_p90_price"),
         count(lit(1)).as("n_rows"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$approxPctDir/result.parquet")
-    s.read.parquet(s"$approxPctDir/result.parquet").orderBy(col("l_returnflag"))
+    TableReads.overwrite(pct.coalesce(1), s"$approxPctDir/result.parquet")
+      .orderBy(col("l_returnflag"))
   }
 
   /** Approximate distinct counts — the HyperLogLog++ twin of
@@ -611,12 +612,12 @@ private[graft] trait SparkEntryCatalog { this: SparkEntry.type =>
   private[graft] lazy val approxDistinctDir = s"$artifactRoot/approxdistinct"
 
   private[graft] def approxDistinct(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "lineitem")
+    val est = t(s, d, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(approx_count_distinct(col("l_partkey"), rsd = 0.02).as("approx_parts"),
         count(lit(1)).as("n_rows"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$approxDistinctDir/result.parquet")
-    s.read.parquet(s"$approxDistinctDir/result.parquet").orderBy(col("l_returnflag"))
+    TableReads.overwrite(est.coalesce(1), s"$approxDistinctDir/result.parquet")
+      .orderBy(col("l_returnflag"))
   }
 
   /** Heavy hitters over document words — the bounded-state answer to
@@ -633,13 +634,12 @@ private[graft] trait SparkEntryCatalog { this: SparkEntry.type =>
   private[graft] lazy val heavyDir = s"$artifactRoot/heavyhitters"
 
   private[graft] def heavyHittersQ(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "documents")
+    val hh = t(s, d, "documents")
       .select(explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
       .agg(graft.functions.GraftFunctions.graftHeavyHitters(col("w"), 32).as("hh"))
       .select(col("hh.spilled").as("spilled"), explode(col("hh.items")).as("it"))
       .select(col("it.item").as("item"), col("it.est").as("est"), col("spilled"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$heavyDir/result.parquet")
-    s.read.parquet(s"$heavyDir/result.parquet").orderBy(col("item"))
+    TableReads.overwrite(hh.coalesce(1), s"$heavyDir/result.parquet").orderBy(col("item"))
   }
 
   private[graft] def groupAgg(s: SparkSession, d: String): DataFrame =

@@ -73,9 +73,11 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
     val docs = t(s, d, "documents")
     val cands = Dedup.minHashLsh(docs, "text", "doc_id",
       numHashes = 64, bands = 32, threshold = 0.35)
-    Dedup.exactShingleJaccard(cands, docs, "text", "doc_id", n = 3, minJaccard = 0.8)
-      .coalesce(1).write.mode("overwrite").parquet(s"$lshFullDir/pairs.parquet")
-    s.read.parquet(s"$lshFullDir/pairs.parquet").orderBy(col("id_a"), col("id_b"))
+    TableReads.overwrite(
+        Dedup.exactShingleJaccard(cands, docs, "text", "doc_id", n = 3, minJaccard = 0.8)
+          .coalesce(1),
+        s"$lshFullDir/pairs.parquet")
+      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** Mutation schedule for the text-dedup recall panel: panel doc k
@@ -103,8 +105,7 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
     */
   private[graft] def recallSummaryRow(s: SparkSession, found: DataFrame,
       foundPath: String, target: DataFrame): DataFrame = {
-    found.coalesce(1).write.mode("overwrite").parquet(foundPath)
-    val foundBack = s.read.parquet(foundPath)
+    val foundBack = TableReads.overwrite(found.coalesce(1), foundPath)
     target.agg(count(lit(1)).as("n_target"))
       .crossJoin(foundBack.agg(count(lit(1)).as("n_found")))
       .select(col("n_target"), col("n_found"),
@@ -173,14 +174,14 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
     // signatures read from the standing artifact.
     val base = recallSigPath(s, d)
     val cands = Dedup.minHashLshProbe(
-      s.read.parquet(s"$base/sigs.parquet"),
+      TableReads.read(s, s"$base/sigs.parquet"),
       Dedup.minHashSignatures(planted, "text", "doc_id", numHashes = 64),
       numHashes = 64, bands = 32, threshold = 0.35)
     val found = Dedup.exactShingleJaccard(
         cands, universe, "text", "doc_id", n = 3, minJaccard = 0.8)
       .filter(col("id_a") < 980000L && col("id_b") >= 980000L)
     recallSummaryRow(s, found, s"$dedupRecallDir/found.parquet",
-        s.read.parquet(s"$base/target.parquet"))
+        TableReads.read(s, s"$base/target.parquet"))
       .filter(col("recall") >= 0.95)
   }
 
@@ -221,14 +222,14 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
     val universe = docs.unionByName(planted)
     val base = simhashRecallSigPath(s, d)
     val cands = Dedup.simHashProbe(
-      s.read.parquet(s"$base/simsigs.parquet"),
+      TableReads.read(s, s"$base/simsigs.parquet"),
       Dedup.simHash(planted, "text", "doc_id"), maxHamming = 6, pieces = 8)
     val found = Dedup.exactBagJaccard(
         cands.select(col("id_a"), col("id_b")),
         universe, "text", "doc_id", minJaccard = 0.8)
       .filter(col("id_a") < 980000L && col("id_b") >= 980000L)
     recallSummaryRow(s, found, s"$dedupRecallDir/simfound.parquet",
-      s.read.parquet(s"$base/simtarget.parquet"))
+      TableReads.read(s, s"$base/simtarget.parquet"))
   }
 
   /** Planted verbatim quotes for the containment recall readout: 50
@@ -300,7 +301,7 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
     val universe = docs.unionByName(planted)
     val base = quoteRecallBandPath(s, d)
     val cands = Dedup.chunkLshProbe(
-      s.read.parquet(s"$base/qbands.parquet"),
+      TableReads.read(s, s"$base/qbands.parquet"),
       Dedup.chunkBandKeys(planted, "text", "doc_id", chunkWords = 32,
         stride = 16, numHashes = 32, bands = 16))
     val found = Dedup.containmentForPairs(
@@ -308,7 +309,7 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
         universe, "text", "doc_id", n = 3, minContainment = 0.5)
       .filter(col("contained_id") >= 990000L && col("container_id") < 980000L)
     recallSummaryRow(s, found, s"$dedupRecallDir/qfound.parquet",
-      s.read.parquet(s"$base/qtarget.parquet"))
+      TableReads.read(s, s"$base/qtarget.parquet"))
   }
 
   /** Incremental dedup: the 20% of docs with doc_id % 5 == 0 arrive as a
@@ -348,10 +349,9 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
     val docs = t(s, d, "documents").filter(col("doc_id") < 1500)
     val existing = docs.filter(col("doc_id") % 5 =!= 0)
     val incoming = docs.filter(col("doc_id") % 5 === 0)
-    Dedup.dedupIndex(existing, "text", "doc_id")
-      .write.mode("overwrite").parquet(s"$dedupIndexDir/index.parquet")
     Dedup.incrementalStatusWithIndex(
-        s.read.parquet(s"$dedupIndexDir/index.parquet"),
+        TableReads.overwrite(Dedup.dedupIndex(existing, "text", "doc_id"),
+          s"$dedupIndexDir/index.parquet"),
         existing, incoming, "text", "doc_id")
       .orderBy(col("doc_id"))
   }
@@ -440,23 +440,23 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
     // is ~100x less candidate-join work; at crawl scale it is the
     // difference between paying for raw rows and paying for content.
     val base = simhashArtifactPath(s, d)
-    val groups = s.read.parquet(s"$base/groups.parquet")
+    val groups = TableReads.read(s, s"$base/groups.parquet")
     val gpairs = Dedup.simHashPairsFromSigs(
-      s.read.parquet(s"$base/sigs.parquet"), maxHamming = 6, pieces = 8)
+      TableReads.read(s, s"$base/sigs.parquet"), maxHamming = 6, pieces = 8)
     // verify against the PERSISTED representative word counts (part of
     // the same artifact — a rep's bag is its group's bag, so the metric
     // is unchanged); the pair list materializes internally, so the
     // banding self-join runs exactly once.
     val verified = Dedup.exactBagJaccardFromCounts(
       gpairs.select(col("rep_a").as("id_a"), col("rep_b").as("id_b")),
-      s.read.parquet(s"$base/counts.parquet"), minJaccard = 0.8)
-    Dedup.expandGroupPairs(
+      TableReads.read(s, s"$base/counts.parquet"), minJaccard = 0.8)
+    val pairs = Dedup.expandGroupPairs(
         verified.select(col("id_a").as("rep_a"), col("id_b").as("rep_b"),
           col("bag_jaccard")), groups)
       .unionByName(Dedup.intraGroupPairs(groups)
         .withColumn("bag_jaccard", lit(1.0)))
-      .coalesce(1).write.mode("overwrite").parquet(s"$simhashFullDir/pairs.parquet")
-    s.read.parquet(s"$simhashFullDir/pairs.parquet").orderBy(col("id_a"), col("id_b"))
+    TableReads.overwrite(pairs.coalesce(1), s"$simhashFullDir/pairs.parquet")
+      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** Batch similarity search — top-k neighbors for MANY query vectors in
@@ -1174,7 +1174,7 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
     */
   private[graft] def ivfCentroids(s: SparkSession, d: String): Array[Array[Double]] = {
     val base = ivfStorePath(s, d)
-    val cents = s.read.parquet(s"$base/centroids.parquet")
+    val cents = TableReads.read(s, s"$base/centroids.parquet")
       .orderBy(col("cell")).localCheckpoint()
     cents.coalesce(1).write.mode("overwrite")
       .parquet(s"$ivfIncrDir/centroids.parquet")
@@ -1199,7 +1199,7 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
     val base = ivfStorePath(s, d)
     val cs = ivfCentroids(s, d)
     val incoming = emb.filter(pmod(col("vec_id"), lit(5)) === 0)
-    val merged = s.read.parquet(s"$base/store.parquet")
+    val merged = TableReads.read(s, s"$base/store.parquet")
       .select(col("id"), col("cell"), col("vec"))
       .unionByName(IvfIndex.assign(incoming, "embedding", "vec_id", cs))
       .localCheckpoint() // read by the guard + every panel retrieval

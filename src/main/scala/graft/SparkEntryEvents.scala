@@ -397,10 +397,10 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
     val docs = t(s, d, "documents")
     val base = sparseIndexPath(s, d)
     TermIndex.sparseKnnFromIndex(
-        s.read.parquet(s"$base/index.parquet"),
+        TableReads.read(s, s"$base/index.parquet"),
         docs.filter(pmod(col("doc_id"), lit(100)) === 0)
           .select(col("doc_id")), k = 5,
-        precomputedNorms = Some(s.read.parquet(s"$base/norms.parquet")))
+        precomputedNorms = Some(TableReads.read(s, s"$base/norms.parquet")))
       .orderBy(col("qid"), col("sim_rank"))
   }
 
@@ -467,10 +467,10 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
       path
     }
     val incoming = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-    val mergedPostings = s.read.parquet(s"$base/postings.parquet")
+    val mergedPostings = TableReads.read(s, s"$base/postings.parquet")
       .unionByName(TermIndex.rawIndex(incoming, "text", "doc_id"))
       .localCheckpoint()
-    val mergedN = s.read.parquet(s"$base/meta.parquet")
+    val mergedN = TableReads.read(s, s"$base/meta.parquet")
       .unionByName(TermIndex.docCount(incoming))
       .agg(sum(col("_n")).as("_n"))
     TermIndex.sparseKnnFromIndex(
@@ -489,7 +489,7 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
     * artifact without re-billing the build.
     */
   private[graft] def sparseIndexBuild(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${sparseIndexPath(s, d)}/index.parquet")
+    TableReads.read(s, s"${sparseIndexPath(s, d)}/index.parquet")
       .groupBy(col("word"))
       .agg(count(lit(1)).as("df"), sum(col("w")).as("total_w"))
       .orderBy(col("word"))
@@ -840,10 +840,9 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
     def state(df: DataFrame): DataFrame =
       df.groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_orders"), sum(col("p")).as("rev"))
-    state(o.filter(pmod(col("o_orderkey"), lit(10)) =!= 0))
-      .write.mode("overwrite").parquet(s"$incrAggDir/state.parquet")
     IncrementalAgg.merge(
-        s.read.parquet(s"$incrAggDir/state.parquet"),
+        TableReads.overwrite(state(o.filter(pmod(col("o_orderkey"), lit(10)) =!= 0)),
+          s"$incrAggDir/state.parquet"),
         state(o.filter(pmod(col("o_orderkey"), lit(10)) === 0)),
         Seq("o_custkey"), Seq("n_orders", "rev"))
       .select(col("o_custkey"),
@@ -974,8 +973,8 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
   private[graft] def setSimCappedQ(s: SparkSession, d: String): DataFrame = {
     val base = setSimCappedArtifactPath(s, d)
     SetSimJoin.selfJoinFromPrefix(
-        s.read.parquet(s"$base/words.parquet"),
-        s.read.parquet(s"$base/prefix.parquet"), threshold = 0.5)
+        TableReads.read(s, s"$base/words.parquet"),
+        TableReads.read(s, s"$base/prefix.parquet"), threshold = 0.5)
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -1020,8 +1019,8 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
     // (r11 spent 3.6 s of headline headroom on the full corpus here).
     val base = setSimArtifactPath(s, d)
     SetSimJoin.selfJoinFromPrefix(
-        s.read.parquet(s"$base/words.parquet"),
-        s.read.parquet(s"$base/prefix.parquet"), threshold = 0.5)
+        TableReads.read(s, s"$base/words.parquet"),
+        TableReads.read(s, s"$base/prefix.parquet"), threshold = 0.5)
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -1177,11 +1176,10 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
     val docs = plantDocs(s, t(s, d, "documents"))
     val cands = Dedup.minHashLsh(docs, "text", "doc_id",
       numHashes = 64, bands = 32, threshold = 0.35)
-    Dedup.containmentForPairs(cands, docs, "text", "doc_id",
-        n = 3, minContainment = 0.5)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$containFullDir/pairs.parquet")
-    s.read.parquet(s"$containFullDir/pairs.parquet")
+    TableReads.overwrite(
+        Dedup.containmentForPairs(cands, docs, "text", "doc_id",
+          n = 3, minContainment = 0.5).coalesce(1),
+        s"$containFullDir/pairs.parquet")
       .orderBy(col("contained_id"), col("container_id"))
   }
 
@@ -1221,11 +1219,10 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
           .toDF("doc_id", "text"))
     val cands = Dedup.chunkLshCandidates(docs, "text", "doc_id",
       chunkWords = 32, stride = 16, numHashes = 32, bands = 16)
-    Dedup.containmentForPairs(cands, docs, "text", "doc_id",
-        n = 3, minContainment = 0.5)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$quoteDir/pairs.parquet")
-    s.read.parquet(s"$quoteDir/pairs.parquet")
+    TableReads.overwrite(
+        Dedup.containmentForPairs(cands, docs, "text", "doc_id",
+          n = 3, minContainment = 0.5).coalesce(1),
+        s"$quoteDir/pairs.parquet")
       .orderBy(col("contained_id"), col("container_id"))
   }
 

@@ -37,10 +37,9 @@ object Compaction {
       inDir: String,
       outDir: String,
       targetBytes: Long): (Int, DataFrame) = {
-    val df = spark.read.parquet(inDir)
+    val df = TableReads.read(spark, inDir)
     val n = plannedFileCount(df, targetBytes)
-    df.repartition(n).write.mode("overwrite").parquet(outDir)
-    (n, spark.read.parquet(outDir))
+    (n, TableReads.overwrite(df.repartition(n), outDir))
   }
 
   /** Compact AND cluster: range-partition by `sortCols` and sort within
@@ -54,12 +53,10 @@ object Compaction {
       targetBytes: Long,
       sortCols: Seq[String]): (Int, DataFrame) = {
     require(sortCols.nonEmpty, "compactSorted needs at least one sort column")
-    val df = spark.read.parquet(inDir)
+    val df = TableReads.read(spark, inDir)
     val n = plannedFileCount(df, targetBytes)
     val cols = sortCols.map(col)
-    df.repartitionByRange(n, cols: _*)
-      .sortWithinPartitions(cols: _*)
-      .write.mode("overwrite").parquet(outDir)
-    (n, spark.read.parquet(outDir))
+    (n, TableReads.overwrite(
+      df.repartitionByRange(n, cols: _*).sortWithinPartitions(cols: _*), outDir))
   }
 }

@@ -139,12 +139,13 @@ class IngestionService(
     val errCols = mapped.columns.filter(_.startsWith("_err_"))
     // One pass over the batch yields the strict-error count (abort gate),
     // the processed count, AND the distinct-sku count full-update needs —
-    // not three separate jobs.
+    // not three separate jobs. Only a full update reports that count, so
+    // a default upload skips the distinct aggregate (its exchange).
     val errOr =
       if (errCols.isEmpty) lit(false) else errCols.map(col).reduce(_ || _)
     val rawHasSku = mapped.columns.contains("sku")
     val distinctSkus =
-      if (rawHasSku)
+      if (rawHasSku && fullUpdate)
         countDistinct(when(col("sku").isNotNull && length(col("sku")) > 0, col("sku")))
       else lit(0L)
     // Touched-bucket discovery rides the SAME gate pass (the one-pass

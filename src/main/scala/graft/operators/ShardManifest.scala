@@ -52,7 +52,7 @@ object ShardManifest {
     */
   def manifest(spark: SparkSession, dir: String,
       statCols: Seq[String]): DataFrame =
-    spark.read.parquet(dir)
+    TableReads.read(spark, dir)
       .groupBy(col("shard_id").cast("long").as("shard_id"))
       .agg(count(lit(1)).as("n_rows"),
         statCols.flatMap(c => Seq(
@@ -70,7 +70,7 @@ object ShardManifest {
     val shards = mf
       .filter(col(s"max_$keyCol") >= lo && col(s"min_$keyCol") <= hi)
       .select(col("shard_id")).collect().map(_.getLong(0))
-    spark.read.parquet(dir)
+    TableReads.read(spark, dir)
       .filter(col("shard_id").isin(shards: _*))
       .filter(col(keyCol) >= lo && col(keyCol) <= hi)
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Profiling
+import graft.operators.{Profiling, TableReads}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -91,7 +91,7 @@ object DriftStream {
         .coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$storeDir/meta")
     } else {
-      val m = spark.read.parquet(s"$storeDir/meta").head()
+      val m = TableReads.read(spark, s"$storeDir/meta").head()
       val (w, e) = (m.getAs[Long]("bucket_width"), m.getAs[Double]("epsilon"))
       require(w == bucketWidth && e == epsilon,
         s"drift store at $storeDir was built with bucket_width=$w " +
@@ -108,7 +108,7 @@ object DriftStream {
       bucketWidth: Long, storeDir: String, batchId: Long,
       epsilon: Double = 1e-6): Unit = {
     if (!batch.isEmpty) {
-      val base = spark.read.parquet(s"$storeDir/baseline")
+      val base = TableReads.read(spark, s"$storeDir/baseline")
       val bh = Profiling
         .bucketCounts(batch, valueCol, bucketWidth, "n_cur")
         .localCheckpoint() // pins: feeds the slice write AND two PSIs

@@ -17,7 +17,13 @@ class HarnessMainsSpec extends AnyFunSuite {
   /** Source files (basename without `.scala`) with a code line — not a
     * comment line — containing `needle`.
     */
-  private def filesWith(needle: String): Set[String] = {
+  private def filesWith(needle: String): Set[String] =
+    filesWhere(_.contains(needle))
+
+  /** Source files (basename without `.scala`) with a code line — not a
+    * comment line — for which `code` holds.
+    */
+  private def filesWhere(code: String => Boolean): Set[String] = {
     assert(Files.isDirectory(mainRoot),
       s"$mainRoot not found under ${Paths.get("").toAbsolutePath}")
     val s = Files.walk(mainRoot)
@@ -25,12 +31,21 @@ class HarnessMainsSpec extends AnyFunSuite {
       .filter(_.toString.endsWith(".scala"))
       .filter(p => Files.readAllLines(p).asScala.exists { line =>
         val t = line.trim
-        t.contains(needle) &&
+        code(t) &&
           !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
       })
       .map(_.getFileName.toString.stripSuffix(".scala")).toSet
     finally s.close()
   }
+
+  /** Files that may read parquet without a schema besides TableReads,
+    * each with why a cached schema would not pay there.
+    */
+  private val schemaLessReadAllowed = Map(
+    "CoverStream" -> "reads the newest state snapshot, a new slice path every batch, so a cache would always miss",
+    "CoresetStream" -> "reads the newest state snapshot, a new slice path every batch, so a cache would always miss",
+    "GenData" -> "data generator main: copies two fixed tables once per run",
+    "ProfQ" -> "profiling main: one warm-up scan per JVM, before any query runs")
 
   /** Member methods (two-space-indented `def`s) of `file` under the
     * main source root with a code line calling `name(`; the definition
@@ -72,6 +87,17 @@ class HarnessMainsSpec extends AnyFunSuite {
     val store = "graft/operators/ProductStore.scala"
     assert(callersIn(store, "newVersionName") === Set("publishVersion"))
     assert(callersIn(store, "publish") === Set("publishVersion"))
+  }
+
+  test("a schema-less parquet read appears only in TableReads and the allowlist") {
+    // TableReads.read infers a table's schema once per listing; a
+    // schema-less read elsewhere pays a footer-scan job on every call
+    val found = filesWhere(t => t.contains("read.parquet(") && !t.contains(".schema("))
+    val outside = found -- schemaLessReadAllowed.keySet - "TableReads"
+    assert(outside.isEmpty,
+      s"schema-less read.parquet( outside TableReads: ${outside.toSeq.sorted.mkString(", ")}")
+    assert(found === schemaLessReadAllowed.keySet + "TableReads",
+      "an allowlisted file no longer reads parquet without a schema: drop it from the list")
   }
 
   test("query-name validation names every unknown query and passes known ones") {
