@@ -38,7 +38,9 @@ private[graft] trait SparkEntryAnn { this: SparkEntry.type =>
     val emb = t(s, d, "embeddings")
     val cs = ivfCentroids(s, d)
     val store = IvfIndex.assign(emb, "embedding", "vec_id", cs)
-      .localCheckpoint() // 10 tiny top-k jobs share the one assignment scan
+      // reuse: 10 tiny top-k jobs share the one assignment scan
+      // (0.82 s pinned vs 2.25 s unpinned with the centroid pin, sf0.1)
+      .localCheckpoint()
     val panel = Seq(0L, 17L, 42L, 123L, 256L)
     val qv = panelVectors(s, d, panel)
     panel.map { qid =>
@@ -1058,6 +1060,9 @@ private[graft] trait SparkEntryAnn { this: SparkEntry.type =>
     // one cell assignment (64 dots + unit vector per row), materialized
     // and shared by the pair-volume readout AND the pair join
     val assigned = Dedup.assignCells(emb, "embedding", "vec_id", cs)
+      // reuse: unpinned, every reader re-runs the 64 dots (three plan
+      // copies, no exchange to reuse) — warm 0.80 s pinned vs 1.31 s
+      // unpinned at sf0.1 (ProfQ, 6 reps per side)
       .localCheckpoint()
     val sizes = assigned.groupBy(col("cell")).agg(count(lit(1)).as("n"))
     val volume = sizes.agg(count(lit(1)).as("n_cells"),
@@ -1351,14 +1356,15 @@ private[graft] trait SparkEntryAnn { this: SparkEntry.type =>
     // union defeats ReuseExchange, so an unpinned pairs re-ran the whole
     // basket self-join + pair aggregate for the swapped branch (measured
     // ~1.0 s of the gate's 2.9 s warm floor — the pair-pipeline stage
-    // decomposition in SCALE.md). The pair table itself is support-filtered and
+    // decomposition in SCALE.md; now 1.84 s pinned vs 2.07 s unpinned
+    // warm at sf0.1). The pair table itself is support-filtered and
     // item-pair-sized, far smaller than the basket stream it came from,
     // so the checkpoint is cheap at any scale.
     val pairs = MarketBasket.pairCounts(
       t(s, d, "lineitem").filter(pmod(col("l_orderkey"), lit(2)) === 0)
         .select(col("l_orderkey"), col("l_partkey")),
       "l_orderkey", "l_partkey", minSupport = 2L, maxBasket = 64)
-      .localCheckpoint()
+      .localCheckpoint() // reuse: both union branches, see above
     val sym = pairs.select(col("item_a").as("item"), col("item_b").as("other"),
         col("n_ab"), col("n_a").as("n_i"), col("n_b").as("n_o"))
       .unionAll(pairs.select(col("item_b"), col("item_a"),

@@ -382,12 +382,13 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
   private[graft] def sparseIndexPath(s: SparkSession, d: String): String =
     standing(s"sparseknn:$d") {
       val base = s"$sparseKnnDir/${dirTag(d)}"
-      val idx = TermIndex.tfidfIndex(t(s, d, "documents"), "text", "doc_id")
-        .localCheckpoint()
-      idx.write.mode("overwrite").parquet(s"$base/index.parquet")
-      // norms ship WITH the index (computed once at build, read per
-      // query) — the aggregate is posting-table-sized, exactly what a
-      // deployment precomputes instead of re-deriving per retrieval
+      val idx = TableReads.overwrite(
+        TermIndex.tfidfIndex(t(s, d, "documents"), "text", "doc_id"),
+        s"$base/index.parquet")
+      // norms ship WITH the index (computed once at build from the
+      // written postings, read per query) — the aggregate is
+      // posting-table-sized, exactly what a deployment precomputes
+      // instead of re-deriving per retrieval
       idx.groupBy(col("id")).agg(sum(col("w") * col("w")).as("n2"))
         .write.mode("overwrite").parquet(s"$base/norms.parquet")
       base
@@ -467,13 +468,18 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
       path
     }
     val incoming = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
+    // reuse pins: unpinned, the incoming explode runs twice (the union
+    // under the df aggregate and the weight join shares no exchange)
+    // and the weights re-run per collect — 0.83 s pinned vs 1.61 s
+    // unpinned (sf0.1 ProfQ, warm medians of 3 JVMs a side)
     val mergedPostings = TableReads.read(s, s"$base/postings.parquet")
       .unionByName(TermIndex.rawIndex(incoming, "text", "doc_id"))
-      .localCheckpoint()
+      .localCheckpoint() // reuse: the df aggregate and the weight join
     val mergedN = TableReads.read(s, s"$base/meta.parquet")
       .unionByName(TermIndex.docCount(incoming))
       .agg(sum(col("_n")).as("_n"))
     TermIndex.sparseKnnFromIndex(
+        // reuse: two collects and the retrieval join read the weights
         TermIndex.weightsFromRaw(mergedPostings, mergedN).localCheckpoint(),
         docs.filter(pmod(col("doc_id"), lit(100)) === 0)
           .select(col("doc_id")), k = 5)
@@ -960,11 +966,15 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
         .select(col("doc_id"), col("text"))
         .unionAll(setsimCapSentinels.toDF("doc_id", "text"))
       val tokens = Dedup.shingles(docs, "text", "doc_id", 3)
-        .select(col("id"), col("shingle").as("w")).localCheckpoint()
+        .select(col("id"), col("shingle").as("w"))
+        // reuse: the df cap's aggregate and its join take different
+        // exchanges, so unpinned the shingle explode runs twice (run 1,
+        // this standing build: 3.23 s pinned vs 3.28 s unpinned, medians)
+        .localCheckpoint()
       val kept = tokens.groupBy(col("w")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= 8).select("w")
-      val words = tokens.join(kept, "w").select("id", "w").localCheckpoint()
-      words.write.mode("overwrite").parquet(s"$base/words.parquet")
+      val words = TableReads.overwrite(tokens.join(kept, "w").select("id", "w"),
+        s"$base/words.parquet")
       SetSimJoin.prefixTable(words, 0.5)
         .write.mode("overwrite").parquet(s"$base/prefix.parquet")
       base
@@ -1004,9 +1014,10 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
             .filter(pmod(col("doc_id"), lit(2)) === 0 && col("doc_id") < 5000)
             .select(col("doc_id"), col("text")),
           "text", "doc_id", 3)
-        .select(col("id"), col("shingle").as("w")).localCheckpoint()
-      words.write.mode("overwrite").parquet(s"$base/words.parquet")
-      SetSimJoin.prefixTable(words, 0.5)
+        .select(col("id"), col("shingle").as("w"))
+      // the prefix build reads the written token table back: the
+      // shingle explode runs once, with no pin
+      SetSimJoin.prefixTable(TableReads.overwrite(words, s"$base/words.parquet"), 0.5)
         .write.mode("overwrite").parquet(s"$base/prefix.parquet")
       base
     }
@@ -1237,11 +1248,11 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
     // pinning, each scan re-runs the regex-heavy quality scoring over
     // the corpus text. Score once, reuse the tiny (id, tokens, score)
     // projection; at 100 TB this is the difference between one and three
-    // passes over corpus text.
+    // passes over corpus text (0.50 s pinned vs 1.35 s unpinned at sf0.1).
     val docs = TextAnalysis.withQuality(t(s, d, "documents"), "text")
       .select(col("doc_id"), col("n_words").as("ws_tokens"),
         col("quality_score"))
-      .localCheckpoint()
+      .localCheckpoint() // reuse: fillTokenBudget scans it three times
     operators.BudgetSample.fillTokenBudget(docs, "ws_tokens",
         "quality_score", "doc_id", budget = 20000L)
       .orderBy(col("doc_id"))

@@ -115,7 +115,7 @@ object Coreset {
         picks += KCenterPick(i.toLong, id, Some(r), vec)
         cur = cur.withColumn("dmin",
           least(col("dmin"), d2(col("v"), typedLit(vec))))
-        if (i % checkpointEvery == 0) cur = cur.localCheckpoint()
+        if (i % checkpointEvery == 0) cur = cur.localCheckpoint() // loop: lineage cut
         i += 1
       }
     }

@@ -44,10 +44,6 @@ object Dedup {
     docs.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** Whitespace words of a text column (empty tokens dropped). */
-  private def wordArr(textCol: Column): Column =
-    filter(split(trim(textCol), "\\s+"), w => length(w) > 0)
-
   /** Distinct word n-gram shingle array of a text column — the native
     * [[graft.functions.WordShingles]] expression: one codegen'd pass per
     * row. Documents with fewer than n words yield an empty array.
@@ -165,11 +161,12 @@ object Dedup {
     */
   def contentGroups(docs: DataFrame, textCol: String, idCol: String): DataFrame =
     docs.select(col(idCol).as("id"),
-        concat_ws(" ", wordArr(col(textCol))).as("_canon"))
+        concat_ws(" ", TextAnalysis.words(col(textCol))).as("_canon"))
       .filter(length(col("_canon")) > 0)
       .select(col("id"), sha2(col("_canon"), 256).as("_seq"))
       .groupBy(col("_seq"))
       .agg(sort_array(collect_list(col("id"))).as("ids"), min(col("id")).as("rep"))
+      // reuse: no A/B, no query runs containmentPairsDistinct
       .localCheckpoint()
 
   /** Directed containment among the DISTINCT contents of a corpus — the
@@ -248,7 +245,7 @@ object Dedup {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     require(stride > 0 && stride <= chunkWords, "stride must be in [1, chunkWords]")
     val chunks = docs
-      .select(col(idCol).as("id"), wordArr(col(textCol)).as("_ws"))
+      .select(col(idCol).as("id"), TextAnalysis.words(col(textCol)).as("_ws"))
       .filter(size(col("_ws")) > 0)
       .select(col("id"),
         explode(sequence(lit(0), greatest(size(col("_ws")) - 1, lit(0)),
@@ -454,13 +451,15 @@ object Dedup {
       textCol: String,
       idCol: String,
       minJaccard: Double = 0.8): DataFrame = {
-    // The pair list is read three times below (both sides of the doc
+    // reuse: the pair list is read three times below (both sides of the doc
     // prune plus the verify join), and candidate generation is usually an
     // expensive self-join whose pruned branches differ per consumer — so
     // exchange reuse cannot deduplicate them and each reference would
     // re-run the whole upstream plan. The pairs are tiny relative to the
     // corpus by construction (that is the point of LSH), so materialize
-    // them once up front.
+    // them once up front. Measured: q_dedup_simhash 0.67 s pinned vs
+    // 0.91 s unpinned, q_simhash_recall 1.52 vs 2.14 s (sf0.1 ProfQ,
+    // warm medians of 3 JVMs a side).
     val pairs = cands.select("id_a", "id_b").localCheckpoint()
     // Only docs referenced by a candidate pair matter: the semi-join
     // prunes the (id, word) count shuffle from the whole corpus to the
@@ -471,14 +470,9 @@ object Dedup {
       .distinct()
     val needed = docs.join(ids, col(idCol) === col("_cid"), "left_semi")
     val words = needed.select(col(idCol).as("_id"),
-      explode(wordArr(col(textCol))).as("_w"))
+      explode(TextAnalysis.words(col(textCol))).as("_w"))
     val cnt = words.groupBy("_id", "_w").agg(count(lit(1)).as("_c"))
-    // pinPairs=false: `pairs` is already a checkpoint scan, so the
-    // size-filtered table's two consumers re-derive it from cheap
-    // in-plan joins — pinning it again was measured SLOWER (4/4
-    // interleaved reps: 0.84-0.99 s pinned vs 0.66-0.74 s unpinned on
-    // the q_simhash_recall probe stream; OPTIMIZATION_r18.md).
-    verifyBagJaccard(pairs, cnt, minJaccard, pinPairs = false)
+    verifyBagJaccard(pairs, cnt, minJaccard)
   }
 
   /** The verify half of [[exactBagJaccard]] over an ALREADY-BUILT
@@ -487,36 +481,28 @@ object Dedup {
     * signature table (both are per-dataset build products), so each
     * dedup run pays only the pair joins, not the corpus word explode.
     * `counts` may cover more docs than the pairs reference (the joins
-    * prune); the metric is unchanged. Candidate generation is usually
-    * an expensive self-join read twice downstream, so the pair list
-    * materializes once here ([[exactBagJaccard]] checkpoints its own
-    * pairs for the doc prune and calls the shared verify directly —
-    * no double materialization).
+    * prune); the metric is unchanged.
     */
   def exactBagJaccardFromCounts(
       cands: DataFrame,
       counts: DataFrame,
       minJaccard: Double = 0.8): DataFrame =
-    // no checkpoint here: verifyBagJaccard consumes the candidate list
-    // once (the size-filtered pair table it pins internally covers both
-    // of its own downstream branches), so the banding self-join still
-    // runs exactly once
     verifyBagJaccard(cands.select("id_a", "id_b"), counts, minJaccard)
 
-  /** Shared verify. `pinPairs` decides whether the size-filtered pair
-    * table materializes before its two consumers (the intersection join
-    * and the existence-preserving left join): TRUE when `pairs0` is an
-    * un-materialized expensive subtree (the FromCounts path, whose
-    * caller feeds the banding self-join in directly), FALSE when the
-    * caller already checkpointed the pair list — there the filtered
-    * table re-derives from cheap in-plan joins over the checkpoint scan
-    * and the extra pin was measured slower (OPTIMIZATION_r18.md).
+  /** Shared verify. The size-filtered pair table is one plan subtree
+    * read by two consumers (the intersection join and the
+    * existence-preserving left join); it is not pinned: both branches
+    * carry the identical candidate subtree, so its exchanges run once
+    * and the second branch reads them as a ReusedExchange. Pinning it
+    * was measured slower on both callers: warm 0.84-0.99 s pinned vs
+    * 0.66-0.74 s unpinned on the q_simhash_recall probe stream
+    * (OPTIMIZATION_r18.md), and 1.04 s pinned vs 0.96 s unpinned
+    * (medians, 6 reps per side) on q_dedup_simhash_full at sf0.1.
     */
   private def verifyBagJaccard(
       pairs0: DataFrame,
       cnt: DataFrame,
-      minJaccard: Double,
-      pinPairs: Boolean = true): DataFrame = {
+      minJaccard: Double): DataFrame = {
     val tot = cnt.groupBy("_id").agg(sum(col("_c")).as("_n"))
     // EXACT size prefilter (the classic length filter, Arasu/Bayardo
     // similarity-join literature): intersection is at most min(na, nb),
@@ -530,14 +516,13 @@ object Dedup {
       .join(tot.select(col("_id").as("id_b"), col("_n").as("_nb")), "id_b")
       .filter(least(col("_na"), col("_nb")).cast("double")
         >= lit(minJaccard) * greatest(col("_na"), col("_nb")))
-    val pairs = if (pinPairs) filtered.localCheckpoint() else filtered
-    val inter = pairs.select("id_a", "id_b")
+    val inter = filtered.select("id_a", "id_b")
       .join(cnt.select(col("_id").as("id_a"), col("_w"), col("_c").as("_ca")), "id_a")
       .join(cnt.select(col("_id").as("id_b"), col("_w"), col("_c").as("_cb")),
         Seq("id_b", "_w"))
       .groupBy("id_a", "id_b")
       .agg(sum(least(col("_ca"), col("_cb"))).as("_ni"))
-    pairs
+    filtered
       .join(inter, Seq("id_a", "id_b"), "left")
       .na.fill(0L, Seq("_ni"))
       .withColumn("bag_jaccard",
@@ -672,20 +657,24 @@ object Dedup {
       idCol: String,
       minJaccard: Double = 0.8): DataFrame = {
     val cw = corpus.select(col(idCol).as("id_a"),
-      explode(wordArr(col(textCol))).as("_w")).distinct()
+      explode(TextAnalysis.words(col(textCol))).as("_w")).distinct()
     val pw = probe.select(col(idCol).as("id_b"),
-      explode(wordArr(col(textCol))).as("_w")).distinct()
+      explode(TextAnalysis.words(col(textCol))).as("_w")).distinct()
     val cand = cw.join(broadcast(pw), "_w")
-      .select("id_a", "id_b").distinct().localCheckpoint()
+      .select("id_a", "id_b").distinct()
+      // reuse: unpinned, the probe explode and its distinct exchange
+      // run twice (the probe-word side is not reused); the standing build
+      // in q_simhash_recall's run 1 took 14.8 s pinned vs 15.8 s unpinned
+      .localCheckpoint()
     // side-resolved verify (see probeJaccard): word counts for id_a
     // come ONLY from the corpus (pruned to candidate docs), for id_b
     // ONLY from the probe — overlapping id spaces stay independent
     val idsA = cand.select(col("id_a").as("_cid")).distinct()
     val cntA = corpus.join(idsA, col(idCol) === col("_cid"), "left_semi")
-      .select(col(idCol).as("id_a"), explode(wordArr(col(textCol))).as("_w"))
+      .select(col(idCol).as("id_a"), explode(TextAnalysis.words(col(textCol))).as("_w"))
       .groupBy("id_a", "_w").agg(count(lit(1)).as("_ca"))
     val cntB = probe
-      .select(col(idCol).as("id_b"), explode(wordArr(col(textCol))).as("_w"))
+      .select(col(idCol).as("id_b"), explode(TextAnalysis.words(col(textCol))).as("_w"))
       .groupBy("id_b", "_w").agg(count(lit(1)).as("_cb"))
     val totA = cntA.groupBy("id_a").agg(sum(col("_ca")).as("_na"))
     val totB = cntB.groupBy("id_b").agg(sum(col("_cb")).as("_nb"))
@@ -894,14 +883,16 @@ object Dedup {
     // The result is materialized once (localCheckpoint): it is read by
     // the signature join, the pair expansion, and the intra-group
     // emitter, and it is small by construction — (hash, ids, rep)
-    // without any text.
+    // without any text. q_dedup_simhash_full's standing build (run 1,
+    // this pin and its representative-docs pin) measured 3.62 s pinned
+    // vs 4.60 s unpinned (medians of 3 JVMs a side at sf0.1).
     docs.select(col(idCol).as("id"),
-        concat_ws(" ", array_sort(wordArr(col(textCol)))).as("_canon"))
+        concat_ws(" ", array_sort(TextAnalysis.words(col(textCol)))).as("_canon"))
       .filter(length(col("_canon")) > 0)
       .select(col("id"), sha2(col("_canon"), 256).as("_bag"))
       .groupBy(col("_bag"))
       .agg(sort_array(collect_list(col("id"))).as("ids"), min(col("id")).as("rep"))
-      .localCheckpoint()
+      .localCheckpoint() // reuse: three readers, see above
 
   /** SimHash candidate pairs BETWEEN distinct bag groups: (rep_a, rep_b,
     * hamming) for group pairs within the Hamming radius, from the
@@ -1150,15 +1141,18 @@ object Dedup {
       driverMaxEdges: Long = 1000000L): DataFrame = {
     val p = pairs
       .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
+      // reuse: counted, then resolved — q_dedup_cluster 0.42 s pinned
+      // vs 0.53 s unpinned, q_entity_resolution 0.72 vs 0.91 s (sf0.1
+      // ProfQ, warm medians of 3 JVMs a side)
       .localCheckpoint()
     if (p.count() <= driverMaxEdges) return connectedComponentsLocal(p)
     val edges = p
       .union(p.select(col("b").as("a"), col("a").as("b")))
       .distinct()
-      .localCheckpoint()
+      .localCheckpoint() // loop: the symmetric edges every round reads
     var labels = edges.select(col("a").as("id")).distinct()
       .withColumn("component", col("id"))
-      .localCheckpoint()
+      .localCheckpoint() // loop: the initial labels
     var it = 0
     var converged = false
     while (!converged && it < maxIters) {
@@ -1176,7 +1170,7 @@ object Dedup {
         .groupBy(col("id"))
         .agg(min(col("component")).as("component"),
           max(when(col("_self"), col("component"))).as("_old"))
-        .localCheckpoint()
+        .localCheckpoint() // loop: per-round lineage cut
       converged = next.filter(col("component") =!= col("_old"))
         .limit(1).isEmpty
       labels = next.select(col("id"), col("component"))
@@ -1432,7 +1426,7 @@ object Dedup {
       k: Int): DataFrame = {
     require(k >= 2, "duplicatedSpans needs k >= 2")
     val toks = docs
-      .select(col(idCol).as("id"), wordArr(col(textCol)).as("_w"))
+      .select(col(idCol).as("id"), TextAnalysis.words(col(textCol)).as("_w"))
       .filter(size(col("_w")) >= k)
     // 1-based window start positions, shingle key = xxhash64 of the k
     // words joined on a single space (whitespace runs inside the text
@@ -1442,8 +1436,9 @@ object Dedup {
         i => struct(i.as("pos"),
           xxhash64(concat_ws(" ", slice(col("_w"), i, lit(k)))).as("sh")))).as("_p"))
       .select(col("id"), col("_p.pos").as("pos"), col("_p.sh").as("sh"))
-      // feeds the duplicate count AND the position join-back — the
+      // reuse: feeds the duplicate count AND the position join-back — the
       // window explode is the corpus-scale cost and must run once
+      // (q_dedup_substring 0.91 s pinned vs 1.32 s unpinned at sf0.1)
       .localCheckpoint()
     val dup = sh.groupBy(col("sh")).agg(count(lit(1)).as("_c"))
       .filter(col("_c") > 1)

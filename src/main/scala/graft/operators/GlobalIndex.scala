@@ -52,11 +52,11 @@ object GlobalIndex {
         "to the single-reducer global window — convert timestamps/strings " +
         "to a numeric sort key explicitly")
     val cols: Seq[Column] = orderCols.map(col)
-    // pin BEFORE the quantile pass: approxQuantile is an action, so an
-    // unpinned input would compute once for the quantiles and again for
-    // the checkpoint below — and a NONDETERMINISTIC input (sample,
-    // rand-keyed, mutable source) could make the offset counts disagree
-    // with the rows being ranked, colliding or gapping indexes
+    // determinism: pin BEFORE the quantile pass. approxQuantile is an
+    // action, so an unpinned input would compute once for the quantiles
+    // and again for the checkpoint below — and a NONDETERMINISTIC input
+    // (sample, rand-keyed, mutable source) could make the offset counts
+    // disagree with the rows being ranked, colliding or gapping indexes
     val pinned = df.localCheckpoint()
     val probs = (1 until buckets).map(_.toDouble / buckets).toArray
     val splits =
@@ -134,11 +134,14 @@ object GlobalIndex {
       s"running-sum order column '$orderCol' must be numeric " +
         s"(got ${df.schema(orderCol).dataType.simpleString})")
     val bucketed = bucketBy match {
-      case Some(b) => df.withColumn("_b", b).localCheckpoint()
+      case Some(b) =>
+        // determinism: the caller's bucket column, read by the totals
+        // and the ranking
+        df.withColumn("_b", b).localCheckpoint()
       case None =>
-        // pin BEFORE the quantile pass (see withGlobalIndex): one
-        // upstream computation feeds the quantiles, the per-bucket
-        // totals AND the within-bucket ranking
+        // determinism: pin BEFORE the quantile pass (see
+        // withGlobalIndex): one upstream computation feeds the
+        // quantiles, the per-bucket totals AND the within-bucket ranking
         val pinned = df.localCheckpoint()
         val probs = (1 until buckets).map(_.toDouble / buckets).toArray
         val splits =

@@ -37,13 +37,13 @@ object LinkGraph {
     require(iters >= 1, "iters must be >= 1")
     require(damping > 0 && damping < 1, "damping must be in (0, 1)")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint()
-    // checkpoint: every iteration's rank rebuild left-joins against the
-    // full node set, so without pinning it the union+distinct shuffle
-    // replays inside every materialization (once per non-checkpointed
-    // iteration folded into each checkpoint's plan)
+      .localCheckpoint() // loop: the edge list every iteration reads
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
+      // loop: every iteration's rank rebuild left-joins against the
+      // full node set, so without pinning it the union+distinct shuffle
+      // replays inside every materialization (once per non-checkpointed
+      // iteration folded into each checkpoint's plan)
       .localCheckpoint()
     // Node count is a bounded driver scalar (graph order, not corpus
     // size) — the standard PageRank initialization needs it. It also
@@ -57,7 +57,7 @@ object LinkGraph {
     // exchanges for nothing — on a vocabulary-scale co-occurrence
     // graph that is iters corpus-derived shuffles).
     val e2 = e.join(e.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
-      .localCheckpoint()
+      .localCheckpoint() // loop: every iteration reads it
     // Rebuild-join strategy (r18, §3.1): the loop's rebuild left-joins
     // the checkpointed node set against the node-sized contribution
     // table, and the planner's post-aggregate estimate picked a
@@ -102,7 +102,7 @@ object LinkGraph {
         .select(col("node"),
           (lit((1.0 - damping) / n) +
             lit(damping) * coalesce(col("_s"), lit(0.0))).as("rank"))
-      if (i % 3 == 0) ranks = ranks.localCheckpoint()
+      if (i % 3 == 0) ranks = ranks.localCheckpoint() // loop: lineage cut
     }
     ranks.select(col("node"), round(col("rank"), roundTo).as("rank"))
   }
@@ -125,9 +125,17 @@ object LinkGraph {
     * less nodes, same final HALF_UP rounding. Per-node contribution
     * sums are IEEE-order-sensitive in general, so this path REQUIRES
     * per-node indegree <= 2 (two doubles sum identically in either
-    * order; Spark's sum starts at the first value, not 0.0) and fails
-    * loud otherwise — callers with denser graphs use the distributed
-    * form. `maxNodes` bounds driver state and also fails loud.
+    * order; Spark's sum starts at the first value, not 0.0). A graph
+    * with a denser node or more than `maxNodes` nodes falls back to the
+    * distributed form. `maxNodes` bounds driver state: a graph that
+    * qualifies has at most 2 * `maxNodes` edge rows (every indegree is
+    * <= 2), so at most 2 * `maxNodes` + 1 rows are ever collected.
+    * That bounded collect runs as ONE task: `coalesce(1)` adds no
+    * shuffle, so the narrow work feeding it (scans, filters,
+    * projections) runs in that task too. `edges` should therefore end
+    * in an exchange (a distinct or an aggregate, as a host graph
+    * derived from page links does) or be small; a bare scan over a
+    * large table would be read by a single task.
     */
   def pageRankBounded(
       edges: DataFrame,
@@ -141,9 +149,15 @@ object LinkGraph {
     require(damping > 0 && damping < 1, "damping must be in (0, 1)")
     val spark = edges.sparkSession
     import spark.implicits._
+    // One row past the largest qualifying edge list proves the graph
+    // is over the bound without collecting the rest. coalesce(1) makes
+    // the limited collect one job over one partition: a CollectLimit
+    // over several partitions scans them a few at a time, one job per
+    // round.
+    val maxEdges = math.min(2L * maxNodes + 1, Int.MaxValue.toLong).toInt
     val es: Array[(Long, Long)] = edges
       .select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-      .as[(Long, Long)].collect()
+      .coalesce(1).limit(maxEdges).as[(Long, Long)].collect()
     val nodes: Array[Long] = (es.map(_._1) ++ es.map(_._2)).distinct
     val indeg = scala.collection.mutable.HashMap.empty[Long, Int]
     es.foreach { case (_, d) => indeg.update(d, indeg.getOrElse(d, 0) + 1) }
@@ -154,7 +168,8 @@ object LinkGraph {
     // route to the distributed form — same constants, same rounding.
     // Callers that need the bounded path's job-count win keep it
     // exactly when its bit-parity contract actually holds.
-    if (nodes.length > maxNodes || indeg.valuesIterator.exists(_ > 2))
+    if (es.length == maxEdges || nodes.length > maxNodes ||
+        indeg.valuesIterator.exists(_ > 2))
       return pageRank(edges, srcCol, dstCol, iters, damping, roundTo)
         .orderBy(col("node"))
     val n = nodes.length.toDouble
@@ -213,9 +228,9 @@ object LinkGraph {
       maxHops: Int): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint()
+      .localCheckpoint() // loop: the edge list every level joins
     var visited = seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint()
+      .withColumn("dist", lit(0L)).localCheckpoint() // loop: every level reads it
     var frontier = visited
     var i = 1
     var exhausted = false
@@ -226,13 +241,13 @@ object LinkGraph {
       frontier = reached
         .join(visited.select(col("node")), Seq("node"), "left_anti")
         .withColumn("dist", lit(i.toLong))
-        .localCheckpoint()
+        .localCheckpoint() // loop: per-level lineage cut
       // early exit at the true eccentricity: an exhausted frontier can
       // never repopulate, and each further hop would still launch real
       // jobs (localCheckpoint is eager) over empty data. The isEmpty
       // probe reads the just-checkpointed frontier — one cheap action.
       if (frontier.isEmpty) exhausted = true
-      else visited = visited.unionAll(frontier).localCheckpoint()
+      else visited = visited.unionAll(frontier).localCheckpoint() // loop: lineage cut
       i += 1
     }
     visited
@@ -245,8 +260,12 @@ object LinkGraph {
     * distances are unique regardless of traversal order. Motivation is
     * identical (each distributed level is join + anti-join +
     * checkpoint — serial stages that dominate wall-clock on a
-    * host-sized graph; measured 33 jobs for a 97-node 4-hop BFS);
-    * `maxNodes` bounds driver state and fails loud.
+    * host-sized graph; measured 33 jobs for a 97-node 4-hop BFS).
+    * `maxNodes` bounds the node set the driver iterates over and fails
+    * loud past it, but only AFTER the whole edge list is collected: no
+    * edge bound follows from a node bound here (unlike
+    * [[pageRankBounded]], nothing limits the degree), so the caller
+    * must know the edge list is driver-sized.
     */
   def shortestPathsBounded(
       edges: DataFrame,
@@ -305,8 +324,13 @@ object LinkGraph {
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      // read by the degree aggregate, the orientation join, and the
-      // wedge-closing join — canonicalize once
+      // reuse: read by the degree aggregate, the orientation join, and
+      // the wedge-closing join — canonicalize once. Unpinned, the
+      // join-inferred isnotnull filters push below the distinct into
+      // each reader, so no exchange is shared and the source scan and
+      // its aggregates run once per reader: q_triangle_count 0.47 s
+      // pinned vs 1.20 s unpinned (sf0.1 ProfQ, warm medians of 3 JVMs
+      // a side)
       .localCheckpoint()
     val deg = und.select(col("a").as("n"))
       .unionAll(und.select(col("b").as("n")))
@@ -322,7 +346,12 @@ object LinkGraph {
       when(col("da") < col("db") ||
         (col("da") === col("db") && col("a") < col("b")), col("b"))
         .otherwise(col("a")).as("to"))
-      // both wedge sides read the oriented edges — orient once
+      // reuse: both wedge sides read the oriented edges — orient once.
+      // Unpinned, the second side reads the degree aggregate through a
+      // ReusedExchange and ProfQ at sf0.1 shows a wash (0.677 s pinned
+      // vs 0.674 s), but q_triangle_count lost in Bench sf0.1 (0.476 vs
+      // 0.497 s) and in pipeline_suite at sf0.001 (475 vs 512 ms,
+      // slower in 5 of 6 pairs)
       .localCheckpoint()
     val wedges = oriented.as("e1")
       .join(oriented.as("e2"),

@@ -52,14 +52,16 @@ object SetSimJoin {
   def selfJoinTokens(tokens: DataFrame, threshold: Double): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    // The token table feeds four consumers (df, sizes, the prefix
+    // reuse: the token table feeds four consumers (df, sizes, the prefix
     // build, and both verify sides); materialize it once instead of
     // re-deriving the shingle explode per consumer — locally a
     // checkpoint, at scale the persisted (id, token) table every
-    // set-similarity system builds first.
+    // set-similarity system builds first. Reuse pins, no A/B: no query
+    // runs selfJoinTokens or selfJoinTokensCapped (q_setsim_join and
+    // q_setsim_capped read persisted tables).
     val words = tokens.select(col("id"), col("w")).localCheckpoint()
     val prefix = prefixTable(words, threshold)
-      // both sides of the candidate self-join read this — one build
+      // reuse: both sides of the candidate self-join read this
       .localCheckpoint()
     selfJoinFromPrefix(words, prefix, threshold)
   }
@@ -84,11 +86,16 @@ object SetSimJoin {
   def selfJoinTokensCapped(tokens: DataFrame, threshold: Double,
       maxDf: Int): DataFrame = {
     require(maxDf >= 1, s"maxDf must be >= 1, got $maxDf")
+    // reuse: no A/B (no query runs this; see selfJoinTokens): the
+    // tokens feed the df cap and its join, the capped tokens and the
+    // prefix table feed df, sizes, prefix and both join sides
     val words0 = tokens.select(col("id"), col("w")).localCheckpoint()
     val kept = words0.groupBy(col("w")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select("w")
-    val words = words0.join(kept, "w").select("id", "w").localCheckpoint()
-    val prefix = prefixTable(words, threshold).localCheckpoint()
+    val words = words0.join(kept, "w").select("id", "w")
+      .localCheckpoint() // reuse: df, sizes, prefix and verify read it
+    val prefix = prefixTable(words, threshold)
+      .localCheckpoint() // reuse: both sides of the candidate join
     selfJoinFromPrefix(words, prefix, threshold)
   }
 

@@ -13,15 +13,14 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 object TermIndex {
 
-  private def words(textCol: Column): Column =
-    filter(split(trim(lower(textCol)), "\\s+"), w => length(w) > 0)
-
-  /** (id, word) occurrence rows — one per word INSTANCE (duplicates kept;
-    * term frequency needs the multiset, unlike the shingle set ops).
+  /** (id, word) occurrence rows of the lowercased whitespace words —
+    * one per word INSTANCE (duplicates kept; term frequency needs the
+    * multiset, unlike the shingle set ops). Shared with [[WordPiece]].
     */
-  private def occurrences(docs: DataFrame, textCol: String, idCol: String): DataFrame =
+  private[operators] def occurrences(docs: DataFrame, textCol: String,
+      idCol: String): DataFrame =
     docs.select(col(idCol).as("id"),
-      explode(words(col(textCol))).as("word"))
+      explode(TextAnalysis.words(lower(col(textCol)))).as("word"))
 
   /** Top-k terms per document by TF-IDF.
     *
@@ -102,6 +101,8 @@ object TermIndex {
   def sparseKnn(docs: DataFrame, textCol: String, idCol: String,
       queries: DataFrame, k: Int = 5): DataFrame =
     sparseKnnFromIndex(
+      // reuse: no A/B, no query calls sparseKnn (the twin in
+      // q_sparse_knn_incr measured 0.83 s pinned vs 1.61 s unpinned)
       tfidfIndex(docs, textCol, idCol).localCheckpoint(), queries, k)
 
   /** The INDEX BUILD half of [[sparseKnn]]: the scaled-long TF-IDF
@@ -121,6 +122,10 @@ object TermIndex {
     * replays the same scaled integers.
     */
   def tfidfIndex(docs: DataFrame, textCol: String, idCol: String): DataFrame =
+    // reuse: the df aggregate and the weight join both read the raw
+    // postings, and unpinned each re-runs the corpus explode (no
+    // ReusedExchange); q_sparse_knn's standing build, run 1, took
+    // 2.65 s pinned vs 2.91 s unpinned (medians of 3 JVMs at sf0.1)
     weightsFromRaw(rawIndex(docs, textCol, idCol).localCheckpoint(),
       docCount(docs))
 
@@ -435,7 +440,7 @@ object TermIndex {
       k: Int = 10): DataFrame = {
     require(queryTerms.nonEmpty, "bm25TopK needs at least one query term")
     val terms = queryTerms.map(_.toLowerCase)
-    val ws = words(col(textCol))
+    val ws = TextAnalysis.words(lower(col(textCol)))
     val base = docs.select(col(idCol).as("id"),
       size(ws).as("_dl"),
       filter(ws, w => w.isInCollection(terms)).as("_hits"))
@@ -576,7 +581,7 @@ object TermIndex {
       .filter(col("word").rlike(wordPattern))
       .groupBy(col("word")).agg(count(lit(1)).as("_freq"))
       .select(charSyms(col("word")).as("syms"), col("_freq"))
-      .localCheckpoint()
+      .localCheckpoint() // loop: the starting vocabulary every merge reads
     val merges = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
     var i = 1
     var exhausted = false
@@ -598,7 +603,7 @@ object TermIndex {
         vocab = vocab
           .select(applyMerge(col("syms"), lit(l), lit(r), lit(l + r)).as("syms"),
             col("_freq"))
-        if (i % 3 == 0) vocab = vocab.localCheckpoint()
+        if (i % 3 == 0) vocab = vocab.localCheckpoint() // loop: lineage cut
         i += 1
       }
     }
@@ -696,7 +701,7 @@ object TermIndex {
           .as("_ids_str"),
         size(col("_ids")).as("_n_tok"))
     val positioned = docs
-      .select(col(idCol).as("id"), posexplode(words(col(textCol))))
+      .select(col(idCol).as("id"), posexplode(TextAnalysis.words(lower(col(textCol)))))
       .withColumnRenamed("pos", "_pos")
       .withColumnRenamed("col", "word")
       .filter(col("word").rlike(wordPattern))
@@ -744,7 +749,7 @@ object TermIndex {
       idCol: String,
       lambda: Double = 0.7): DataFrame = {
     require(lambda > 0 && lambda < 1, "lambda must be in (0,1)")
-    val ws = words(col(textCol))
+    val ws = TextAnalysis.words(lower(col(textCol)))
     val pairs = docs.select(col(idCol).as("id"), ws.as("_ws"))
       .filter(size(col("_ws")) >= 2)
       .select(col("id"), explode(transform(
@@ -1024,7 +1029,7 @@ object TermIndex {
     val w0 = occurrences(docs, textCol, idCol)
       .filter(col("word").rlike(wordPattern) && length(col("word")) <= maxWordLen)
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
+      .localCheckpoint() // loop: the word table every EM round reads
     // seed counts: one substring explode, (piece)-keyed aggregate
     val subArrs = (1 to maxPieceLen).map { l =>
       when(length(col("word")) >= l,
@@ -1034,6 +1039,8 @@ object TermIndex {
     }
     val seedCnt = w0.select(col("freq"), explode(flatten(array(subArrs: _*))).as("piece"))
       .groupBy(col("piece")).agg(sum(col("freq")).as("cnt"))
+      // reuse: two collects read the seed counts (q_unigram_tokenizer
+      // run 1, a standing build: 1.14 s pinned vs 1.21 s unpinned, medians)
       .localCheckpoint()
     val chars = seedCnt.filter(length(col("piece")) === 1)
       .collect().map(r => r.getString(0) -> r.getLong(1))

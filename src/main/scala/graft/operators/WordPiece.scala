@@ -48,13 +48,6 @@ object WordPiece {
     */
   val Scale = 1000000000L
 
-  private def words(textCol: Column): Column =
-    filter(split(trim(lower(textCol)), "\\s+"), w => length(w) > 0)
-
-  private def occurrences(docs: DataFrame, textCol: String, idCol: String): DataFrame =
-    docs.select(col(idCol).as("id"),
-      explode(words(col(textCol))).as("word"))
-
   /** Word characters as WordPiece symbols: first character plain, every
     * later character '##'-prefixed. The invariant every merge
     * preserves: a symbol is word-initial iff it has no '##' prefix.
@@ -110,11 +103,11 @@ object WordPiece {
       numMerges: Int,
       wordPattern: String = "^[a-z0-9]+$"): WpModel = {
     require(numMerges >= 1, "trainWordPiece needs at least one merge")
-    var vocab = occurrences(docs, textCol, idCol)
+    var vocab = TermIndex.occurrences(docs, textCol, idCol)
       .filter(col("word").rlike(wordPattern))
       .groupBy(col("word")).agg(count(lit(1)).as("_freq"))
       .select(wpSyms(col("word")).as("syms"), col("_freq"))
-      .localCheckpoint()
+      .localCheckpoint() // loop: the starting vocabulary every merge reads
     val alphabet = vocab
       .select(explode(col("syms")).as("s")).distinct()
       .orderBy(col("s")).collect().map(_.getString(0)).toSeq
@@ -153,7 +146,7 @@ object WordPiece {
         vocab = vocab
           .select(applyMerge(col("syms"), lit(l), lit(r), lit(m)).as("syms"),
             col("_freq"))
-        if (i % 3 == 0) vocab = vocab.localCheckpoint()
+        if (i % 3 == 0) vocab = vocab.localCheckpoint() // loop: lineage cut
         i += 1
       }
     }
@@ -177,7 +170,7 @@ object WordPiece {
       maxWordLen: Int = 12,
       wordPattern: String = "^[a-z0-9]+$"): DataFrame = {
     require(model.alphabet.nonEmpty, "wordPieceTokenCounts needs a trained model")
-    val docWords = occurrences(docs, textCol, idCol)
+    val docWords = TermIndex.occurrences(docs, textCol, idCol)
       .filter(col("word").rlike(wordPattern) &&
         length(col("word")) <= maxWordLen)
     val tfd = docWords.groupBy(col("id"), col("word"))

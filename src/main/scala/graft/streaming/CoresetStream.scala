@@ -99,7 +99,7 @@ object CoresetStream {
       val base = batch
         .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
         .withColumn("mid", monotonically_increasing_id())
-        .localCheckpoint() // re-read per chunk from pinned blocks
+        .localCheckpoint() // determinism: the mid key, re-read per chunk
       var st = prior
       var last = (Long.MinValue, Long.MinValue)
       var more = true

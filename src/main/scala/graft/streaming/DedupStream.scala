@@ -4,6 +4,7 @@ import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming near-duplicate classification — the unbounded twin of the
   * q_dedup_index_incr batch merge (reference behavior: the ingest
@@ -62,6 +63,7 @@ object DedupStream {
     */
   def classifyBatch(spark: SparkSession, batch: DataFrame, textCol: String,
       idCol: String, storeDir: String, batchId: Long): Unit = {
+    SliceStore.requireLongId(batch, idCol, "DedupStream")
     if (!batch.isEmpty) {
       // The batch feeds three sinks plus the classification; pin it so
       // the streaming source is not replayed per consumer, and compute
@@ -70,6 +72,8 @@ object DedupStream {
       val pinned = batch.persist()
       try {
         val sigs = Dedup.minHashSignatures(pinned, textCol, idCol)
+          // reuse: two actions (the status and index slice writes) read
+          // the signatures; no query runs a stream, so no A/B
           .localCheckpoint()
         // fingerprint side first + LEFT join (the Dedup.dedupIndex
         // shape): a doc too short to shingle has no signature row, and
@@ -99,15 +103,13 @@ object DedupStream {
     */
   def readStore(spark: SparkSession, storeDir: String, textCol: String,
       idCol: String, beforeBatch: Long = Long.MaxValue): (DataFrame, DataFrame) = {
-    import spark.implicits._
     // each side reads on its own: a crash between the index and docs
     // writes of a batch may leave one slice present and the other
     // missing until the batch replays
-    val index = SliceStore.read(spark, storeDir, "index", beforeBatch)(
-      Seq.empty[(Long, Array[Long], String)].toDF("id", "signature", "fp"))
+    val index = SliceStore.read(spark, storeDir, "index", IndexSchema, beforeBatch)
       .select(col("id"), col("signature"), col("fp"))
-    val corpus = SliceStore.read(spark, storeDir, "docs", beforeBatch)(
-      Seq.empty[(Long, String)].toDF(idCol, textCol))
+    val corpus = SliceStore.read(spark, storeDir, "docs",
+        docsSchema(idCol, textCol), beforeBatch)
       .select(col(idCol), col(textCol))
     (index, corpus)
   }
@@ -117,12 +119,16 @@ object DedupStream {
     * what it was classified against, so it is part of the answer here,
     * unlike the index stream's sink bookkeeping).
     */
-  def statuses(spark: SparkSession, storeDir: String, idCol: String = "doc_id"): DataFrame = {
-    import spark.implicits._
-    SliceStore.read(spark, storeDir, "status")(
-      Seq.empty[(Long, String, Long, Long)]
-        .toDF(idCol, "status", "match_id", "batch"))
+  def statuses(spark: SparkSession, storeDir: String, idCol: String = "doc_id"): DataFrame =
+    SliceStore.read(spark, storeDir, "status", statusSchema(idCol))
       .select(col(idCol), col("status"), col("match_id"),
         col("batch").cast("long").as("batch"))
-  }
+
+  /** Slice schemas of the tables read back ([[SliceStore]] class doc). */
+  private[graft] val IndexSchema = StructType.fromDDL(
+    "id BIGINT, signature ARRAY<BIGINT>, fp STRING, batch INT")
+  private[graft] def docsSchema(idCol: String, textCol: String): StructType =
+    StructType.fromDDL(s"`$idCol` BIGINT, `$textCol` STRING, batch INT")
+  private[graft] def statusSchema(idCol: String): StructType =
+    StructType.fromDDL(s"`$idCol` BIGINT, status STRING, match_id BIGINT, batch INT")
 }

@@ -4,6 +4,7 @@ import graft.operators.{Profiling, TableReads}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 import java.nio.file.{Files, Paths}
 
@@ -111,7 +112,9 @@ object DriftStream {
       val base = TableReads.read(spark, s"$storeDir/baseline")
       val bh = Profiling
         .bucketCounts(batch, valueCol, bucketWidth, "n_cur")
-        .localCheckpoint() // pins: feeds the slice write AND two PSIs
+        // reuse: three actions read the aggregate (the slice write
+        // and two PSI sums); no query runs a stream, so it has no A/B
+        .localCheckpoint()
       SliceStore.write(bh, storeDir, "hist", batchId)
       val psi = Profiling.psiOverBuckets(base, bh, epsilon)
       SliceStore.write(psi, storeDir, "psi", batchId)
@@ -137,20 +140,19 @@ object DriftStream {
     * committed slices yet is a valid empty view.
     */
   def histograms(spark: SparkSession, storeDir: String,
-      beforeBatch: Long = Long.MaxValue): DataFrame = {
-    import spark.implicits._
-    SliceStore.read(spark, storeDir, "hist", beforeBatch)(
-      Seq.empty[(Option[Long], Long)].toDF("bucket", "n_cur"))
+      beforeBatch: Long = Long.MaxValue): DataFrame =
+    SliceStore.read(spark, storeDir, "hist", HistSchema, beforeBatch)
       .select(col("bucket"), col("n_cur"))
-  }
 
   /** Every batch's verdict so far: (batch, n_rows, psi_batch, psi_cum). */
-  def summaries(spark: SparkSession, storeDir: String): DataFrame = {
-    import spark.implicits._
-    SliceStore.read(spark, storeDir, "summary")(
-      Seq.empty[(Long, Long, Double, Double)]
-        .toDF("batch", "n_rows", "psi_batch", "psi_cum"))
+  def summaries(spark: SparkSession, storeDir: String): DataFrame =
+    SliceStore.read(spark, storeDir, "summary", SummarySchema)
       .select(col("batch").cast("long").as("batch"), col("n_rows"),
         col("psi_batch"), col("psi_cum"))
-  }
+
+  /** Slice schemas of the tables read back ([[SliceStore]] class doc). */
+  private[graft] val HistSchema =
+    StructType.fromDDL("bucket BIGINT, n_cur BIGINT, batch INT")
+  private[graft] val SummarySchema =
+    StructType.fromDDL("n_rows BIGINT, psi_batch DOUBLE, psi_cum DOUBLE, batch INT")
 }

@@ -4,6 +4,7 @@ import graft.operators.Dsir
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming DSIR scoring — the unbounded twin of the q_dsir_sample
   * batch scorer: the two hashed-n-gram bucket multinomials are fit ONCE
@@ -61,6 +62,7 @@ object DsirStream {
   def scoreBatch(batch: DataFrame, textCol: String,
       idCol: String, terms: DataFrame, defaultTerm: java.math.BigDecimal,
       buckets: Int, storeDir: String, batchId: Long): Unit = {
+    SliceStore.requireLongId(batch, idCol, "DsirStream")
     if (!batch.isEmpty) {
       SliceStore.write(Dsir.scoreAgainst(batch, textCol, idCol, terms,
         buckets, defaultTerm = Some(defaultTerm)), storeDir, "scores", batchId)
@@ -70,10 +72,11 @@ object DsirStream {
   /** All scores accumulated so far; an empty score table when no batch
     * has committed a slice.
     */
-  def scores(spark: SparkSession, storeDir: String, idCol: String): DataFrame = {
-    import spark.implicits._
-    SliceStore.read(spark, storeDir, "scores")(
-      Seq.empty[(Long, Long, Double)].toDF(idCol, "n_feats", "score"))
+  def scores(spark: SparkSession, storeDir: String, idCol: String): DataFrame =
+    SliceStore.read(spark, storeDir, "scores", scoresSchema(idCol))
       .select(col(idCol), col("n_feats"), col("score"))
-  }
+
+  /** Slice schemas of the tables read back ([[SliceStore]] class doc). */
+  private[graft] def scoresSchema(idCol: String): StructType =
+    StructType.fromDDL(s"`$idCol` BIGINT, n_feats BIGINT, score DOUBLE, batch INT")
 }

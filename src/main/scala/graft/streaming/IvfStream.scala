@@ -4,6 +4,7 @@ import graft.operators.IvfIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming IVF store maintenance — the unbounded twin of the
   * q_ivf_incr batch append: vectors arrive on a stream, each
@@ -42,6 +43,7 @@ object IvfStream {
 
   def appendBatch(batch: DataFrame, vecCol: String, idCol: String,
       centroids: Array[Array[Double]], storeDir: String, batchId: Long): Unit = {
+    SliceStore.requireLongId(batch, idCol, "IvfStream")
     if (!batch.isEmpty) {
       SliceStore.write(IvfIndex.assign(batch, vecCol, idCol, centroids),
         storeDir, "store", batchId, partitionBy = Seq("cell"))
@@ -53,12 +55,13 @@ object IvfStream {
     * partition column is sink bookkeeping and is dropped. An empty
     * store is a valid state, not an AnalysisException.
     */
-  def readStore(spark: SparkSession, storeDir: String): DataFrame = {
-    import spark.implicits._
-    SliceStore.read(spark, storeDir, "store")(
-      Seq.empty[(Long, Int, Array[Double])].toDF("id", "cell", "vec"))
+  def readStore(spark: SparkSession, storeDir: String): DataFrame =
+    SliceStore.read(spark, storeDir, "store", StoreSchema)
       .select(col("id"), col("cell").cast("int").as("cell"), col("vec"))
-  }
+
+  /** Slice schemas of the table read back ([[SliceStore]] class doc). */
+  private[graft] val StoreSchema =
+    StructType.fromDDL("id BIGINT, vec ARRAY<DOUBLE>, batch INT, cell INT")
 
   /** Query the maintained store — the standard probe-pruned top-k. */
   def topK(spark: SparkSession, storeDir: String, queryVec: Seq[Double],

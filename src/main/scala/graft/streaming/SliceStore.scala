@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -27,7 +28,16 @@ import scala.util.Try
   * batch would fail with it. A slice with no visible (not `_`- or
   * `.`-prefixed) file at any depth therefore counts as absent until its
   * batch replays and overwrites it. A table with no committed slice is a
-  * VALID empty state, returned as the caller's typed `empty` frame.
+  * VALID empty state, returned as an empty frame of the table's schema.
+  *
+  * Each sink declares every table it reads back ONCE, as the schema
+  * [[read]] returns: the slice's columns, the int `batch` slice key,
+  * then any `partitionBy` columns — the order and types Spark's own
+  * inference would give. Reading under it launches no schema-inference
+  * (footer-scan) job; a schema-less read paid one on every call, over a
+  * path set that grows with every batch. The caller's id column is
+  * declared BIGINT, so the sinks that take an `idCol` (dedup, DSIR,
+  * index, IVF) require a long id column ([[requireLongId]]).
   */
 object SliceStore {
 
@@ -57,17 +67,28 @@ object SliceStore {
     df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*)
       .parquet(path(storeDir, table, batchId))
 
-  /** Every committed slice of `table` below `before`, as one frame with
-    * the slice key as an int `batch` column (plus any `partitionBy`
-    * columns); `empty` when there is none.
+  /** Fail loud unless `df`'s `idCol` is a long. The sinks declare
+    * their id column BIGINT in the schema [[read]] takes, so a slice
+    * written under another id type would not read back under it.
+    */
+  def requireLongId(df: DataFrame, idCol: String, sink: String): Unit = {
+    val t = df.schema(idCol).dataType
+    require(t == LongType, s"$sink: id column '$idCol' must be a bigint, " +
+      s"got ${t.simpleString}; cast it before the stream")
+  }
+
+  /** Every committed slice of `table` below `before`, as one frame of
+    * the table's declared `schema` (see the class doc); an empty frame
+    * of `schema` when there is none.
     */
   def read(spark: SparkSession, storeDir: String, table: String,
-      before: Long = Long.MaxValue)(empty: => DataFrame): DataFrame = {
+      schema: StructType, before: Long = Long.MaxValue): DataFrame = {
     val paths = batchIds(storeDir, table, before)
       .filter(b => committed(storeDir, table, b))
       .map(path(storeDir, table, _))
-    if (paths.isEmpty) empty
-    else spark.read.option("basePath", s"$storeDir/$table").parquet(paths: _*)
+    if (paths.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).option("basePath", s"$storeDir/$table")
+      .parquet(paths: _*)
   }
 
   /** The largest committed batch id of `table` below `before`. */

@@ -5,10 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Guards the harness surface: one-off profiling mains, private
-  * session builders, hand-rolled streaming sinks and hand-rolled store
-  * version builds may not accumulate in the library again. Every harness main that should match the bench
-  * builds Bench.session; an A/B of one query is `runMain graft.ProfQ`,
-  * of two commits perfbench.
+  * session builders, hand-rolled streaming sinks, hand-rolled store
+  * version builds, schema-less reads and unaudited `localCheckpoint`
+  * pins may not accumulate in the library again. Every harness main
+  * that should match the bench builds Bench.session; an A/B of one
+  * query is `runMain graft.ProfQ`, of two commits perfbench.
   */
 class HarnessMainsSpec extends AnyFunSuite {
 
@@ -18,34 +19,110 @@ class HarnessMainsSpec extends AnyFunSuite {
     * comment line — containing `needle`.
     */
   private def filesWith(needle: String): Set[String] =
-    filesWhere(_.contains(needle))
+    codeByFile.collect { case (f, lines) if lines.exists(_.contains(needle)) => f }.toSet
 
-  /** Source files (basename without `.scala`) with a code line — not a
-    * comment line — for which `code` holds.
+  private def isComment(trimmed: String): Boolean =
+    trimmed.startsWith("*") || trimmed.startsWith("//") || trimmed.startsWith("/*")
+
+  /** Trimmed lines of every source file under the main root, keyed by
+    * basename without `.scala`.
     */
-  private def filesWhere(code: String => Boolean): Set[String] = {
+  private lazy val linesByFile: Map[String, Seq[String]] = {
     assert(Files.isDirectory(mainRoot),
       s"$mainRoot not found under ${Paths.get("").toAbsolutePath}")
     val s = Files.walk(mainRoot)
     try s.iterator().asScala.toList
       .filter(_.toString.endsWith(".scala"))
-      .filter(p => Files.readAllLines(p).asScala.exists { line =>
-        val t = line.trim
-        code(t) &&
-          !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
-      })
-      .map(_.getFileName.toString.stripSuffix(".scala")).toSet
+      .groupMapReduce(_.getFileName.toString.stripSuffix(".scala"))(p =>
+        Files.readAllLines(p).asScala.toSeq.map(_.trim))(_ ++ _)
     finally s.close()
   }
 
-  /** Files that may read parquet without a schema besides TableReads,
-    * each with why a cached schema would not pay there.
+  /** [[linesByFile]] with the comment lines dropped. */
+  private lazy val codeByFile: Map[String, Seq[String]] =
+    linesByFile.map { case (f, lines) => f -> lines.filterNot(isComment) }
+
+  /** A parquet read with no `.schema(` in its reader chain: `read`, any
+    * `.option(..)`/`.options(..)` calls, then `.parquet(` — on one line
+    * or across several.
     */
-  private val schemaLessReadAllowed = Map(
-    "CoverStream" -> "reads the newest state snapshot, a new slice path every batch, so a cache would always miss",
-    "CoresetStream" -> "reads the newest state snapshot, a new slice path every batch, so a cache would always miss",
-    "GenData" -> "data generator main: copies two fixed tables once per run",
-    "ProfQ" -> "profiling main: one warm-up scan per JVM, before any query runs")
+  private val schemaLessRead =
+    raw"\bread(?:\s*\.\s*options?\((?:[^()]|\([^()]*\))*\))*\s*\.\s*parquet\(".r
+
+  /** Schema-less parquet reads allowed besides TableReads: per file, how
+    * many reader chains, and why a cached schema would not pay there.
+    */
+  private val schemaLessReadAllowed: Map[String, (Int, String)] = Map(
+    "CoverStream" -> (1, "reads the newest state snapshot, a new slice path every batch, so a cache would always miss"),
+    "CoresetStream" -> (1, "reads the newest state snapshot, a new slice path every batch, so a cache would always miss"),
+    "GenData" -> (1, "data generator main: copies two fixed tables once per run"),
+    "ProfQ" -> (1, "profiling main: one warm-up scan per JVM, before any query runs"),
+    "SparkEntryEvents" -> (1, "q_schema_evolution: the mergeSchema footer inference over two generations is what it checks"))
+
+  /** Files of `code` whose count of schema-less reads differs from
+    * [[schemaLessReadAllowed]] (TableReads excepted), with both counts.
+    */
+  private def schemaLessReadsOffList(code: Map[String, Seq[String]]): Seq[String] = {
+    val found = code.map { case (f, lines) =>
+      f -> schemaLessRead.findAllIn(lines.mkString("\n")).size
+    }.filter(_._2 > 0) - "TableReads"
+    val allowed = schemaLessReadAllowed.map { case (f, (n, _)) => f -> n }
+    (found.keySet ++ allowed.keySet).toSeq.sorted.collect {
+      case f if found.getOrElse(f, 0) != allowed.getOrElse(f, 0) =>
+        s"$f: ${found.getOrElse(f, 0)} in the source, ${allowed.getOrElse(f, 0)} allowed"
+    }
+  }
+
+  /** A pin's class tag: `loop:` (cuts lineage inside an iterative loop,
+    * or pins a loop-invariant input every round reads), `determinism:`
+    * (freezes a nondeterministic input read more than once) or `reuse:`
+    * (anything else; kept because its subtree would otherwise run more
+    * than once).
+    */
+  private val pinTag = raw"\b(loop|determinism|reuse):".r
+
+  /** The class of every `.localCheckpoint(` call in `lines` (one source
+    * file's trimmed lines), in source order: the tag in the comment on
+    * the pin's line, else the first tag in the comment lines directly
+    * above it; None for an untagged pin.
+    */
+  private def pinClasses(lines: Seq[String]): Seq[Option[String]] =
+    lines.indices.flatMap { i =>
+      val line = lines(i)
+      val cut = line.indexOf("//")
+      val code = if (isComment(line)) "" else if (cut < 0) line else line.take(cut)
+      val pins = code.split("\\.localCheckpoint\\(", -1).length - 1
+      lazy val own =
+        if (cut < 0) None else pinTag.findFirstMatchIn(line.drop(cut)).map(_.group(1))
+      lazy val above = lines.take(i).reverse.takeWhile(isComment).reverse
+        .flatMap(pinTag.findFirstMatchIn(_)).headOption.map(_.group(1))
+      Seq.fill(pins)(own.orElse(above))
+    }
+
+  /** Every `localCheckpoint` site in the library: per file, how many of
+    * each class. Each site's tag and reason live in its comment (see
+    * [[pinClasses]]); a pin that is added, deleted or reclassed updates
+    * this list.
+    */
+  private val auditedPins: Map[String, Map[String, Int]] = Map(
+    "Coreset" -> Map("loop" -> 1),
+    "CoresetStream" -> Map("determinism" -> 1),
+    "Dedup" -> Map("loop" -> 3, "reuse" -> 6),
+    "DedupStream" -> Map("reuse" -> 1),
+    "DriftStream" -> Map("reuse" -> 1),
+    "Dsir" -> Map("reuse" -> 1),
+    "GlobalIndex" -> Map("determinism" -> 3),
+    "IndexStream" -> Map("reuse" -> 1),
+    "LinkGraph" -> Map("loop" -> 8, "reuse" -> 2),
+    "QualityClassifier" -> Map("reuse" -> 1),
+    "SetSimJoin" -> Map("reuse" -> 5),
+    "Similarity" -> Map("reuse" -> 1),
+    "SparkEntryAnn" -> Map("reuse" -> 3),
+    "SparkEntryDedup" -> Map("loop" -> 2, "reuse" -> 3),
+    "SparkEntryEvents" -> Map("reuse" -> 4),
+    "SparkEntryIngest" -> Map("reuse" -> 1),
+    "TermIndex" -> Map("loop" -> 3, "reuse" -> 3),
+    "WordPiece" -> Map("loop" -> 2))
 
   /** Member methods (two-space-indented `def`s) of `file` under the
     * main source root with a code line calling `name(`; the definition
@@ -89,15 +166,68 @@ class HarnessMainsSpec extends AnyFunSuite {
     assert(callersIn(store, "publish") === Set("publishVersion"))
   }
 
+  test("the schema-less read pattern catches every reader-chain spelling") {
+    val spellings = Seq(
+      """spark.read.parquet(path)""",
+      """spark.read.option("basePath", s"$storeDir/$table").parquet(paths: _*)""",
+      "spark.read\n  .option(\"a\", f(x))\n  .options(m)\n  .parquet(p)")
+    spellings.foreach(sp => assert(schemaLessRead.findFirstIn(sp).isDefined, sp))
+    assert(schemaLessRead.findFirstIn("spark.read.schema(s).parquet(p)").isEmpty)
+    assert(schemaLessRead.findFirstIn(
+      """spark.read.schema(s).option("basePath", b).parquet(p)""").isEmpty)
+  }
+
   test("a schema-less parquet read appears only in TableReads and the allowlist") {
     // TableReads.read infers a table's schema once per listing; a
     // schema-less read elsewhere pays a footer-scan job on every call
-    val found = filesWhere(t => t.contains("read.parquet(") && !t.contains(".schema("))
-    val outside = found -- schemaLessReadAllowed.keySet - "TableReads"
-    assert(outside.isEmpty,
-      s"schema-less read.parquet( outside TableReads: ${outside.toSeq.sorted.mkString(", ")}")
-    assert(found === schemaLessReadAllowed.keySet + "TableReads",
-      "an allowlisted file no longer reads parquet without a schema: drop it from the list")
+    val off = schemaLessReadsOffList(codeByFile)
+    assert(off.isEmpty, s"schema-less reads off the allowlist: ${off.mkString("; ")}")
+    assert(schemaLessRead.findFirstIn(codeByFile("TableReads").mkString("\n")).isDefined)
+  }
+
+  test("the allowlist admits a counted number of schema-less reads per file") {
+    // an allowlisted file is not exempt: a second read beside the one
+    // listed still fails
+    val extra = codeByFile.updated("SparkEntryEvents",
+      codeByFile("SparkEntryEvents") :+ "spark.read.parquet(p)")
+    assert(schemaLessReadsOffList(extra) ===
+      Seq("SparkEntryEvents: 2 in the source, 1 allowed"))
+    val fresh = codeByFile.updated("Fresh", Seq("spark.read", ".option(\"a\", b)", ".parquet(p)"))
+    assert(schemaLessReadsOffList(fresh) === Seq("Fresh: 1 in the source, 0 allowed"))
+  }
+
+  test("localCheckpoint appears only at the audited sites") {
+    val classes = linesByFile.map { case (f, lines) => f -> pinClasses(lines) }
+      .filter(_._2.nonEmpty)
+    val untagged = classes.collect { case (f, cs) if cs.contains(None) => f }
+    assert(untagged.isEmpty, "pins without a loop:/determinism:/reuse: tag in " +
+      untagged.toSeq.sorted.mkString(", "))
+    val counts = classes.map { case (f, cs) =>
+      f -> cs.flatten.groupMapReduce(identity)(_ => 1)(_ + _)
+    }
+    val diff = (counts.keySet ++ auditedPins.keySet).toSeq.sorted.collect {
+      case f if counts.getOrElse(f, Map.empty) != auditedPins.getOrElse(f, Map.empty) =>
+        s"$f: ${counts.getOrElse(f, Map.empty)} in the source, " +
+          s"${auditedPins.getOrElse(f, Map.empty)} audited"
+    }
+    assert(diff.isEmpty, diff.mkString("; "))
+  }
+
+  test("a pin's class is read from its own line or the comment directly above it") {
+    val src = Seq(
+      "// reuse: read twice",
+      "val a = x.localCheckpoint()",
+      "val b = y",
+      "  .localCheckpoint() // loop: lineage cut",
+      "// determinism: frozen",
+      "// and read three times",
+      "val c = z.localCheckpoint()",
+      "// reuse: not directly above the pin",
+      "val d = w",
+      "  .localCheckpoint()",
+      "// a comment line naming localCheckpoint() is no pin")
+    assert(pinClasses(src) ===
+      Seq(Some("reuse"), Some("loop"), Some("determinism"), None))
   }
 
   test("query-name validation names every unknown query and passes known ones") {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.LinkGraph
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit, pmod, udf}
 
 /** PageRank fixed points and orderings on hand-analyzable graphs. */
 class LinkGraphSpec extends SparkSpec {
@@ -167,6 +167,27 @@ class LinkGraphSpec extends SparkSpec {
     val ringDist = LinkGraph.pageRank(ring, "src", "dst", iters = 2)
       .orderBy("node").collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(ringBounded.toSeq === ringDist.toSeq)
+  }
+
+  test("pageRankBounded collects at most 2 * maxNodes + 1 edge rows " +
+      "before falling back on an over-bound graph") {
+    // a 40-node ring: indegree 1 everywhere, so only maxNodes = 5 rules
+    // it out; every edge row the driver pulls passes the counting UDF.
+    // A range source, not a local Seq: the optimizer folds a projection
+    // over local rows on the driver, running the UDF on every row
+    val pulled = spark.sparkContext.longAccumulator("edge rows pulled")
+    val count = udf { (v: Long) => pulled.add(1); v }.asNondeterministic()
+    val ring = spark.range(40).select(count(col("id")).as("src"),
+      pmod(col("id") + 1, lit(40L)).as("dst"))
+    val bounded = LinkGraph.pageRankBounded(ring, "src", "dst",
+        iters = 3, maxNodes = 5)
+      .orderBy("node").collect().map(r => (r.getLong(0), r.getDouble(1)))
+    // the fallback's pageRank pins the edge list once: 40 more rows
+    assert(pulled.value - 40 <= 2 * 5 + 1,
+      s"${pulled.value - 40} edge rows pulled for a bound of 11")
+    val dist = LinkGraph.pageRank(ring, "src", "dst", iters = 3)
+      .orderBy("node").collect().map(r => (r.getLong(0), r.getDouble(1)))
+    assert(bounded.toSeq === dist.toSeq)
   }
 
   test("shortestPathsBounded matches the distributed BFS rows exactly") {

@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.util.UUID
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Shared local session for all suites. */
 object TestSpark {
@@ -23,6 +28,37 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Runs `body` and counts the Spark jobs it launched. Jobs are told
+    * apart by a job group, and a fence job in a second group, seen last
+    * by the same listener, proves every earlier job-start event arrived.
+    */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-${UUID.randomUUID()}"
+    val jobs = new AtomicInteger(0)
+    val fenced = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == group => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-fence" => fenced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = body
+      sc.setJobGroup(s"$group-fence", "fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, TimeUnit.SECONDS), "fence job never reached the listener")
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 
   def writeText(dir: String, name: String, content: String): String = {
     val p = java.nio.file.Paths.get(dir, name)

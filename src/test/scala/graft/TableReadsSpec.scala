@@ -3,13 +3,10 @@ package graft
 import graft.operators.{ShardManifest, TableReads}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.UUID
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,37 +16,6 @@ import scala.jdk.CollectionConverters._
   * uncached `spark.read.parquet` of the same path.
   */
 class TableReadsSpec extends SparkSpec {
-
-  /** Runs `body` and counts the Spark jobs it launched. Jobs are told
-    * apart by a job group, and a fence job in a second group, seen last
-    * by the same listener, proves every earlier job-start event arrived.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"tablereads-${UUID.randomUUID()}"
-    val jobs = new AtomicInteger(0)
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(g) if g == group => jobs.incrementAndGet()
-          case Some(g) if g == s"$group-fence" => fenced.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = body
-      sc.setJobGroup(s"$group-fence", "fence")
-      sc.parallelize(Seq(1), 1).count()
-      assert(fenced.await(60, TimeUnit.SECONDS), "fence job never reached the listener")
-      (out, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map {
