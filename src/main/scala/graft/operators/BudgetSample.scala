@@ -34,6 +34,13 @@ import org.apache.spark.sql.functions._
   */
 object BudgetSample {
 
+  /** Distinct priority values [[fillTokenBudget]] collects, one row
+    * each: bounded for a bucketed priority, corpus-sized for a
+    * per-document score. The largest reached is 6, q_token_budget's
+    * quality-score levels at every scale.
+    */
+  private val MaxPriorities = 100000
+
   def fillTokenBudget(
       docs: DataFrame,
       tokenCol: String,
@@ -48,9 +55,10 @@ object BudgetSample {
     // bucket sums to null -> contributes 0. The boundary filters below
     // compare the raw column against the collected double — the same
     // widening, so grouping and filtering agree.
-    val buckets = docs.groupBy(col(priorityCol).cast("double").as("_p"))
-      .agg(coalesce(sum(col(tokenCol).cast("long")), lit(0L)).as("_t"))
-      .collect()
+    val buckets = DriverRows.collect(
+        docs.groupBy(col(priorityCol).cast("double").as("_p"))
+          .agg(coalesce(sum(col(tokenCol).cast("long")), lit(0L)).as("_t")),
+        MaxPriorities, s"fillTokenBudget distinct $priorityCol values")
       .map { r =>
         // A null or NaN priority has no place in a total priority
         // order: null would NPE the getDouble read and NaN breaks both

@@ -96,7 +96,8 @@ object Coreset {
     require(k >= 1, "k-center needs at least one pick")
     val base = vecs.select(col(idCol).cast("long").as("id"),
       col(vecCol).as("v"))
-    val seedRows = base.filter(col("id") === seedId).limit(2).collect()
+    val seedRows = DriverRows.collect(base.filter(col("id") === seedId), 1,
+      s"kCenterGreedy seed id $seedId (must match exactly one row)")
     require(seedRows.length == 1, s"seed id $seedId must match exactly one row")
     val seedVec = toDoubleArray(seedRows(0), 1).toSeq
     val picks = scala.collection.mutable.ArrayBuffer(

@@ -1145,7 +1145,8 @@ object Dedup {
       // vs 0.53 s unpinned, q_entity_resolution 0.72 vs 0.91 s (sf0.1
       // ProfQ, warm medians of 3 JVMs a side)
       .localCheckpoint()
-    if (p.count() <= driverMaxEdges) return connectedComponentsLocal(p)
+    val nEdges = p.count()
+    if (nEdges <= driverMaxEdges) return connectedComponentsLocal(p, nEdges)
     val edges = p
       .union(p.select(col("b").as("a"), col("a").as("b")))
       .distinct()
@@ -1195,12 +1196,13 @@ object Dedup {
     * graph arm of [[connectedComponents]]. Path-halving find, union by
     * attaching the larger root id under the smaller, then every node
     * labeled with its root (== the component's minimum id, the same
-    * fixpoint min-label propagation converges to).
+    * fixpoint min-label propagation converges to). `nEdges` is the
+    * count [[connectedComponents]] took of the pinned `p`.
     */
-  private def connectedComponentsLocal(p: DataFrame): DataFrame = {
+  private def connectedComponentsLocal(p: DataFrame, nEdges: Long): DataFrame = {
     val spark = p.sparkSession
-    import spark.implicits._
-    val es = p.as[(Long, Long)].collect()
+    val es = DriverRows.collect(p, nEdges, "connectedComponents edge list (its count)")
+      .map(r => (r.getLong(0), r.getLong(1)))
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x

@@ -259,11 +259,13 @@ object Dsir {
     *     worse by another, and only the single boundary score's rows
     *     run an id-ordered window.
     *
-    * Driver memory per step is <= max(fanout, maxDistinct) rows no
-    * matter how many distinct scores the corpus produces (DSIR scores
-    * are per-doc LLR sums — their distinct count grows with corpus
-    * size, so the [[BudgetSample]] collect-every-distinct-priority
-    * construction would be O(docs) here). Levels are logarithmic: each
+    * Driver memory per level is <= fanout + 2 rows no matter how many
+    * distinct scores the corpus produces, and the final walk collects
+    * at most the interval's distinct count as the last level measured
+    * it (<= maxDistinct unless narrowing stopped making progress).
+    * DSIR scores are per-doc LLR sums — their distinct count grows with
+    * corpus size, so the [[BudgetSample]] collect-every-distinct-priority
+    * construction would be O(docs) here. Levels are logarithmic: each
     * narrows the interval to 3/fanout of its width, and massive ties
     * collapse `countDistinct` instead of width.
     *
@@ -316,18 +318,25 @@ object Dsir {
     // filter+count re-read is only needed on the degenerate-width exit,
     // which never ran a level for the final interval).
     var aboveFinal = Option.empty[Long]
+    // distinct scores in [lo, hi]: every level measures it exactly, and
+    // narrowing only shrinks the interval, so the last measurement (n
+    // before any) bounds the final per-score collect
+    var intervalDistinct = n
     while (!done) {
       val w = (hi - lo) / fanout
       if (w <= 0.0 || lo + w <= lo) done = true // degenerate width
       else {
-        val cells = scores.groupBy(
+        // fanout + 2 cells: the histogram buckets, -1 and -2
+        val cells = DriverRows.collect(scores.groupBy(
             when(s > hi, lit(-1L))
               .when(s < lo, lit(-2L))
               .otherwise(least(floor((s - lit(lo)) / lit(w)), lit(fanout - 1))
                 .cast(LongType)).as("_b"))
-          .agg(count(lit(1)).as("_n"), countDistinct(s).as("_d"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+          .agg(count(lit(1)).as("_n"), countDistinct(s).as("_d")),
+          fanout + 2, s"selectTopK refinement cells (fanout=$fanout)")
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         val distinct = cells.collect { case (b, _, d) if b >= 0 => d }.sum
+        intervalDistinct = distinct
         aboveFinal = Some(cells.collectFirst { case (-1L, n, _) => n }
           .getOrElse(0L))
         if (distinct <= maxDistinct) done = true
@@ -355,9 +364,10 @@ object Dsir {
     }
 
     val above = aboveFinal.getOrElse(scores.filter(s > hi).count())
-    val cand = scores.filter(s.between(lo, hi))
-      .groupBy(s).agg(count(lit(1)).as("_n"))
-      .collect().map(r => (r.getDouble(0), r.getLong(1)))
+    val cand = DriverRows.collect(scores.filter(s.between(lo, hi))
+        .groupBy(s).agg(count(lit(1)).as("_n")),
+        intervalDistinct, s"selectTopK boundary interval [$lo, $hi]")
+      .map(r => (r.getDouble(0), r.getLong(1)))
       .sortBy(-_._1)
     var acc = above
     var boundary = Option.empty[Double]

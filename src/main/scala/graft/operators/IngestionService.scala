@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.ProductSchema
 import graft.sources.IngestSource
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -322,9 +322,7 @@ class IngestionService(
     * mapped at all).
     */
   private def nullSkuDetails(mapped: DataFrame, rawHasSku: Boolean): Seq[String] = {
-    val hasIdx = mapped.columns.contains(graft.sources.IngestSource.ROW_IDX)
-    val idxCol =
-      if (hasIdx) col(graft.sources.IngestSource.ROW_IDX) else lit(-1L)
+    val idxCol = rowIdx(mapped)
     val offending =
       if (rawHasSku) mapped.filter(col("sku").isNull) else mapped
     offending
@@ -337,6 +335,11 @@ class IngestionService(
       .toSeq
   }
 
+  /** The source row index a report names, -1 when the frame has none. */
+  private def rowIdx(mapped: DataFrame): Column =
+    if (mapped.columns.contains(IngestSource.ROW_IDX)) col(IngestSource.ROW_IDX)
+    else lit(-1L)
+
   /** Per-row failure details for the abort report: up to
     * [[IngestionService.MaxReportedErrors]] (row, column, raw value)
     * triples, smallest row indexes first, then by column. One job: the
@@ -344,10 +347,7 @@ class IngestionService(
     * ordered limit — never a full-table driver fetch.
     */
   private def errorDetails(mapped: DataFrame, errCols: Array[String]): Seq[String] = {
-    val idxCol =
-      if (mapped.columns.contains(graft.sources.IngestSource.ROW_IDX))
-        col(graft.sources.IngestSource.ROW_IDX)
-      else lit(-1L)
+    val idxCol = rowIdx(mapped)
     errCols.zipWithIndex.map { case (ec, ord) =>
       val dst = ec.stripPrefix("_err_")
       // VARCHAR(n) violations ride the same flag channel under a `len_`

@@ -34,15 +34,18 @@ object IvfIndex {
       idCol: String,
       nlist: Int = 16,
       iters: Int = 10,
-      sampleSize: Int = 2048): Array[Array[Double]] = {
-    val sample = embeddings
-      .orderBy(col(idCol))
-      .limit(sampleSize)
-      .select(Similarity.toDouble(col(vecCol)))
-      .collect()
+      sampleSize: Int = 2048): Array[Array[Double]] =
+    lloyd(trainingSample(embeddings, vecCol, idCol, sampleSize), nlist, iters)
+
+  /** The first `sampleSize` vectors in ascending id order (deterministic
+    * across runs and partitionings) — the training sample of the coarse
+    * quantizer and of [[PqIndex]]'s codebooks.
+    */
+  private[operators] def trainingSample(embeddings: DataFrame, vecCol: String,
+      idCol: String, sampleSize: Int): Array[Array[Double]] =
+    embeddings.orderBy(col(idCol)).limit(sampleSize)
+      .select(Similarity.toDouble(col(vecCol))).collect()
       .map(_.getSeq[Double](0).toArray)
-    lloyd(sample, nlist, iters)
-  }
 
   /** Deterministic Lloyd's over an in-memory sample — shared by the
     * coarse quantizer above and [[PqIndex]]'s per-subspace codebooks.

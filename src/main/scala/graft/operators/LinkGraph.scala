@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Link-graph authority scoring — the classic PageRank iteration as
@@ -129,13 +129,8 @@ object LinkGraph {
     * with a denser node or more than `maxNodes` nodes falls back to the
     * distributed form. `maxNodes` bounds driver state: a graph that
     * qualifies has at most 2 * `maxNodes` edge rows (every indegree is
-    * <= 2), so at most 2 * `maxNodes` + 1 rows are ever collected.
-    * That bounded collect runs as ONE task: `coalesce(1)` adds no
-    * shuffle, so the narrow work feeding it (scans, filters,
-    * projections) runs in that task too. `edges` should therefore end
-    * in an exchange (a distinct or an aggregate, as a host graph
-    * derived from page links does) or be small; a bare scan over a
-    * large table would be read by a single task.
+    * <= 2), so the edge list is collected through [[DriverRows.atMost]]
+    * with that bound and a longer one takes the fallback.
     */
   def pageRankBounded(
       edges: DataFrame,
@@ -148,16 +143,10 @@ object LinkGraph {
     require(iters >= 1, "iters must be >= 1")
     require(damping > 0 && damping < 1, "damping must be in (0, 1)")
     val spark = edges.sparkSession
-    import spark.implicits._
-    // One row past the largest qualifying edge list proves the graph
-    // is over the bound without collecting the rest. coalesce(1) makes
-    // the limited collect one job over one partition: a CollectLimit
-    // over several partitions scans them a few at a time, one job per
-    // round.
-    val maxEdges = math.min(2L * maxNodes + 1, Int.MaxValue.toLong).toInt
-    val es: Array[(Long, Long)] = edges
-      .select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-      .coalesce(1).limit(maxEdges).as[(Long, Long)].collect()
+    val bounded = DriverRows.atMost(edges
+      .select(col(srcCol).cast("long"), col(dstCol).cast("long")), 2L * maxNodes)
+    val es: Array[(Long, Long)] = bounded.getOrElse(Array.empty[Row])
+      .map(r => (r.getLong(0), r.getLong(1)))
     val nodes: Array[Long] = (es.map(_._1) ++ es.map(_._2)).distinct
     val indeg = scala.collection.mutable.HashMap.empty[Long, Int]
     es.foreach { case (_, d) => indeg.update(d, indeg.getOrElse(d, 0) + 1) }
@@ -168,7 +157,7 @@ object LinkGraph {
     // route to the distributed form — same constants, same rounding.
     // Callers that need the bounded path's job-count win keep it
     // exactly when its bit-parity contract actually holds.
-    if (es.length == maxEdges || nodes.length > maxNodes ||
+    if (bounded.isEmpty || nodes.length > maxNodes ||
         indeg.valuesIterator.exists(_ > 2))
       return pageRank(edges, srcCol, dstCol, iters, damping, roundTo)
         .orderBy(col("node"))
@@ -262,10 +251,11 @@ object LinkGraph {
     * checkpoint — serial stages that dominate wall-clock on a
     * host-sized graph; measured 33 jobs for a 97-node 4-hop BFS).
     * `maxNodes` bounds the node set the driver iterates over and fails
-    * loud past it, but only AFTER the whole edge list is collected: no
-    * edge bound follows from a node bound here (unlike
-    * [[pageRankBounded]], nothing limits the degree), so the caller
-    * must know the edge list is driver-sized.
+    * loud past it. Nothing limits the degree here (unlike
+    * [[pageRankBounded]]), so the only edge bound a node bound implies
+    * is `maxNodes`² (every ordered pair, self-loops included; duplicate
+    * edge rows count against it), and the seed set is at most
+    * `maxNodes`: both collects fail loud past those bounds.
     */
   def shortestPathsBounded(
       edges: DataFrame,
@@ -277,17 +267,19 @@ object LinkGraph {
       maxNodes: Int = 100000): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
     val spark = edges.sparkSession
-    import spark.implicits._
-    val es: Array[(Long, Long)] = edges
-      .select(col(srcCol).cast("long"), col(dstCol).cast("long"))
-      .as[(Long, Long)].collect()
+    val es: Array[(Long, Long)] = DriverRows.collect(edges
+        .select(col(srcCol).cast("long"), col(dstCol).cast("long")), maxNodes.toLong * maxNodes,
+      s"shortestPathsBounded edge list (maxNodes=$maxNodes)")
+      .map(r => (r.getLong(0), r.getLong(1)))
     val nNodes = (es.map(_._1) ++ es.map(_._2)).distinct.length
     require(nNodes <= maxNodes,
       s"shortestPathsBounded: $nNodes nodes exceeds maxNodes=$maxNodes — " +
         "use the distributed shortestPaths for graphs this large")
     val adj = es.groupBy(_._1).map { case (s, a) => s -> a.map(_._2) }
-    val seedIds: Array[Long] = seeds.select(col(seedCol).cast("long"))
-      .distinct().as[Long].collect()
+    val seedIds: Array[Long] = DriverRows.collect(
+        seeds.select(col(seedCol).cast("long")).distinct(), maxNodes,
+        s"shortestPathsBounded seeds (maxNodes=$maxNodes)")
+      .map(_.getLong(0))
     val dist = scala.collection.mutable.HashMap.empty[Long, Long]
     seedIds.foreach(dist.update(_, 0L))
     var frontier: Array[Long] = seedIds

@@ -55,37 +55,18 @@ object MaxCover {
     * picks cannot add anything; a picked document's buckets are all
     * covered, so it can never be re-picked.
     *
+    * This is [[greedyBudgetCover]] at unit cost: floor(gain·10^6 / 1)
+    * orders like gain, and a `Long.MaxValue` budget never binds within
+    * k rounds, so the cost-ratio loop makes exactly these picks.
+    *
     * `pairs` must be the [[featurePairs]] table (or any distinct
     * (id, bucket) frame); materialize it first — each round scans it
     * twice (argmax + the narrow winner-bucket fetch).
     */
   def greedyMaxCover(pairs: DataFrame, k: Int): Seq[CoverPick] = {
     require(k >= 1, "max-cover needs at least one pick")
-    val covered = scala.collection.mutable.HashSet.empty[Long]
-    val picks = scala.collection.mutable.ArrayBuffer.empty[CoverPick]
-    var i = 1
-    while (i <= k) {
-      val uncovered =
-        if (covered.isEmpty) pairs
-        else pairs.filter(!col("bucket").isInCollection(covered.toSeq))
-      val top = uncovered
-        .groupBy(col("id")).agg(count(lit(1)).as("gain"))
-        .orderBy(col("gain").desc, col("id"))
-        .limit(1).collect()
-      if (top.isEmpty) i = k + 1 // nothing uncovered anywhere: stop
-      else {
-        val (id, gain) = (top(0).getLong(0), top(0).getLong(1))
-        // fetch only the winner's UNCOVERED buckets: its covered ones
-        // are already in the set, so the union is identical and the
-        // fetch scan filters harder
-        val newBuckets = uncovered.filter(col("id") === id)
-          .select(col("bucket").cast(LongType)).collect().map(_.getLong(0))
-        covered ++= newBuckets
-        picks += CoverPick(i.toLong, id, gain, covered.size.toLong)
-        i += 1
-      }
-    }
-    picks.toSeq
+    greedyBudgetCover(pairs.withColumn("cost", lit(1L)), Long.MaxValue, k)
+      .map(p => CoverPick(p.round, p.id, p.gain, p.covered))
   }
 
   /** The selection as a DataFrame gate surface. */
@@ -150,9 +131,12 @@ object MaxCover {
           top(0).getLong(2))
         // winner's uncovered buckets only — covered ones are already in
         // the set (the winner passed the affordability filter, so all
-        // its uncovered pairs are in this frame)
-        val newBuckets = uncovered.filter(col("id") === id)
-          .select(col("bucket").cast(LongType)).collect().map(_.getLong(0))
+        // its uncovered pairs are in this frame); the fetch reads the
+        // frame the gain counted, so it returns exactly `gain` rows
+        val newBuckets = DriverRows.collect(uncovered.filter(col("id") === id)
+            .select(col("bucket").cast(LongType)), gain,
+            s"max-cover winner $id buckets (gain=$gain)")
+          .map(_.getLong(0))
         covered ++= newBuckets
         spent += cost
         picks += BudgetPick(i.toLong, id, gain, cost, spent,

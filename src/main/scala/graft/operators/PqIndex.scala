@@ -43,12 +43,7 @@ object PqIndex {
       ksub: Int = 16,
       iters: Int = 10,
       sampleSize: Int = 2048): Array[Array[Array[Double]]] = {
-    val sample = embeddings
-      .orderBy(col(idCol))
-      .limit(sampleSize)
-      .select(Similarity.toDouble(col(vecCol)))
-      .collect()
-      .map(_.getSeq[Double](0).toArray)
+    val sample = IvfIndex.trainingSample(embeddings, vecCol, idCol, sampleSize)
     require(sample.nonEmpty, "empty training sample")
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim not divisible by m $m")

@@ -21,11 +21,10 @@ object Reshape {
     *
     * Phase 1 discovers the pivot values: a distinct on the pivot column
     * (one shuffle whose cardinality is the value-set size, tiny by
-    * contract) with `limit(maxValues + 1)` pushed down, so the driver
-    * collects AT MOST maxValues+1 rows no matter how pathological the
-    * column is — the guard costs O(cap), not O(distinct values). More
-    * than `maxValues` distinct values aborts with the count it saw
-    * rather than building a wider schema than anyone intended.
+    * contract) collected through [[DriverRows]] with `maxValues` as the
+    * bound, so each task ships at most maxValues+1 rows no matter how
+    * pathological the column is. More than `maxValues` distinct values
+    * aborts rather than building a wider schema than anyone intended.
     *
     * Phase 2 is a plain static pivot over the discovered list, sorted so
     * the output column order is deterministic across runs/partitionings.
@@ -41,17 +40,13 @@ object Reshape {
       maxValues: Int = 100): DataFrame = {
     require(groupCols.nonEmpty, "dynamic pivot requires group columns")
     require(maxValues > 0, "maxValues must be positive")
-    val discovered = df
-      .filter(col(pivotCol).isNotNull)
-      .select(col(pivotCol).cast("string"))
-      .distinct()
-      .limit(maxValues + 1)
-      .collect()
+    val discovered = DriverRows.collect(df
+        .filter(col(pivotCol).isNotNull)
+        .select(col(pivotCol).cast("string"))
+        .distinct(), maxValues,
+      s"dynamic pivot on '$pivotCol' (distinct values; raise maxValues " +
+        "deliberately or use a static value list)")
       .map(_.getString(0))
-    if (discovered.length > maxValues)
-      throw new IllegalArgumentException(
-        s"dynamic pivot on '$pivotCol' found more than $maxValues distinct " +
-          "values — raise maxValues deliberately or use a static value list")
     df.groupBy(groupCols.map(col): _*)
       .pivot(pivotCol, discovered.sorted.toSeq)
       .agg(aggExpr)

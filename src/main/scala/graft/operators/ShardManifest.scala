@@ -58,6 +58,13 @@ object ShardManifest {
         statCols.flatMap(c => Seq(
           min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))): _*)
 
+  /** Shard ids [[prunedRead]] collects: bounded by shard count, a
+    * manifest is kilobytes per petabyte (SCALE.md). The largest reached
+    * is q_shard_manifest's lineitem at sf1, ~367 shards (37 measured at
+    * sf0.1).
+    */
+  private val MaxShards = 4096
+
   /** Key-range read that opens only shards whose manifest interval
     * overlaps [lo, hi]: the manifest row set collapses to a shard-id
     * list (bounded by shard count), which becomes a partition predicate
@@ -67,9 +74,10 @@ object ShardManifest {
     */
   def prunedRead(spark: SparkSession, dir: String, mf: DataFrame,
       keyCol: String, lo: Long, hi: Long): DataFrame = {
-    val shards = mf
-      .filter(col(s"max_$keyCol") >= lo && col(s"min_$keyCol") <= hi)
-      .select(col("shard_id")).collect().map(_.getLong(0))
+    val shards = DriverRows.collect(mf
+        .filter(col(s"max_$keyCol") >= lo && col(s"min_$keyCol") <= hi)
+        .select(col("shard_id")), MaxShards, "prunedRead overlapping shards")
+      .map(_.getLong(0))
     TableReads.read(spark, dir)
       .filter(col("shard_id").isin(shards: _*))
       .filter(col(keyCol) >= lo && col(keyCol) <= hi)

@@ -415,9 +415,12 @@ object Similarity {
         round(when(n2a === 0.0 || n2b === 0.0, lit(0.0))
           .otherwise(dot(col("va"), col("vb")) / (sqrt(n2a) * sqrt(n2b))),
           roundTo).as("sim"))
-    val relRows = cand.orderBy(col("rel").desc, col("id")).collect()
+    val relRows = DriverRows.collect(cand.orderBy(col("rel").desc, col("id")),
+        shortlist, s"mmrRerank shortlist (shortlist=$shortlist)")
       .map(r => r.getLong(0) -> r.getDouble(1))
-    val simMap = pairSims.collect()
+    // one row per unordered pair of distinct shortlisted ids
+    val simMap = DriverRows.collect(pairSims, shortlist.toLong * (shortlist - 1) / 2,
+        s"mmrRerank shortlist pairs (shortlist=$shortlist; ids must be unique)")
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     def simOf(x: Long, y: Long): Double =
       if (x < y) simMap((x, y)) else simMap((y, x))

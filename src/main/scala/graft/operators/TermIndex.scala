@@ -171,6 +171,19 @@ object TermIndex {
       .select(col("id"), col("word"), col("w"))
   }
 
+  /** Request rows [[sparseKnnFromIndex]] collects: the k-NN request
+    * batch, not the corpus (SCALE.md). The largest batch reached is
+    * q_sparse_knn's doc_id % 100 panel, 500 queries at sf1.
+    */
+  private val MaxRequestRows = 10000
+
+  /** Posting rows of one request batch [[sparseKnnFromIndex]] collects:
+    * its queries' distinct words. The largest reached is q_sparse_knn
+    * at sf1, ~11.6k (500 queries of ~23 distinct words; 1,164 measured
+    * for the 50-query sf0.1 panel).
+    */
+  private val MaxQueryPostings = 200000
+
   /** The QUERY half of [[sparseKnn]]: retrieval over a standing
     * posting table — norms from a posting-table aggregate (index-sized,
     * not corpus-sized), query vectors looked up by broadcast, the
@@ -208,16 +221,16 @@ object TermIndex {
     // queries accumulate in one pass — the query-at-a-time equi-join
     // this replaces shuffled sum-over-query-terms-of-df(term) pair rows
     // (2.3M at sf0.1) just to re-group them by (query, doc).
-    val reqIds = queries.select(col(queries.columns.head).cast("long"))
-      .collect().map(_.getLong(0)).distinct.sorted.toSeq
-    if (reqIds.isEmpty)
-      return Seq.empty[(Long, Long, Double, Int)]
-        .toDF("qid", "id", "sim", "sim_rank")
+    val reqIds = DriverRows.collect(
+        queries.select(col(queries.columns.head).cast("long")), MaxRequestRows,
+        "sparseKnnFromIndex request batch")
+      .map(_.getLong(0)).distinct.sorted.toSeq
     // isin on the collected request ids instead of a broadcast join:
     // the predicate pushes into the index scan (row-group pruning on a
     // sorted/bucketed deployment index), and one job replaces two
-    val qp = weights.filter(col("id").isin(reqIds: _*))
-      .select(col("id"), col("word"), col("w")).collect()
+    val qp = DriverRows.collect(weights.filter(col("id").isin(reqIds: _*))
+        .select(col("id"), col("word"), col("w")), MaxQueryPostings,
+      "sparseKnnFromIndex request-batch postings")
     val qids: Seq[Long] = qp.map(_.getLong(0)).distinct.sorted.toSeq
     if (qids.isEmpty)
       return Seq.empty[(Long, Long, Double, Int)]
@@ -228,8 +241,10 @@ object TermIndex {
     val hitIdx = qWords.map(w => byWord(w).map(r => qIdx(r.getLong(0))).toSeq)
     val hitW = qWords.map(w => byWord(w).map(_.getLong(2)).toSeq)
     val nQ = qids.length
-    val qn2Map = norms.filter(col("id").isin(qids: _*))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // one norm row per query id
+    val qn2Map = DriverRows.collect(norms.filter(col("id").isin(qids: _*)),
+        qids.length, "sparseKnnFromIndex query norms (ids must be unique)")
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val qn2: Seq[Long] = qids.map(q => qn2Map.getOrElse(q,
       sys.error(s"query $q has postings but no norm — corrupt index")))
     val B = org.apache.spark.sql.GraftSqlBridge
@@ -542,11 +557,41 @@ object TermIndex {
     * because its symbol string differs from `l`). Pure higher-order
     * expression, no UDF.
     */
-  private def applyMerge(syms: Column, l: Column, r: Column, m: Column): Column =
+  private[operators] def applyMerge(syms: Column, l: Column, r: Column, m: Column): Column =
     aggregate(syms, array().cast("array<string>"),
       (acc, s) => when(size(acc) > 0 && element_at(acc, -1) === l && s === r,
           concat(slice(acc, lit(1), size(acc) - 1), array(m)))
         .otherwise(concat(acc, array(s))))
+
+  /** `word`'s BPE symbols: its characters with every merge of the
+    * table applied in rank order (the merge table rides as one array
+    * literal; the fold runs once per word).
+    */
+  private def encodeSyms(word: Column, merges: Seq[BpeMerge]): Column =
+    aggregate(array(merges.map(m => struct(lit(m.left).as("l"),
+        lit(m.right).as("r"), lit(m.left + m.right).as("m"))): _*),
+      charSyms(word), (syms, mg) => applyMerge(syms, mg("l"), mg("r"), mg("m")))
+
+  /** Freq-weighted adjacent symbol-pair counts (l, r, cnt) of a
+    * (syms, _freq) vocabulary — one pair explode and one aggregate, the
+    * per-round count of both subword trainers.
+    */
+  private[operators] def pairCounts(vocab: DataFrame): DataFrame =
+    vocab.filter(size(col("syms")) >= 2)
+      .select(col("_freq"), explode(transform(
+        sequence(lit(1), size(col("syms")) - 1),
+        j => struct(element_at(col("syms"), j).as("l"),
+          element_at(col("syms"), j + 1).as("r")))).as("_p"))
+      .groupBy(col("_p.l").as("l"), col("_p.r").as("r"))
+      .agg(sum(col("_freq")).as("cnt"))
+
+  /** Symbols a tokenizer trainer or encoder collects as its alphabet:
+    * the distinct characters of the words matching its `wordPattern`
+    * (SCALE.md: bounded by the word pattern). The largest reached is
+    * 72, WordPiece's plain and '##' forms of the default pattern's 36
+    * characters, at every scale.
+    */
+  private[operators] val MaxAlphabet = 1024
 
   /** BPE TRAINER (Sennrich et al. 2016): iterate [[bpePairCounts]]'s
     * argmax — count adjacent symbol pairs weighted by word frequency,
@@ -586,13 +631,7 @@ object TermIndex {
     var i = 1
     var exhausted = false
     while (i <= numMerges && !exhausted) {
-      val top = vocab.filter(size(col("syms")) >= 2)
-        .select(col("_freq"), explode(transform(
-          sequence(lit(1), size(col("syms")) - 1),
-          j => struct(element_at(col("syms"), j).as("l"),
-            element_at(col("syms"), j + 1).as("r")))).as("_p"))
-        .groupBy(col("_p.l").as("l"), col("_p.r").as("r"))
-        .agg(sum(col("_freq")).as("cnt"))
+      val top = pairCounts(vocab)
         .orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(1).collect()
       if (top.isEmpty) exhausted = true
@@ -630,17 +669,12 @@ object TermIndex {
       merges: Seq[BpeMerge],
       wordPattern: String = "^[a-z0-9]+$"): DataFrame = {
     require(merges.nonEmpty, "bpeTokenCounts needs a trained merge table")
-    val mergeArr = array(merges.map(m =>
-      struct(lit(m.left).as("l"), lit(m.right).as("r"),
-        lit(m.left + m.right).as("m"))): _*)
     val docWords = occurrences(docs, textCol, idCol)
       .filter(col("word").rlike(wordPattern))
     val tfd = docWords.groupBy(col("id"), col("word"))
       .agg(count(lit(1)).as("_c"))
     val vocab = docWords.select(col("word")).distinct()
-      .select(col("word"), size(aggregate(mergeArr, charSyms(col("word")),
-        (syms, mg) => applyMerge(syms, mg("l"), mg("r"), mg("m"))))
-        .as("_n_tok"))
+      .select(col("word"), size(encodeSyms(col("word"), merges)).as("_n_tok"))
     tfd.join(vocab, "word")
       .groupBy(col("id"))
       .agg(sum(col("_c")).as("n_words"),
@@ -674,9 +708,10 @@ object TermIndex {
     require(merges.nonEmpty, "bpeEncodeIds needs a trained merge table")
     val docWords = occurrences(docs, textCol, idCol)
       .filter(col("word").rlike(wordPattern))
-    val alphabet = docWords
-      .select(explode(charSyms(col("word"))).as("ch")).distinct()
-      .orderBy(col("ch")).collect().map(_.getString(0))
+    val alphabet = DriverRows.collect(docWords
+        .select(explode(charSyms(col("word"))).as("ch")).distinct()
+        .orderBy(col("ch")), MaxAlphabet, "bpeEncodeIds alphabet")
+      .map(_.getString(0))
     val base = alphabet.zipWithIndex.map { case (c, i) => c -> i }
     val mergedIds = merges.map(m => (m.left + m.right) ->
       (alphabet.length + m.rank.toInt - 1))
@@ -688,13 +723,8 @@ object TermIndex {
     val idMap = map(tokenIds.toSeq.sortBy(_._2).flatMap {
       case (tok, tid) => Seq(lit(tok), lit(tid))
     }: _*)
-    val mergeArr = array(merges.map(m =>
-      struct(lit(m.left).as("l"), lit(m.right).as("r"),
-        lit(m.left + m.right).as("m"))): _*)
     val vocab = docWords.select(col("word")).distinct()
-      .select(col("word"), transform(
-        aggregate(mergeArr, charSyms(col("word")),
-          (syms, mg) => applyMerge(syms, mg("l"), mg("r"), mg("m"))),
+      .select(col("word"), transform(encodeSyms(col("word"), merges),
         s => element_at(idMap, s)).as("_ids"))
       .select(col("word"),
         concat_ws(" ", transform(col("_ids"), i => i.cast("string")))
@@ -1042,8 +1072,9 @@ object TermIndex {
       // reuse: two collects read the seed counts (q_unigram_tokenizer
       // run 1, a standing build: 1.14 s pinned vs 1.21 s unpinned, medians)
       .localCheckpoint()
-    val chars = seedCnt.filter(length(col("piece")) === 1)
-      .collect().map(r => r.getString(0) -> r.getLong(1))
+    val chars = DriverRows.collect(seedCnt.filter(length(col("piece")) === 1),
+        MaxAlphabet, "trainUnigram single-character pieces")
+      .map(r => r.getString(0) -> r.getLong(1))
     val multi = seedCnt.filter(length(col("piece")) >= 2)
       .orderBy(col("cnt").desc, col("piece")).limit(seedMulti)
       .collect().map(r => r.getString(0) -> r.getLong(1))
@@ -1060,9 +1091,12 @@ object TermIndex {
       val segExpr = org.apache.spark.sql.GraftSqlBridge.column(
         graft.functions.UnigramSegment(
           org.apache.spark.sql.GraftSqlBridge.expression(col("word")), ps, ls, maxPieceLen))
-      val counts = w0.select(col("freq"), explode(segExpr).as("piece"))
-        .groupBy(col("piece")).agg(sum(col("freq")).as("cnt"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      // the segmenter emits seed pieces only
+      val counts = DriverRows.collect(
+          w0.select(col("freq"), explode(segExpr).as("piece"))
+            .groupBy(col("piece")).agg(sum(col("freq")).as("cnt")),
+          vSize, "trainUnigram piece counts (the seed vocabulary)")
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
       lastCnt = seed.map { case (p, _) => p -> counts.getOrElse(p, 0L) }.toMap
       val totalR = lastCnt.valuesIterator.sum
       lp = seed.map { case (p, _) =>

@@ -57,16 +57,6 @@ object WordPiece {
       i => when(i === 1, word.substr(i, lit(1)))
         .otherwise(concat(lit("##"), word.substr(i, lit(1)))))
 
-  /** Apply ONE merge to a symbol array — the greedy left-to-right
-    * non-overlapping fold of [[TermIndex]]'s BPE `applyMerge`, with the
-    * WordPiece join rule: merged token = left ++ right-without-'##'.
-    */
-  private def applyMerge(syms: Column, l: Column, r: Column, m: Column): Column =
-    aggregate(syms, array().cast("array<string>"),
-      (acc, s) => when(size(acc) > 0 && element_at(acc, -1) === l && s === r,
-          concat(slice(acc, lit(1), size(acc) - 1), array(m)))
-        .otherwise(concat(acc, array(s))))
-
   /** One learned merge: `rank` is the training iteration (1-based),
     * `pair_count` the corpus-wide adjacent count, `score_scaled` the
     * integer likelihood score that made (left, right) the argmax.
@@ -108,9 +98,10 @@ object WordPiece {
       .groupBy(col("word")).agg(count(lit(1)).as("_freq"))
       .select(wpSyms(col("word")).as("syms"), col("_freq"))
       .localCheckpoint() // loop: the starting vocabulary every merge reads
-    val alphabet = vocab
-      .select(explode(col("syms")).as("s")).distinct()
-      .orderBy(col("s")).collect().map(_.getString(0)).toSeq
+    val alphabet = DriverRows.collect(vocab
+        .select(explode(col("syms")).as("s")).distinct()
+        .orderBy(col("s")), TermIndex.MaxAlphabet, "trainWordPiece alphabet")
+      .map(_.getString(0)).toSeq
     val merges = scala.collection.mutable.ArrayBuffer.empty[WpMerge]
     var i = 1
     var exhausted = false
@@ -118,14 +109,7 @@ object WordPiece {
       val symCnt = vocab
         .select(explode(col("syms")).as("s"), col("_freq"))
         .groupBy(col("s")).agg(sum(col("_freq")).as("cnt"))
-      val pairCnt = vocab.filter(size(col("syms")) >= 2)
-        .select(col("_freq"), explode(transform(
-          sequence(lit(1), size(col("syms")) - 1),
-          j => struct(element_at(col("syms"), j).as("l"),
-            element_at(col("syms"), j + 1).as("r")))).as("_p"))
-        .groupBy(col("_p.l").as("l"), col("_p.r").as("r"))
-        .agg(sum(col("_freq")).as("cnt"))
-      val top = pairCnt
+      val top = TermIndex.pairCounts(vocab)
         .join(symCnt.select(col("s").as("l"), col("cnt").as("lcnt")), "l")
         .join(symCnt.select(col("s").as("r"), col("cnt").as("rcnt")), "r")
         .select(col("l"), col("r"), col("cnt"),
@@ -143,9 +127,11 @@ object WordPiece {
           top(0).getLong(2), top(0).getLong(3))
         merges += WpMerge(i.toLong, l, r, cnt, score)
         val m = l + r.stripPrefix("##")
+        // the BPE merge fold, with the WordPiece join rule: merged token
+        // = left ++ right-without-'##'
         vocab = vocab
-          .select(applyMerge(col("syms"), lit(l), lit(r), lit(m)).as("syms"),
-            col("_freq"))
+          .select(TermIndex.applyMerge(col("syms"), lit(l), lit(r), lit(m))
+            .as("syms"), col("_freq"))
         if (i % 3 == 0) vocab = vocab.localCheckpoint() // loop: lineage cut
         i += 1
       }

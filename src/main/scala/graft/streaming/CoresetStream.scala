@@ -1,9 +1,10 @@
 package graft.streaming
 
-import graft.operators.Coreset
+import graft.operators.{Coreset, DriverRows}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming k-center maintenance — the DOUBLING ALGORITHM for
   * incremental k-center (Charikar, Chekuri, Feder & Motwani 1997,
@@ -77,7 +78,7 @@ object CoresetStream {
       // under a different k holds a center set whose |C| <= k invariant
       // and doubling history were maintained under DIFFERENT semantics
       // — refuse loudly instead of silently violating the bound
-      val snap = snapshotRows(spark, storeDir, beforeBatch = Some(batchId))
+      val snap = snapshotRows(spark, storeDir, Some(batchId), k)
       snap.flatMap(kOf).foreach { sk =>
         require(sk == k,
           s"store $storeDir was written with k=$sk; " +
@@ -117,15 +118,21 @@ object CoresetStream {
 
   private val DriverChunk = 8192
 
+  /** The state slice [[writeState]] writes: one row per center. */
+  private[graft] val StateSchema = StructType.fromDDL(
+    "ord INT, id BIGINT, vec ARRAY<DOUBLE>, r_sq DOUBLE, k INT")
+
   /** The latest snapshot's rows (ord-ordered), read ONCE per batch —
-    * the knob guard and the state read share it.
+    * the knob guard and the state read share it. A snapshot holds at
+    * most k centers, so one written under a larger k fails loud here.
     */
   private def snapshotRows(spark: SparkSession, storeDir: String,
-      beforeBatch: Option[Long]): Option[Array[Row]] =
+      beforeBatch: Option[Long], k: Int): Option[Array[Row]] =
     SliceStore.latest(storeDir, "state", beforeBatch.getOrElse(Long.MaxValue))
       .map { b =>
-        spark.read.parquet(SliceStore.path(storeDir, "state", b))
-          .orderBy(col("ord")).collect()
+        DriverRows.collect(spark.read.schema(StateSchema)
+            .parquet(SliceStore.path(storeDir, "state", b)).orderBy(col("ord")),
+          k, s"CoresetStream state snapshot $b of $storeDir (k=$k)")
       }
 
   private def stateOf(rows: Array[Row]): CoverState =
@@ -135,16 +142,12 @@ object CoresetStream {
         r.getAs[Seq[Double]]("vec").toArray)).toVector,
       rows.head.getAs[Double]("r_sq"))
 
-  private def kOf(rows: Array[Row]): Option[Int] =
-    rows.headOption.filter(_.schema.fieldNames.contains("k"))
-      .map(_.getAs[Int]("k"))
-
-  /** The k a store's latest snapshot was written under; None for an
-    * empty store (or a pre-k-column legacy snapshot).
+  /** The k a snapshot was written under; None for an empty snapshot
+    * (or a pre-k-column legacy one, whose k reads back null).
     */
-  private[graft] def knobsOf(spark: SparkSession, storeDir: String,
-      beforeBatch: Option[Long] = None): Option[Int] =
-    snapshotRows(spark, storeDir, beforeBatch).flatMap(kOf)
+  private def kOf(rows: Array[Row]): Option[Int] =
+    rows.headOption.filterNot(_.isNullAt(StateSchema.fieldIndex("k")))
+      .map(_.getAs[Int]("k"))
 
   /** The next <= `limit` potential state-changers with id > `afterId`
     * under the CURRENT state, in ascending-id order (the deterministic
@@ -223,18 +226,21 @@ object CoresetStream {
       storeDir, "state", batchId)
   }
 
-  /** Latest state snapshot, optionally restricted to batches strictly
-    * before `beforeBatch` (the redelivery guard). No snapshot yet is
-    * the VALID empty state, not an AnalysisException.
+  /** Latest state snapshot of a store maintained with `k`, optionally
+    * restricted to batches strictly before `beforeBatch` (the redelivery
+    * guard). No snapshot yet is the VALID empty state, not an
+    * AnalysisException.
     */
-  def readState(spark: SparkSession, storeDir: String,
+  def readState(spark: SparkSession, storeDir: String, k: Int,
       beforeBatch: Option[Long] = None): CoverState =
-    snapshotRows(spark, storeDir, beforeBatch).map(stateOf).getOrElse(Empty)
+    snapshotRows(spark, storeDir, beforeBatch, k).map(stateOf).getOrElse(Empty)
 
-  /** External readout of the maintained centers: (ord, id, r_sq). */
-  def centers(spark: SparkSession, storeDir: String): DataFrame = {
+  /** External readout of the centers a store maintained with `k`
+    * holds: (ord, id, r_sq).
+    */
+  def centers(spark: SparkSession, storeDir: String, k: Int): DataFrame = {
     import spark.implicits._
-    val st = readState(spark, storeDir)
+    val st = readState(spark, storeDir, k)
     st.centers.zipWithIndex
       .map { case ((id, _), ord) => (ord.toLong, id, st.rSq) }
       .toDF("ord", "id", "r_sq")

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import graft.operators.MaxCover
+import graft.operators.{DriverRows, MaxCover}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 
 /** Streaming coverage-based selection — THRESHOLD submodular
   * maximization, the core subroutine of sieve-streaming (Badanidiyuru,
@@ -70,13 +71,14 @@ object CoverStream {
       // meaningless against new batches — and a redelivered batch
       // would recompute a different snapshot. Refuse loudly rather
       // than silently reinterpret the old state.
-      knobsOf(spark, storeDir, beforeBatch = Some(batchId)).foreach {
+      val snap = latestSnapshot(spark, storeDir, Some(batchId))
+      snap.map(knobs).foreach {
         case (sk, st, sb) => require(sk == k && st == tau && sb == buckets,
           s"store $storeDir was written with (k=$sk, tau=$st, " +
             s"buckets=$sb); refusing to continue it with (k=$k, " +
             s"tau=$tau, buckets=$buckets)")
       }
-      val prior = readState(spark, storeDir, beforeBatch = Some(batchId))
+      val prior = snap.map(stateOf).getOrElse(Empty)
       val next =
         if (prior.selected.length >= k) prior // full: nothing can accept
         else insertAll(prior,
@@ -85,6 +87,12 @@ object CoverStream {
     }
   }
 
+  /** Survivors one micro-batch collects: the batch's novelty volume,
+    * which the sequential accept/reject needs on the driver. The largest
+    * reached is 60, CoverStreamSpec's batches (no query runs a stream).
+    */
+  private val MaxSurvivors = 10000
+
   /** Per-doc distinct bucket sets with singleton coverage >= τ, in
     * ascending-id order. Exactness: marginal <= singleton and the
     * covered set only grows, so below-τ singletons are sequentially
@@ -92,14 +100,14 @@ object CoverStream {
     */
   private def survivors(batch: DataFrame, textCol: String, idCol: String,
       tau: Long, buckets: Int): Seq[(Long, Array[Long])] =
-    MaxCover.featurePairs(batch, textCol, idCol, buckets)
-      // cast defensively (the CoresetStream discipline): featurePairs
-      // aliases the caller's id column unchanged, so an IntegerType id
-      // would make the driver-side getLong throw and kill the stream
-      .groupBy(col("id").cast("long").as("id"))
-      .agg(collect_set(col("bucket")).as("bs"))
-      .filter(size(col("bs")) >= tau)
-      .orderBy(col("id")).collect()
+    DriverRows.collect(MaxCover.featurePairs(batch, textCol, idCol, buckets)
+        // cast defensively (the CoresetStream discipline): featurePairs
+        // aliases the caller's id column unchanged, so an IntegerType id
+        // would make the driver-side getLong throw and kill the stream
+        .groupBy(col("id").cast("long").as("id"))
+        .agg(collect_set(col("bucket")).as("bs"))
+        .filter(size(col("bs")) >= tau)
+        .orderBy(col("id")), MaxSurvivors, s"CoverStream survivors (tau=$tau)")
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray.sorted)).toSeq
 
   /** Sequential threshold accept/reject — the published rule. */
@@ -128,35 +136,41 @@ object CoverStream {
       storeDir, "state", batchId)
   }
 
+  /** The state slice [[writeState]] writes: one row per snapshot. */
+  private[graft] val StateSchema = StructType.fromDDL(
+    "selected ARRAY<BIGINT>, covered ARRAY<BIGINT>, k INT, tau BIGINT, buckets INT")
+
   /** The (k, tau, buckets) a store's latest snapshot was written under;
     * None for an empty store.
     */
   private[graft] def knobsOf(spark: SparkSession, storeDir: String,
       beforeBatch: Option[Long] = None): Option[(Int, Long, Int)] =
-    latestSnapshot(spark, storeDir, beforeBatch)
-      .map(r => (r.getAs[Int]("k"), r.getAs[Long]("tau"),
-        r.getAs[Int]("buckets")))
+    latestSnapshot(spark, storeDir, beforeBatch).map(knobs)
+
+  private def knobs(r: Row): (Int, Long, Int) =
+    (r.getAs[Int]("k"), r.getAs[Long]("tau"), r.getAs[Int]("buckets"))
 
   /** Latest snapshot row strictly before `beforeBatch` (the redelivery
-    * guard); None when no snapshot qualifies.
+    * guard), read once per batch — the knob guard and the state read
+    * share it; None when no snapshot qualifies.
     */
   private def latestSnapshot(spark: SparkSession, storeDir: String,
       beforeBatch: Option[Long]): Option[Row] =
     SliceStore.latest(storeDir, "state", beforeBatch.getOrElse(Long.MaxValue))
       .flatMap { b =>
-        spark.read.parquet(SliceStore.path(storeDir, "state", b))
-          .collect().headOption
+        DriverRows.collect(spark.read.schema(StateSchema)
+            .parquet(SliceStore.path(storeDir, "state", b)), 1,
+          s"CoverStream state snapshot $b of $storeDir").headOption
       }
 
   /** No snapshot yet is the VALID empty state. */
   def readState(spark: SparkSession, storeDir: String,
       beforeBatch: Option[Long] = None): CoverState =
-    latestSnapshot(spark, storeDir, beforeBatch) match {
-      case None => Empty
-      case Some(r) => CoverState(
-        r.getSeq[Long](r.fieldIndex("selected")).toVector,
-        r.getSeq[Long](r.fieldIndex("covered")).toSet)
-    }
+    latestSnapshot(spark, storeDir, beforeBatch).map(stateOf).getOrElse(Empty)
+
+  private def stateOf(r: Row): CoverState =
+    CoverState(r.getSeq[Long](r.fieldIndex("selected")).toVector,
+      r.getSeq[Long](r.fieldIndex("covered")).toSet)
 
   /** External readout: (ord, id, covered_total). */
   def selection(spark: SparkSession, storeDir: String): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Dsir
+import graft.operators.{Dsir, DriverRows}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -47,10 +47,9 @@ object DsirStream {
     // The model is <= B rows by construction (Dsir.modelTerms emits at
     // most one per bucket) — collect it, bounded, and rebuild a
     // driver-owned local relation instead.
-    val rows = terms.limit(buckets + 1).collect()
-    require(rows.length <= buckets,
-      s"DsirStream: frozen model has more than buckets=$buckets term " +
-        "rows — expected at most one per bucket (Dsir.modelTerms)")
+    val rows = DriverRows.collect(terms, buckets,
+      s"DsirStream: frozen model with buckets=$buckets (expected at " +
+        "most one term row per bucket, Dsir.modelTerms)")
     val frozen = terms.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), terms.schema)
     SliceStore.start(docs, checkpointDir) { (batch, batchId) =>

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{IngestionReport, IngestionService, ParserConfig}
+import graft.operators.{DriverRows, IngestionReport, IngestionService, ParserConfig}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -35,11 +35,18 @@ object IngestStream {
   private[streaming] def isFullUpdate(path: String): Boolean =
     path.contains(".full.")
 
-  /** Arrival stream over `dir`: one row per newly-listed file path. */
-  def fromDropDirectory(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Int = 1): DataFrame =
+  /** Files one micro-batch admits: the per-batch collect of distinct
+    * paths is bounded by `maxFilesPerTrigger` (SCALE.md), so this is
+    * also the bound [[start]] collects under.
+    */
+  private val FilesPerTrigger = 1
+
+  /** Arrival stream over `dir`: one row per newly-listed file path,
+    * [[FilesPerTrigger]] files per micro-batch.
+    */
+  def fromDropDirectory(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.format("text")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .option("maxFilesPerTrigger", FilesPerTrigger)
       .load(dir)
       .select(col("_metadata.file_path").as("file_path"))
 
@@ -102,8 +109,10 @@ object IngestStream {
       (batch, batchId) =>
         if (!SliceStore.latest(checkpointDir, Processed, batchId + 1)
             .contains(batchId)) {
-          val files = batch.select(col("file_path")).distinct()
-            .collect().map(_.getString(0)).sorted
+          val files = DriverRows.collect(
+              batch.select(col("file_path")).distinct(), FilesPerTrigger,
+              "IngestStream micro-batch files")
+            .map(_.getString(0)).sorted
           files.foreach { path =>
             // per-file token (batch-qualified, path-hashed) committed
             // atomically WITH the ingest's store publish — marker

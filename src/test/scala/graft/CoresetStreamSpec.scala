@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.CoresetStream
+import graft.streaming.{CoresetStream, SliceStore}
 import org.apache.spark.sql.functions._
 
 /** Streaming k-center (doubling algorithm): bounded state, the
@@ -31,7 +31,7 @@ class CoresetStreamSpec extends SparkSpec {
     val df = pts.toDF("vec_id", "embedding").coalesce(1)
     CoresetStream.processBatch(spark, df, "embedding", "vec_id", k, store,
       batchId = 0L, chunk = 3)
-    val got = CoresetStream.readState(spark, store)
+    val got = CoresetStream.readState(spark, store, k)
     val want = CoresetStream.insertAll(CoresetStream.Empty,
       pts.sortBy(_._1).map { case (i, v) => (i, v.toArray) }, k) // stable sort
     assert(got.centers.map(_._1) === want.centers.map(_._1),
@@ -58,7 +58,7 @@ class CoresetStreamSpec extends SparkSpec {
         input.addData(b.toSeq: _*); q.processAllAvailable()
       }
     } finally q.stop()
-    val got = CoresetStream.readState(spark, store)
+    val got = CoresetStream.readState(spark, store, k)
     // pure sequential reference: every point in stream order, no
     // distributed entry filter anywhere
     val want = CoresetStream.insertAll(CoresetStream.Empty,
@@ -92,7 +92,7 @@ class CoresetStreamSpec extends SparkSpec {
       CoresetStream.processBatch(spark, df, "embedding", "vec_id", k,
         store, i.toLong)
     }
-    val got = CoresetStream.readState(spark, store)
+    val got = CoresetStream.readState(spark, store, k)
     val want = CoresetStream.insertAll(CoresetStream.Empty,
       emb.map { case (i, v) => (i, v.map(_.toDouble).toArray) }.toSeq, k)
     assert(got.centers.map(_._1) === want.centers.map(_._1))
@@ -106,26 +106,48 @@ class CoresetStreamSpec extends SparkSpec {
     val b1 = stream.slice(30, 60).toDF("vec_id", "embedding")
     CoresetStream.processBatch(spark, b0, "embedding", "vec_id", k, store, 0L)
     CoresetStream.processBatch(spark, b1, "embedding", "vec_id", k, store, 1L)
-    val after = CoresetStream.readState(spark, store)
+    val after = CoresetStream.readState(spark, store, k)
     // redeliver batch 1: must read strictly-before state and rewrite
     // the same snapshot
     CoresetStream.processBatch(spark, b1, "embedding", "vec_id", k, store, 1L)
-    val replayed = CoresetStream.readState(spark, store)
+    val replayed = CoresetStream.readState(spark, store, k)
     assert(replayed.centers.map(_._1) === after.centers.map(_._1))
     assert(replayed.rSq === after.rSq)
   }
 
   test("empty store is the valid empty state; centers readout matches") {
     val store = tmpDir("coresetstore3")
-    assert(CoresetStream.readState(spark, store).centers.isEmpty)
-    assert(CoresetStream.centers(spark, store).isEmpty)
+    assert(CoresetStream.readState(spark, store, 3).centers.isEmpty)
+    assert(CoresetStream.centers(spark, store, 3).isEmpty)
     CoresetStream.processBatch(spark,
       stream.take(10).toDF("vec_id", "embedding"),
       "embedding", "vec_id", 3, store, 0L)
-    val st = CoresetStream.readState(spark, store)
-    val out = CoresetStream.centers(spark, store)
+    val st = CoresetStream.readState(spark, store, 3)
+    val out = CoresetStream.centers(spark, store, 3)
       .orderBy(col("ord")).collect()
     assert(out.map(_.getAs[Long]("id")).toSeq === st.centers.map(_._1))
     assert(out.forall(_.getAs[Double]("r_sq") === st.rSq))
+  }
+
+  test("later batches read the state under its declared schema: no footer-scan job") {
+    val store = tmpDir("coresetstore-schema")
+    val k = 5
+    def batch(b: Int) = stream.slice(40 * b, 40 * b + 40).toDF("vec_id", "embedding")
+    CoresetStream.processBatch(spark, batch(0), "embedding", "vec_id", k, store, 0L)
+    (1 to 2).foreach { b =>
+      val (_, names) = jobNamesOf(CoresetStream.processBatch(spark, batch(b),
+        "embedding", "vec_id", k, store, b.toLong))
+      assert(!names.exists(_.startsWith("parquet at CoresetStream.scala")),
+        s"batch $b ran a schema-inference job: ${names.mkString(", ")}")
+    }
+    // the schema-less read of the same snapshot pays that job
+    val (inferred, inferNames) =
+      jobNamesOf(spark.read.parquet(SliceStore.path(store, "state", 2L)))
+    assert(inferNames.exists(_.startsWith("parquet at ")), inferNames.mkString(", "))
+    val rows = inferred.orderBy(col("ord")).collect()
+    val st = CoresetStream.readState(spark, store, k)
+    assert(st.centers.map(c => (c._1, c._2.toSeq)) ===
+      rows.map(r => (r.getAs[Long]("id"), r.getAs[Seq[Double]]("vec"))).toVector)
+    assert(rows.forall(_.getAs[Double]("r_sq") == st.rSq))
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.MaxCover
-import graft.streaming.CoverStream
+import graft.streaming.{CoverStream, SliceStore}
 import org.apache.spark.sql.functions._
 
 /** Streaming threshold max-coverage (the sieve-streaming subroutine):
@@ -136,5 +136,27 @@ class CoverStreamSpec extends SparkSpec {
     val want = sequential(real, k, tau)
     assert(got.selected === want.selected)
     assert(got.covered === want.covered)
+  }
+
+  test("later batches read the state under its declared schema: no footer-scan job") {
+    val store = tmpDir("coverstore-schema")
+    def batch(b: Int) = docs.slice(40 * b, 40 * b + 40).toDF("doc_id", "text")
+    CoverStream.processBatch(spark, batch(0), "text", "doc_id", 8, 2L, B, store, 0L)
+    (1 to 2).foreach { b =>
+      val (_, names) = jobNamesOf(CoverStream.processBatch(spark, batch(b),
+        "text", "doc_id", 8, 2L, B, store, b.toLong))
+      assert(!names.exists(_.startsWith("parquet at CoverStream.scala")),
+        s"batch $b ran a schema-inference job: ${names.mkString(", ")}")
+    }
+    // the schema-less read of the same snapshot pays that job
+    val (inferred, inferNames) =
+      jobNamesOf(spark.read.parquet(SliceStore.path(store, "state", 2L)))
+    assert(inferNames.exists(_.startsWith("parquet at ")), inferNames.mkString(", "))
+    val r = inferred.collect().head
+    assert(CoverStream.readState(spark, store) === CoverStream.CoverState(
+      r.getSeq[Long](r.fieldIndex("selected")).toVector,
+      r.getSeq[Long](r.fieldIndex("covered")).toSet))
+    assert(CoverStream.knobsOf(spark, store) ===
+      Some((r.getAs[Int]("k"), r.getAs[Long]("tau"), r.getAs[Int]("buckets"))))
   }
 }

@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 /** Guards the harness surface: one-off profiling mains, private
   * session builders, hand-rolled streaming sinks, hand-rolled store
-  * version builds, schema-less reads and unaudited `localCheckpoint`
-  * pins may not accumulate in the library again. Every harness main
-  * that should match the bench builds Bench.session; an A/B of one
-  * query is `runMain graft.ProfQ`, of two commits perfbench.
+  * version builds, schema-less reads, unaudited `localCheckpoint`
+  * pins and unbounded driver collects may not accumulate in the
+  * library again. Every harness main that should match the bench
+  * builds Bench.session; an A/B of one query is `runMain graft.ProfQ`,
+  * of two commits perfbench.
   */
 class HarnessMainsSpec extends AnyFunSuite {
 
@@ -53,8 +54,6 @@ class HarnessMainsSpec extends AnyFunSuite {
     * many reader chains, and why a cached schema would not pay there.
     */
   private val schemaLessReadAllowed: Map[String, (Int, String)] = Map(
-    "CoverStream" -> (1, "reads the newest state snapshot, a new slice path every batch, so a cache would always miss"),
-    "CoresetStream" -> (1, "reads the newest state snapshot, a new slice path every batch, so a cache would always miss"),
     "GenData" -> (1, "data generator main: copies two fixed tables once per run"),
     "ProfQ" -> (1, "profiling main: one warm-up scan per JVM, before any query runs"),
     "SparkEntryEvents" -> (1, "q_schema_evolution: the mergeSchema footer inference over two generations is what it checks"))
@@ -123,6 +122,66 @@ class HarnessMainsSpec extends AnyFunSuite {
     "SparkEntryIngest" -> Map("reuse" -> 1),
     "TermIndex" -> Map("loop" -> 3, "reuse" -> 3),
     "WordPiece" -> Map("loop" -> 2))
+
+  /** Basenames of the source files under `graft/operators` and
+    * `graft/streaming`, where every data-dependent collect goes
+    * through `DriverRows`.
+    */
+  private lazy val collectScope: Set[String] =
+    Seq("operators", "streaming").flatMap { d =>
+      val s = Files.list(mainRoot.resolve("graft").resolve(d))
+      try s.iterator().asScala.toList.map(_.getFileName.toString)
+        .filter(_.endsWith(".scala")).map(_.stripSuffix(".scala"))
+      finally s.close()
+    }.toSet
+
+  /** Each `.collect()` call of `lines` (one file's trimmed lines) as
+    * (1-based line, chain text): the code up to the call, extended
+    * back a line at a time while the chain so far closes more
+    * parentheses than it opens or starts with a `.` (a continuation).
+    * Comment lines and trailing `//` comments are not code.
+    */
+  private def collectChains(lines: Seq[String]): Seq[(Int, String)] = {
+    val code = lines.map(l => if (isComment(l)) "" else l.replaceAll("\\s+//.*$", ""))
+    def open(t: String) = t.count(_ == '(') - t.count(_ == ')')
+    code.indices.flatMap { i =>
+      val call = ".collect()"
+      Iterator.iterate(code(i).indexOf(call))(p => code(i).indexOf(call, p + 1))
+        .takeWhile(_ >= 0).map { p =>
+          var chain = code(i).take(p + call.length)
+          var j = i
+          while (j > 0 && (open(chain) < 0 || chain.trim.startsWith("."))) {
+            j -= 1
+            chain = code(j) + "\n" + chain
+          }
+          (i + 1, chain)
+        }
+    }
+  }
+
+  /** True when `chain` has a `.limit(` outside every parenthesis: the
+    * collected frame itself is cut to k rows, not a frame nested in an
+    * argument.
+    */
+  private def limitsItself(chain: String): Boolean = {
+    var depth = 0
+    chain.indices.reverse.exists { p =>
+      chain(p) match {
+        case ')' => depth += 1
+        case '(' => depth -= 1
+        case _ =>
+      }
+      depth == 0 && chain.startsWith(".limit(", p)
+    }
+  }
+
+  /** `file:line` of every `.collect()` in `code` whose chain does not
+    * cut its own frame with `limit`.
+    */
+  private def unboundedCollects(code: Map[String, Seq[String]]): Seq[String] =
+    code.toSeq.sortBy(_._1).flatMap { case (f, lines) =>
+      collectChains(lines).collect { case (n, chain) if !limitsItself(chain) => s"$f:$n" }
+    }
 
   /** Member methods (two-space-indented `def`s) of `file` under the
     * main source root with a code line calling `name(`; the definition
@@ -228,6 +287,38 @@ class HarnessMainsSpec extends AnyFunSuite {
       "// a comment line naming localCheckpoint() is no pin")
     assert(pinClasses(src) ===
       Seq(Some("reuse"), Some("loop"), Some("determinism"), None))
+  }
+
+  test("a data-dependent collect appears only in DriverRows") {
+    // operators/ and streaming/ pull driver state through
+    // DriverRows.collect/atMost with a stated bound; only a chain that
+    // cuts its own frame with limit(k) collects directly
+    val scoped = linesByFile.filter { case (f, _) => collectScope(f) }
+    assert(scoped.contains("CoverStream") && scoped.contains("TermIndex"))
+    val off = unboundedCollects(scoped - "DriverRows")
+    assert(off.isEmpty, s"unbounded collects outside DriverRows: ${off.mkString(", ")}")
+    assert(unboundedCollects(scoped.filter(_._1 == "DriverRows")).size == 1)
+  }
+
+  test("the collect guard admits limit(..).collect() chains and nothing else") {
+    val src = Seq(
+      "val top = df.orderBy(col(\"a\").desc)", // 1
+      ".limit(1).collect()", // 2: admitted across lines
+      "val xs = df.groupBy(", // 3
+      "col(\"a\"))", // 4
+      ".agg(count(lit(1)))", // 5
+      ".collect()", // 6: no limit
+      "val s = df.orderBy(c).limit(n)", // 7
+      ".select(x)", // 8
+      ".collect()", // 9: admitted, the limit is the chain's own
+      "val y = a.join(b.limit(5)).collect()", // 10: limit nested in an argument
+      "// a comment naming df.collect() is no call", // 11
+      "val z = xs.collect { case r => r }", // 12: a Scala collection collect
+      "val w = d.collect() // .limit(1)") // 13: a comment is not a limit
+    assert(unboundedCollects(Map("Src" -> src)) === Seq("Src:6", "Src:10", "Src:13"))
+    val fresh = Map("Fresh" -> Seq("val rows = spark.table(\"t\")", ".filter(col(\"x\") > 0)",
+      ".collect()"))
+    assert(unboundedCollects(fresh) === Seq("Fresh:3"))
   }
 
   test("query-name validation names every unknown query and passes known ones") {

@@ -169,22 +169,27 @@ class LinkGraphSpec extends SparkSpec {
     assert(ringBounded.toSeq === ringDist.toSeq)
   }
 
-  test("pageRankBounded collects at most 2 * maxNodes + 1 edge rows " +
+  test("pageRankBounded pulls at most 2 * maxNodes + 1 edge rows per task " +
       "before falling back on an over-bound graph") {
-    // a 40-node ring: indegree 1 everywhere, so only maxNodes = 5 rules
-    // it out; every edge row the driver pulls passes the counting UDF.
-    // A range source, not a local Seq: the optimizer folds a projection
-    // over local rows on the driver, running the UDF on every row
+    // a 400-node ring in 4 partitions: indegree 1 everywhere, so only
+    // maxNodes = 5 rules it out; every edge row a task pulls passes the
+    // counting UDF. A range source, not a local Seq: the optimizer folds
+    // a projection over local rows on the driver, running the UDF on
+    // every row
     val pulled = spark.sparkContext.longAccumulator("edge rows pulled")
     val count = udf { (v: Long) => pulled.add(1); v }.asNondeterministic()
-    val ring = spark.range(40).select(count(col("id")).as("src"),
-      pmod(col("id") + 1, lit(40L)).as("dst"))
+    val ring = spark.range(0, 400, 1, 4).select(count(col("id")).as("src"),
+      pmod(col("id") + 1, lit(400L)).as("dst"))
     val bounded = LinkGraph.pageRankBounded(ring, "src", "dst",
         iters = 3, maxNodes = 5)
       .orderBy("node").collect().map(r => (r.getLong(0), r.getDouble(1)))
-    // the fallback's pageRank pins the edge list once: 40 more rows
-    assert(pulled.value - 40 <= 2 * 5 + 1,
-      s"${pulled.value - 40} edge rows pulled for a bound of 11")
+    // the fallback's pageRank pins the edge list once: 400 more rows
+    val perTask = 2 * 5 + 1
+    assert(pulled.value - 400 <= 4 * perTask,
+      s"${pulled.value - 400} edge rows pulled for 4 tasks of at most $perTask")
+    // the upstream stays parallel: no single task reads the whole input
+    assert(pulled.value - 400 > perTask,
+      s"${pulled.value - 400} edge rows pulled: the bounded collect ran as one task")
     val dist = LinkGraph.pageRank(ring, "src", "dst", iters = 3)
       .orderBy("node").collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(bounded.toSeq === dist.toSeq)

@@ -362,19 +362,25 @@ class PlanPropertiesSpec extends SparkSpec {
 
   test("max-cover round: literal covered-set filter, combinable gain agg, TakeOrdered argmax") {
     // one greedy round over the materialized pair table, exactly as
-    // greedyMaxCover builds it: the covered set rides as an in-set
-    // literal filter, gains are a map-side-combinable hash aggregate,
-    // the argmax is a TakeOrdered — no join anywhere and only the ONE
-    // aggregate exchange (the pair-table distinct is amortized into the
-    // one-time materialization, like the production localCheckpoint)
+    // the greedy loop builds it (greedyMaxCover is its unit-cost case):
+    // the covered set rides as an in-set literal filter, gains are a
+    // map-side-combinable hash aggregate, the argmax is a TakeOrdered —
+    // no join anywhere and only the ONE aggregate exchange (the
+    // pair-table distinct is amortized into the one-time
+    // materialization, like the production localCheckpoint)
     import graft.operators.MaxCover
     val pairs = MaxCover.featurePairs(
       spark.read.parquet(s"$sf/documents.parquet"), "text", "doc_id", 1024)
       .localCheckpoint()
+      .withColumn("cost", lit(1L)) // greedyMaxCover's unit cost
     val round = pairs
+      .filter(col("cost") <= lit(Long.MaxValue - 3L))
       .filter(!col("bucket").isInCollection((1L to 40L).toSeq))
-      .groupBy(col("id")).agg(count(lit(1)).as("gain"))
-      .orderBy(col("gain").desc, col("id")).limit(1)
+      .groupBy(col("id"))
+      .agg(count(lit(1)).as("gain"), max(col("cost")).as("cost"))
+      .withColumn("r", expr("(gain * 1000000) div cost"))
+      .orderBy(col("r").desc, col("id"))
+      .limit(1)
     val plan = round.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
       s"argmax is not a TakeOrdered:\n$plan")

@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.UUID
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 /** Shared local session for all suites. */
 object TestSpark {
@@ -29,19 +29,28 @@ trait SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Runs `body` and counts the Spark jobs it launched. Jobs are told
-    * apart by a job group, and a fence job in a second group, seen last
-    * by the same listener, proves every earlier job-start event arrived.
-    */
+  /** Runs `body` and counts the Spark jobs it launched. */
   def jobsOf[T](body: => T): (T, Int) = {
+    val (out, names) = jobNamesOf(body)
+    (out, names.size)
+  }
+
+  /** Runs `body` and names the Spark jobs it launched, in start order:
+    * each job's final-stage name, the call site Spark records (e.g.
+    * `parquet at TableReads.scala:64` for a schema-inference job). Jobs
+    * are told apart by a job group, and a fence job in a second group,
+    * seen last by the same listener, proves every earlier job-start
+    * event arrived.
+    */
+  def jobNamesOf[T](body: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
     val group = s"counted-${UUID.randomUUID()}"
-    val jobs = new AtomicInteger(0)
+    val jobs = new ConcurrentLinkedQueue[String]()
     val fenced = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(g) if g == group => jobs.incrementAndGet()
+          case Some(g) if g == group => jobs.add(js.stageInfos.maxBy(_.stageId).name)
           case Some(g) if g == s"$group-fence" => fenced.countDown()
           case _ =>
         }
@@ -53,7 +62,7 @@ trait SparkSpec extends AnyFunSuite {
       sc.setJobGroup(s"$group-fence", "fence")
       sc.parallelize(Seq(1), 1).count()
       assert(fenced.await(60, TimeUnit.SECONDS), "fence job never reached the listener")
-      (out, jobs.get)
+      (out, jobs.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
