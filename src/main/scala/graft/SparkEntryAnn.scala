@@ -122,8 +122,9 @@ private[graft] trait SparkEntryAnn { this: SparkEntry.type =>
     }
 
   private[graft] def readPqCodebooks(s: SparkSession, base: String): Array[Array[Array[Double]]] = {
-    val rows = TableReads.read(s, s"$base/codebooks.parquet")
-      .orderBy(col("m"), col("code")).collect()
+    // pqCodebooksPath writes m·ksub = 8·16 codebook rows
+    val rows = DriverRows.collect(TableReads.read(s, s"$base/codebooks.parquet")
+      .orderBy(col("m"), col("code")), 8L * 16, "PQ codebook rows (m = 8, ksub = 16)")
     val m = rows.map(_.getInt(0)).max + 1
     Array.tabulate(m) { i =>
       rows.filter(_.getInt(0) == i).map(_.getSeq[Double](2).toArray)

@@ -370,7 +370,7 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
     * per subset), keeping candidate generation sub-quadratic. The previous
     * parameterization (pieces=16, single 4-bit chunks) bought provable
     * Hamming-15 completeness with 16-bucket joins — ~N^2/32 candidates, an
-    * all-pairs cross-product in disguise. See Dedup.simHashCandidates.
+    * all-pairs cross-product in disguise. See Dedup.simHashPairsFromSigs.
     */
   private[graft] def dedupSimhash(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents").filter(col("doc_id") < 300)
@@ -937,9 +937,10 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
     */
   private[graft] def annRecallHi(s: SparkSession, d: String): DataFrame = {
     val emb = t(s, d, "embeddings")
-    val qvs = emb.filter(col("vec_id").isin(annPanelIds: _*))
-      .select(col("vec_id"), Similarity.toDouble(col("embedding")).as("e"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val qvs = DriverRows.collect(emb.filter(col("vec_id").isin(annPanelIds: _*))
+        .select(col("vec_id"), Similarity.toDouble(col("embedding")).as("e")),
+        annPanelIds.size, "ANN recall panel vectors")
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     val hits = annPanelIds.map { qid =>
       // r12 ADVICE: fail with a diagnosable message (not a bare
       // NoSuchElementException) if a generated dataset ever lacks a
@@ -1187,7 +1188,9 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
       .localCheckpoint()
     cents.coalesce(1).write.mode("overwrite")
       .parquet(s"$ivfIncrDir/centroids.parquet")
-    cents.collect().map(_.getSeq[Double](1).toArray)
+    // ivfStorePath trains nlist = 8 cells
+    DriverRows.collect(cents, 8, "IVF store centroids (nlist = 8)")
+      .map(_.getSeq[Double](1).toArray)
   }
 
   /** The 5-query panel's vectors, collected with the missing-vector
@@ -1196,9 +1199,10 @@ private[graft] trait SparkEntryDedup { this: SparkEntry.type =>
     */
   private[graft] def panelVectors(s: SparkSession, d: String,
       panel: Seq[Long]): Long => Seq[Double] = {
-    val qvs = t(s, d, "embeddings").filter(col("vec_id").isin(panel: _*))
-      .select(col("vec_id"), Similarity.toDouble(col("embedding")))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val qvs = DriverRows.collect(t(s, d, "embeddings").filter(col("vec_id").isin(panel: _*))
+        .select(col("vec_id"), Similarity.toDouble(col("embedding"))),
+        panel.size, "panel vectors")
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     qid => qvs.getOrElse(qid,
       sys.error(s"panel vector $qid missing from embeddings"))
   }

@@ -151,9 +151,7 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
     * unpartitioned global window survives at any scale: the running
     * sums decompose over the DAY (the output grain) into per-day local
     * sweeps — a day-partitioned window — plus a #days-row carry prefix,
-    * inlined here as one linear pipeline (the generic operator for
-    * running-sum columns over keys with no such natural bucket is
-    * [[operators.GlobalIndex.withRunningSums]]). Days fully spanned by
+    * inlined here as one linear pipeline. Days fully spanned by
     * open sessions get zero-delta midnight sweep points
     * (sequence+explode per multi-day session), so carry-in concurrency
     * is reported even when no boundary instant lands on the day.
@@ -349,8 +347,7 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
     * file-skipping stats a Z-ordered table would expose to min/max
     * pruning. Pure integer shift/and arithmetic, exact on both engines;
     * the oracle replays the identical formula via [[operators.ZOrder
-    * .zkeySql]]. ZOrderSpec covers the layout itself (range exchange +
-    * in-partition sort) and quantifies the pruning win vs a single-dim
+    * .zkeySql]]. ZOrderSpec quantifies the pruning win vs a single-dim
     * sort.
     */
   private[graft] def zorderQ(s: SparkSession, d: String): DataFrame =
@@ -365,7 +362,7 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
       .orderBy(col("zbucket"))
 
   /** Sparse related-documents retrieval
-    * ([[operators.TermIndex.sparseKnn]]): top-5 cosine neighbors under
+    * ([[operators.TermIndex.sparseKnnFromIndex]]): top-5 cosine neighbors under
     * decimal-exact TF-IDF weights for every doc_id % 100 == 0 query
     * document, over the full corpus. The lexical twin of the dense ANN
     * gates; the oracle replays weights, dots, norms and ranking in SQL.
@@ -531,9 +528,7 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
     * pattern that turns key-range queries into kilobyte manifest
     * lookups. The oracle recomputes the same stats from the source
     * table with the same `div` arithmetic: written-shard stats must
-    * equal source-derived stats or the layout lost rows. The pruning
-    * payoff (PartitionFilters, files actually skipped, differential vs
-    * the full scan) is pinned by ShardManifestSpec.
+    * equal source-derived stats or the layout lost rows.
     */
   private[graft] def shardManifestQ(s: SparkSession, d: String): DataFrame = {
     ShardManifest.writeSharded(
@@ -784,9 +779,8 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
           .cast(DoubleType), 6).as("gini"))
   }
 
-  /** Keyset pagination — the O(page) deep-pagination plan
-    * ([[operators.CatalogQueries.listKeyset]] semantics on the part
-    * catalog): the cursor predicate `(p_name, p_partkey) > (after)`
+  /** Keyset pagination — the O(page) deep-pagination plan on the part
+    * catalog: the cursor predicate `(p_name, p_partkey) > (after)`
     * pushes into the scan and the page is a TakeOrdered top-k, where
     * [[paginateDefault]]'s offset variant must produce and discard
     * every earlier row. Same page contract, O(depth) cheaper at scale.
@@ -945,7 +939,7 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
         (995012L, "capstop capstop capstop alpha1 beta1 gamma1 delta1 zeta1"))
 
   /** STOP-TOKEN-CAPPED set-similarity join under the gate
-    * ([[operators.SetSimJoin.selfJoinTokensCapped]]) — the production
+    * ([[operators.SetSimJoin.capTokens]]) — the production
     * complement the sf1 rehearsal motivated: the uncapped AllPairs
     * gate measured 107x for 10x data on the vocabulary-saturated
     * synthetic (SCALE.md), and the df cap is the standard trade that
@@ -971,9 +965,7 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
         // exchanges, so unpinned the shingle explode runs twice (run 1,
         // this standing build: 3.23 s pinned vs 3.28 s unpinned, medians)
         .localCheckpoint()
-      val kept = tokens.groupBy(col("w")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= 8).select("w")
-      val words = TableReads.overwrite(tokens.join(kept, "w").select("id", "w"),
+      val words = TableReads.overwrite(SetSimJoin.capTokens(tokens, maxDf = 8),
         s"$base/words.parquet")
       SetSimJoin.prefixTable(words, 0.5)
         .write.mode("overwrite").parquet(s"$base/prefix.parquet")
@@ -1105,9 +1097,7 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
   /** Click attribution under the gate — every click matched to the same
     * user's views in the preceding 6 hours. The batch shape is
     * [[operators.RangeJoin.intervalJoin]]'s bucket expansion (shuffle-
-    * partitionable backfill); the incremental twin is the watermarked
-    * stream-stream join [[streaming.EventStreams.attributionJoin]],
-    * differentially tested against this result in EventStreamsSpec.
+    * partitionable backfill).
     */
   private[graft] def clickAttribution(s: SparkSession, d: String): DataFrame = {
     val ev = events(s, d)
@@ -1150,10 +1140,8 @@ private[graft] trait SparkEntryEvents { this: SparkEntry.type =>
     * Recall envelope (documented, not hidden): MinHash banding surfaces
     * high-JACCARD candidates, so a short quote inside a much longer
     * container (high containment, low Jaccard) needs the complete-slice
-    * q_dedup_containment or the exact-duplicate-collapsed
-    * [[operators.Dedup.containmentPairsDistinct]] library path — the
-    * production split is LSH for near-dup mass, chunked/passage LSH for
-    * quote mining.
+    * q_dedup_containment — the production split is LSH for near-dup
+    * mass, chunked/passage LSH for quote mining.
     *
     * Planted sentinel (round-9 ADVICE fix): a dump-and-verify oracle is
     * vacuously green on an EMPTY dump (it only re-checks emitted pairs),

@@ -72,44 +72,4 @@ object CatalogQueries {
         df.withColumn(c, col(c).cast(org.apache.spark.sql.types.DoubleType))
       else df)
   }
-
-  /** Keyset ("seek method") pagination — the scale-correct sibling of
-    * [[list]]'s offset/limit: instead of skipping `offset` rows (which
-    * a distributed engine must still produce and discard, so page N
-    * costs O(N·pageSize) and deep pages melt down), the client passes
-    * the last key it saw and the next page is `WHERE key > last ORDER
-    * BY key LIMIT n` — a predicate that pushes into the scan, so every
-    * page costs the same O(pageSize) regardless of depth. The cursor
-    * key must be a TOTAL order, or pages skip/repeat rows that tie on
-    * the sort key. Here the cursor is `sku` alone: (client_id, sku) is
-    * the reference table's uniqueness contract (the upsert key), so
-    * within a tenant the NON-EMPTY skus form a total order. Anonymous
-    * rows — stored as EMPTY STRINGS '' by the always-insert no-sku path
-    * (DictReader yields '', the DDL forbids NULL) — are NOT unique, so
-    * they have no place in a key ordering: they are EXPLICITLY excluded
-    * (`sku <> ''`, plus `IS NOT NULL` for foreign tables with legacy
-    * NULLs) and reachable via [[list]], whose page one leads with them.
-    * Left implicit, a caller starting at afterSku="" would skip them by
-    * accident of the `>` comparison while a caller resuming from a
-    * stored cursor could never tell whether they were ever visible —
-    * the filter makes "outside the keyset view" a contract, not a
-    * comparison artifact.
-    *
-    * Plan shape: the `sku > after` predicate lands in PushedFilters
-    * (min/max row-group pruning skips every chunk wholly before the
-    * cursor) and the sort+limit plans as TakeOrderedAndProject — a
-    * distributed top-k, never a global sort or an offset scan.
-    */
-  def listKeyset(
-      products: DataFrame,
-      clientId: Int,
-      afterSku: String,
-      limit: Int = DefaultLimit): DataFrame = {
-    require(limit >= 1 && limit <= MaxLimit, s"limit must be in [1,$MaxLimit]")
-    products
-      .filter(col("client_id") === clientId)
-      .filter(col("sku").isNotNull && col("sku") =!= "" && col("sku") > afterSku)
-      .orderBy(col("sku"))
-      .limit(limit)
-  }
 }

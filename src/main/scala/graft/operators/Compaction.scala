@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * (`optimizedPlan.stats.sizeInBytes` — what the parquet footers report),
   * NOT from a `count()` pass: no extra job runs before the rewrite.
   *
-  * [[compactSorted]] additionally range-partitions and sorts by the given
+  * [[compactSorted]] range-partitions and sorts by the given
   * columns, so each output file covers a disjoint key range — that makes
   * parquet min/max row-group pruning effective for key-filtered reads
   * (the "poor man's clustering index" at 100 TB).
@@ -26,20 +26,6 @@ object Compaction {
     require(targetBytes > 0, "targetBytes must be positive")
     val total = df.queryExecution.optimizedPlan.stats.sizeInBytes
     math.max(1L, ((total + targetBytes - 1) / targetBytes).toLong min Int.MaxValue).toInt
-  }
-
-  /** Rewrite `inDir` into `outDir` as ~targetBytes files (round-robin
-    * repartition — even sizes, no key assumption). Returns the planned
-    * file count and the compacted frame.
-    */
-  def compact(
-      spark: SparkSession,
-      inDir: String,
-      outDir: String,
-      targetBytes: Long): (Int, DataFrame) = {
-    val df = TableReads.read(spark, inDir)
-    val n = plannedFileCount(df, targetBytes)
-    (n, TableReads.overwrite(df.repartition(n), outDir))
   }
 
   /** Compact AND cluster: range-partition by `sortCols` and sort within

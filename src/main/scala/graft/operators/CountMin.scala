@@ -56,12 +56,6 @@ object CountMin {
       .groupBy(col("j"), cellOf(col(keyCol), width).as("c"))
       .agg(count(lit(1)).as("n"))
 
-  /** Merge shard sketches: counter matrices add cellwise. */
-  def merge(sketches: Seq[DataFrame]): DataFrame =
-    sketches.reduce(_ unionAll _)
-      .groupBy(col("j"), col("c"))
-      .agg(sum(col("n")).as("n"))
-
   /** Point estimates for the distinct keys of `probes(keyCol)`:
     * min over the d probed cells, absent cells counting 0.
     */

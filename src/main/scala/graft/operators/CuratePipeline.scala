@@ -23,37 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object CuratePipeline {
 
-  /** Streaming curation: the same stages on an unbounded document
-    * stream. The gates and enrichments are stateless per-row expressions
-    * (identical Columns to the batch plan); the one stateful stage —
-    * fingerprint dedup — becomes `dropDuplicatesWithinWatermark` (keeps
-    * the FIRST arrival per fingerprint; the batch window keeps the
-    * min-id row — same surviving fingerprint SET whenever duplicates are
-    * byte-identical content, which is what a content fingerprint means).
-    * Watermark bounds the dedup state, so a perpetual stream curates in
-    * bounded memory.
-    */
-  def curateStream(
-      docs: DataFrame,
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      tsCol: String = "ts",
-      watermark: String = "1 hour",
-      minQuality: Double = 0.7,
-      keepLang: String = "en"): DataFrame =
-    docs
-      .withColumn("_fp", TextAnalysis.fingerprint(col(textCol)))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("_fp")
-      .withColumn("lang_pred", TextAnalysis.langId(col(textCol)))
-      .filter(col("lang_pred") === keepLang)
-      .transform(TextAnalysis.withQuality(_, textCol))
-      .filter(col("quality_score") >= minQuality)
-      .select(col(idCol), col("_fp").as("fingerprint"), col("lang_pred"),
-        col("quality_score"),
-        TextAnalysis.tokenCount(col(textCol)).cast("long").as("ws_tokens"),
-        TextAnalysis.bpeishTokenCount(col(textCol)).cast("long").as("bpeish_tokens"))
-
   /** Materialize a curated corpus for training consumption: assign the
     * deterministic train/valid/test split and write parquet partitioned
     * by split, clustered so each split lands in contiguous files.

@@ -38,12 +38,6 @@ object Dedup {
     docs.groupBy(col(textCol))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Exact dedup that keeps whole representative rows (first by id). */
-  def exactRows(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val w = Window.partitionBy(col(textCol)).orderBy(col(idCol))
-    docs.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
-  }
-
   /** Distinct word n-gram shingle array of a text column — the native
     * [[graft.functions.WordShingles]] expression: one codegen'd pass per
     * row. Documents with fewer than n words yield an empty array.
@@ -148,49 +142,6 @@ object Dedup {
     ab.unionByName(ba)
       .withColumn("containment", round(col("containment"), 4))
       .filter(col("containment") >= minContainment)
-  }
-
-  /** Groups of documents with the IDENTICAL normalized word sequence
-    * (whitespace-collapsed exact duplicates): (hash, ids, rep) with
-    * rep = min id. The sequence — not the sorted bag of [[bagGroups]] —
-    * is the right collapse key for shingle-based operators: identical
-    * sequences have identical shingle sets, so replacing members with
-    * one representative changes nothing downstream, while reordered
-    * words (same bag, different shingles) correctly stay distinct.
-    * Same shuffle shape as [[bagGroups]]: only (sha2-256, id) moves.
-    */
-  def contentGroups(docs: DataFrame, textCol: String, idCol: String): DataFrame =
-    docs.select(col(idCol).as("id"),
-        concat_ws(" ", TextAnalysis.words(col(textCol))).as("_canon"))
-      .filter(length(col("_canon")) > 0)
-      .select(col("id"), sha2(col("_canon"), 256).as("_seq"))
-      .groupBy(col("_seq"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"), min(col("id")).as("rep"))
-      // reuse: no A/B, no query runs containmentPairsDistinct
-      .localCheckpoint()
-
-  /** Directed containment among the DISTINCT contents of a corpus — the
-    * full-corpus scale path for [[containmentPairs]]. Exact-duplicate
-    * groups ([[contentGroups]]) collapse to one representative each
-    * (the same dedupe-before-pairing lever as the full-corpus SimHash
-    * path), then the capped rare-shingle equi-join runs over distinct
-    * content only — an exact transformation, since identical normalized
-    * sequences have identical shingle sets. On a crawl with mean
-    * duplication factor k that is a k^2 reduction of the dominant join,
-    * and the equi-join still shuffle-partitions on the shingle key at
-    * any corpus size.
-    */
-  def containmentPairsDistinct(
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int = 3,
-      minContainment: Double = 0.9,
-      maxDf: Int = 1000): DataFrame = {
-    val reps = docs.join(
-      contentGroups(docs, textCol, idCol).select(col("rep").as(idCol)),
-      Seq(idCol), "left_semi")
-    containmentPairs(reps, textCol, idCol, n, minContainment, maxDf)
   }
 
   /** Quote-mining candidate pairs via CHUNK-level LSH — the low-Jaccard
@@ -921,6 +872,25 @@ object Dedup {
     * persisted-signature deployment: signatures are a per-dataset
     * artifact (built once, stored with the corpus like the sparse
     * posting index), and each dedup run pays only this join + verify.
+    *
+    * Construction (the standard block-combination scheme for Hamming-range
+    * search over fingerprints, as used by web-scale near-dup detection):
+    * split the 64 bits into `pieces` chunks; a pair within Hamming
+    * `maxHamming` can differ in at most `maxHamming` chunks, so it agrees
+    * EXACTLY on some `shared = pieces - maxHamming` of them. Enumerate all
+    * C(pieces, shared) chunk subsets and equi-join on
+    * (subset_id, concatenated chunk values) — complete for the radius by
+    * pigeonhole, while the join key stays `shared * (64/pieces)` bits wide.
+    *
+    * Chunk width times `shared` is the scale lever: each subset's equi-join
+    * hashes N docs into 2^(shared*width) buckets, so candidates stay
+    * sub-quadratic as long as the combined key is wide (>= 16 bits).
+    * pieces=4/maxHamming=3 gives 4 single-chunk 16-bit keys; the
+    * pieces=8/maxHamming=6 registered configuration gives 28 chunk-PAIR
+    * 16-bit keys — same per-key selectivity, twice the Hamming radius.
+    * The degenerate corner this replaces (pieces=16/maxHamming=15: 16
+    * single-chunk keys of 4 bits = 16 bucket values, ~N^2/32 candidates
+    * per piece) is now impossible to reach with a >= 8-bit combined key.
     */
   def simHashPairsFromSigs(sigs: DataFrame, maxHamming: Int, pieces: Int): DataFrame = {
     val banded = bandedSignatures(sigs, maxHamming, pieces)
@@ -1003,37 +973,6 @@ object Dedup {
     // join-predicate fix can never reach one and miss the other
     simHashPairsFromSigs(simHash(docs, textCol, idCol), maxHamming, pieces)
       .withColumnsRenamed(Map("rep_a" -> "id_a", "rep_b" -> "id_b"))
-
-  /** The candidate stage of [[simHashNearDup]], exposed so its selectivity
-    * is testable: distinct (id_a, id_b) pairs that could be within
-    * `maxHamming` of each other, generated by multi-block banding.
-    *
-    * Construction (the standard block-combination scheme for Hamming-range
-    * search over fingerprints, as used by web-scale near-dup detection):
-    * split the 64 bits into `pieces` chunks; a pair within Hamming
-    * `maxHamming` can differ in at most `maxHamming` chunks, so it agrees
-    * EXACTLY on some `shared = pieces - maxHamming` of them. Enumerate all
-    * C(pieces, shared) chunk subsets and equi-join on
-    * (subset_id, concatenated chunk values) — complete for the radius by
-    * pigeonhole, while the join key stays `shared * (64/pieces)` bits wide.
-    *
-    * Chunk width times `shared` is the scale lever: each subset's equi-join
-    * hashes N docs into 2^(shared*width) buckets, so candidates stay
-    * sub-quadratic as long as the combined key is wide (>= 16 bits).
-    * pieces=4/maxHamming=3 gives 4 single-chunk 16-bit keys; the
-    * pieces=8/maxHamming=6 registered configuration gives 28 chunk-PAIR
-    * 16-bit keys — same per-key selectivity, twice the Hamming radius.
-    * The degenerate corner this replaces (pieces=16/maxHamming=15: 16
-    * single-chunk keys of 4 bits = 16 bucket values, ~N^2/32 candidates
-    * per piece) is now impossible to reach with a >= 8-bit combined key.
-    */
-  def simHashCandidates(sigs: DataFrame, maxHamming: Int, pieces: Int): DataFrame = {
-    val banded = bandedSignatures(sigs, maxHamming, pieces)
-    banded.as("x").join(banded.as("y"),
-        col("x.ck") === col("y.ck") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-  }
 
   /** One banded row per (doc, chunk subset): (id, simhash, ck) with ck
     * the packed (comboId << 48) | chunk-bits key — the whole key set per

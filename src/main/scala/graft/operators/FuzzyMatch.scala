@@ -87,40 +87,4 @@ object FuzzyMatch {
     */
   def matchPairs(entities: DataFrame, nameCol: String): DataFrame =
     pairsFromVariants(variants(entities, nameCol))
-
-  /** [[matchPairs]] with a document-frequency cap on the blocking
-    * variants: variants shared by more than `maxDf` names are dropped
-    * before the candidate join (the stop-shingle technique from the LSH
-    * dedup path). The hot set is tiny by construction (at most
-    * total-variants / maxDf entries), so it broadcasts into an
-    * anti-join — no extra shuffle of the variant table.
-    *
-    * This is a RECALL knob, not a free win: a pair whose ONLY shared
-    * variant is hot is lost. On boilerplate-heavy crawl dictionaries the
-    * hot variants are template junk and the cap is near-lossless; on
-    * dictionaries whose hot variants are REAL near-duplicate families it
-    * destroys recall — measured on the q_fuzzy_match corpus at sf1:
-    * cap=32 keeps 117,594 of 1,462,594 true pairs (8% recall), because
-    * the df=37/42 variant buckets ARE the part-name edit families. That
-    * measurement is why the shipped gate stays uncapped (SCALE.md); this
-    * operator exists for corpora where the df histogram says otherwise.
-    * FuzzyMatchSpec proves the planted-pathological case: the cap drops
-    * exactly the hot-bucket pairs and nothing else.
-    *
-    * Caveat: df is counted per variant HASH; a 64-bit collision between
-    * a hot and a cold variant could drop the cold one's pairs
-    * (~n²/2⁶⁵ for n distinct variants — negligible, but unlike
-    * [[matchPairs]] not strictly sound, which is the other reason the
-    * exact gate does not use it).
-    */
-  def matchPairsCapped(
-      entities: DataFrame,
-      nameCol: String,
-      maxDf: Int): DataFrame = {
-    require(maxDf >= 1, "maxDf must be >= 1")
-    val v = variants(entities, nameCol)
-    val hot = v.groupBy("vh").agg(count(lit(1)).as("_df"))
-      .filter(col("_df") > maxDf).select("vh")
-    pairsFromVariants(v.join(broadcast(hot), Seq("vh"), "left_anti"))
-  }
 }

@@ -93,84 +93,4 @@ object GlobalIndex {
       .withColumn(indexCol, (col("_off") + col("_lrank") - 1L).cast("long"))
       .drop("_b", "_lrank", "_off")
   }
-
-  /** Scalable global running sums — the prefix-sum sibling of
-    * [[withGlobalIndex]], for sweep-line queries (interval concurrency,
-    * cumulative inventory) whose naive shape is a prefix sum over an
-    * unpartitioned `Window.orderBy(key)`: a single task sorting the
-    * whole table. Same split-points construction: bucket rows by VALUE
-    * range of `orderCol` (one approxQuantile pass), per-bucket partial
-    * sums in parallel (each task sorts one value range), per-bucket
-    * TOTALS prefix-summed by a window over just `buckets` rows and
-    * broadcast back as starting offsets.
-    *
-    * `sums` gives (srcCol, outCol, inclusive) triples: inclusive=true is
-    * `ROWS UNBOUNDED PRECEDING..CURRENT`, false stops at `1 PRECEDING`
-    * (the "events strictly before t" side of an inclusive-interval
-    * sweep). `orderCol` must be numeric and unique (pre-aggregate to
-    * distinct keys first) — ties would make "preceding" ill-defined.
-    */
-  /** `bucketBy` short-circuits the quantile pass: when the caller has a
-    * NATURAL bucket that is a pure monotone function of the order key (a
-    * calendar day over an event-time key, a shard prefix over an id),
-    * value-based bucketing needs no approxQuantile action. The input is
-    * still pinned: the bucketed table feeds the offsets aggregate AND
-    * the ranked branch, and a nondeterministic input (sample, rand-keyed
-    * source) would otherwise give the two branches different rows —
-    * offsets disagreeing with the rows being summed, silently wrong
-    * running sums (ReuseExchange does NOT reliably deduplicate the
-    * branches: join-induced null filters already break subtree equality
-    * in practice). Quantile bucketing remains the general path for keys
-    * with no natural bucket structure.
-    */
-  def withRunningSums(
-      df: DataFrame,
-      orderCol: String,
-      sums: Seq[(String, String, Boolean)],
-      buckets: Int = 64,
-      bucketBy: Option[Column] = None): DataFrame = {
-    require(sums.nonEmpty, "running sums need at least one (src, out, inclusive) spec")
-    require(df.schema(orderCol).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"running-sum order column '$orderCol' must be numeric " +
-        s"(got ${df.schema(orderCol).dataType.simpleString})")
-    val bucketed = bucketBy match {
-      case Some(b) =>
-        // determinism: the caller's bucket column, read by the totals
-        // and the ranking
-        df.withColumn("_b", b).localCheckpoint()
-      case None =>
-        // determinism: pin BEFORE the quantile pass (see
-        // withGlobalIndex): one upstream computation feeds the
-        // quantiles, the per-bucket totals AND the within-bucket ranking
-        val pinned = df.localCheckpoint()
-        val probs = (1 until buckets).map(_.toDouble / buckets).toArray
-        val splits =
-          if (probs.isEmpty) Array.empty[Double]
-          else pinned.stat.approxQuantile(orderCol, probs, 0.001).distinct.sorted
-        val bucketExpr =
-          if (splits.isEmpty) lit(0)
-          else size(filter(lit(splits), s => col(orderCol).cast("double") >= s))
-        pinned.withColumn("_b", bucketExpr)
-    }
-    // per-bucket totals -> EXCLUSIVE prefix (each bucket's starting
-    // offset) over `buckets` rows, broadcast back
-    val totals = sums.map { case (src, out, _) => sum(col(src)).as(s"_t_$out") }
-    val offsets = bucketed.groupBy(col("_b"))
-      .agg(totals.head, totals.tail: _*)
-      .select(col("_b") +: sums.map { case (_, out, _) =>
-        coalesce(sum(col(s"_t_$out")).over(Window.orderBy(col("_b"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as(s"_o_$out")
-      }: _*)
-    val inBucket = Window.partitionBy(col("_b")).orderBy(col(orderCol))
-    sums.foldLeft(bucketed.join(broadcast(offsets), Seq("_b"))) {
-      case (acc, (src, out, inclusive)) =>
-        val local =
-          if (inclusive)
-            sum(col(src)).over(inBucket.rowsBetween(Window.unboundedPreceding, 0))
-          else coalesce(
-            sum(col(src)).over(inBucket.rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L))
-        acc.withColumn(out, col(s"_o_$out") + local)
-    }.drop("_b" +: sums.map { case (_, out, _) => s"_o_$out" }: _*)
-  }
 }

@@ -53,43 +53,6 @@ object Multimodal {
       .withColumn("n_bytes", octet_length(col("payload")).cast("long"))
       .withColumn("payload_md5", md5(col("payload")))
 
-  case class MediaFeature(media_id: Long, kind: String, n_bytes: Long,
-      feature: Array[Double])
-
-  /** The decode / feature-extract boundary. Real pipeline shape: batched
-    * rows in, fixed-width feature vectors out, executed per partition so a
-    * native decoder could be initialized once per task.
-    *
-    * STUB: the real image/audio decode would live in `decodeBytes`; the
-    * container has no codec libs, so it derives a deterministic
-    * pseudo-feature from payload bytes instead.
-    */
-  def extractFeatures(spark: SparkSession, media: DataFrame, dim: Int = 8): Dataset[MediaFeature] = {
-    import spark.implicits._
-    media.select("media_id", "kind", "payload")
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { rows =>
-        // per-partition init point for a native decoder (one per task)
-        rows.map { case (id, kind, payload) =>
-          val bytes = Option(payload).getOrElse(Array.emptyByteArray)
-          MediaFeature(id, kind, bytes.length.toLong, decodeBytes(bytes, dim))
-        }
-      }
-  }
-
-  /** STUB decoder: deterministic fake features (byte-bucket sums). A real
-    * implementation would decode pixels/samples here.
-    */
-  private def decodeBytes(bytes: Array[Byte], dim: Int): Array[Double] = {
-    val acc = new Array[Double](dim)
-    var i = 0
-    while (i < bytes.length) {
-      acc(i % dim) += (bytes(i) & 0xff) / 255.0
-      i += 1
-    }
-    acc.map(v => math.round(v * 1000.0) / 1000.0)
-  }
-
   // ---- PNG container header synthesis / parsing (byte-level, no codec) --
 
   /** A valid PNG file prefix — 8-byte signature, IHDR chunk length (13),
@@ -100,8 +63,8 @@ object Multimodal {
     *
     * This is the REAL container-parsing boundary of an image pipeline:
     * dimensions, signatures, and chunk layout live in the header and are
-    * readable at scan speed without any codec — only pixel DECODE (see
-    * [[extractFeatures]]) needs native libraries.
+    * readable at scan speed without any codec — only pixel DECODE
+    * needs a codec.
     */
   def pngHeader(width: Column, height: Column): Column =
     unhex(concat(
@@ -111,10 +74,6 @@ object Multimodal {
       lpad(hex(width.cast(IntegerType)), 8, "0"),
       lpad(hex(height.cast(IntegerType)), 8, "0"),
       lit("0802000000")))      // bit depth 8, truecolor, std flags
-
-  /** Signature check on raw payload bytes. */
-  def isPng(payload: Column): Column =
-    hex(substring(payload, 1, 8)) === "89504E470D0A1A0A"
 
   /** Width/height parsed straight out of IHDR bytes (big-endian 32-bit
     * at offsets 16 and 20): binary slice -> hex -> base-16 conv. No UDF,
@@ -139,8 +98,8 @@ object Multimodal {
   }
 
   /** Metadata-level "resize": recompute target dims preserving aspect
-    * ratio — expression-only (the pixel work would happen in
-    * [[extractFeatures]]'s decode boundary).
+    * ratio — expression-only (the pixel work would happen in a
+    * decoder).
     */
   def resizeMeta(media: DataFrame, maxSide: Int): DataFrame = {
     val w = col("meta.width").cast("double")
@@ -154,8 +113,7 @@ object Multimodal {
   /** Chunking plan for audio rows: fixed `chunkMs` windows every
     * `strideMs` over the metadata duration — the segmentation an
     * ASR/audio-feature pipeline feeds its decoder, as a pure explode of a
-    * generated sequence (decode deferred to the
-    * [[extractFeatures]] boundary). `n_samples` is integer arithmetic at
+    * generated sequence (decode deferred to the decoder). `n_samples` is integer arithmetic at
     * the metadata sample rate so any engine reproduces it exactly.
     */
   def chunkAudio(
@@ -754,7 +712,6 @@ object Multimodal {
       require(pos + 4 <= bytes.length, s"media $id: truncated AVI (u32 at $pos)")
       buf.getInt(pos).toLong & 0xffffffffL
     }
-    def u16At(pos: Int): Int = buf.getShort(pos).toInt & 0xffff
   }
 
   /** Walk a RIFF chunk run in `[start, end)` calling `onChunk(fourcc,

@@ -45,61 +45,31 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   */
 object SetSimJoin {
 
-  /** All pairs (id_a < id_b) of token sets at Jaccard >= `threshold`.
-    * `tokens` must be a distinct (id, w) table — one row per document
-    * token. Output: (id_a, id_b, n_inter, jaccard).
-    */
-  def selfJoinTokens(tokens: DataFrame, threshold: Double): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    // reuse: the token table feeds four consumers (df, sizes, the prefix
-    // build, and both verify sides); materialize it once instead of
-    // re-deriving the shingle explode per consumer — locally a
-    // checkpoint, at scale the persisted (id, token) table every
-    // set-similarity system builds first. Reuse pins, no A/B: no query
-    // runs selfJoinTokens or selfJoinTokensCapped (q_setsim_join and
-    // q_setsim_capped read persisted tables).
-    val words = tokens.select(col("id"), col("w")).localCheckpoint()
-    val prefix = prefixTable(words, threshold)
-      // reuse: both sides of the candidate self-join read this
-      .localCheckpoint()
-    selfJoinFromPrefix(words, prefix, threshold)
-  }
-
-  /** [[selfJoinTokens]] with the STOP-TOKEN cap — the production path
-    * for vocabulary-saturated corpora: tokens whose document frequency
-    * exceeds `maxDf` leave the universe BEFORE sizes and prefixes are
-    * computed, so both sides of every pair see the same reduced token
-    * sets and the metric stays a true Jaccard over the retained
-    * universe (the [[Dedup.jaccardPairs]] maxDf trade, applied to the
-    * prefix-filter join). Why it exists: AllPairs candidate volume is
-    * sum over prefix tokens of df^2 — sub-quadratic on Zipfian corpora
-    * where rare-token df stays ~constant, but QUADRATIC when the
+  /** The STOP-TOKEN cap for vocabulary-saturated corpora: tokens whose
+    * document frequency exceeds `maxDf` leave the universe BEFORE sizes
+    * and prefixes are computed, so both sides of every pair see the same
+    * reduced token sets and the metric stays a true Jaccard over the
+    * retained universe (the [[Dedup.jaccardPairs]] maxDf trade, applied
+    * to the prefix-filter join). Why it exists: AllPairs candidate
+    * volume is sum over prefix tokens of df^2 — sub-quadratic on Zipfian
+    * corpora where rare-token df stays ~constant, but QUADRATIC when the
     * vocabulary saturates and every token's df grows with the corpus
     * (measured: the uncapped gate went 107x for 10x data on the
     * fixed-32-word synthetic at sf1, SCALE.md rehearsal). The cap
     * bounds per-token fan-out by construction: candidate volume
     * <= maxDf * retained-token-occurrences — linear in the corpus at
     * fixed maxDf. A document whose every token is capped away drops
-    * out (it has no retained set to compare).
+    * out (it has no retained set to compare). `tokens` is a distinct
+    * (id, w) table and is read twice (the df aggregate and its join).
     */
-  def selfJoinTokensCapped(tokens: DataFrame, threshold: Double,
-      maxDf: Int): DataFrame = {
+  def capTokens(tokens: DataFrame, maxDf: Int): DataFrame = {
     require(maxDf >= 1, s"maxDf must be >= 1, got $maxDf")
-    // reuse: no A/B (no query runs this; see selfJoinTokens): the
-    // tokens feed the df cap and its join, the capped tokens and the
-    // prefix table feed df, sizes, prefix and both join sides
-    val words0 = tokens.select(col("id"), col("w")).localCheckpoint()
-    val kept = words0.groupBy(col("w")).agg(count(lit(1)).as("df"))
+    val kept = tokens.groupBy(col("w")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select("w")
-    val words = words0.join(kept, "w").select("id", "w")
-      .localCheckpoint() // reuse: df, sizes, prefix and verify read it
-    val prefix = prefixTable(words, threshold)
-      .localCheckpoint() // reuse: both sides of the candidate join
-    selfJoinFromPrefix(words, prefix, threshold)
+    tokens.join(kept, "w").select("id", "w")
   }
 
-  /** The BUILD half of [[selfJoinTokens]]: the (id, w, n, pos) prefix
+  /** The BUILD half of the join: the (id, w, n, pos) prefix
     * table for a threshold — per-doc token rank in the global
     * (df asc, token) order, truncated to the prefix-filtering bound.
     * A deployment persists this with the (id, token) table (both are
@@ -107,6 +77,8 @@ object SetSimJoin {
     * [[selfJoinFromPrefix]] per run.
     */
   def prefixTable(words: DataFrame, threshold: Double): DataFrame = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold must be in (0, 1], got $threshold")
     val tokenDf = words.groupBy(col("w")).agg(count(lit(1)).as("df"))
     val sizes = words.groupBy(col("id")).agg(count(lit(1)).as("n"))
     // Per-doc rank in the global (df asc, token) order. The window is
@@ -128,8 +100,11 @@ object SetSimJoin {
       .select(col("id"), col("w"), col("n"), col("pos"))
   }
 
-  /** The QUERY half of [[selfJoinTokens]]: candidate generation +
-    * exact verify over already-built (id, w) and prefix tables.
+  /** The QUERY half of the join: all pairs (id_a < id_b) of token sets
+    * at Jaccard >= `threshold` — candidate generation + exact verify
+    * over already-built (id, w) and [[prefixTable]] tables. `words`
+    * must be a distinct (id, w) table — one row per document token.
+    * Output: (id_a, id_b, n_inter, jaccard).
     */
   def selfJoinFromPrefix(words: DataFrame, prefix: DataFrame,
       threshold: Double): DataFrame = {
@@ -174,19 +149,4 @@ object SetSimJoin {
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("n_inter"), col("jaccard"))
   }
-
-  /** [[selfJoinTokens]] over the word n-gram shingle sets of a text
-    * column — the dedup family's similarity definition (word sets are
-    * too coarse on vocabulary-dense corpora; shingles discriminate).
-    */
-  def selfJoinJaccard(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      threshold: Double): DataFrame =
-    selfJoinTokens(
-      Dedup.shingles(docs, textCol, idCol, n)
-        .select(col("id"), col("shingle").as("w")),
-      threshold)
 }

@@ -20,10 +20,10 @@ import org.apache.spark.sql.functions._
   * Scale shape: the manifest build is one map-side-combinable
   * aggregate over a read-back of what was WRITTEN (stats must describe
   * the files, not the dataframe that produced them — compactions and
-  * retries change files, not intent). [[prunedRead]] collects only the
-  * surviving shard ids — bounded by the shard count, thousands at
-  * 100 TB, never row-scale — and every non-matching shard's files are
-  * never opened (PartitionFilters, asserted in the spec).
+  * retries change files, not intent). A key-range reader turns the
+  * manifest into a shard-id list (bounded by the shard count, thousands
+  * at 100 TB, never row-scale) and filters `shard_id` with it, so every
+  * non-matching shard's files are never opened.
   */
 object ShardManifest {
 
@@ -57,29 +57,4 @@ object ShardManifest {
       .agg(count(lit(1)).as("n_rows"),
         statCols.flatMap(c => Seq(
           min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))): _*)
-
-  /** Shard ids [[prunedRead]] collects: bounded by shard count, a
-    * manifest is kilobytes per petabyte (SCALE.md). The largest reached
-    * is q_shard_manifest's lineitem at sf1, ~367 shards (37 measured at
-    * sf0.1).
-    */
-  private val MaxShards = 4096
-
-  /** Key-range read that opens only shards whose manifest interval
-    * overlaps [lo, hi]: the manifest row set collapses to a shard-id
-    * list (bounded by shard count), which becomes a partition predicate
-    * Spark prunes directories with. The key filter still applies inside
-    * surviving shards — the manifest is a superset filter, never a
-    * substitute for the predicate.
-    */
-  def prunedRead(spark: SparkSession, dir: String, mf: DataFrame,
-      keyCol: String, lo: Long, hi: Long): DataFrame = {
-    val shards = DriverRows.collect(mf
-        .filter(col(s"max_$keyCol") >= lo && col(s"min_$keyCol") <= hi)
-        .select(col("shard_id")), MaxShards, "prunedRead overlapping shards")
-      .map(_.getLong(0))
-    TableReads.read(spark, dir)
-      .filter(col("shard_id").isin(shards: _*))
-      .filter(col(keyCol) >= lo && col(keyCol) <= hi)
-  }
 }

@@ -44,9 +44,6 @@ object Similarity {
       .drop("_dvec")
   }
 
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm(a) * norm(b))
-
   /** Cosine of a corpus vector against a literal query, with the
     * ZERO-NORM CONVENTION: a zero-norm (or null) corpus vector scores
     * 0.0 — "no direction, similar to nothing". Without the guard,
@@ -254,17 +251,6 @@ object Similarity {
       .orderBy(col("q_cosine").desc, col(idCol))
       .limit(k)
   }
-
-  /** All-pairs cosine >= threshold within LSH buckets (see Dedup for the
-    * near-dup variant that uses this shape).
-    */
-  def bucketedPairs(
-      embeddings: DataFrame,
-      vecCol: String,
-      idCol: String,
-      threshold: Double,
-      planes: Int = 8): DataFrame =
-    Dedup.embeddingNearDup(embeddings, vecCol, idCol, threshold, planes)
 
   /** Centroid-distance outlier scoring — the embedding-space data-pruning
     * signal (the SemDedup/SSL-prototypes family): assign every vector to

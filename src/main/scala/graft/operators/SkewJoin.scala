@@ -69,13 +69,4 @@ object SkewJoin {
       explode(sequence(lit(0), lit(factor - 1))))
     saltedBig.join(replicated, keys :+ "_salt", joinType).drop("_salt")
   }
-
-  /** Hot keys of a DataFrame: keys whose row count exceeds `threshold` —
-    * the diagnostic used to decide whether salting is warranted. One
-    * map-side-combinable aggregate.
-    */
-  def hotKeys(df: DataFrame, keys: Seq[String], threshold: Long): DataFrame =
-    df.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("n_rows"))
-      .filter(col("n_rows") > threshold)
 }

@@ -34,7 +34,6 @@ import scala.util.Try
   * derby.locks.waitTimeout aborts at 60 s).
   */
 trait SqlDialect {
-  def name: String
   def canHandle(url: String): Boolean
 
   /** Candidate stored spellings of an unquoted identifier, per the
@@ -85,7 +84,6 @@ object SqlDialect {
   * reads it (the natural key is (client_id, sku)).
   */
 object DerbyDialect extends SqlDialect {
-  val name = "derby"
   def canHandle(url: String): Boolean = url.startsWith("jdbc:derby")
 
   def productsDdl(table: String, q: String => String): String =
@@ -114,7 +112,6 @@ object DerbyDialect extends SqlDialect {
   * unchanged.
   */
 object PostgresDialect extends SqlDialect {
-  val name = "postgresql"
   def canHandle(url: String): Boolean = url.startsWith("jdbc:postgresql")
 
   def productsDdl(table: String, q: String => String): String =

@@ -69,43 +69,7 @@ object TermIndex {
       .select(col("id"), col("word"), col("tfidf"), col("term_rank"))
   }
 
-  /** Sparse k-NN: for each query document, the k most cosine-similar
-    * documents under TF-IDF weights — the classic sparse-retrieval
-    * "related documents" query, the lexical counterpart of the dense
-    * ANN family (Similarity.scala). Weights reuse [[tfidfTopTerms]]'s
-    * formula quantized to 4 decimals and carried as 10^4-scaled LONGS,
-    * so dot products and norms accumulate in exact integer arithmetic
-    * — order- and partitioning-independent, which is what lets an
-    * independent engine reproduce the ranking bit-for-bit (the only
-    * double ops left are one sqrt and one division on identical
-    * inputs; the 10^8 scale cancels inside the cosine ratio up to the
-    * one shared sqrt). Ranking is by the ROUNDED similarity with
-    * doc-id tie-break.
-    *
-    * Scale shape: the posting join is keyed on the term; the query
-    * side is tiny (k-NN requests) and the corpus side streams — cost
-    * is Σ over query terms of df(term), the inverted-index retrieval
-    * bound, never corpus x corpus. The corpus is scanned ONCE: df
-    * derives from the tf aggregate (one row per (doc, term) already —
-    * the [[bm25TopK]] trick), and the weighted posting table is
-    * materialized (`localCheckpoint` here; a persisted index table in
-    * production — this IS the index build an inverted-index store
-    * amortizes) so norms, query vectors, and the retrieval join all
-    * read the index instead of re-deriving it. Query postings
-    * broadcast into the retrieval join — the corpus side never
-    * shuffles for it. Norms join keyed by doc id. A production
-    * variant drops ultra-common terms by df cap exactly
-    * like the LSH stop-shingle rule; the synthetic corpus's tiny
-    * vocabulary would go empty, so the gate declares no cap.
-    */
-  def sparseKnn(docs: DataFrame, textCol: String, idCol: String,
-      queries: DataFrame, k: Int = 5): DataFrame =
-    sparseKnnFromIndex(
-      // reuse: no A/B, no query calls sparseKnn (the twin in
-      // q_sparse_knn_incr measured 0.83 s pinned vs 1.61 s unpinned)
-      tfidfIndex(docs, textCol, idCol).localCheckpoint(), queries, k)
-
-  /** The INDEX BUILD half of [[sparseKnn]]: the scaled-long TF-IDF
+  /** The INDEX BUILD half of [[sparseKnnFromIndex]]: the scaled-long TF-IDF
     * posting table (id, word, w) — one corpus explode, tf aggregate,
     * term-keyed df derived FROM the tf rows (no second corpus pass),
     * and the weight formula. This is the artifact a deployment
@@ -184,8 +148,23 @@ object TermIndex {
     */
   private val MaxQueryPostings = 200000
 
-  /** The QUERY half of [[sparseKnn]]: retrieval over a standing
-    * posting table — norms from a posting-table aggregate (index-sized,
+  /** Sparse k-NN: for each query document, the k most cosine-similar
+    * documents under TF-IDF weights — the classic sparse-retrieval
+    * "related documents" query, the lexical counterpart of the dense
+    * ANN family (Similarity.scala). Weights reuse [[tfidfTopTerms]]'s
+    * formula quantized to 4 decimals and carried as 10^4-scaled LONGS
+    * ([[tfidfIndex]]), so dot products and norms accumulate in exact
+    * integer arithmetic — order- and partitioning-independent, which is
+    * what lets an independent engine reproduce the ranking bit-for-bit
+    * (the only double ops left are one sqrt and one division on
+    * identical inputs; the 10^8 scale cancels inside the cosine ratio
+    * up to the one shared sqrt). Ranking is by the ROUNDED similarity
+    * with doc-id tie-break. A production variant drops ultra-common
+    * terms by df cap exactly like the LSH stop-shingle rule; the
+    * synthetic corpus's tiny vocabulary would go empty, so the gate
+    * declares no cap.
+    *
+    * This is the QUERY half over a standing posting table — norms from a posting-table aggregate (index-sized,
     * not corpus-sized), query vectors looked up by broadcast, the
     * retrieval join keyed on the term with the query side broadcast so
     * the posting table never shuffles. Cost is Σ over query terms of

@@ -505,8 +505,7 @@ object TextAnalysis {
     * across engines and runs (no RNG, no engine-specific hash), stable
     * under repartitioning, and a scan-speed expression at 100 TB. The
     * id is reduced mod 2^31-1 BEFORE the multiply so every product stays
-    * under 2^63 (no overflow under ANSI arithmetic — the same bound
-    * argument as [[rollingHash]]); SQUARING the multiplied value makes
+    * under 2^63 (no overflow under ANSI arithmetic); SQUARING the multiplied value makes
     * the map nonlinear, so consecutive ids do not stride through buckets
     * (an affine-only map would assign ids to splits in a periodic
     * pattern, correlating the split with any id-ordered property).
@@ -990,16 +989,6 @@ object TextAnalysis {
       .select(col("_host")).distinct()
     withHost.join(blockedHosts, Seq("_host"), "left_anti").drop("_host")
   }
-
-  /** Polynomial rolling hash over words (base 1000003, mod 2^31-1) — an
-    * order-sensitive fingerprint, cheap to maintain incrementally. The
-    * modulus keeps acc*base < 2^52, so the multiply never overflows a long
-    * under ANSI arithmetic.
-    */
-  def rollingHash(textCol: Column): Column =
-    aggregate(words(lower(textCol)), lit(0L),
-      (acc, w) => pmod(acc * lit(1000003L) + pmod(xxhash64(w), lit((1L << 31) - 1)),
-        lit((1L << 31) - 1)))
 
   /** Rule-based SENTENCE segmentation — the unit every sentence-level
     * pipeline op (sentence dedup, citation alignment, per-sentence

@@ -303,47 +303,4 @@ object TimeSeries {
     lags.select(col("_b").as(bucketCol), col("_l0").as(valueCol),
       round(num.cast("double") / den.cast("double"), roundTo).as("ewma"))
   }
-
-  /** Linear interpolation variant: instead of carrying the last value
-    * forward, interpolate linearly between the previous and next
-    * OBSERVED bucket values. Gaps after the last observation keep the
-    * last value (no extrapolation). Same scale shape as
-    * [[resampleFill]] plus one backward-looking window pass.
-    *
-    * Implementation: alongside the running `last(ignoreNulls)` carry,
-    * compute the NEXT observed value and its bucket with a reversed
-    * `first(ignoreNulls)` window, then blend by the fractional position
-    * of the gap bucket between its bracketing observed buckets. All
-    * window passes share the same `key` hash partitioning — Catalyst
-    * plans one Exchange for the three of them.
-    */
-  def resampleInterpolate(obs: DataFrame, keyCol: String,
-      bucketCol: String, valueCol: String): DataFrame = {
-    // same observed-means-non-null convention as [[resampleFill]]
-    val agg = obs.filter(col(valueCol).isNotNull)
-      .groupBy(col(keyCol), col(bucketCol))
-      .agg(sum(col(valueCol)).cast("double").as("v_sum"))
-    val spine = agg.groupBy(col(keyCol))
-      .agg(min(col(bucketCol)).as("b0"), max(col(bucketCol)).as("b1"))
-      .select(col(keyCol),
-        explode(sequence(col("b0"), col("b1"))).as(bucketCol))
-    val joined = spine.join(agg, Seq(keyCol, bucketCol), "left")
-    val back = Window.partitionBy(keyCol).orderBy(bucketCol)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fwd = Window.partitionBy(keyCol).orderBy(bucketCol)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val obsBucket = when(col("v_sum").isNotNull, col(bucketCol))
-    val prevV = last(col("v_sum"), ignoreNulls = true).over(back)
-    val prevB = last(obsBucket, ignoreNulls = true).over(back)
-    val nextV = first(col("v_sum"), ignoreNulls = true).over(fwd)
-    val nextB = first(obsBucket, ignoreNulls = true).over(fwd)
-    joined.select(col(keyCol), col(bucketCol),
-      when(col("v_sum").isNotNull, col("v_sum"))
-        .when(nextB.isNull, prevV)
-        .otherwise(prevV + (nextV - prevV)
-          * (col(bucketCol) - prevB).cast("double")
-          / (nextB - prevB).cast("double"))
-        .as("v_interp"),
-      col("v_sum").isNull.as("was_gap"))
-  }
 }

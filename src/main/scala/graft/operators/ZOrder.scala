@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) curve data layout: interleave the bits of two
@@ -51,21 +51,4 @@ object ZOrder {
       s"((($x >> $i) & 1) * ${1L << (2 * i)}) + " +
         s"((($y >> $i) & 1) * ${1L << (2 * i + 1)})"
     }.mkString("(", " + ", ")")
-
-  /** Z-ordered physical layout: one range exchange on the Morton key,
-    * rows sorted by it within every partition — each output file's
-    * (x, y) bounding box is a compact curve segment.
-    */
-  def layout(df: DataFrame, x: Column, y: Column, bits: Int = 16,
-      numPartitions: Int = 0): DataFrame = {
-    // underscore-prefixed helper column, dropped before returning:
-    // withColumn REPLACES by name, so a business column named "zkey"
-    // would otherwise be silently overwritten — and every caller would
-    // persist a synthetic extra column into the laid-out table
-    val keyed = df.withColumn("_zkey", zkey(x, y, bits))
-    val ranged =
-      if (numPartitions > 0) keyed.repartitionByRange(numPartitions, col("_zkey"))
-      else keyed.repartitionByRange(col("_zkey"))
-    ranged.sortWithinPartitions(col("_zkey")).drop("_zkey")
-  }
 }

@@ -87,7 +87,6 @@ object IngestSource {
       // dict(zip(fieldnames, row)) + restval semantics: per EXACT raw
       // name, only the last position counts; key order is first
       // occurrence. Blank raw names are DictReader-falsy and dropped.
-      val headerLen = rawHeaders.length
       val names = rawHeaders.map(h => Option(h).getOrElse(""))
       val distinctRaw = names.distinct.filter(_.nonEmpty)
       val zipPos: Map[String, Int] =

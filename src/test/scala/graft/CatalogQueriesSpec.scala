@@ -45,14 +45,12 @@ class CatalogQueriesSpec extends SparkSpec {
     assert(hits.last === None && hits.init.forall(_.isDefined))
   }
 
-  test("''-sku rows (anonymous inserts) lead list pages and are outside the keyset view") {
+  test("''-sku rows (anonymous inserts) lead list pages") {
     import spark.implicits._
     // The ingest path stores anonymous rows as EMPTY STRINGS (DictReader
     // yields '' and the DDL forbids NULL). Under ascending text order ''
     // sorts FIRST on both Postgres and Spark, so they lead page one of
-    // the offset listing — and the keyset sibling EXCLUDES them by
-    // contract (sku <> ''), so every page walk covers exactly the
-    // non-empty skus no matter the cursor.
+    // the offset listing.
     val withAnon = products.unionByName(Seq(
       (1, "", "ra", "Anon A"),
       (1, "", "rb", "Anon B")).toDF(
@@ -61,19 +59,6 @@ class CatalogQueriesSpec extends SparkSpec {
       .select("sku").collect().map(_.getString(0))
     assert(page1.take(2).forall(_ == ""), "'' rows lead page one")
     assert(page1(2) === "apple-1")
-    // keyset: starting at the conventional "" cursor, '' rows never
-    // appear and the walk visits each non-empty sku exactly once
-    var after = ""
-    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
-    var go = true
-    while (go) {
-      val page = CatalogQueries.listKeyset(withAnon, 1, after, limit = 2)
-        .select("sku").collect().map(_.getString(0))
-      seen ++= page
-      if (page.length < 2) go = false else after = page.last
-    }
-    assert(seen.toSeq === Seq("apple-1", "apple-2", "banana", "cherry"))
-    assert(!seen.contains(""))
   }
 
   test("default ordering by sku, offset/limit window") {
@@ -99,32 +84,5 @@ class CatalogQueriesSpec extends SparkSpec {
     intercept[IllegalArgumentException] { CatalogQueries.list(products, 1, limit = 0) }
     intercept[IllegalArgumentException] { CatalogQueries.list(products, 1, limit = 51) }
     intercept[IllegalArgumentException] { CatalogQueries.list(products, 1, offset = -1) }
-  }
-
-  test("keyset pagination: walking pages covers the list exactly once") {
-    // Page through tenant 1 with page size 2, feeding each page's last
-    // sku back as the next cursor; the concatenation must equal the
-    // full sku-ordered list with no skips and no repeats.
-    val full = CatalogQueries.list(products, 1, limit = 50)
-      .collect().map(_.getAs[String]("sku")).toSeq
-    var cursor = ""
-    var walked = Seq.empty[String]
-    var page = Seq("start")
-    while (page.nonEmpty) {
-      page = CatalogQueries.listKeyset(products, 1, cursor, limit = 2)
-        .collect().map(_.getAs[String]("sku")).toSeq
-      walked ++= page
-      if (page.nonEmpty) cursor = page.last
-    }
-    assert(walked === full)
-  }
-
-  test("keyset pagination: cursor excludes itself, tenant scoped") {
-    val page = CatalogQueries.listKeyset(products, 1, "apple-2", limit = 50)
-      .collect().map(_.getAs[String]("sku")).toSeq
-    assert(page === Seq("banana", "cherry"))
-    // tenant 2 sees only its own row regardless of cursor
-    assert(CatalogQueries.listKeyset(products, 2, "", limit = 50)
-      .collect().map(_.getAs[String]("sku")).toSeq === Seq("apple-1"))
   }
 }

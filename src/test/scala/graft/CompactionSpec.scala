@@ -18,8 +18,8 @@ class CompactionSpec extends SparkSpec {
     val smallFiles = new java.io.File(s"$dir/small").listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(smallFiles === 50)
-    val (planned, back) = Compaction.compact(spark, s"$dir/small", s"$dir/big",
-      targetBytes = 1L << 30)
+    val (planned, back) = Compaction.compactSorted(spark, s"$dir/small", s"$dir/big",
+      targetBytes = 1L << 30, sortCols = Seq("id"))
     assert(planned === 1, "10k tiny rows fit one 1 GiB target file")
     val bigFiles = new java.io.File(s"$dir/big").listFiles()
       .count(_.getName.endsWith(".parquet"))

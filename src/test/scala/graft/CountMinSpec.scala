@@ -31,18 +31,6 @@ class CountMinSpec extends SparkSpec {
     }
   }
 
-  test("merging shard sketches equals the sketch of the union, cell for cell") {
-    import spark.implicits._
-    val df = skewed
-    val s1 = CountMin.sketch(df.filter(col("k") % 2 === 0), "k")
-    val s2 = CountMin.sketch(df.filter(col("k") % 2 =!= 0), "k")
-    val merged = CountMin.merge(Seq(s1, s2))
-      .select(col("j"), col("c"), col("n").cast("long").as("n"))
-    val whole = CountMin.sketch(df, "k")
-    assert(merged.exceptAll(whole).count() === 0)
-    assert(whole.exceptAll(merged).count() === 0)
-  }
-
   test("sketch is partitioning-insensitive and bounded by depth x width") {
     val df = skewed
     val a = CountMin.sketch(df.repartition(1), "k", width = 64)

@@ -28,12 +28,6 @@ class DedupSpec extends SparkSpec {
     assert(g.getAs[Long]("n_copies") === 2)
   }
 
-  test("exactRows keeps whole first row per text") {
-    val out = Dedup.exactRows(docs, "text", "doc_id")
-    assert(out.count() === 4)
-    assert(!out.collect().map(_.getLong(0)).contains(2L))
-  }
-
   test("jaccard pairs: exact dup = 1.0, near-dup high, unrelated absent") {
     val pairs = Dedup.jaccardPairs(docs, "text", "doc_id", n = 3, minJaccard = 0.5)
       .collect().map(r => ((r.getAs[Long]("id_a"), r.getAs[Long]("id_b")),
@@ -61,28 +55,6 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getAs[Long]("contained_id"),
         r.getAs[Long]("container_id"), r.getAs[Double]("containment")))
     assert(c.toSeq === Seq((1L, 2L, 1.0)))
-  }
-
-  test("containment distinct-content path: identical bags collapse to the rep") {
-    import spark.implicits._
-    val quote = "alpha beta gamma delta epsilon zeta"
-    val longDoc = s"intro words here $quote plus a very long tail of unrelated " +
-      "filler content stretching the container document onward and onward"
-    // 5 and 6 are whitespace-variant exact duplicates of doc 1: one rep
-    // (id 1) pairs; the duplicates never enter the shingle equi-join.
-    // Doc 7 reorders the same words (same bag, different shingles) and
-    // must stay distinct — it shares no 3-gram with the quote.
-    val df = Seq((1L, quote), (2L, longDoc),
-        (5L, "alpha  beta gamma   delta epsilon zeta"),
-        (6L, " alpha beta gamma delta epsilon zeta "),
-        (7L, "zeta epsilon delta gamma beta alpha"))
-      .toDF("doc_id", "text")
-    val c = Dedup.containmentPairsDistinct(df, "text", "doc_id", n = 3,
-        minContainment = 0.9)
-      .collect().map(r => (r.getAs[Long]("contained_id"),
-        r.getAs[Long]("container_id"), r.getAs[Double]("containment")))
-    assert(c.toSeq === Seq((1L, 2L, 1.0)),
-      "only the bag representative pairs; reordered duplicates are collapsed")
   }
 
   test("chunk-LSH finds the low-Jaccard quote that whole-document LSH misses") {
@@ -193,7 +165,7 @@ class DedupSpec extends SparkSpec {
     // degenerate narrow-chunk parameterization (16 pieces of 4 bits) would
     // emit ~N^2/32 per piece, i.e. the all-pairs blowup this asserts away.
     for ((maxH, pieces) <- Seq((3, 4), (6, 8))) {
-      val nCands = Dedup.simHashCandidates(sigs, maxH, pieces).count()
+      val nCands = Dedup.simHashPairsFromSigs(sigs, maxH, pieces).count()
       assert(nCands >= 3,
         s"($maxH,$pieces): planted cluster must be candidate-joined (got $nCands)")
       assert(nCands < allPairs / 20,
@@ -235,7 +207,7 @@ class DedupSpec extends SparkSpec {
       Seq((d * 10L, base), (d * 10L + 1L, flipped))
     }
     val sigs = rows.toDF("id", "simhash")
-    val cands = Dedup.simHashCandidates(sigs, maxHamming = 6, pieces = 8)
+    val cands = Dedup.simHashPairsFromSigs(sigs, maxHamming = 6, pieces = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     for (d <- 0 to 6)
       assert(cands.contains((d * 10L, d * 10L + 1L)),

@@ -163,14 +163,6 @@ class DriverRowsSpec extends SparkSpec {
     }
   }
 
-  test("prunedRead: at most 4096 overlapping shards") {
-    val mf = spark.range(4097).select(col("id").as("shard_id"),
-      col("id").as("min_k"), col("id").as("max_k"))
-    tripped("prunedRead overlapping shards", 4096) {
-      ShardManifest.prunedRead(spark, tmpDir("driverrows-shards"), mf, "k", 0L, Long.MaxValue)
-    }
-  }
-
   test("CoverStream: at most 10000 survivors per batch") {
     val batch = spark.range(10001).select(col("id").as("doc_id"),
       concat(lit("w"), col("id").cast("string")).as("text"))

@@ -49,27 +49,6 @@ class FuzzyMatchSpec extends SparkSpec {
     assert(FuzzyMatch.matchPairs(ents, "name").count() === 0)
   }
 
-  test("df cap drops exactly the hot-bucket pairs, nothing else") {
-    import spark.implicits._
-    // pathological hot variant: every "junkN" name deletes to "junk"
-    // when N is removed... build it explicitly: names "junkA".."junkJ"
-    // all share the delete-variant "junk" (df=10); an unrelated cold
-    // pair ("cold", "colde") matches through a df=2 variant.
-    val hotFamily = ('A' to 'J').map(c => s"junk$c")
-    val ents = (hotFamily ++ Seq("cold", "colde")).toDF("name")
-    val full = FuzzyMatch.matchPairs(ents, "name")
-      .select("name_a", "name_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val capped = FuzzyMatch.matchPairsCapped(ents, "name", maxDf = 5)
-      .select("name_a", "name_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    // full finds all C(10,2)=45 hot-family pairs plus the cold pair
-    assert(full.size === 46)
-    assert(full.contains(("cold", "colde")))
-    // the cap kills the hot bucket; every junkX/junkY pair shares ONLY
-    // the hot "junk" variant (their other variants differ), so exactly
-    // those 45 pairs vanish and the cold pair survives
-    assert(capped === Set(("cold", "colde")))
-  }
-
   test("plan is equi-join on variant, no cartesian product") {
     import spark.implicits._
     val plan = FuzzyMatch.matchPairs(Seq("x").toDF("name"), "name")

@@ -32,37 +32,6 @@ class GlobalIndexSpec extends SparkSpec {
     }
   }
 
-  test("running sums equal the single-reducer prefix sums, any bucket count") {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    // unsorted unique keys with two payload columns to prefix-sum
-    val rows = (1 to 500).map(i => ((i * 37) % 1009, i % 3, (i % 5).toLong))
-    val df = rows.map { case (k, a, b) => (k.toLong, a.toLong, b) }
-      .toDF("k", "a", "b").repartition(7)
-    val w = Window.orderBy(col("k"))
-    val naive = df
-      .withColumn("ra", sum(col("a")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("rb", coalesce(
-        sum(col("b")).over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("k", "ra", "rb").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    Seq(1, 4, 64).foreach { buckets =>
-      val got = GlobalIndex.withRunningSums(df, "k",
-          Seq(("a", "ra", true), ("b", "rb", false)), buckets = buckets)
-        .select("k", "ra", "rb").collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      assert(got === naive, s"buckets=$buckets")
-    }
-    // natural value bucketing (monotone function of the key) must agree
-    // with both the quantile path and the single-reducer formulation
-    val gotNatural = GlobalIndex.withRunningSums(df, "k",
-        Seq(("a", "ra", true), ("b", "rb", false)),
-        bucketBy = Some(floor(col("k") / 100)))
-      .select("k", "ra", "rb").collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(gotNatural === naive, "bucketBy")
-  }
-
   test("secondary order columns break primary ties deterministically") {
     import spark.implicits._
     val df = Seq((1L, "b"), (1L, "a"), (2L, "z"), (0L, "q"))

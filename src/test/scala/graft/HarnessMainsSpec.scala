@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
 /** Guards the harness surface: one-off profiling mains, private
   * session builders, hand-rolled streaming sinks, hand-rolled store
   * version builds, schema-less reads, unaudited `localCheckpoint`
-  * pins and unbounded driver collects may not accumulate in the
-  * library again. Every harness main that should match the bench
+  * pins, unbounded driver collects and operators no caller reaches
+  * may not accumulate in the library again. Every harness main that should match the bench
   * builds Bench.session; an A/B of one query is `runMain graft.ProfQ`,
   * of two commits perfbench.
   */
@@ -106,34 +106,39 @@ class HarnessMainsSpec extends AnyFunSuite {
   private val auditedPins: Map[String, Map[String, Int]] = Map(
     "Coreset" -> Map("loop" -> 1),
     "CoresetStream" -> Map("determinism" -> 1),
-    "Dedup" -> Map("loop" -> 3, "reuse" -> 6),
+    "Dedup" -> Map("loop" -> 3, "reuse" -> 5),
     "DedupStream" -> Map("reuse" -> 1),
     "DriftStream" -> Map("reuse" -> 1),
     "Dsir" -> Map("reuse" -> 1),
-    "GlobalIndex" -> Map("determinism" -> 3),
+    "GlobalIndex" -> Map("determinism" -> 1),
     "IndexStream" -> Map("reuse" -> 1),
     "LinkGraph" -> Map("loop" -> 8, "reuse" -> 2),
     "QualityClassifier" -> Map("reuse" -> 1),
-    "SetSimJoin" -> Map("reuse" -> 5),
     "Similarity" -> Map("reuse" -> 1),
     "SparkEntryAnn" -> Map("reuse" -> 3),
     "SparkEntryDedup" -> Map("loop" -> 2, "reuse" -> 3),
     "SparkEntryEvents" -> Map("reuse" -> 4),
     "SparkEntryIngest" -> Map("reuse" -> 1),
-    "TermIndex" -> Map("loop" -> 3, "reuse" -> 3),
+    "TermIndex" -> Map("loop" -> 3, "reuse" -> 2),
     "WordPiece" -> Map("loop" -> 2))
 
   /** Basenames of the source files under `graft/operators` and
-    * `graft/streaming`, where every data-dependent collect goes
-    * through `DriverRows`.
+    * `graft/streaming`.
     */
-  private lazy val collectScope: Set[String] =
+  private lazy val operatorFiles: Set[String] =
     Seq("operators", "streaming").flatMap { d =>
       val s = Files.list(mainRoot.resolve("graft").resolve(d))
       try s.iterator().asScala.toList.map(_.getFileName.toString)
         .filter(_.endsWith(".scala")).map(_.stripSuffix(".scala"))
       finally s.close()
     }.toSet
+
+  /** Basenames of the files where every data-dependent collect goes
+    * through `DriverRows`: the operators, the streaming sinks and the
+    * `SparkEntry*` query layer.
+    */
+  private lazy val collectScope: Set[String] =
+    operatorFiles ++ linesByFile.keySet.filter(_.startsWith("SparkEntry"))
 
   /** Each `.collect()` call of `lines` (one file's trimmed lines) as
     * (1-based line, chain text): the code up to the call, extended
@@ -200,6 +205,211 @@ class HarnessMainsSpec extends AnyFunSuite {
       else None
     }.toSet
   }
+
+  /** `src` with every comment blanked to spaces, newlines kept so line
+    * numbers hold. String and character literals are kept: a call inside
+    * an interpolation is a call, and a comment marker inside a literal
+    * opens no comment.
+    */
+  private def stripComments(src: String): String = {
+    val out = new StringBuilder(src.length)
+    val n = src.length
+    var i = 0
+    def blank(j: Int): Unit = while (i < j) {
+      out += (if (src(i) == '\n') '\n' else ' ')
+      i += 1
+    }
+    def copy(j: Int): Unit = { out ++= src.substring(i, j); i = j }
+    while (i < n) {
+      if (src.startsWith("//", i)) {
+        val e = src.indexOf('\n', i)
+        blank(if (e < 0) n else e)
+      } else if (src.startsWith("/*", i)) {
+        var depth = 1
+        var j = i + 2
+        while (depth > 0 && j < n) {
+          if (src.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (src.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        blank(math.min(j, n))
+      } else if (src.startsWith("\"\"\"", i)) {
+        val e = src.indexOf("\"\"\"", i + 3)
+        var j = if (e < 0) n else e + 3
+        while (j < n && src(j) == '"') j += 1
+        copy(j)
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < n && src(j) != '"' && src(j) != '\n') j += (if (src(j) == '\\') 2 else 1)
+        copy(math.min(j + 1, n))
+      } else if (src(i) == '\'' && i + 2 < n && src(i + 2) == '\'') copy(i + 3)
+      else if (src(i) == '\'' && i + 3 < n && src(i + 1) == '\\' && src(i + 3) == '\'') copy(i + 4)
+      else copy(i + 1)
+    }
+    out.result()
+  }
+
+  /** Comment-stripped lines of every source file that can call the
+    * library — `src/main` and the perfbench harness, which calls the
+    * product-store API directly — keyed by path relative to its source
+    * root (`graft/operators/Dedup.scala`).
+    */
+  private lazy val callerCode: Map[String, IndexedSeq[String]] =
+    Seq(mainRoot, Paths.get("perfbench", "src", "main", "scala")).flatMap { root =>
+      val s = Files.walk(root)
+      try s.iterator().asScala.toList.filter(_.toString.endsWith(".scala")).map { p =>
+        root.relativize(p).toString -> stripComments(Files.readString(p)).split("\n", -1).toIndexedSeq
+      }
+      finally s.close()
+    }.toMap
+
+  /** A public `def` declared directly in an object, class or trait (not
+    * inside another def): its site `Owner.name`, the owner's kind and
+    * supertypes, and the 0-based lines of its own body.
+    */
+  private case class PublicDef(file: String, line: Int, owner: String, isObject: Boolean,
+      supers: Set[String], name: String, body: Range) {
+    def site: String = s"$owner.$name"
+  }
+
+  private val ownerDecl = raw"\s*(?:(?:final|sealed|abstract|case|implicit|private(?:\[\w+\])?)\s+)*(object|class|trait)\s+(\w+).*".r
+  private val defDecl = raw"\s*((?:(?:final|override|implicit|protected(?:\[\w+\])?|private(?:\[\w+\])?)\s+)*)def\s+(\w+).*".r
+  private val supertype = raw"\b(?:extends|with)\s+(\w+)".r
+
+  /** The public defs of one file's comment-stripped `lines`. Scopes
+    * follow indentation: a line at or left of an open scope's indent
+    * closes it, unless it starts with `}` or `)`.
+    */
+  private def publicDefs(file: String, lines: IndexedSeq[String]): Seq[PublicDef] = {
+    def indent(l: String) = l.length - l.dropWhile(_ == ' ').length
+    def closes(t: String) = t.startsWith("}") || t.startsWith(")")
+    val scopes = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Set[String])]
+    val out = Seq.newBuilder[PublicDef]
+    lines.indices.foreach { i =>
+      val l = lines(i)
+      val t = l.trim
+      if (t.nonEmpty) {
+        val ind = indent(l)
+        while (scopes.nonEmpty && scopes.last._1 >= ind && !closes(t)) scopes.remove(scopes.length - 1)
+        l match {
+          case ownerDecl(kind, name) =>
+            val header = lines.slice(i, i + 8).mkString(" ")
+            val head = header.indexOf('{') match { case -1 => header; case k => header.take(k) }
+            scopes += ((ind, kind, name, supertype.findAllMatchIn(head).map(_.group(1)).toSet))
+          case defDecl(mods, name) =>
+            val owners = scopes.filter(_._2 != "def")
+            val public = !Seq("private", "protected", "override").exists(mods.contains)
+            if (public && owners.nonEmpty && !scopes.exists(_._2 == "def")) {
+              var j = i + 1
+              while (j < lines.length && {
+                  val next = lines(j)
+                  next.trim.isEmpty || indent(next) > ind || (indent(next) == ind && closes(next.trim))
+                }) j += 1
+              val (_, kind, owner, supers) = owners.last
+              out += PublicDef(file, i + 1, owner, kind == "object", supers, name, i until j)
+            }
+            scopes += ((ind, "def", name, Set.empty[String]))
+          case _ =>
+        }
+      }
+    }
+    out.result()
+  }
+
+  /** One identifier occurrence that is not a declaration's name: its
+    * file and 0-based line, the identifier before a `.` in front of it,
+    * whether a `.` precedes it, and whether `(` or `[` follows it.
+    */
+  private case class Use(file: String, line: Int, qualifier: Option[String], dotted: Boolean,
+      applied: Boolean)
+
+  private val ident = raw"[A-Za-z_]\w*".r
+  private val qualifierBefore = raw"(\w+)\s*\.$$".r.unanchored
+
+  /** Each def of `code` (comment-stripped lines per file) in a file
+    * `scoped` selects with no caller, as `file:line Owner.name`, unless
+    * `allowed` names its site. A use is a call when it is `Owner.name`,
+    * `Owner(..)` for `apply`, an unqualified `name(`/`name[` in the
+    * owner's own file, or — for a class or trait member, or an object
+    * that implements a supertype — `.name` in a file that names the
+    * owner or a supertype; a common name on some other receiver is no
+    * call. A use inside the def's own body or inside the body of a def
+    * without a caller does not count, repeated until nothing changes,
+    * so a helper whose last caller is dead is dead too.
+    */
+  private def uncalledDefs(code: Map[String, IndexedSeq[String]], scoped: String => Boolean,
+      allowed: String => Boolean): Seq[String] = {
+    val uses = code.toSeq.flatMap { case (f, lines) =>
+      lines.indices.flatMap { k =>
+        val l = lines(k)
+        ident.findAllMatchIn(l).flatMap { m =>
+          val before = l.substring(0, m.start).reverse.dropWhile(_.isWhitespace).reverse
+          if (before.endsWith("def") && !before.dropRight(3).lastOption.exists(_.isLetterOrDigit)) None
+          else {
+            val dotted = before.endsWith(".")
+            val q = if (dotted) qualifierBefore.findFirstMatchIn(before).map(_.group(1)) else None
+            val applied = l.substring(m.end).dropWhile(_ == ' ').headOption.exists(c => c == '(' || c == '[')
+            Some(m.matched -> Use(f, k, q, dotted, applied))
+          }
+        }
+      }
+    }.groupMap(_._1)(_._2)
+    val idents = code.map { case (f, lines) => f -> ident.findAllIn(lines.mkString("\n")).toSet }
+    val defs = code.toSeq.sortBy(_._1).collect { case (f, lines) if scoped(f) => publicDefs(f, lines) }.flatten
+    def called(d: PublicDef, dead: Seq[PublicDef]): Boolean = {
+      val types = d.supers + d.owner
+      val own = uses.getOrElse(d.name, Nil).filter { u =>
+        u.qualifier.contains(d.owner) ||
+          (u.file == d.file && !u.dotted && u.applied) ||
+          ((!d.isObject || d.supers.nonEmpty) && u.dotted &&
+            (u.file == d.file || idents(u.file).exists(types)))
+      }
+      val viaApply =
+        if (d.name == "apply") uses.getOrElse(d.owner, Nil).filter(_.applied) else Nil
+      (own ++ viaApply).exists { u =>
+        !(u.file == d.file && d.body.contains(u.line)) &&
+          !dead.exists(x => x.file == u.file && x.body.contains(u.line))
+      }
+    }
+    var dead = Seq.empty[PublicDef]
+    var next = defs.filter(d => !allowed(d.site) && !called(d, dead))
+    while (next != dead) {
+      dead = next
+      next = defs.filter(d => !allowed(d.site) && !called(d, dead))
+    }
+    dead.map(d => s"${d.file}:${d.line} ${d.site}")
+  }
+
+  private val sinkApi = "streaming sink API: a deployment starts the sink and reads " +
+    "its state back; the sink's spec drives it end to end"
+
+  /** Public operator defs that stay without a caller in the program,
+    * each with the reason it stays.
+    */
+  private val uncalledAllowed: Map[String, String] = Map(
+    "TopK.perGroup" ->
+      "reference: NativeExpressionDifferentialSpec checks the native top-k aggregate against it",
+    "Dedup.simHashNearDup" ->
+      "reference: DedupSpec checks simHashNearDupDirect against it",
+    "LinkGraph.shortestPaths" ->
+      ("reference: LinkGraphSpec checks shortestPathsBounded against it, and the " +
+        "bounded form's node-limit error names it for larger graphs"),
+    "Dsir.featureTotals" -> "frozen-model input of DsirStream.start",
+    "Dsir.unseenTerm" -> "frozen-model input of DsirStream.start",
+    "CoresetStream.start" -> sinkApi,
+    "CoverStream.start" -> sinkApi,
+    "CoverStream.selection" -> sinkApi,
+    "DedupStream.start" -> sinkApi,
+    "DedupStream.statuses" -> sinkApi,
+    "DriftStream.start" -> sinkApi,
+    "DriftStream.summaries" -> sinkApi,
+    "DsirStream.start" -> sinkApi,
+    "DsirStream.scores" -> sinkApi,
+    "IndexStream.start" -> sinkApi,
+    "IndexStream.sparseKnn" -> sinkApi,
+    "IngestStream.start" -> sinkApi,
+    "IvfStream.start" -> sinkApi,
+    "IvfStream.topK" -> sinkApi)
 
   test("def main appears only in the six harness mains") {
     assert(filesWith("def main(") ===
@@ -290,11 +500,12 @@ class HarnessMainsSpec extends AnyFunSuite {
   }
 
   test("a data-dependent collect appears only in DriverRows") {
-    // operators/ and streaming/ pull driver state through
-    // DriverRows.collect/atMost with a stated bound; only a chain that
-    // cuts its own frame with limit(k) collects directly
+    // operators/, streaming/ and the SparkEntry* query layer pull driver
+    // state through DriverRows.collect/atMost with a stated bound; only
+    // a chain that cuts its own frame with limit(k) collects directly
     val scoped = linesByFile.filter { case (f, _) => collectScope(f) }
-    assert(scoped.contains("CoverStream") && scoped.contains("TermIndex"))
+    assert(scoped.contains("CoverStream") && scoped.contains("TermIndex") &&
+      scoped.contains("SparkEntryAnn") && scoped.contains("SparkEntryDedup"))
     val off = unboundedCollects(scoped - "DriverRows")
     assert(off.isEmpty, s"unbounded collects outside DriverRows: ${off.mkString(", ")}")
     assert(unboundedCollects(scoped.filter(_._1 == "DriverRows")).size == 1)
@@ -319,6 +530,49 @@ class HarnessMainsSpec extends AnyFunSuite {
     val fresh = Map("Fresh" -> Seq("val rows = spark.table(\"t\")", ".filter(col(\"x\") > 0)",
       ".collect()"))
     assert(unboundedCollects(fresh) === Seq("Fresh:3"))
+  }
+
+  test("every public operator def has a caller in the program") {
+    // a public def in operators/ or streaming/ that only tests call is
+    // library surface no query, service call or sink runs: delete it,
+    // or give it a caller, or list it above with its reason
+    val inScope = (f: String) =>
+      f.startsWith("graft/operators/") || f.startsWith("graft/streaming/")
+    assert(callerCode.keySet.count(inScope) === operatorFiles.size)
+    val off = uncalledDefs(callerCode, inScope, uncalledAllowed.contains)
+    assert(off.isEmpty, s"public defs without a caller: ${off.mkString(", ")}")
+    val stale = uncalledAllowed.keySet -- callerCode.toSeq.filter(f => inScope(f._1))
+      .flatMap { case (f, lines) => publicDefs(f, lines) }.map(_.site)
+    assert(stale.isEmpty, s"allowlisted sites that no longer exist: ${stale.mkString(", ")}")
+  }
+
+  test("the caller guard: a common name on another receiver is no call") {
+    val code = Map(
+      "Sink.scala" -> IndexedSeq(
+        "object Sink {", // 1
+        "  def start(x: Int): Int = start(x - 1)", // 2: recursion is its own body
+        "  def read(): Int = helper()", // 3
+        "  def helper(): Int = 1", // 4: its one caller is read, which has none
+        "  def used(): Int = 2", // 5
+        "}"),
+      "Store.scala" -> IndexedSeq(
+        "trait Store {", // 1
+        "  def append(x: Int): Unit", // 2
+        "}"),
+      "Caller.scala" -> IndexedSeq(
+        "object Caller {",
+        "  def run(): Unit = {",
+        "    query.start(1); sb.append(1); spark.read.parquet(p)",
+        "    Sink.used()",
+        "  }",
+        "}"))
+    val scoped = Set("Sink.scala", "Store.scala")
+    assert(uncalledDefs(code, scoped, _ => false) === Seq(
+      "Sink.scala:2 Sink.start", "Sink.scala:3 Sink.read", "Sink.scala:4 Sink.helper",
+      "Store.scala:2 Store.append"))
+    assert(uncalledDefs(code, scoped, Set("Sink.read", "Sink.start", "Store.append")) === Seq.empty)
+    val stripped = stripComments("a(1) // Sink.read()\n/* x.used() */ b(\"// c\") ' '")
+    assert(stripped.split("\n", -1).toSeq.map(_.trim) === Seq("a(1)", "b(\"// c\") ' '"))
   }
 
   test("query-name validation names every unknown query and passes known ones") {

@@ -48,7 +48,7 @@ class IndexStreamSpec extends SparkSpec {
     val queries = Seq(1L).toDF("doc_id")
     val got = IndexStream.sparseKnn(spark, store, queries, k = 3)
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[Double]("sim"))).toSeq
-    val want = TermIndex.sparseKnn(corpus, "text", "doc_id", queries, k = 3)
+    val want = TermIndex.sparseKnnFromIndex(TermIndex.tfidfIndex(corpus, "text", "doc_id"), queries, k = 3)
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[Double]("sim"))).toSeq
     assert(got === want)
   }

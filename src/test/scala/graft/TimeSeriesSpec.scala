@@ -42,16 +42,6 @@ class TimeSeriesSpec extends SparkSpec {
     assert(r.count() === spans)
   }
 
-  test("resampleInterpolate blends linearly and never extrapolates") {
-    val r = TimeSeries.resampleInterpolate(obs, "k", "bucket", "v")
-      .orderBy("k", "bucket").collect()
-    // a: 3.0 at 10, 4.0 at 13 -> 11 = 3 + 1/3, 12 = 3 + 2/3
-    val vals = r.map(_.getAs[Double]("v_interp")).toSeq
-    assert(math.abs(vals(1) - (3.0 + 1.0 / 3.0)) < 1e-12)
-    assert(math.abs(vals(2) - (3.0 + 2.0 / 3.0)) < 1e-12)
-    assert(vals(0) === 3.0 && vals(3) === 4.0 && vals(4) === 7.0)
-  }
-
   test("acf: hand-computed alternating series, negative lag-1 / positive lag-2") {
     import spark.implicits._
     // x = [1,2,1,2,1,2]: n=6, Sx=9, Sxx=15; lag1: S=10, H=7, T=8 ->

@@ -53,14 +53,4 @@ class ZOrderSpec extends SparkSpec {
     assert(zHit === 1L, s"z-order should isolate the box, hit $zHit")
     assert(xHit >= 8L, s"1-D sort should hit >=8 chunks, hit $xHit")
   }
-
-  test("layout plan is a range exchange + in-partition sort, no global sort") {
-    import spark.implicits._
-    val df = (0 until 100).map(i => (i.toLong, (i * 3 % 17).toLong))
-      .toDF("x", "y")
-    val plan = ZOrder.layout(df, col("x"), col("y"), bits = 8, numPartitions = 4)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning") || plan.contains("RangePartitioning"))
-    assert(!plan.contains("CartesianProduct"))
-  }
 }
